@@ -25,7 +25,7 @@ from pyspark.sql import Window as W
 
 from pubmedkb_web_spark import fixtures
 from pubmedkb_web_spark.functions import htmlrender
-from pubmedkb_web_spark.functions.hashing import MERSENNE31, affine_params, md5_int60
+from pubmedkb_web_spark.functions.hashing import MERSENNE31, affine_params, md5_int60, md5_int60_sql
 from pubmedkb_web_spark.sources import litvar
 from pubmedkb_web_spark.ops import dedup, multimodal, similarity, textstats
 from pubmedkb_web_spark.pipeline import extractors, materialize, runner
@@ -35,7 +35,6 @@ from pubmedkb_web_spark.streaming import events as streaming_events
 
 M31 = MERSENNE31
 VOCAB = ["spark", "join", "merge", "sort", "hash"]
-MD5_SQL = "(('0x' || substr(md5({x}), 1, 15))::BIGINT)"
 TOKS_SQL = "string_split_regex(lower(text), '\\s+')"
 
 
@@ -69,7 +68,7 @@ def _idx_cache_key(sf_dir: str, table: str, n: int = 12) -> str:
 def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, tok, ord, dl) — positional tokens of documents."""
     docs = _t(spark, sf_dir, "documents")
-    toks = F.array_remove(F.split(F.lower(F.col("text")), r"\s+"), "")  # codegen == the length>0 lambda filter (split only emits "")
+    toks = textstats.word_tokens("text")
     return docs.select(
         "doc_id",
         F.size(toks).alias("dl"),
@@ -90,25 +89,7 @@ def _vocab_arr():  # built lazily: F.lit needs an active SparkContext
 
 def _doc_token_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    toks = F.array_remove(F.split(F.lower(F.col("text")), r"\s+"), "")
-    return docs.select("doc_id", toks.alias("_toks"))
-
-
-def _vocab_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """== _doc_tokens(...).filter(tok.isin(VOCAB)), built map-only: the
-    vocab filter runs INSIDE the token array (transform+filter over array
-    elements), so only matching occurrences are ever exploded into rows."""
-    base = _doc_token_arrays(spark, sf_dir)
-    hits = F.filter(
-        F.transform(
-            F.col("_toks"),
-            lambda t, i: F.struct((i + 1).alias("ord"), t.alias("tok")),
-        ),
-        lambda s: s["tok"].isin(VOCAB),
-    )
-    return base.select(
-        "doc_id", F.size("_toks").alias("dl"), F.explode(hits).alias("_h")
-    ).select("doc_id", "dl", F.col("_h.ord").alias("ord"), F.col("_h.tok").alias("tok"))
+    return docs.select("doc_id", textstats.word_tokens("text").alias("_toks"))
 
 
 def _doc_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -604,9 +585,10 @@ def q_repetition_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # checked), so round 5's last 10 entries never got a driver-green row. These
 # _merged_ gates union same-family outputs into one driver row each, cutting
 # the surface to exactly 50 WITHOUT dropping any checked capability: every
-# constituent keeps its own q_ function (bench.py / tools/explain_audit.py
-# still time and plan-audit them individually) and its own oracle_sql entry
-# (kept for documentation; the driver only reads keys present in queries()).
+# constituent keeps its own q_ function (bench.py times them and
+# tests/test_plan_shapes.py audits their plans individually) and its own
+# oracle_sql entry (kept for documentation; the driver only reads keys
+# present in queries()).
 
 
 def q_doc_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1002,14 +984,13 @@ def q_journal_impact_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_glof_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GLOF evidence rollup (server.py:1455-1523): per (key, direction,
     doc) sentence counts, docs ranked by evidence desc."""
-    # r7: vocab filter runs inside the token array before the explode
-    # (map-only _vocab_tokens) — ~6x fewer generated rows feed the
-    # dropDuplicates shuffle below (guide §2.3: shuffle fewer bytes).
-    # A fully map-side variant (array_distinct over derived structs,
-    # removing the dropDuplicates exchange too) was MEASURED slower
-    # (2.3-2.6 s vs 2.0-2.1 s at sf1.0): the interpreted struct-building
-    # lambda costs more than the small post-filter shuffle it saves.
-    dt = _vocab_tokens(spark, sf_dir)
+    # the vocab filter runs map-side before the dropDuplicates shuffle, so
+    # only vocabulary occurrences are shuffled. A fully map-side variant
+    # (array_distinct over derived structs, removing the dropDuplicates
+    # exchange too) was MEASURED slower (2.3-2.6 s vs 2.0-2.1 s at sf1.0):
+    # the interpreted struct-building lambda costs more than the small
+    # post-filter shuffle it saves.
+    dt = _doc_tokens(spark, sf_dir).filter(F.col("tok").isin(VOCAB))
     glof = dt.select(
         F.lit("Token").alias("type"),
         F.col("tok").alias("key"),
@@ -1216,9 +1197,7 @@ def q_gvd_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordering/truncation key) + new_score (GDScore via get_string_score,
     f"{score/100:.2f}"), top-3 objects per subject."""
     annotators = ["paper", "sentence", "odds_ratio"]
-    # r7: map-only vocab-hit rows (see _vocab_tokens) — same (tok, ord)
-    # multiset, built without exploding non-vocab tokens.
-    dt = _vocab_tokens(spark, sf_dir)
+    dt = _doc_tokens(spark, sf_dir).filter(F.col("tok").isin(VOCAB))
     keyed = dt.select(
         F.col("tok").alias("subj"),
         F.concat(F.lit("D"), (F.col("doc_id") % 7).cast("string")).alias("obj"),
@@ -1255,7 +1234,9 @@ def q_kg_extractor_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     need the fixture corpus, and stay covered by pytest + the rows-only
     kg gate)."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    dt = _vocab_tokens(spark, sf_dir).filter(F.col("doc_id") < 200)
+    dt = _doc_tokens(spark, sf_dir).filter(
+        F.col("tok").isin(VOCAB) & (F.col("doc_id") < 200)
+    )
     mentions = dt.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.lit(0).alias("sent_idx"),
@@ -1489,7 +1470,7 @@ sh AS (
   JOIN toks b ON a.doc_id = b.doc_id AND b.ord = a.ord + 1
   JOIN toks c ON a.doc_id = c.doc_id AND c.ord = a.ord + 2
 ),
-h AS (SELECT doc_id, {MD5_SQL.format(x='shingle')} % {M31} AS h FROM sh),
+h AS (SELECT doc_id, {md5_int60_sql('shingle')} % {M31} AS h FROM sh),
 m AS (SELECT doc_id, {mins} FROM h GROUP BY doc_id)
 {terms}"""
 
@@ -1816,7 +1797,7 @@ JOIN sz zb ON zb.doc_id = i.doc_b
 WITH toks AS (
   SELECT doc_id, unnest({TOKS_SQL}) AS tok FROM documents WHERE doc_id < 200
 ),
-h AS (SELECT doc_id, {MD5_SQL.format(x='tok')} AS h FROM toks),
+h AS (SELECT doc_id, {md5_int60_sql('tok')} AS h FROM toks),
 bits AS (
   SELECT doc_id, b, sum(((h >> b) % 2) * 2 - 1) AS s
   FROM h, (SELECT unnest(range(16)) AS b) GROUP BY doc_id, b
@@ -1922,7 +1903,7 @@ WITH toks AS (
   SELECT doc_id, unnest({TOKS_SQL}) AS tok, generate_subscripts({TOKS_SQL}, 1) AS ord
   FROM documents
 )
-SELECT doc_id, (sum(({MD5_SQL.format(x='tok')} % {M31}) * ord) % {M31})::BIGINT AS fingerprint
+SELECT doc_id, (sum(({md5_int60_sql('tok')} % {M31}) * ord) % {M31})::BIGINT AS fingerprint
 FROM toks WHERE ord <= 64 GROUP BY doc_id
 """
 
@@ -2307,8 +2288,8 @@ WITH toks AS (
 t2 AS (SELECT doc_id, tok FROM toks WHERE len(tok) > 0),
 h AS (
   SELECT doc_id,
-         ({MD5_SQL.format(x='tok')} % 16)::INT AS bucket,
-         CASE WHEN {MD5_SQL.format(x='tok')} % 32 >= 16 THEN -1 ELSE 1 END AS sign
+         ({md5_int60_sql('tok')} % 16)::INT AS bucket,
+         CASE WHEN {md5_int60_sql('tok')} % 32 >= 16 THEN -1 ELSE 1 END AS sign
   FROM t2
 ),
 pb AS (SELECT doc_id, bucket, sum(sign)::DOUBLE AS v FROM h GROUP BY 1, 2),

@@ -115,15 +115,6 @@ def build_entity_dict(seed: int = SEED) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["type", "id", "name", "freq"])
 
 
-def mention_vocabulary(entity_pdf: pd.DataFrame) -> list[tuple[str, str]]:
-    """(surface_form, type) pairs weighted for document generation."""
-    out: list[tuple[str, str, int]] = []
-    for t, n, f in zip(entity_pdf["type"], entity_pdf["name"], entity_pdf["freq"]):
-        out.append((n, t, f))
-    out.sort()
-    return [(n, t) for n, t, _ in out for _ in range(1)]
-
-
 class _DocVocab:
     """Pre-computed sampling tables, pure function of the entity dict.
 

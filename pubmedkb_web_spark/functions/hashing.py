@@ -44,17 +44,6 @@ def key_of(*cols: Column) -> Column:
     return F.concat_ws(SEP, *[c.cast("string") for c in cols])
 
 
-def stable_id(*cols: Column) -> Column:
-    """Deterministic 60-bit id from component columns.
-
-    Replaces ``monotonically_increasing_id`` (which depends on partitioning
-    and would break checkpoint-resume determinism): unique within its scope
-    as long as the component tuple is unique; collision probability for n
-    ids within one scope is ~n²/2⁶¹ (negligible at per-doc scope).
-    """
-    return md5_int60(key_of(*cols))
-
-
 # Affine rehash family for minhash signatures: h_i(x) = (a_i·x̃ + b_i) mod M31
 # where x̃ = x mod M31. Both operands stay < 2³¹ so the product stays < 2⁶²:
 # no silent wraparound in Spark longs and no overflow error in DuckDB — the

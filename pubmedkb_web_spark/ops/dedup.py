@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import MERSENNE31, affine_params, md5_int60
+from .textstats import word_tokens
 
 
 def _base_hash(col: Column, portable: bool) -> Column:
@@ -34,12 +35,6 @@ def _base_hash(col: Column, portable: bool) -> Column:
     if portable:
         return md5_int60(col)
     return F.pmod(F.xxhash64(col), F.lit(1 << 60))
-
-
-def _tokens(text_col: str) -> Column:
-    # filter empties: Spark's split keeps "" around consecutive separators,
-    # DuckDB's string_split_regex drops them — keep both sides identical
-    return F.array_remove(F.split(F.lower(F.col(text_col)), r"\s+"), "")  # codegen == the length>0 lambda filter (split only emits "")
 
 
 def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -62,7 +57,7 @@ def shingles(
 
     JVM-side: sequence/transform over the token array, then explode.
     """
-    toks = _tokens(text_col)
+    toks = word_tokens(text_col)
     sh = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
         lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
@@ -317,7 +312,7 @@ def simhash(
     Entirely integer column math → bit-identical in the DuckDB oracle.
     """
     tok = df.select(
-        F.col(id_col).alias("doc_id"), F.explode(_tokens(text_col)).alias("token")
+        F.col(id_col).alias("doc_id"), F.explode(word_tokens(text_col)).alias("token")
     ).filter(F.length("token") > 0)
     h = _base_hash(F.col("token"), portable)
     # integer bit extraction (shiftright; literal shift counts — the bit

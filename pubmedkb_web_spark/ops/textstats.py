@@ -39,14 +39,20 @@ BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 STOPWORDS = ["the", "a", "and", "of", "in", "to", "is"]
 
 
-def _tokens(text_col: str) -> Column:
-    return F.array_remove(F.split(F.lower(F.col(text_col)), r"\s+"), "")  # codegen == the length>0 lambda filter (split only emits "")
+def word_tokens(col: Column | str) -> Column:
+    """Lower-cased whitespace tokens of a text column (name or Column).
+
+    Spark's ``split`` keeps "" around leading or consecutive separators,
+    DuckDB's ``string_split_regex`` oracle twin does not: dropping them
+    keeps both sides identical. ``array_remove`` stays whole-stage codegen
+    where an ``F.filter`` lambda is interpreted per element."""
+    return F.array_remove(F.split(F.lower(col), r"\s+"), "")
 
 
 def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per doc: predicted language = argmax over profile-token hit counts
     (ties broken by language code asc; all-zero → 'und')."""
-    toks = _tokens(text_col)
+    toks = word_tokens(text_col)
     scores = []
     for lang, words in sorted(LANG_PROFILES.items()):
         hits = F.size(F.filter(toks, lambda t: t.isin(words)))
@@ -60,7 +66,7 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """length/punct/stopword quality features + a blended [0,1] score."""
-    toks = _tokens(text_col)
+    toks = word_tokens(text_col)
     n_tokens = F.size(toks).cast("long")
     n_chars = F.length(F.col(text_col)).cast("long")
     avg_tok_len = F.round(n_chars / F.greatest(n_tokens, F.lit(1)), 6)
@@ -90,7 +96,7 @@ def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """whitespace token count + BPE-ish regex piece count."""
     return df.select(
         "*",
-        F.size(_tokens(text_col)).cast("long").alias("ws_tokens"),
+        F.size(word_tokens(text_col)).cast("long").alias("ws_tokens"),
         F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_ISH_PATTERN), 0))
         .cast("long")
         .alias("bpe_tokens"),
@@ -163,7 +169,7 @@ def repetition_metrics(
     for n in ngram_ns:
         grams = base.select(
             id_col,
-            F.explode(_ngrams(_tokens(text_col), n)).alias("_gram"),
+            F.explode(_ngrams(word_tokens(text_col), n)).alias("_gram"),
         )
         counts = grams.groupBy(id_col, "_gram").agg(F.count(F.lit(1)).alias("_cnt"))
         # min over (neg count, gram) = highest count, lexicographic tiebreak
@@ -262,7 +268,7 @@ def _gopher_cols(
     :func:`document_quality` can compose all filter families in ONE
     projection over one scan (physical-plan subexpression elimination
     dedups the repeated measure trees)."""
-    toks = _tokens(text_col)
+    toks = word_tokens(text_col)
     n = F.size(toks).cast("long")
     safe_n = F.greatest(n, F.lit(1))
     text = F.col(text_col)
@@ -491,10 +497,10 @@ def decontaminate(
     contamination).
     """
     doc_sh = docs.select(
-        F.col(id_col), F.explode(_ngrams(_tokens(text_col), n)).alias("_sh")
+        F.col(id_col), F.explode(_ngrams(word_tokens(text_col), n)).alias("_sh")
     )
     bench_sh = benchmark.select(
-        F.explode(_ngrams(_tokens(bench_text_col), n)).alias("_sh")
+        F.explode(_ngrams(word_tokens(bench_text_col), n)).alias("_sh")
     ).distinct()
     per_doc = (
         doc_sh.join(F.broadcast(bench_sh), "_sh")
@@ -523,7 +529,7 @@ def fingerprint(
     """Positional rolling fingerprint over the first ``max_tokens`` tokens:
     Σ (pos+1)·(h(token) mod M31) mod M31 — pure integer math, exact in the
     DuckDB oracle, order-sensitive (unlike a bag-of-words hash)."""
-    toks = F.slice(_tokens(text_col), 1, max_tokens)
+    toks = F.slice(word_tokens(text_col), 1, max_tokens)
     acc = F.aggregate(
         F.zip_with(
             toks,

@@ -255,7 +255,9 @@ def pair_contingency(
     per_sent = (
         mentions.select("doc_id", "sent_idx", F.lower(F.col("name")).alias("nm"))
         .groupBy("doc_id", "sent_idx")
-        .agg(F.array_sort(F.collect_set("nm")).alias("_nms"))
+        # sort_array, not array_sort: the latter's default comparator is an
+        # interpreted lambda; collect_set holds no nulls, so both agree
+        .agg(F.sort_array(F.collect_set("nm")).alias("_nms"))
     )
     sent_pairs = (
         per_sent.select(

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import json
 import os
+import tempfile
+import threading
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -26,6 +28,8 @@ from .. import fixtures
 from . import canonicalize, extractors, materialize, mentions
 
 MARKER = "_graft_meta.json"
+# driver threads for the stages that run concurrently after `mentions`
+TAIL_WORKERS = 6
 
 
 def _module_source_bytes(name: str, loader, file_path: str | None) -> bytes:
@@ -144,6 +148,31 @@ class CheckpointedPipeline:
     def _marker_path(self, name: str) -> str:
         return os.path.join(self.out_dir, name, MARKER)
 
+    @staticmethod
+    def _read_marker(marker: str) -> dict | None:
+        """The committed marker, or None when it is missing, unreadable or
+        not valid JSON: a torn marker is treated as stale, so its stage
+        recomputes instead of failing the resume."""
+        try:
+            with open(marker) as f:
+                return json.load(f)
+        except (OSError, ValueError):
+            return None
+
+    @staticmethod
+    def _write_marker(marker: str, meta: dict) -> None:
+        """Publish the marker atomically: a reader sees the old marker or
+        the complete new one, never a prefix. The temp file's ``_`` prefix
+        keeps it out of Spark's parquet listing of the stage directory."""
+        fd, tmp = tempfile.mkstemp(prefix="_graft_meta.", dir=os.path.dirname(marker))
+        try:
+            with os.fdopen(fd, "w") as f:
+                json.dump(meta, f, indent=1)
+            os.replace(tmp, marker)
+        except BaseException:
+            os.unlink(tmp)
+            raise
+
     def stage(
         self,
         name: str,
@@ -154,29 +183,36 @@ class CheckpointedPipeline:
         session_confs: dict[str, str] | None = None,
     ) -> DataFrame:
         """``session_confs``: SQL confs set for THIS stage's execution and
-        restored afterwards. Stages run serially on the driver, so this is
-        race-free, and it is how heterogeneous stages coexist in one
-        session: the mentions window sort degrades superlinearly once
+        restored afterwards. The confs are session-wide, not per thread, so
+        they are race-free only while no other stage runs. ``stage`` may be
+        called from several threads at once (``run_kg_pipeline`` submits
+        its tail stages to a thread pool), so ``session_confs`` is accepted
+        only from the main thread, which runs the serial stages
+        (``ValueError`` otherwise). It is how heterogeneous stages coexist
+        in one session: the mentions window sort degrades superlinearly once
         post-shuffle partitions grow past a few MB (3.2M docs, 8 cores:
         391 s at 64 MB-ish partitions vs 110 s at 4 MB), while the
         aggregation/write stages pay pure task overhead at 4 MB (tail wall
         4× worse) — no single advisory size serves both."""
+        if session_confs and threading.current_thread() is not threading.main_thread():
+            raise ValueError(
+                f"stage {name!r}: session_confs are session-wide and need the "
+                "main thread; concurrently submitted stages cannot set them"
+            )
         config = config or {}
         upstream_fps = [self.results[u].fingerprint for u in (upstream or [])]
         fp = _fingerprint(name, config, upstream_fps)
         path = os.path.join(self.out_dir, name)
         marker = self._marker_path(name)
 
-        if self.resume and os.path.exists(marker):
-            with open(marker) as f:
-                meta = json.load(f)
-            if meta.get("fingerprint") == fp:
-                df = self.spark.read.parquet(path)
-                self.results[name] = StageResult(
-                    name, path, fp, meta["row_count"], recomputed=False,
-                    partitions=meta.get("partitions", []),
-                )
-                return df
+        meta = self._read_marker(marker) if self.resume else None
+        if meta is not None and meta.get("fingerprint") == fp:
+            df = self.spark.read.parquet(path)
+            self.results[name] = StageResult(
+                name, path, fp, meta["row_count"], recomputed=False,
+                partitions=meta.get("partitions", []),
+            )
+            return df
 
         import time
 
@@ -200,19 +236,17 @@ class CheckpointedPipeline:
         out = self.spark.read.parquet(path)
         parts = _partition_metrics(path)
         row_count = sum(p["rows"] for p in parts)
-        with open(marker, "w") as f:
-            json.dump(
-                {
-                    "stage": name,
-                    "fingerprint": fp,
-                    "upstream": upstream or [],
-                    "row_count": row_count,
-                    "partitions": parts,
-                    "config": config,
-                },
-                f,
-                indent=1,
-            )
+        self._write_marker(
+            marker,
+            {
+                "stage": name,
+                "fingerprint": fp,
+                "upstream": upstream or [],
+                "row_count": row_count,
+                "partitions": parts,
+                "config": config,
+            },
+        )
         self.results[name] = StageResult(
             name, path, fp, row_count, True, parts, seconds=round(time.time() - t0, 3)
         )
@@ -327,8 +361,7 @@ def run_kg_pipeline(
     from concurrent.futures import ThreadPoolExecutor
 
     entity_types = entity_dict.select("id", "type").distinct()
-    tail_workers = int(os.environ.get("SPARK_GRAFT_TAIL_WORKERS", "6"))
-    with ThreadPoolExecutor(max_workers=tail_workers) as ex:
+    with ThreadPoolExecutor(max_workers=TAIL_WORKERS) as ex:
         # r7: canonical_map (needs only the entity dict) and glof (needs
         # the committed sentences + mentions) used to run SERIALLY around
         # the triples stage — ~3 s and the slowest tail stage respectively,

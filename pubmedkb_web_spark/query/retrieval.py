@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..ops.textstats import word_tokens
+
 RRF_K = 61  # reciprocal-rank constant (kb_utils.py:997)
 BM25_K1 = 1.5
 BM25_B = 0.75
@@ -28,7 +30,7 @@ BM25_B = 0.75
 
 def build_term_postings(corpus: DataFrame, doc_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """corpus → (term, doc_id, tf, dl). One explode + one groupBy."""
-    toks = F.array_remove(F.split(F.lower(F.col(text_col)), r"\s+"), "")  # codegen == the length>0 lambda filter (split only emits "")
+    toks = word_tokens(text_col)
     exploded = corpus.select(
         F.col(doc_col).alias("doc_id"),
         F.size(toks).alias("dl"),

@@ -63,24 +63,11 @@ def build_session(
         # zstd ≈ halves string-heavy parquet bytes vs snappy at similar CPU:
         # the checkpointed stages (annotations especially) are write-volume
         # bound on shared disks, and fewer bytes also means fewer bytes to
-        # scan on resume. Override via SPARK_GRAFT_PARQUET_CODEC.
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
-        )
+        # scan on resume.
+        .config("spark.sql.parquet.compression.codec", "zstd")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def get_test_session(cores: int = 4) -> SparkSession:
-    """Small session for pytest: few cores, few shuffle partitions."""
-    return build_session(
-        app_name="pubmedkb_web_spark_test",
-        cores=cores,
-        shuffle_partitions=max(4, cores),
-        driver_memory="8g",
-    )

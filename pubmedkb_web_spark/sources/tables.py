@@ -13,10 +13,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TESTDATA_TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
 
 def iceberg_available(spark: SparkSession) -> bool:
     try:
@@ -36,19 +32,3 @@ def read_table(spark: SparkSession, root: str, name: str) -> DataFrame:
         if os.path.exists(p):
             return spark.read.parquet(p)
     raise FileNotFoundError(f"table {name} not found under {root}")
-
-
-def write_table(df: DataFrame, root: str, name: str, partition_by: list[str] | None = None) -> None:
-    spark = df.sparkSession
-    if iceberg_available(spark) and "/" not in root:
-        df.writeTo(f"{root}.{name}").createOrReplace()
-        return
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(os.path.join(root, name))
-
-
-def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """All driver-provided tables from /root/testdata/sf*/ (TESTDATA.md)."""
-    return {t: read_table(spark, sf_dir, t) for t in TESTDATA_TABLES}

@@ -1,12 +1,8 @@
 from __future__ import annotations
 
-import sys
-
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from pubmedkb_web_spark.session import build_session  # noqa: E402
+from pubmedkb_web_spark.session import build_session
 
 
 @pytest.fixture(scope="session")

@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+import pytest
 from pyspark.sql import functions as F
 
 from pubmedkb_web_spark.pipeline import runner
@@ -81,9 +83,6 @@ def test_kg_gate_counts_pinned_vs_oracle_vs_engine(spark, tmp_path):
     oracle derives the counts without the engine, the pinned constants
     must equal them, and the Spark pipeline must reproduce them — drift on
     any side fails here before the driver's DuckDB gate ever runs."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as E
     import tests.oracle as oracle
     from pyspark.sql import functions as F
@@ -115,6 +114,65 @@ def test_stage_session_confs_apply_and_restore(spark, tmp_path):
     pipe.stage("probe", build, session_confs={key: "4m"})
     assert seen["during"] in ("4m", "4194304b", "4194304")
     assert spark.conf.get(key, None) == before
+
+
+def test_session_confs_only_from_main_thread(spark, tmp_path, monkeypatch):
+    """Session confs are session-wide, so a stage submitted to a thread
+    pool must not set them; the main-thread mentions stage still applies
+    its confs during its build and restores them afterwards."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(key, None)
+    pipe = runner.CheckpointedPipeline(spark, str(tmp_path / "probe"), resume=False)
+    with ThreadPoolExecutor(max_workers=1) as ex:
+        fut = ex.submit(pipe.stage, "probe", lambda: spark.range(1), session_confs={key: "4m"})
+        with pytest.raises(ValueError, match="main thread"):
+            fut.result(timeout=120)
+    assert "probe" not in pipe.results
+    assert spark.conf.get(key, None) == before
+
+    seen = {}
+    stage = runner.CheckpointedPipeline.stage
+
+    def spy(self, name, build, *args, **kwargs):
+        if name == "mentions":
+            def observed_build():
+                seen["conf"] = spark.conf.get(key)
+                return build()
+
+            return stage(self, name, observed_build, *args, **kwargs)
+        return stage(self, name, build, *args, **kwargs)
+
+    monkeypatch.setattr(runner.CheckpointedPipeline, "stage", spy)
+    runner.run_kg_pipeline(spark, str(tmp_path / "kb"), n_docs=20)
+    assert seen["conf"] in ("4m", "4194304b", "4194304")
+    assert spark.conf.get(key, None) == before
+
+
+def test_truncated_marker_recomputes_from_that_stage(spark, tmp_path):
+    """A torn ``_graft_meta.json`` is a stale marker, not a crash: resume
+    recomputes from that stage, outputs are identical, and publishing
+    markers leaves no temp file behind."""
+    out = str(tmp_path / "kb")
+    first = _collect_triples(runner.run_kg_pipeline(spark, out, n_docs=40))
+    marker = os.path.join(out, "annotations", runner.MARKER)
+    with open(marker, "rb") as f:
+        head = f.read()[:20]
+    with open(marker, "wb") as f:
+        f.write(head)
+
+    t2 = runner.run_kg_pipeline(spark, out, n_docs=40)
+    res = t2["_pipeline"].results
+    assert not any(res[s].recomputed for s in ("source", "sentences", "mentions"))
+    assert res["annotations"].recomputed
+    assert _collect_triples(t2) == first
+    with open(marker) as f:
+        assert json.load(f)["fingerprint"] == res["annotations"].fingerprint
+    for stage in res:
+        leftovers = [
+            fn for fn in os.listdir(os.path.join(out, stage))
+            if fn.startswith("_graft_meta") and fn != runner.MARKER
+        ]
+        assert not leftovers, (stage, leftovers)
 
 
 def test_optional_dedup_and_ann_stages_resume(spark, tmp_path):

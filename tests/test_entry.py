@@ -4,15 +4,11 @@ order-insensitive values (the CORRECTNESS_r{N}.json shape)."""
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 import pandas as pd
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as E  # noqa: E402
+import __spark_entry__ as E
 
 SF = "/root/testdata/sf0.001"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()

@@ -123,3 +123,29 @@ def test_cre_hash_matches_python_oracle(spark):
 
         assert r["relation"] == ["Cause-associated", "In-patient", "Appositive"][xxh64_pmod(key, 3)]
         assert r["confidence"] == f"{(500 + xxh64_pmod(key, 500)) / 10:.1f}%"
+
+
+def test_pair_contingency_matches_self_join_formulation(spark):
+    # r7: collect_set + pair explode must reproduce the old distinct +
+    # self-join pair counts exactly (a, b, c, d and derived stats).
+    from pyspark.sql import functions as F
+
+    from pubmedkb_web_spark.pipeline import extractors
+
+    rows = [
+        ("d1", 0, "alpha"), ("d1", 0, "beta"), ("d1", 0, "alpha"),
+        ("d1", 1, "alpha"), ("d2", 0, "beta"), ("d2", 0, "gamma"),
+        ("d2", 0, "ALPHA"), ("d3", 0, "beta"),
+    ]
+    mentions = spark.createDataFrame(rows, "doc_id string, sent_idx int, name string")
+    sentences = mentions.select("doc_id", "sent_idx").distinct()
+    got = {
+        (r["n1"], r["n2"]): (r["a"], r["b"], r["c"], r["d"])
+        for r in extractors.pair_contingency(mentions, sentences).collect()
+    }
+    # 4 distinct sentences; per-sentence distinct lowercased names:
+    # (d1,0)={alpha,beta} (d1,1)={alpha} (d2,0)={alpha,beta,gamma} (d3,0)={beta}
+    assert got[("alpha", "beta")] == (2, 1, 1, 0)
+    assert got[("alpha", "gamma")] == (1, 2, 0, 1)
+    assert got[("beta", "gamma")] == (1, 2, 0, 1)
+    assert set(got) == {("alpha", "beta"), ("alpha", "gamma"), ("beta", "gamma")}

@@ -1,0 +1,127 @@
+"""Plan-shape expectations: one table, one test.
+
+Each row names a plan and the strings its formatted physical plan must and
+must not contain. The plan is taken before execution (with AQE, the
+initial plan), so the table pins what the optimizer chose, not what one run
+re-planned to. The shapes that matter at scale:
+
+- parquet scans carry PushedFilters / PartitionFilters where expected;
+- small-side joins are broadcast (BroadcastHashJoin), not sort-merge;
+- top-k plans use TakeOrderedAndProject, not a global Sort;
+- no row-at-a-time Python (BatchEvalPython) anywhere, and no Python at all
+  (ArrowEvalPython) where the operator is pure column expressions;
+- token filters are codegen expressions, not interpreted array lambdas
+  (``lambdafunction``);
+- map-only operators plan no Exchange.
+"""
+
+from __future__ import annotations
+
+import pytest
+
+import __spark_entry__ as E
+from pubmedkb_web_spark.ops import similarity
+from tests.test_entry import SF
+
+PY = ["BatchEvalPython", "ArrowEvalPython"]
+
+
+def _query(name):
+    # merged driver gates keep their per-capability q_ functions; the
+    # table audits those plans, not the union wrapper
+    return lambda spark: (E.queries().get(name) or getattr(E, f"q_{name}"))(spark, SF)
+
+
+def _builder(fn):
+    return lambda spark: fn(spark, SF)
+
+
+def _embed_text(portable):
+    def build(spark):
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        return similarity.embed_text(docs, dim=16, portable=portable)
+
+    return build
+
+
+# name: (build(spark) -> DataFrame, must contain, must not contain)
+SHAPES = {
+    "tpch_pricing_summary": (
+        _query("tpch_pricing_summary"),
+        ["PushedFilters: [IsNotNull(l_shipdate)", "HashAggregate"],
+        ["BatchEvalPython"],
+    ),
+    # top-20 on the thin aggregate first, then a 20-row broadcast probe of
+    # orders: never a sort-merge join of two full relations
+    "top_revenue_orders": (
+        _query("top_revenue_orders"),
+        ["TakeOrderedAndProject"],
+        ["BatchEvalPython", "SortMergeJoin"],
+    ),
+    "market_join": (_query("market_join"), ["BroadcastHashJoin"], ["SortMergeJoin", "BatchEvalPython"]),
+    "cosine_topk": (_query("cosine_topk"), ["TakeOrderedAndProject"], PY),
+    # pagination ranks only the <= page_end survivors, never the full
+    # relation in one task
+    "rel_relevance_page": (_query("rel_relevance_page"), ["TakeOrderedAndProject"], ["BatchEvalPython"]),
+    "rrf_fusion_orders": (_query("rrf_fusion_orders"), ["TakeOrderedAndProject"], ["BatchEvalPython"]),
+    "spec_and_or": (_query("spec_and_or"), [], ["BatchEvalPython"]),
+    "minhash_signatures": (_query("minhash_signatures"), ["HashAggregate"], PY),
+    "simhash_docs": (_query("simhash_docs"), ["HashAggregate"], PY),
+    "bm25_docs": (_query("bm25_docs"), ["BroadcastHashJoin"], ["BatchEvalPython"]),
+    "lang_id_docs": (_query("lang_id_docs"), [], PY),
+    "fingerprint_docs": (_query("fingerprint_docs"), [], PY),
+    "quality_scores": (_query("quality_scores"), [], PY),
+    "orders_page": (_query("orders_page"), ["TakeOrderedAndProject"], ["BatchEvalPython"]),
+    "anti_join_customers": (_query("anti_join_customers"), ["BroadcastHashJoin"], ["BatchEvalPython"]),
+    # presentation and the LitVar parse are pure codegen
+    "html_escape_docs": (_query("html_escape_docs"), [], PY),
+    "paper_meta_html_docs": (_query("paper_meta_html_docs"), [], PY),
+    "litvar_parse_docs": (_query("litvar_parse_docs"), [], PY),
+    "user_sessions": (_query("user_sessions"), ["HashAggregate"], PY),
+    # the IVF probe prunes the partitioned index to the probed lists
+    "ivf_cosine_topk": (_query("ivf_cosine_topk"), ["TakeOrderedAndProject", "PartitionFilters"], PY),
+    # explode, then two-level hash aggregation with a map-side combine
+    "repetition_docs": (_query("repetition_docs"), ["HashAggregate"], PY),
+    "gopher_filters": (_query("gopher_filters"), [], PY + ["Exchange"]),
+    "pii_scrub": (_query("pii_scrub"), [], PY + ["Exchange"]),
+    "c4_line_filters": (_query("c4_line_filters"), [], PY + ["Exchange"]),
+    # the eval-sized benchmark side broadcasts, so the corpus-side shingle
+    # scan never shuffles before the join
+    "decontaminate_docs": (_query("decontaminate_docs"), ["BroadcastHashJoin"], PY + ["SortMergeJoin"]),
+    # per-doc match lists are array expressions over the token array: no
+    # explode + groupBy(doc_id) exchange
+    "qa_target_filter": (_query("qa_target_filter"), [], ["Exchange", "BatchEvalPython"]),
+    # vocabulary membership / tf / halves postings dedup inside the
+    # per-row array: no aggregation exchange
+    "doc_postings": (_builder(E._doc_postings), [], ["Exchange"]),
+    "tf_postings": (_builder(E._tf_postings), [], ["Exchange"]),
+    "ht_postings": (_builder(E._ht_postings), [], ["Exchange"]),
+    # codegen assembly (no ObjectHashAggregate collect_list->map path) and
+    # the distinct-token md5 map joined by broadcast
+    "embed_text_portable": (
+        _embed_text(True),
+        ["BroadcastHashJoin"],
+        ["ObjectHashAggregate", "SortMergeJoin"],
+    ),
+    # the scale path hashes inline: no token-map inner join (the LeftOuter
+    # zero-doc join remains in both paths)
+    "embed_text_xxhash": (_embed_text(False), ["xxhash64"], ["Inner"]),
+    # vocabulary-token filters are a codegen isin after the posexplode
+    "glof_rollup": (_query("glof_rollup"), [], ["lambdafunction", "BatchEvalPython"]),
+    "gvd_stats": (_query("gvd_stats"), [], ["lambdafunction", "BatchEvalPython"]),
+    "kg_extractor_slice": (_query("kg_extractor_slice"), [], ["lambdafunction", "BatchEvalPython"]),
+}
+
+
+def _formatted_plan(spark, df) -> str:
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    return df._jdf.queryExecution().explainString(mode)
+
+
+@pytest.mark.parametrize("name", list(SHAPES))
+def test_plan_shape(name, spark):
+    build, need, forbid = SHAPES[name]
+    plan = _formatted_plan(spark, build(spark))
+    missing = [s for s in need if s not in plan]
+    present = [s for s in forbid if s in plan]
+    assert not missing and not present, f"{name}: missing={missing} forbidden={present}\n{plan}"

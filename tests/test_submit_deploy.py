@@ -10,6 +10,7 @@ for zipimported modules — the exact failure mode that crashed every
 
 from __future__ import annotations
 
+import importlib
 import os
 import subprocess
 import sys
@@ -52,6 +53,23 @@ def test_fingerprint_reads_source_through_zip_loader(tmp_path):
     )
     assert proc2.returncode == 0, proc2.stderr[-2000:]
     assert fp_zip == proc2.stdout.strip().split()[-1]
+
+
+def test_imports_come_from_this_checkout(spark):
+    """The engine and the driver contract must be imported from the
+    checkout that holds this test, on the driver and on a Python worker:
+    another copy on the path would test (or time) the wrong code."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    mods = ("pubmedkb_web_spark", "__spark_entry__")
+
+    def module_files(_rows):  # nested: shipped by value, not by module
+        for m in mods:
+            yield importlib.import_module(m).__file__
+
+    driver = [importlib.import_module(m).__file__ for m in mods]
+    worker = spark.sparkContext.parallelize([0], 1).mapPartitions(module_files).collect()
+    for f in driver + worker:
+        assert os.path.abspath(f).startswith(repo + os.sep), f
 
 
 @pytest.mark.skipif(

@@ -18,24 +18,11 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from pubmedkb_web_spark.session import build_session  # noqa: E402
-
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
-
-def normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-        elif str(df[c].dtype).startswith(("float", "Float")):
-            df[c] = df[c].astype("float64").round(9)
-        elif str(df[c].dtype).startswith(("int", "Int", "uint")):
-            df[c] = df[c].astype("int64")
-    return df.sort_values(list(df.columns)).reset_index(drop=True)
+from tests.test_entry import TABLES, normalize  # noqa: E402
 
 
 def main() -> None:

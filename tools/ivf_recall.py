@@ -15,11 +15,13 @@ Usage: python tools/ivf_recall.py [sf_dir]
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -82,7 +84,7 @@ def main() -> None:
             " the curve is the evidence for that sizing rule."
         ),
     }
-    with open("/root/repo/IVF_RECALL.json", "w") as f:
+    with open(os.path.join(REPO, "IVF_RECALL.json"), "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out))
     spark.stop()
