@@ -1151,7 +1151,7 @@ def q_embed_text_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic text→unit-vector embedding (F14 contract): signed
     feature hashing, L2-normalized; long format for the value gate."""
     docs = _t(spark, sf_dir, "documents")
-    emb = similarity.embed_text(docs, dim=16, portable=True)
+    emb = similarity.embed_text(docs, dim=16)
     return emb.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.posexplode("embedding").alias("bucket", "val"),

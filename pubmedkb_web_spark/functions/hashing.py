@@ -8,10 +8,14 @@ construction below because it is bit-identical across three runtimes:
 - Python:  ``int(hashlib.md5(x).hexdigest()[:15], 16)``
 
 That portability is what lets the DuckDB oracle and the pure-Python test
-oracle verify hash-derived columns (ann_id, minhash signatures, simhash,
-CRE confidence) value-for-value. 15 hex digits = 60 bits, always fits a
-signed int64. xxhash64 would be faster JVM-side but is not reproducible in
-the oracles, so it is reserved for purely internal salts.
+oracle verify hash-derived columns (minhash signatures, simhash, text
+fingerprints, text embeddings) value-for-value. 15 hex digits = 60 bits,
+always fits a signed int64.
+
+xxhash64 is faster JVM-side, but DuckDB cannot reproduce it, so it is used
+only where no SQL oracle re-derives the value: ``fast_id`` annotation ids,
+join salts, and the KG build's CRE label/confidence, which only the
+pure-Python oracle mirrors (:func:`xxh64_pmod`).
 """
 
 from __future__ import annotations

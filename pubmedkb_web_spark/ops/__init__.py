@@ -8,7 +8,7 @@ similarity.py  brute-force cosine top-k + LSH-bucketed ANN over embeddings
 textstats.py   language-ID, quality scoring, token counting, fingerprinting
 multimodal.py  binary-column plumbing (decode stubbed: libs not in image)
 
-Every hash-derived value uses the portable md5-int60 / Mersenne-31 affine
-family (functions/hashing.py) so the DuckDB oracle verifies signatures
+Every hash-derived value uses the md5-int60 / Mersenne-31 affine family
+(functions/hashing.py) so the DuckDB oracle verifies signatures
 value-for-value.
 """

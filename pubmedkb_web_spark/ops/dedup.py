@@ -14,27 +14,17 @@ All four standard families, Spark-first:
 Scale: shingling/hashing is map-only; the only shuffles are the per-doc
 signature groupBy (uniform key) and the band-bucket join (bucket sizes are
 bounded because identical-band docs are near-identical). No Python anywhere
-— every hash is a column expression (portable md5-int60 + Mersenne-31
-affine family, see functions/hashing.py).
+— every hash is a column expression (md5-int60 + Mersenne-31 affine
+family, see functions/hashing.py), the family the oracles re-derive.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import MERSENNE31, affine_params, md5_int60
 from .textstats import word_tokens
-
-
-def _base_hash(col: Column, portable: bool) -> Column:
-    """portable=True → md5-int60 (bit-identical in the DuckDB/Python
-    oracles; small-data correctness checks). portable=False → xxhash64
-    (lock-free, the 100 TB path: MessageDigest.getInstance serializes
-    threads — see functions/hashing.py). Both land in [0, 2^60)."""
-    if portable:
-        return md5_int60(col)
-    return F.pmod(F.xxhash64(col), F.lit(1 << 60))
 
 
 def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -69,16 +59,14 @@ def shingles(
     )
 
 
-def minhash_signatures(
-    shingle_df: DataFrame, num_hashes: int = 8, portable: bool = True
-) -> DataFrame:
+def minhash_signatures(shingle_df: DataFrame, num_hashes: int = 8) -> DataFrame:
     """(doc_id, sig array<bigint>): sig[i] = min over shingles of
     (a_i·(h mod M31) + b_i) mod M31, h = md5_int60(shingle).
 
     One groupBy per doc; all K mins computed in the same aggregation pass
     (map-side partial min → tiny shuffle).
     """
-    base = shingle_df.withColumn("h", _base_hash(F.col("shingle"), portable) % MERSENNE31)
+    base = shingle_df.withColumn("h", md5_int60(F.col("shingle")) % MERSENNE31)
     mins = []
     for i in range(num_hashes):
         a, b = affine_params(i)
@@ -253,7 +241,6 @@ def near_duplicates_minhash(
     bands: int = 4,
     id_col: str = "doc_id",
     text_col: str = "text",
-    portable: bool = True,
     work_dir: str | None = None,
     max_bucket_size: int | None = 1024,
 ) -> DataFrame:
@@ -290,12 +277,10 @@ def near_duplicates_minhash(
         sig_path = os.path.join(work_dir, "signatures")
         sh.write.mode("overwrite").parquet(sh_path)
         sh = df.sparkSession.read.parquet(sh_path)
-        minhash_signatures(sh, num_hashes, portable=portable).write.mode(
-            "overwrite"
-        ).parquet(sig_path)
+        minhash_signatures(sh, num_hashes).write.mode("overwrite").parquet(sig_path)
         sigs = df.sparkSession.read.parquet(sig_path)
     else:
-        sigs = minhash_signatures(sh, num_hashes, portable=portable)
+        sigs = minhash_signatures(sh, num_hashes)
     cands = lsh_candidate_pairs(
         sigs, bands, num_hashes // bands, max_bucket_size=max_bucket_size
     )
@@ -303,8 +288,7 @@ def near_duplicates_minhash(
 
 
 def simhash(
-    df: DataFrame, bits: int = 16, id_col: str = "doc_id", text_col: str = "text",
-    portable: bool = True,
+    df: DataFrame, bits: int = 16, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """(doc_id, simhash): B-bit sign-aggregated fingerprint.
 
@@ -314,7 +298,7 @@ def simhash(
     tok = df.select(
         F.col(id_col).alias("doc_id"), F.explode(word_tokens(text_col)).alias("token")
     ).filter(F.length("token") > 0)
-    h = _base_hash(F.col("token"), portable)
+    h = md5_int60(F.col("token"))
     # integer bit extraction (shiftright; literal shift counts — the bit
     # loop unrolls at plan time). Double division would lose precision
     # above 2^53 and break oracle parity.

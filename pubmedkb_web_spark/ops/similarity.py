@@ -7,10 +7,8 @@
 - all-pairs near-dup by embedding cosine (for dedup): LSH buckets →
   within-bucket exact cosine ≥ threshold
 
-The dot products run JVM-side (zip_with + aggregate). A Pandas-UDF
-(numpy matmul) variant is provided for wide batches where Arrow transfer +
-BLAS beats per-row expression evaluation — measured, not guessed: at 64
-dims the JVM expression wins; switch to the UDF above ~512 dims.
+The dot products run JVM-side (zip_with + aggregate), codegen'd with no
+Python/Arrow boundary.
 """
 
 from __future__ import annotations
@@ -18,10 +16,8 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.hashing import MERSENNE31, affine_params, md5_int60
 from ..query.retrieval import cosine, cosine_top_k  # re-export baseline
@@ -38,7 +34,6 @@ __all__ = [
     "ivf_top_k",
     "ivf_recall_at_k",
     "embedding_near_duplicates",
-    "cosine_top_k_pandas",
     "embed_text",
     "embed_text_py",
 ]
@@ -471,7 +466,6 @@ def embed_text(
     text_col: str = "text",
     id_col: str = "doc_id",
     dim: int = 16,
-    portable: bool = True,
 ) -> DataFrame:
     """Deterministic text → unit-vector embedding (signed feature hashing).
 
@@ -483,11 +477,15 @@ def embed_text(
     testable end-to-end without a model in the container.
 
     Shape: explode tokens → signed bucket counts (one shuffle with map-side
-    combine) → dense-vector assembly → L2 normalize; all codegen.
-    portable=True hashes with the md5-int60 family (bit-identical in the
-    DuckDB/Python oracles); portable=False switches to lock-free xxhash64
-    for the 100 TB hot path (md5 funnels through a synchronized JVM
-    provider and anti-scales past ~8 threads — round-1 measurement).
+    combine) → dense-vector assembly → L2 normalize; all codegen. Tokens
+    hash with the md5-int60 family, so the vectors are bit-identical in the
+    DuckDB/Python oracles (:func:`embed_text_py`).
+
+    Precondition: the corpus vocabulary must fit in a broadcast. Each
+    distinct token is hashed once, and the (tok, bucket, sign) map is
+    broadcast back to the token occurrences. Natural-language vocabularies
+    grow sublinearly (Heaps' law), but id- or number-heavy text can
+    outgrow the broadcast limit.
     """
     # array_remove == the length>0 filter here (split can only emit empty
     # strings as degenerate tokens) but stays whole-stage codegen, while
@@ -495,42 +493,30 @@ def embed_text(
     # prefer built-ins; the same lesson as mentions.enumerate_spans).
     toks = F.array_remove(F.split(F.lower(F.col(text_col)), r"\W+"), "")
     base = docs.select(F.col(id_col).alias("doc_id"), F.explode(toks).alias("tok"))
-    if portable:
-        # md5 funnels through the synchronized java.security provider and
-        # anti-scales with executor threads (5.8 s → 24.8 s from 8 → 32
-        # cores on an identical md5 job — hashing.py module doc), so hash
-        # each DISTINCT token ONCE and broadcast (tok, bucket, sign) back
-        # instead of hashing every occurrence: the md5 count drops from
-        # |occurrences| to |vocabulary|. Natural-language vocabularies stay
-        # broadcastable (heaps-law sublinear); this portable mode exists
-        # for oracle parity, the 100 TB hot path is the xxhash64 branch.
-        h = md5_int60(F.col("tok"))
-        tok_map = (
-            # per-doc array_distinct BEFORE the explode: the corpus-level
-            # distinct then shuffles one row per (doc, distinct token)
-            # instead of one per occurrence (guide §2.3)
-            docs.select(F.explode(F.array_distinct(toks)).alias("tok"))
-            .distinct()
-            .select(
-                "tok",
-                F.pmod(h, F.lit(dim)).cast("int").alias("_bucket"),
-                F.when(F.pmod(h, F.lit(2 * dim)) >= dim, F.lit(-1))
-                .otherwise(F.lit(1))
-                .alias("_sign"),
-            )
-        )
-        bucketed = base.join(F.broadcast(tok_map), "tok").select(
-            "doc_id", F.col("_bucket").alias("bucket"), F.col("_sign").alias("sign")
-        )
-    else:
-        h = F.xxhash64(F.col("tok"))
-        bucketed = base.select(
-            "doc_id",
-            F.pmod(h, F.lit(dim)).cast("int").alias("bucket"),
+    # md5 funnels through the synchronized java.security provider and
+    # anti-scales with executor threads (5.8 s → 24.8 s from 8 → 32 cores
+    # on an identical md5 job — hashing.py module doc), so hash each
+    # DISTINCT token ONCE and broadcast (tok, bucket, sign) back instead of
+    # hashing every occurrence: the md5 count drops from |occurrences| to
+    # |vocabulary|.
+    h = md5_int60(F.col("tok"))
+    tok_map = (
+        # per-doc array_distinct BEFORE the explode: the corpus-level
+        # distinct then shuffles one row per (doc, distinct token) instead
+        # of one per occurrence (guide §2.3)
+        docs.select(F.explode(F.array_distinct(toks)).alias("tok"))
+        .distinct()
+        .select(
+            "tok",
+            F.pmod(h, F.lit(dim)).cast("int").alias("_bucket"),
             F.when(F.pmod(h, F.lit(2 * dim)) >= dim, F.lit(-1))
             .otherwise(F.lit(1))
-            .alias("sign"),
+            .alias("_sign"),
         )
+    )
+    bucketed = base.join(F.broadcast(tok_map), "tok").select(
+        "doc_id", F.col("_bucket").alias("bucket"), F.col("_sign").alias("sign")
+    )
     # ONE shuffled aggregation: sum(case when bucket=i then sign) per
     # bucket — partial map-side aggregation, the shuffle carries one
     # dim-wide row per doc. (An explicit-values pivot() plans as TWO
@@ -567,7 +553,7 @@ def embed_text(
 
 
 def embed_text_py(text: str, dim: int = 16) -> list[float]:
-    """Pure-Python mirror of :func:`embed_text` (portable mode) for tests."""
+    """Pure-Python mirror of :func:`embed_text` for tests."""
     import re
 
     from ..functions.hashing import md5_int60_py
@@ -581,28 +567,3 @@ def embed_text_py(text: str, dim: int = 16) -> list[float]:
     n = math.sqrt(sum(v * v for v in vec))
     return [v / n for v in vec] if n > 0 else vec
 
-
-def cosine_top_k_pandas(
-    embeddings: DataFrame,
-    query: list[float],
-    top_k: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-batched variant: numpy matmul per batch. Preferable above a
-    few hundred dims where BLAS amortizes the Arrow transfer."""
-    q = np.asarray(query, dtype=np.float64)
-    qn = math.sqrt(float(q @ q))
-
-    @F.pandas_udf(T.DoubleType())
-    def cos(vs: pd.Series) -> pd.Series:
-        m = np.stack(vs.to_numpy()).astype(np.float64)
-        dots = m @ q
-        norms = np.linalg.norm(m, axis=1) * qn
-        return pd.Series(np.round(dots / norms, 6))
-
-    return (
-        embeddings.select(F.col(id_col), cos(F.col(vec_col)).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
-        .limit(top_k)
-    )

@@ -20,10 +20,6 @@ from pyspark.sql import functions as F
 from ..functions.hashing import MERSENNE31, md5_int60
 
 
-def _tok_hash(col: Column, portable: bool) -> Column:
-    # portable → DuckDB-checkable md5; not → lock-free xxhash64 (scale)
-    return md5_int60(col) if portable else F.pmod(F.xxhash64(col), F.lit(1 << 60))
-
 # tiny per-language stopword profiles for the heuristic language ID
 LANG_PROFILES: dict[str, list[str]] = {
     "en": ["the", "a", "and", "of", "in"],
@@ -524,7 +520,7 @@ def decontaminate(
 
 
 def fingerprint(
-    df: DataFrame, text_col: str = "text", max_tokens: int = 64, portable: bool = True
+    df: DataFrame, text_col: str = "text", max_tokens: int = 64
 ) -> DataFrame:
     """Positional rolling fingerprint over the first ``max_tokens`` tokens:
     Σ (pos+1)·(h(token) mod M31) mod M31 — pure integer math, exact in the
@@ -534,7 +530,7 @@ def fingerprint(
         F.zip_with(
             toks,
             F.sequence(F.lit(1), F.greatest(F.size(toks), F.lit(1))),
-            lambda t, p: (_tok_hash(t, portable) % MERSENNE31) * p.cast("long"),
+            lambda t, p: (md5_int60(t) % MERSENNE31) * p.cast("long"),
         ),
         F.lit(0).cast("long"),
         lambda a, v: (a + F.coalesce(v, F.lit(0).cast("long"))) % MERSENNE31,

@@ -29,12 +29,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.hashing import fast_id, key_of
-from ..schemas import ANNOTATIONS, CRE_LABELS, VARIANT_TYPES
+from ..schemas import CRE_LABELS, VARIANT_TYPES
 
 PREDICATES = ["inhibits", "activates", "causes", "treats", "binds", "regulates"]
 N_SALT = 16  # salt buckets for hot-pair aggregation
-
-ANNOTATION_COLS = [f.name for f in ANNOTATIONS.fields]
 
 _PAYLOAD_FIELDS = (
     "or_value", "ci", "p_value", "relation", "confidence",
@@ -188,7 +186,7 @@ def extract_cre(pairs: DataFrame) -> DataFrame:
 
     Confidence is a "93.2%"-style percent string (parse contract at
     server.py:733); label ∈ {Cause-associated, In-patient, Appositive}.
-    Both derive from the portable md5-int60 hash of the pair key.
+    Both derive from the xxhash64 of the pair key.
     """
     vt = F.array(*[F.lit(t) for t in VARIANT_TYPES])
     vd = pairs.filter(

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from . import spec as spec_mod
+from . import summary as summary_mod
 
 SORT_KEYS = ("relevance", "citation", "year", "journal_impact")
 
@@ -38,12 +39,6 @@ def paper_scores(hits: DataFrame) -> DataFrame:
     return hits.groupBy("doc_id").agg(F.round(F.sum("score"), 6).alias("relevance"))
 
 
-# Pages whose end fits under this bound rank via orderBy().limit() —
-# TakeOrderedAndProject, a per-partition heap + driver merge of ≤page_end
-# rows. Deeper offsets switch to the range-partitioned path.
-DEEP_PAGE_THRESHOLD = 100_000
-
-
 def _doc_tiebreak() -> list:
     """Tie-break like the reference: int(pmid) desc (server.py:875);
     non-numeric ids fall back to string order."""
@@ -56,59 +51,12 @@ def _doc_tiebreak() -> list:
 def ranked_slice(df: DataFrame, order: list, page_start: int, page_end: int) -> DataFrame:
     """Attach a global ``rank`` under the total order ``order`` and slice
     (page_start, page_end] — without ever shuffling the full relation into
-    one task.
-
-    Head pages (page_end ≤ DEEP_PAGE_THRESHOLD): ``orderBy().limit(page_end)``
-    plans TakeOrderedAndProject (per-partition top-k heaps, driver merge of
-    ≤page_end rows); the row_number window then runs over that bounded
-    relation only.
-
-    Deep offsets: range-repartition on the sort key — each partition holds a
-    contiguous rank range — rank locally per partition (parallel window,
-    keyed by partition id), and add cumulative partition-count offsets (one
-    small driver-side count per partition).
-    """
-    if page_end <= DEEP_PAGE_THRESHOLD:
-        limited = df.orderBy(*order).limit(page_end)
-        ranked = limited.withColumn("rank", F.row_number().over(W.orderBy(*order)))
-        return ranked.filter((F.col("rank") > page_start) & (F.col("rank") <= page_end))
-
-    spark = df.sparkSession
-    n = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    ranged = (
-        df.repartitionByRange(n, *order)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    try:
-        counts = {
-            int(r["_pid"]): int(r["n"])
-            for r in ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        offsets, acc = [], 0
-        for pid in sorted(counts):
-            offsets.append((pid, acc))
-            acc += counts[pid]
-        # small broadcast join, NOT a literal create_map: a 10k-partition
-        # relation would otherwise embed 10k map entries into every task's
-        # plan (round-2 ADVICE)
-        off_df = spark.createDataFrame(offsets, "_pid int, _off long")
-        w = W.partitionBy("_pid").orderBy(*order)
-        ranked = (
-            ranged.withColumn("_rn", F.row_number().over(w))
-            .join(F.broadcast(off_df), "_pid")
-            .withColumn("rank", (F.col("_rn") + F.col("_off")).cast("int"))
-            .drop("_pid", "_rn", "_off")
-        )
-        page = ranked.filter((F.col("rank") > page_start) & (F.col("rank") <= page_end))
-        # a deep page is still ≤ one page of rows: materialize it while the
-        # cache is hot, then release the cached partitions — repeated
-        # deep-page queries in a long session must not accumulate storage
-        # (round-2 ADVICE leak)
-        rows = page.collect()
-        return spark.createDataFrame(rows, page.schema)
-    finally:
-        ranged.unpersist()
+    one task: ``orderBy().limit(page_end)`` plans TakeOrderedAndProject
+    (per-partition top-k heaps, driver merge of ≤page_end rows), and the
+    row_number window then runs over that bounded relation only."""
+    limited = df.orderBy(*order).limit(page_end)
+    ranked = limited.withColumn("rank", F.row_number().over(W.orderBy(*order)))
+    return ranked.filter((F.col("rank") > page_start) & (F.col("rank") <= page_end))
 
 
 def sorted_page(
@@ -127,7 +75,8 @@ def sorted_page(
     if sort_key == "relevance":
         key = F.col("relevance")
     else:
-        assert meta is not None, "meta table required for non-relevance sorts"
+        if meta is None:
+            raise ValueError("meta table required for non-relevance sorts")
         df = df.join(
             meta.select("doc_id", "citation", "year", "journal_impact"),
             "doc_id",
@@ -228,8 +177,6 @@ def run_rel(
     sort_key: str = "relevance",
     page_start: int = 0,
     page_end: int = 10,
-    with_statistics: bool = True,
-    with_summary: bool = True,
 ) -> RelResult:
     if e2_spec is None:
         hits = spec_mod.evaluate_single(postings, e1_spec, pmid)
@@ -243,29 +190,24 @@ def run_rel(
         relations = hydrate(page, hits, annotations, sentences)
         # Materialize the (≤ page-sized) results while the cache is hot,
         # then release it in the finally: a long-lived session issuing many
-        # rel queries must not accumulate cached posting relations (same
-        # leak ranked_slice fixed in round 3). The reference renders every
-        # page it returns (server.py:665-745), so the eager page collect is
-        # the honest cost model, not an added one.
+        # rel queries must not accumulate cached posting relations. The
+        # reference renders every page it returns (server.py:665-745), so
+        # the eager page collect is the honest cost model, not an added one.
         page_rows = page.collect()
         rel_rows = relations.collect()
         papers_df = spark.createDataFrame(page_rows, page.schema)
         relations_df = spark.createDataFrame(rel_rows, relations.schema)
-        stats = statistics(hits, annotations) if with_statistics else {}
+        stats = statistics(hits, annotations)
     finally:
         hits.unpersist()
-    summary = None
-    if with_summary:
-        # the reference returns the NLG summary with every /query_rel page
-        # (server.py:924-958); it inspects ≤ one page of hydrated rows
-        from . import summary as summary_mod
-
-        summary = summary_mod.summarize_page(
-            [r.asDict() for r in rel_rows],
-            e1_spec=e1_spec,
-            e2_spec=e2_spec,
-            pmid=pmid,
-        )
+    # the reference returns the NLG summary with every /query_rel page
+    # (server.py:924-958); it inspects ≤ one page of hydrated rows
+    summary = summary_mod.summarize_page(
+        [r.asDict() for r in rel_rows],
+        e1_spec=e1_spec,
+        e2_spec=e2_spec,
+        pmid=pmid,
+    )
     return RelResult(
         papers=papers_df, relations=relations_df, statistics=stats, summary=summary
     )

@@ -24,9 +24,9 @@ Reference semantics (/root/reference/summary_utils.py:586-948):
   (SURVEY.md §7 risk #5) — the parity test drives its reference replica
   with the same seeded RNG.
 
-The selection operators are DataFrame-native (they also serve build-side
-rollups); ``summarize_page`` runs them on a collected page — the reference
-inspects ≤ one page of rows, so driver-side is the honest cost model.
+``summarize_page`` selects and renders over a collected page — the
+reference inspects ≤ one page of rows, so driver-side is the honest cost
+model.
 
 Paper order: the reference breaks ties by paper-list order (stable max /
 dict insertion order). Our deterministic stand-in is (doc_id, ann_id)
@@ -39,151 +39,7 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import Window as W
-
 from ..schemas import CRE_LABEL_WEIGHT
-
-
-def normalized_or(col: F.Column) -> F.Column:
-    """max(OR, 1/OR) (summary_utils.py:630-639); non-numeric → null."""
-    v = (col).try_cast("double")
-    return F.when(v > 0, F.greatest(v, 1.0 / v))
-
-
-def select_odds_ratio(relations: DataFrame) -> DataFrame:
-    """Top-1 odds_ratio row by normalized OR, tiebreak (doc_id, ann_id)."""
-    orr = relations.filter(F.col("annotator") == "odds_ratio").withColumn(
-        "norm_or", F.round(normalized_or(F.col("or_value")), 6)
-    )
-    return (
-        orr.filter(F.col("norm_or").isNotNull())
-        .orderBy(F.col("norm_or").desc(), F.col("doc_id").asc(), F.col("ann_id").asc())
-        .limit(1)
-    )
-
-
-def _used_flag(used_pmids: list[str] | None) -> F.Column:
-    if not used_pmids:
-        return F.lit(False)
-    return F.col("doc_id").isin(list(used_pmids))
-
-
-def select_cre(relations: DataFrame, used_pmids: list[str] | None = None) -> DataFrame:
-    """Top-1 rbert_cre row by (pmid not already selected, confidence ×
-    label weight) — summary_utils.py:655-662: the not-yet-selected boolean
-    is the PRIMARY key, the weighted score secondary."""
-    weight = F.lit(0)
-    for label, w in CRE_LABEL_WEIGHT.items():
-        weight = F.when(F.col("relation") == label, F.lit(w)).otherwise(weight)
-    cre = relations.filter(F.col("annotator") == "rbert_cre").withColumn(
-        "cre_rank_score",
-        F.round(
-            (F.regexp_extract("confidence", r"^([\d.]+)%$", 1)).try_cast("double")
-            * weight,
-            6,
-        ),
-    )
-    return (
-        cre.filter(F.col("cre_rank_score").isNotNull())
-        .orderBy(
-            _used_flag(used_pmids).asc(),  # fresh papers first
-            F.col("cre_rank_score").desc(),
-            F.col("doc_id").asc(),
-            F.col("ann_id").asc(),
-        )
-        .limit(1)
-    )
-
-
-def predicate_support(relations: DataFrame, annotator: str) -> DataFrame:
-    """Predicate frequency for one ORE annotator (summary_utils.py:687-694),
-    with the predicate's first evidence key for original-order tiebreak."""
-    return (
-        relations.filter(F.col("annotator") == annotator)
-        .groupBy("predicate")
-        .agg(
-            F.count(F.lit(1)).alias("support"),
-            F.min(F.struct("doc_id", "ann_id")).alias("first_ref"),
-        )
-    )
-
-
-def select_ore(
-    relations: DataFrame,
-    max_relations: int = 2,
-    used_pmids: list[str] | None = None,
-) -> DataFrame:
-    """≤2 ORE rows per the reference's fill-down scheme
-    (summary_utils.py:731-750): spaCy gets top_k=2 predicates, OpenIE
-    fills the REMAINDER (2 − #spacy) excluding predicates already
-    selected. Each predicate is represented by its first evidence row,
-    preferring pmids not already used (summary_utils.py:722-729).
-
-    Predicate ordering mirrors the reference EXACTLY: it reorders by
-    (support desc, first-appearance asc) ONLY when the candidate count
-    exceeds the quota (summary_utils.py:698-717 — the trimming heap);
-    when everything fits, first-encounter (dict-insertion) order is kept.
-    The engine's page-order stand-in is (doc_id, ann_id) asc, so
-    ``first_ref`` = min struct(doc_id, ann_id) IS the encounter key."""
-
-    def _top_predicates(annotator: str, top_k: int, exclude: set[str]) -> list[str]:
-        # driver-side: candidate predicates are page-scale (one tiny
-        # aggregate); the conditional reorder is the reference's
-        # len > top_k branch, inexpressible as a single orderBy
-        if top_k <= 0:
-            return []
-        rows = [
-            r
-            for r in predicate_support(relations, annotator).collect()
-            if r["predicate"] not in exclude
-        ]
-        rows.sort(key=lambda r: (r["first_ref"]["doc_id"], r["first_ref"]["ann_id"]))
-        if len(rows) > top_k:
-            rows = sorted(
-                rows,
-                key=lambda r: (
-                    -r["support"],
-                    (r["first_ref"]["doc_id"], r["first_ref"]["ann_id"]),
-                ),
-            )[:top_k]
-        return [r["predicate"] for r in rows]
-
-    # the reference's representative choice is inherently SEQUENTIAL (each
-    # pick adds its pmid to the preference set before the next predicate
-    # is resolved, summary_utils.py:722-729), so resolve them in a driver
-    # loop of ≤max_relations tiny jobs over the page-scale relation set.
-    spacy_preds = _top_predicates("spacy_ore", max_relations, set())
-    chosen = [("spacy_ore", p) for p in spacy_preds]
-    chosen += [
-        ("openie_ore", p)
-        for p in _top_predicates(
-            "openie_ore", max_relations - len(chosen), set(spacy_preds)
-        )
-    ]
-    used = list(used_pmids or [])
-    picked = []
-    for annot, pred in chosen:
-        rows = (
-            relations.filter(
-                (F.col("annotator") == annot) & (F.col("predicate") == pred)
-            )
-            .orderBy(
-                _used_flag(used).asc(),
-                F.col("doc_id").asc(),
-                F.col("ann_id").asc(),
-            )
-            .limit(1)
-            .collect()
-        )
-        if rows:
-            used.append(rows[0]["doc_id"])
-            picked.append(rows[0])
-    if not picked:
-        return relations.limit(0)
-    spark = relations.sparkSession
-    return spark.createDataFrame(picked, schema=relations.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -677,8 +533,7 @@ def summarize_page(
     """Driver-side replica of the reference's Summary pipeline
     (summary_utils.py:586-948) over a collected, hydrated page.
 
-    Selection (mirrors the DataFrame selectors above, same tiebreaks):
-    ≤1 odds_ratio by normalized OR; ≤1 CRE by (fresh pmid, weighted
+    Selection: ≤1 odds_ratio by normalized OR; ≤1 CRE by (fresh pmid, weighted
     confidence); ≤2 ORE by spaCy-top-2-then-OpenIE predicate fill-down.
     Rendering: the four reference passages (query / odds_ratio / cre /
     ore), each filled from the verbatim TEMPLATE_POOLS with span tracking,

@@ -3,6 +3,7 @@
 The reference keeps schemas implicit (positional destructuring + header
 asserts, /root/reference/kb_utils.py:490,563,1474-1501); here every table is
 a typed columnar contract so parquet scans prune columns and push predicates.
+tests/test_schemas.py checks each committed KG stage against its contract.
 """
 
 from __future__ import annotations
@@ -95,6 +96,14 @@ ANNOTATIONS = T.StructType(
         T.StructField("predicate", T.StringType(), True),
         T.StructField("object", T.StringType(), True),
         T.StructField("score", T.DoubleType(), False),
+        T.StructField("content_sha256", T.StringType(), False),
+        # head/tail entity of the pair, denormalized for the query layer
+        T.StructField("h_name", T.StringType(), False),
+        T.StructField("h_type", T.StringType(), False),
+        T.StructField("h_ids", T.ArrayType(T.StringType()), False),
+        T.StructField("t_name", T.StringType(), False),
+        T.StructField("t_type", T.StringType(), False),
+        T.StructField("t_ids", T.ArrayType(T.StringType()), False),
     ]
 )
 
@@ -143,54 +152,12 @@ META = T.StructType(
 )
 
 # ------------------------------------------------------------ aux tables
-VARIANT_LINKS = T.StructType(
-    [
-        T.StructField("kind1", T.StringType(), False),
-        T.StructField("key1", T.StringType(), False),
-        T.StructField("kind2", T.StringType(), False),
-        T.StructField("key2", T.StringType(), False),
-        T.StructField("freq", T.LongType(), False),
-    ]
-)
-
-GVD_STATS = T.StructType(
-    [
-        T.StructField("gene", T.StringType(), False),
-        T.StructField("variant", T.StringType(), False),
-        T.StructField("disease", T.StringType(), False),
-        T.StructField("annotator", T.StringType(), False),
-        T.StructField("score", T.DoubleType(), False),
-    ]
-)
-
 CHEM_DISEASE = T.StructType(
     [
         T.StructField("c", T.StringType(), False),
         T.StructField("d", T.StringType(), False),
         T.StructField("level", T.StringType(), False),  # paper | sentence
         T.StructField("doc_id", T.StringType(), False),
-    ]
-)
-
-MESH_EDGES = T.StructType(
-    [
-        T.StructField("src", T.StringType(), False),
-        T.StructField("dst", T.StringType(), False),
-        T.StructField("kind", T.StringType(), False),  # parent|child|supplemental
-    ]
-)
-
-UMLS = T.StructType(
-    [
-        T.StructField("cui", T.StringType(), False),
-        T.StructField("preferred_name", T.StringType(), False),
-    ]
-)
-UMLS_NAMES = T.StructType(
-    [
-        T.StructField("cui", T.StringType(), False),
-        T.StructField("name", T.StringType(), False),
-        T.StructField("name_lower", T.StringType(), False),
     ]
 )
 
@@ -203,8 +170,6 @@ VARIANT_TYPES = [
     "Mutation",
     "DNAAcidChange",
 ]
-
-ANNOTATOR_NAMES = ["odds_ratio", "rbert_cre", "spacy_ore", "openie_ore", "co_occurrence"]
 
 CRE_LABELS = ["Cause-associated", "In-patient", "Appositive"]
 # label weights for summary selection (summary_utils.py:20-24)

@@ -175,6 +175,44 @@ def test_truncated_marker_recomputes_from_that_stage(spark, tmp_path):
         assert not leftovers, (stage, leftovers)
 
 
+def test_file_uri_root_commits_and_resumes(spark, tmp_path):
+    """A ``file://`` checkpoint root is its local path: the stage commits
+    its parquet, marker and partition metrics there, and a resume over the
+    same URI reads the stage back."""
+    root = "file://" + str(tmp_path / "kb")
+
+    def build():
+        return spark.range(10).toDF("id")
+
+    pipe = runner.CheckpointedPipeline(spark, root)
+    pipe.stage("s", build)
+    with open(tmp_path / "kb" / "s" / runner.MARKER) as f:
+        meta = json.load(f)
+    assert meta["row_count"] == 10
+    assert meta["partitions"] and sum(p["rows"] for p in meta["partitions"]) == 10
+
+    again = runner.CheckpointedPipeline(spark, root)
+    assert again.stage("s", build).count() == 10
+    assert again.results["s"].recomputed is False
+
+
+def test_non_file_uri_root_rejected_before_writing(spark, tmp_path, monkeypatch):
+    """Markers and partition metrics use local file IO, so a non-``file:``
+    root fails with a ValueError naming it before any Spark job runs."""
+    monkeypatch.chdir(tmp_path)
+    with pytest.raises(ValueError, match="s3a://b/kb"):
+        runner.CheckpointedPipeline(spark, "s3a://b/kb")
+    sc = spark.sparkContext
+    sc.setJobGroup("uri_root_probe", "non-file checkpoint root")
+    try:
+        with pytest.raises(ValueError, match="s3a://b/kb"):
+            runner.run_kg_pipeline(spark, "s3a://b/kb", n_docs=5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("uri_root_probe")) == []
+    assert os.listdir(tmp_path) == []
+
+
 def test_optional_dedup_and_ann_stages_resume(spark, tmp_path):
     """Round-4 VERDICT #7: near-dup MinHash and the ANN index wired into
     the checkpointed pipeline as optional tail stages — fingerprint

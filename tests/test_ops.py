@@ -78,18 +78,6 @@ def test_cosine_topk_exact(spark):
     assert abs(got[1]["cos_sim"] - round(expect2, 6)) < 1e-9
 
 
-def test_pandas_cosine_matches_jvm(spark):
-    import random
-
-    rng = random.Random(3)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(50)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = [rng.uniform(-1, 1) for _ in range(16)]
-    a = {(r["vec_id"], r["cos_sim"]) for r in similarity.cosine_top_k(emb, q, 10).collect()}
-    b = {(r["vec_id"], r["cos_sim"]) for r in similarity.cosine_top_k_pandas(emb, q, 10).collect()}
-    assert a == b
-
-
 def test_ann_bucket_recall_vs_exact(spark):
     import random
 

@@ -36,12 +36,9 @@ def _builder(fn):
     return lambda spark: fn(spark, SF)
 
 
-def _embed_text(portable):
-    def build(spark):
-        docs = spark.read.parquet(f"{SF}/documents.parquet")
-        return similarity.embed_text(docs, dim=16, portable=portable)
-
-    return build
+def _embed_text(spark):
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    return similarity.embed_text(docs, dim=16)
 
 
 # name: (build(spark) -> DataFrame, must contain, must not contain)
@@ -98,14 +95,7 @@ SHAPES = {
     "ht_postings": (_builder(E._ht_postings), [], ["Exchange"]),
     # codegen assembly (no ObjectHashAggregate collect_list->map path) and
     # the distinct-token md5 map joined by broadcast
-    "embed_text_portable": (
-        _embed_text(True),
-        ["BroadcastHashJoin"],
-        ["ObjectHashAggregate", "SortMergeJoin"],
-    ),
-    # the scale path hashes inline: no token-map inner join (the LeftOuter
-    # zero-doc join remains in both paths)
-    "embed_text_xxhash": (_embed_text(False), ["xxhash64"], ["Inner"]),
+    "embed_text": (_embed_text, ["BroadcastHashJoin"], ["ObjectHashAggregate", "SortMergeJoin"]),
     # vocabulary-token filters are a codegen isin after the posexplode
     "glof_rollup": (_query("glof_rollup"), [], ["lambdafunction", "BatchEvalPython"]),
     "gvd_stats": (_query("gvd_stats"), [], ["lambdafunction", "BatchEvalPython"]),

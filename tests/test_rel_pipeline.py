@@ -6,6 +6,7 @@ were chosen to match (fixtures.py GOLDEN_*)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pubmedkb_web_spark import fixtures
@@ -54,7 +55,6 @@ def test_golden_pair_with_pmid(small_kb):
         e1_spec=("type_id", ("VARIANT", fixtures.GOLDEN_SNP_ID)),
         e2_spec=("type_id", ("Disease", fixtures.GOLDEN_DISEASE_ID)),
         pmid=pmid,
-        with_statistics=False,
     )
     docs = {r["doc_id"] for r in res.papers.collect()}
     assert docs == {pmid}
@@ -82,7 +82,6 @@ def test_golden_nested_or_and(small_kb):
         small_kb["meta"],
         e1_spec=e1,
         e2_spec=("type_id", ("Disease", fixtures.GOLDEN_DISEASE_ID)),
-        with_statistics=False,
     )
     assert res.papers.count() >= 0  # plan compiles and runs end-to-end
     hyd = res.relations
@@ -102,32 +101,27 @@ def test_sort_by_citation_and_impact(small_kb):
 
 
 def test_run_rel_summary_matches_selectors(small_kb):
-    """run_rel returns the page summary (server.py:924-958), and the
-    driver-side selection agrees relation-for-relation with the DataFrame
-    selectors — the two public APIs must pick identical rows on ties."""
+    """run_rel returns the page summary (server.py:924-958): exactly what
+    summarize_page selects and renders over run_rel's own hydrated rows."""
+    e1 = ("type_name", ("Gene", "braf"))
     res = rel.run_rel(
         small_kb["entity_postings"],
         small_kb["annotations"],
         small_kb["sentences"],
         small_kb["meta"],
-        e1_spec=("type_name", ("Gene", "braf")),
-        with_statistics=False,
+        e1_spec=e1,
     )
     assert res.summary is not None and res.summary["selected"]
-    expected = set()
-    used: list[str] = []
-    orr = summary.select_odds_ratio(res.relations).collect()
-    if orr:
-        expected.add(("odds_ratio", orr[0]["doc_id"], orr[0]["ann_id"]))
-        used.append(orr[0]["doc_id"])
-    cre = summary.select_cre(res.relations, used_pmids=used).collect()
-    if cre:
-        expected.add(("rbert_cre", cre[0]["doc_id"], cre[0]["ann_id"]))
-        used.append(cre[0]["doc_id"])
-    for r in summary.select_ore(res.relations, used_pmids=used).collect():
-        expected.add((r["annotator"], r["doc_id"], r["ann_id"]))
-    got = {(s["annotator"], s["doc_id"], s["ann_id"]) for s in res.summary["selected"]}
-    assert got == expected
+    rows = [r.asDict() for r in res.relations.collect()]
+    assert res.summary == summary.summarize_page(rows, e1_spec=e1)
+
+
+def test_sorted_page_non_relevance_sort_needs_meta(spark):
+    """A citation/year/impact sort without the meta table is a caller
+    error: ValueError, which survives ``python -O`` unlike an assert."""
+    scores = spark.createDataFrame([("1", 1.0)], "doc_id string, relevance double")
+    with pytest.raises(ValueError, match="meta table required"):
+        rel.sorted_page(scores, None, "citation", 0, 5)
 
 
 def test_summary_page(small_kb):

@@ -467,29 +467,3 @@ def test_ore_all_pmids_used_falls_back_to_first_row():
     ore = next(p for p in out["passages"] if p["passage_type"] == "ore")
     got = [(r["doc_id"], r["ann_id"]) for r in ore["relations"]]
     assert got == [("p1", "a7")]
-
-
-def test_select_ore_dataframe_matches_encounter_semantics(spark):
-    """The DataFrame selector must follow the same conditional ordering
-    as the driver-side replica."""
-    schema = "annotator string, predicate string, doc_id string, ann_id string, subject string, object string"
-    rows = [
-        ("spacy_ore", "binds", "p1", "a1", "s", "o"),
-        ("spacy_ore", "inhibits", "p1", "a2", "s", "o"),
-        ("spacy_ore", "inhibits", "p2", "a1", "s", "o"),
-        ("spacy_ore", "inhibits", "p3", "a1", "s", "o"),
-    ]
-    df = spark.createDataFrame(rows, schema)
-    picked = [(r["doc_id"], r["ann_id"]) for r in S.select_ore(df).collect()]
-    assert picked == [("p1", "a1"), ("p2", "a1")]
-    # and with a third predicate the trim reorders by support
-    df3 = spark.createDataFrame(
-        rows
-        + [
-            ("spacy_ore", "activates", "p4", "a1", "s", "o"),
-            ("spacy_ore", "activates", "p5", "a1", "s", "o"),
-        ],
-        schema,
-    )
-    picked3 = [(r["doc_id"], r["ann_id"]) for r in S.select_ore(df3).collect()]
-    assert picked3 == [("p1", "a2"), ("p4", "a1")]
