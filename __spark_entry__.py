@@ -740,8 +740,7 @@ def q_orders_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pagination slice 100..120 via the head-page path: TakeOrderedAndProject
     on the full relation, window only over the ≤120 survivors."""
     orders = _t(spark, sf_dir, "orders")
-    order = [F.col("o_orderdate").desc(), F.col("o_orderkey").desc()]
-    page = rel.ranked_slice(orders, order, 100, 120)
+    page = rel.ranked_slice(orders, "o_orderdate DESC, o_orderkey DESC", 100, 120)
     return page.select("o_orderkey", F.col("rank").alias("rn"))
 
 

@@ -1,7 +1,8 @@
 """M5 — the query layer (SURVEY.md §3).
 
-spec.py       entity-spec s-expression → DataFrame plan compiler
-rel.py        the /query_rel pipeline: evaluate → sort/paginate → hydrate → stats
+bound.py      SQL statements bound to the caller's DataFrames
+spec.py       entity-spec s-expression → one SQL statement (one postings scan)
+rel.py        the /query_rel pipeline: page, hydration, overlapped statistics
 nen.py        fuzzy name lookup (difflib ratio + length blocking)
 retrieval.py  BM25-as-join, RRF fusion, exact cosine top-k
 summary.py    per-annotator relation selection + template NLG

@@ -1,4 +1,4 @@
-"""Entity-spec compiler: s-expression tree → DataFrame plan.
+"""Entity-spec compiler: s-expression tree → one postings scan.
 
 The reference evaluates specs bottom-up over in-memory inverted indexes
 (/root/reference/kb_utils.py:1540-1682): leaf = index probe, AND = key-wise
@@ -6,109 +6,120 @@ set intersection (kb_utils.py:167-195), OR = key-wise union
 (kb_utils.py:198-216), two-entity = head/tail cross pairing
 (kb_utils.py:1651-1668), with per-query memoization and pmid pushdown.
 
-Here a spec compiles to a DataFrame DAG over ``entity_postings``:
+Here a whole tree compiles to ONE SQL statement over ``entity_postings``,
+bound to the caller's DataFrame with ``bound.sql(text, postings=...)``:
 
-- leaf  → filter (idx_kind, type, key) [+ pmid] — Catalyst pushes it to the
-          parquet scan of the postings table
-- AND   → inner join on (role, doc_id, ann_id): the reference intersects
-          pmid keysets AND annotation value-sets, which together are exactly
-          row-level intersection
-- OR    → unionByName + dropDuplicates
-- VARIANT umbrella → isin over the six concrete types (kb_utils.py:58-67)
-- memoization → identical leaves return the *same* DataFrame object, so
-          Catalyst reuses the subplan/exchange (kb_utils.py:1556-1562 analog)
+- scan    → the rows of any leaf: the disjunction of the leaf filters
+            (idx_kind, type, key), AND ``doc_id = pmid`` when given, is
+            pushed to the parquet scan
+- leaf    → a flag ``bool_or(<leaf filter>)`` per key group; for the
+            document queries one flag per role,
+            ``bool_or(role = 'head' AND <leaf filter>)``
+- AND/OR  → boolean algebra over the flags in the HAVING clause of one
+            ``GROUP BY doc_id, ann_id``: a (role, doc, ann) key is in a leaf's
+            set iff some posting row of that key matches it, so AND/OR of
+            flags is exactly the reference's key-wise intersection/union
+- single  → spec(head) OR spec(tail) (kb_utils.py:1638-1649)
+- pair    → (e1(head) AND e2(tail)) OR (e2(head) AND e1(tail))
+- VARIANT umbrella → ``type IN (...)`` over the six concrete types
+            (kb_utils.py:58-67)
+- memoization → identical leaves share one filter and one flag
+            (kb_utils.py:1556-1562 analog)
 
-The reference's "smallest input first" and "abort empty AND"
-(kb_utils.py:171-173,1572-1573) are left to Catalyst/AQE: join reordering +
-empty-relation propagation at runtime.
+One scan and one aggregation: no joins or unions.
+Spec keys, types and the pmid reach the SQL text only through PySpark's
+formatter quoting (the ``spark.sql`` keyword arguments), never by string
+interpolation.
+
+Precondition: every (doc_id, ann_id) of the postings carries ONE score; the
+aggregation keeps ``max(score)``. It holds for the built KB because ann_id
+hashes doc, sentence, annotator, head, tail and predicate
+(pipeline/extractors.py), so all postings of one annotation carry its one
+score.
 """
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..schemas import VARIANT_TYPES
+from . import bound
 
 Spec = tuple  # ("AND"|"OR", (spec, ...)) | ("type_id"|"type_name", (type, key))
 
-_HT_COLS = ["role", "doc_id", "ann_id", "score"]
+_ROLES = ("head", "tail")
 
 
 class SpecCompiler:
+    """Compiles spec trees over one postings relation (and optional pmid)
+    into boolean predicates over per-leaf flags, then runs them as one
+    grouped scan (:meth:`select`)."""
+
     def __init__(self, postings: DataFrame, pmid: str | None = None):
         self.postings = postings
         self.pmid = pmid
-        self._memo: dict[tuple, DataFrame] = {}
+        self._leaves: dict[tuple, str] = {}  # (idx_kind, type, key) → filter text
+        self._args: dict[str, str] = {}  # formatter placeholder → literal
 
-    # -- leaf -----------------------------------------------------------
-    def _leaf(self, idx_kind: str, etype: str, key: str) -> DataFrame:
-        memo_key = (idx_kind, etype, key, self.pmid)
-        if memo_key in self._memo:
-            return self._memo[memo_key]
-        p = self.postings
-        cond = (F.col("idx_kind") == idx_kind) & (F.col("key") == key)
-        if etype == "VARIANT":  # umbrella expansion
-            cond = cond & F.col("type").isin(VARIANT_TYPES)
-        else:
-            cond = cond & (F.col("type") == etype)
-        if self.pmid is not None:  # pmid pushdown below all joins (P2)
-            cond = cond & (F.col("doc_id") == self.pmid)
-        # umbrella expansion can match the same ann under several types →
-        # dedupe to pure (role, doc, ann) posting rows
-        df = p.filter(cond).select(*_HT_COLS).dropDuplicates(["role", "doc_id", "ann_id"])
-        self._memo[memo_key] = df
-        return df
+    def _bind(self, value: str) -> str:
+        name = f"v{len(self._args)}"
+        self._args[name] = value
+        return "{" + name + "}"
 
-    # -- tree -----------------------------------------------------------
-    def compile(self, spec: Spec) -> DataFrame:
+    def _leaf(self, idx_kind: str, etype: str, key: str) -> str:
+        memo_key = (idx_kind, etype, key)
+        if memo_key not in self._leaves:
+            if etype == "VARIANT":  # umbrella expansion
+                type_cond = "type IN (" + ", ".join(self._bind(t) for t in VARIANT_TYPES) + ")"
+            else:
+                type_cond = "type = " + self._bind(etype)
+            self._leaves[memo_key] = (
+                f"(idx_kind = {self._bind(idx_kind)} AND key = {self._bind(key)} AND {type_cond})"
+            )
+        return self._leaves[memo_key]
+
+    def predicate(self, spec: Spec, role: str | None = None) -> str:
+        """``spec`` as a boolean over aggregate flags; ``role`` ("head" or
+        "tail") restricts every leaf to that role's postings."""
         op = spec[0]
         if op in ("type_id", "type_name"):
-            etype, key = spec[1]
-            return self._leaf(op, etype, key)
-        branches: Sequence[Spec] = spec[1]
-        dfs = [self.compile(b) for b in branches]
-        if op == "OR":
-            out = dfs[0]
-            for d in dfs[1:]:
-                out = out.unionByName(d)
-            return out.dropDuplicates(["role", "doc_id", "ann_id"])
-        if op == "AND":
-            out = dfs[0]
-            for d in dfs[1:]:
-                out = out.join(
-                    d.select("role", "doc_id", "ann_id"),
-                    ["role", "doc_id", "ann_id"],
-                    "inner",
-                )
-            return out.dropDuplicates(["role", "doc_id", "ann_id"])
-        raise ValueError(f"unknown spec op: {op!r}")
+            leaf = self._leaf(op, *spec[1])
+            return f"bool_or({leaf})" if role is None else f"bool_or(role = '{role}' AND {leaf})"
+        if op not in ("AND", "OR"):
+            raise ValueError(f"unknown spec op: {op!r}")
+        return "(" + f" {op} ".join(self.predicate(b, role) for b in spec[1]) + ")"
+
+    def select(self, keys: str, having: str) -> DataFrame:
+        """The one statement: postings rows of any leaf compiled so far,
+        ``GROUP BY keys``, kept where ``having`` holds → (keys..., score)."""
+        where = " OR ".join(self._leaves.values())
+        if self.pmid is not None:  # pmid pushdown into the scan (P2)
+            where = f"({where}) AND doc_id = {self._bind(self.pmid)}"
+        text = (
+            f"SELECT {keys}, max(score) AS score FROM {{postings}} "
+            f"WHERE {where} GROUP BY {keys} HAVING {having}"
+        )
+        return bound.sql(text, postings=self.postings, **self._args)
+
+    def compile(self, spec: Spec) -> DataFrame:
+        """The spec's key set per role → (role, doc_id, ann_id, score)."""
+        return self.select("role, doc_id, ann_id", self.predicate(spec))
 
 
 def evaluate_single(postings: DataFrame, spec: Spec, pmid: str | None = None) -> DataFrame:
     """Single-entity query → (doc_id, ann_id, score): an annotation matches
     if the entity appears as head OR tail (kb_utils.py:1638-1649)."""
-    ht = SpecCompiler(postings, pmid).compile(spec)
-    return ht.select("doc_id", "ann_id", "score").dropDuplicates(["doc_id", "ann_id"])
+    c = SpecCompiler(postings, pmid)
+    head, tail = (c.predicate(spec, role) for role in _ROLES)
+    return c.select("doc_id, ann_id", f"{head} OR {tail}")
 
 
 def evaluate_pair(
     postings: DataFrame, e1_spec: Spec, e2_spec: Spec, pmid: str | None = None
 ) -> DataFrame:
-    """Two-entity query: (e1.head ∩ e2.tail) ∪ (e1.tail ∩ e2.head) per
-    annotation (kb_utils.py:1651-1668)."""
+    """Two-entity query → (doc_id, ann_id, score):
+    (e1.head ∩ e2.tail) ∪ (e1.tail ∩ e2.head) per annotation
+    (kb_utils.py:1651-1668)."""
     c = SpecCompiler(postings, pmid)
-    e1, e2 = c.compile(e1_spec), c.compile(e2_spec)
-
-    def directed(h: DataFrame, t: DataFrame) -> DataFrame:
-        hh = h.filter(F.col("role") == "head").select("doc_id", "ann_id", "score")
-        tt = t.filter(F.col("role") == "tail").select("doc_id", "ann_id")
-        return hh.join(tt, ["doc_id", "ann_id"], "inner")
-
-    return (
-        directed(e1, e2)
-        .unionByName(directed(e2, e1))
-        .dropDuplicates(["doc_id", "ann_id"])
-    )
+    (h1, t1), (h2, t2) = ([c.predicate(s, role) for role in _ROLES] for s in (e1_spec, e2_spec))
+    return c.select("doc_id, ann_id", f"({h1} AND {t2}) OR ({h2} AND {t1})")

@@ -24,6 +24,7 @@ from pubmedkb_web_spark.ops import similarity
 from tests.test_entry import SF
 
 PY = ["BatchEvalPython", "ArrowEvalPython"]
+SINGLE_SCAN = ["BatchEvalPython", "SortMergeJoin", "BroadcastHashJoin", "Union"]
 
 
 def _query(name):
@@ -59,9 +60,16 @@ SHAPES = {
     "cosine_topk": (_query("cosine_topk"), ["TakeOrderedAndProject"], PY),
     # pagination ranks only the <= page_end survivors, never the full
     # relation in one task
-    "rel_relevance_page": (_query("rel_relevance_page"), ["TakeOrderedAndProject"], ["BatchEvalPython"]),
+    "rel_relevance_page": (
+        _query("rel_relevance_page"),
+        ["TakeOrderedAndProject"],
+        ["BatchEvalPython", "Union", "SortMergeJoin"],
+    ),
     "rrf_fusion_orders": (_query("rrf_fusion_orders"), ["TakeOrderedAndProject"], ["BatchEvalPython"]),
-    "spec_and_or": (_query("spec_and_or"), [], ["BatchEvalPython"]),
+    # a spec tree is one postings scan and one aggregation: no per-leaf
+    # scans joined or unioned together
+    "spec_and_or": (_query("spec_and_or"), [], SINGLE_SCAN),
+    "spec_pair": (_query("spec_pair"), [], SINGLE_SCAN),
     "minhash_signatures": (_query("minhash_signatures"), ["HashAggregate"], PY),
     "simhash_docs": (_query("simhash_docs"), ["HashAggregate"], PY),
     "bm25_docs": (_query("bm25_docs"), ["BroadcastHashJoin"], ["BatchEvalPython"]),

@@ -6,7 +6,11 @@ were chosen to match (fixtures.py GOLDEN_*)."""
 
 from __future__ import annotations
 
+import threading
+
 import pytest
+from pyspark import StorageLevel
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from pubmedkb_web_spark import fixtures
@@ -188,3 +192,123 @@ def test_run_rel_releases_hits_cache(small_kb, spark):
         )
     after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
     assert after == before
+
+
+def test_postings_carry_one_score_per_annotation(small_kb):
+    """spec.py's precondition: the one GROUP BY keeps one score per
+    (doc_id, ann_id), so every posting of an annotation must carry the
+    same score."""
+    scores = (
+        small_kb["entity_postings"]
+        .groupBy("doc_id", "ann_id")
+        .agg(F.countDistinct("score").alias("n"))
+        .agg(F.min("n"), F.max("n"))
+        .first()
+    )
+    assert tuple(scores) == (1, 1)
+
+
+def _golden_args(small_kb):
+    return (
+        small_kb["entity_postings"],
+        small_kb["annotations"],
+        small_kb["sentences"],
+        small_kb["meta"],
+    )
+
+
+def _jobs_between(spark, group, fn):
+    """Run ``fn`` under job group ``group`` → (the ids of every job started
+    while it ran, the ids of its group's jobs). Two one-job markers bracket
+    the call: job ids are assigned in submission order."""
+    sc = spark.sparkContext
+
+    def marker(name):
+        sc.setJobGroup(name, name)
+        spark.range(1).collect()
+        (jid,) = sc.statusTracker().getJobIdsForGroup(name)
+        return jid
+
+    first = marker(f"{group}-before")
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        last = marker(f"{group}-after")
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return set(range(first + 1, last)), set(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# jobs of one golden run_rel on small_kb: the page, the hydration and the
+# overlapped statistics
+GOLDEN_JOB_BUDGET = 10
+
+
+def test_run_rel_jobs_stay_in_callers_group(small_kb, spark):
+    """Statistics run on a worker thread, yet every job of the request
+    carries the caller's job group, and the request fits its job budget."""
+    started, grouped = _jobs_between(
+        spark,
+        "rel-golden",
+        lambda: rel.run_rel(
+            *_golden_args(small_kb),
+            e1_spec=("type_id", ("VARIANT", fixtures.GOLDEN_SNP_ID)),
+        ),
+    )
+    assert started and started == grouped
+    assert len(grouped) <= GOLDEN_JOB_BUDGET
+
+
+def test_empty_page_hydrates_without_a_job(small_kb, spark):
+    """An empty page hydrates to an empty relation with the hydration
+    schema, and collecting it runs no Spark job."""
+
+    def hydrated(tree):
+        hits = spec.evaluate_single(small_kb["entity_postings"], tree)
+        page = rel.sorted_page(rel.paper_scores(hits), None, "relevance", 0, 10)
+        return rel.hydrate(page, hits, small_kb["annotations"], small_kb["sentences"])
+
+    empty = hydrated(("type_id", ("Gene", "NO_SUCH_ENTITY_XYZ")))
+    assert empty.schema == hydrated(("type_name", ("Gene", "braf"))).schema
+    started, _ = _jobs_between(spark, "rel-empty-hydration", empty.collect)
+    assert started == set()
+
+
+def test_run_rel_statistics_failure_is_raised(small_kb, spark):
+    """A failing statistics statement (no ``annotator`` column) surfaces
+    from run_rel, and leaves no cached relation behind."""
+    before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    postings, annotations, sentences, meta = _golden_args(small_kb)
+    with pytest.raises(AnalysisException, match="annotator"):
+        rel.run_rel(
+            postings, annotations.drop("annotator"), sentences, meta,
+            e1_spec=("type_name", ("Gene", "braf")),
+        )
+    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == before
+
+
+def test_run_rel_starts_no_thread_per_request(small_kb):
+    """The statistics worker is long-lived: after the first request, two
+    more start no new Python thread."""
+    args = _golden_args(small_kb)
+    e1 = ("type_name", ("Gene", "braf"))
+    rel.run_rel(*args, e1_spec=e1)
+    threads = set(threading.enumerate())
+    for _ in range(2):
+        rel.run_rel(*args, e1_spec=e1)
+    assert set(threading.enumerate()) <= threads
+
+
+def test_public_calls_keep_the_callers_cache(small_kb):
+    """Binding a DataFrame into a statement leaves the caller's cache in
+    place: a cached hit set stays cached across the public rel calls."""
+    hits = spec.evaluate_single(
+        small_kb["entity_postings"], ("type_name", ("Gene", "braf"))
+    ).cache()
+    try:
+        page = rel.sorted_page(rel.paper_scores(hits), None, "relevance", 0, 10)
+        rel.hydrate(page, hits, small_kb["annotations"], small_kb["sentences"])
+        rel.statistics(hits, small_kb["annotations"])
+        assert hits.storageLevel != StorageLevel.NONE
+    finally:
+        hits.unpersist()

@@ -7,14 +7,17 @@ import random
 
 import pytest
 
+from pubmedkb_web_spark.query import rel
 from pubmedkb_web_spark.query import spec as spec_mod
 
 import tests.oracle as oracle
 
 
-def _random_postings(rng: random.Random, n: int = 300) -> list[dict]:
+KEYS = [f"K{i}" for i in range(8)]
+
+
+def _random_postings(rng: random.Random, n: int = 300, keys=KEYS) -> list[dict]:
     types = ["Gene", "Disease", "SNP", "ProteinMutation", "Mutation"]
-    keys = [f"K{i}" for i in range(8)]
     return [
         {
             "idx_kind": rng.choice(["type_id", "type_name"]),
@@ -28,13 +31,13 @@ def _random_postings(rng: random.Random, n: int = 300) -> list[dict]:
     ]
 
 
-def _random_spec(rng: random.Random, depth: int = 0):
+def _random_spec(rng: random.Random, depth: int = 0, keys=KEYS):
     if depth >= 2 or rng.random() < 0.45:
         kind = rng.choice(["type_id", "type_name"])
         etype = rng.choice(["Gene", "Disease", "SNP", "VARIANT"])
-        return (kind, (etype, f"K{rng.randrange(8)}"))
+        return (kind, (etype, rng.choice(keys)))
     op = rng.choice(["AND", "OR"])
-    return (op, tuple(_random_spec(rng, depth + 1) for _ in range(rng.randint(2, 3))))
+    return (op, tuple(_random_spec(rng, depth + 1, keys) for _ in range(rng.randint(2, 3))))
 
 
 def _spark_postings(spark, rows):
@@ -103,3 +106,66 @@ def test_pmid_pushdown(spark):
     }
     assert got == oracle.eval_spec(rows, tree, pmid="d3")
     assert all(doc == "d3" for _, doc, _ in got)
+
+
+# keys that break out of a naively quoted SQL string literal or comment out
+# the rest of the statement
+HOSTILE_KEYS = ["o'brien", "a\\b", "x' OR '1'='1", "k -- c"]
+
+
+@pytest.fixture
+def sql_texts(spark, monkeypatch):
+    """The raw text of every ``spark.sql`` statement, before PySpark's
+    formatter binds its keyword arguments."""
+    texts = []
+    cls = type(spark)
+    real = cls.sql
+
+    def recording(self, sqlQuery, *args, **kwargs):
+        texts.append(sqlQuery)
+        return real(self, sqlQuery, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "sql", recording)
+    return texts
+
+
+@pytest.mark.parametrize("trial", range(3))
+def test_hostile_keys_match_bruteforce(spark, sql_texts, trial):
+    """Literals are bound, not interpolated: trees over keys with quotes,
+    backslashes and comment markers equal the oracle, and no key, type or
+    pmid appears in any statement's text."""
+    rng = random.Random(3000 + trial)
+    rows = _random_postings(rng, keys=HOSTILE_KEYS)
+    postings = _spark_postings(spark, rows)
+    tree = _random_spec(rng, keys=HOSTILE_KEYS)
+    e1, e2 = _random_spec(rng, keys=HOSTILE_KEYS), _random_spec(rng, keys=HOSTILE_KEYS)
+    got = {
+        (r["role"], r["doc_id"], r["ann_id"])
+        for r in spec_mod.SpecCompiler(postings).compile(tree).collect()
+    }
+    assert got == oracle.eval_spec(rows, tree)
+    pair = {(r["doc_id"], r["ann_id"]) for r in spec_mod.evaluate_pair(postings, e1, e2).collect()}
+    assert pair == oracle.eval_pair(rows, e1, e2)
+    pmid = "d3' OR '1'='1"
+    single = spec_mod.evaluate_single(postings, tree, pmid=pmid).collect()
+    assert single == []
+    assert sql_texts
+    literals = HOSTILE_KEYS + ["Gene", "Disease", "SNP", *oracle.VARIANT_TYPES, pmid]
+    assert not [(lit, t) for t in sql_texts for lit in literals if lit in t]
+
+
+def test_run_rel_pmid_is_a_literal(small_kb, sql_texts):
+    """A pmid that would widen a naively interpolated filter matches no
+    paper."""
+    pmid = "1' OR '1'='1"
+    res = rel.run_rel(
+        small_kb["entity_postings"],
+        small_kb["annotations"],
+        small_kb["sentences"],
+        small_kb["meta"],
+        e1_spec=("type_name", ("Gene", "braf")),
+        pmid=pmid,
+    )
+    assert res.papers.count() == 0
+    assert res.statistics["papers"] == 0
+    assert not [t for t in sql_texts if pmid in t or "braf" in t]
