@@ -1,12 +1,26 @@
-"""Pipeline orchestration with per-stage checkpoints, lineage and metrics.
+"""Pipeline orchestration: one stage table, one scheduler, per-stage
+checkpoints with lineage and metrics.
 
-North-rule requirements: resumable from per-stage checkpoints with
-per-partition lineage + metrics. Each stage writes its output parquet and a
-``_graft_meta.json`` marker containing the stage fingerprint (name + config
-+ upstream fingerprints — a Merkle-style lineage chain), the row count and
-per-partition row metrics. On resume, a stage whose marker matches its
-fingerprint is *read back* instead of recomputed; the first stage with a
-stale/missing marker recomputes, and everything downstream follows.
+The KG build is a table of :class:`Stage` rows (``run_kg_pipeline``). Each
+row names a stage, its upstream stages, a build function over the
+committed upstream tables, its config and its ``partition_by``. Optional
+stages are rows appended when their flags are set. The table lists every
+upstream before the rows that read it.
+
+:meth:`CheckpointedPipeline.run` schedules the table: a stage is submitted
+to a pool of ``TAIL_WORKERS`` driver threads as soon as all of its
+upstreams have committed, and at no other time, so independent stages run
+side by side and Spark schedules their jobs together. Each stage runs with
+the caller's local properties (job group, description, tags). On the first
+failure nothing more is submitted; the running stages finish and the
+error is re-raised.
+
+Each stage writes its output parquet and a ``_graft_meta.json`` marker
+containing the stage fingerprint (name + config + upstream fingerprints —
+a Merkle-style lineage chain), the row count and per-partition row
+metrics. On resume, a stage whose marker matches its fingerprint is *read
+back* instead of recomputed; the first stage with a stale/missing marker
+recomputes, and everything downstream follows.
 
 Determinism guarantees that make resume byte-stable: no
 monotonically_increasing_id, no RNG, no wall-clock anywhere in the stages
@@ -15,22 +29,30 @@ monotonically_increasing_id, no RNG, no wall-clock anywhere in the stages
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import tempfile
-import threading
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Callable
 from urllib.parse import unquote, urlparse
 
+from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import fixtures
 from . import canonicalize, extractors, materialize, mentions
 
 MARKER = "_graft_meta.json"
-# driver threads for the stages that run concurrently after `mentions`
+# driver threads that run the stages of one table
 TAIL_WORKERS = 6
+# mentions-stage input width: one partition per this many source docs, and at
+# least 2x parallelism. The width rule was one partition per 50k sentences;
+# the fixture corpus has 4.01-4.03 sentences per doc (measured: 2,017 at 500
+# docs seed 7, 80,165 at 20k docs seed 7, 80,221 at 20k docs seed 1), so 12,500
+# docs carry those 50k sentences.
+MENTION_DOCS_PER_PARTITION = 12_500
 
 
 def _module_source_bytes(name: str, loader, file_path: str | None) -> bytes:
@@ -137,6 +159,18 @@ class StageResult:
     seconds: float = 0.0
 
 
+@dataclass
+class Stage:
+    """One row of a stage table. ``build`` receives the committed tables of
+    ``upstream`` by name and returns the stage's output plan."""
+
+    name: str
+    upstream: tuple[str, ...]
+    build: Callable[[dict[str, DataFrame]], DataFrame]
+    config: dict | None = None
+    partition_by: tuple[str, ...] | None = None
+
+
 def _local_root(out_dir: str) -> str:
     """The checkpoint root as a local path. Markers, footer metrics and
     existence checks use local file IO, so a ``file:`` URI maps to its path
@@ -197,25 +231,10 @@ class CheckpointedPipeline:
         config: dict | None = None,
         upstream: list[str] | None = None,
         partition_by: list[str] | None = None,
-        session_confs: dict[str, str] | None = None,
     ) -> DataFrame:
-        """``session_confs``: SQL confs set for THIS stage's execution and
-        restored afterwards. The confs are session-wide, not per thread, so
-        they are race-free only while no other stage runs. ``stage`` may be
-        called from several threads at once (``run_kg_pipeline`` submits
-        its tail stages to a thread pool), so ``session_confs`` is accepted
-        only from the main thread, which runs the serial stages
-        (``ValueError`` otherwise). It is how heterogeneous stages coexist
-        in one session: the mentions window sort degrades superlinearly once
-        post-shuffle partitions grow past a few MB (3.2M docs, 8 cores:
-        391 s at 64 MB-ish partitions vs 110 s at 4 MB), while the
-        aggregation/write stages pay pure task overhead at 4 MB (tail wall
-        4× worse) — no single advisory size serves both."""
-        if session_confs and threading.current_thread() is not threading.main_thread():
-            raise ValueError(
-                f"stage {name!r}: session_confs are session-wide and need the "
-                "main thread; concurrently submitted stages cannot set them"
-            )
+        """Commit one stage, or read it back when its marker matches its
+        fingerprint. Safe to call from several threads at once for
+        different stages; each upstream must already be in ``results``."""
         config = config or {}
         upstream_fps = [self.results[u].fingerprint for u in (upstream or [])]
         fp = _fingerprint(name, config, upstream_fps)
@@ -234,22 +253,10 @@ class CheckpointedPipeline:
         import time
 
         t0 = time.time()
-        saved: dict[str, str | None] = {}
-        for k, v in (session_confs or {}).items():
-            saved[k] = self.spark.conf.get(k, None)
-            self.spark.conf.set(k, v)
-        try:
-            df = build()
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(path)
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    self.spark.conf.unset(k)
-                else:
-                    self.spark.conf.set(k, v)
+        writer = build().write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(path)
         out = self.spark.read.parquet(path)
         parts = _partition_metrics(path)
         row_count = sum(p["rows"] for p in parts)
@@ -269,6 +276,109 @@ class CheckpointedPipeline:
         )
         return out
 
+    def run(self, table: list[Stage]) -> dict[str, DataFrame]:
+        """Commit every stage of ``table`` and return the committed tables
+        by name. A stage is submitted to the pool once all of its upstreams
+        have committed, with the caller's local properties. After the first
+        failure nothing more is submitted; the running stages finish and
+        that failure is raised."""
+        listed: set[str] = set()
+        for row in table:
+            unlisted = [u for u in row.upstream if u not in listed]
+            if unlisted or row.name in listed:
+                raise ValueError(
+                    f"stage {row.name!r}: each name must be unique and each "
+                    f"upstream listed before it (not listed: {unlisted})"
+                )
+            listed.add(row.name)
+
+        done: dict[str, DataFrame] = {}
+        pending = list(table)
+        running: dict = {}
+        error: BaseException | None = None
+        with ThreadPoolExecutor(max_workers=TAIL_WORKERS, thread_name_prefix="stage") as ex:
+            while True:
+                ready = [r for r in pending if all(u in done for u in r.upstream)]
+                for row in ready if error is None else []:
+                    pending.remove(row)
+                    # wrapped per stage, so each stage gets its own copy of
+                    # the caller's local properties
+                    commit = inheritable_thread_target(self.spark)(self.stage)
+                    inputs = {u: done[u] for u in row.upstream}
+                    fut = ex.submit(
+                        commit, row.name, functools.partial(row.build, inputs),
+                        row.config, list(row.upstream), row.partition_by,
+                    )
+                    running[fut] = row
+                if not running:
+                    break
+                finished, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in finished:
+                    row = running.pop(fut)
+                    try:
+                        done[row.name] = fut.result()
+                    except BaseException as e:
+                        error = error or e
+        if error is not None:
+            raise error
+        return done
+
+
+def _mentions(source: DataFrame, n_docs: int, entity_dict: DataFrame) -> DataFrame:
+    """The mentions stage over the committed source. The input is hashed by
+    ``doc_id`` once, so the n-gram window and the per-sentence overlap
+    ``groupBy`` (both keyed by ``(doc_id, sent_idx)``) reuse that
+    partitioning instead of each shuffling the token rows. The width keeps
+    window-sort partitions small: the sort degrades superlinearly once a
+    partition's token rows outgrow execution memory (3.2M docs, 8 cores:
+    391 s at 64 MB-ish partitions vs 110 s at 4 MB). AQE does not coalesce
+    an exchange of a set width, so a small build writes one mentions file
+    per partition."""
+    width = max(
+        2 * source.sparkSession.sparkContext.defaultParallelism,
+        n_docs // MENTION_DOCS_PER_PARTITION,
+    )
+    return mentions.build_mentions(source.repartition(width, "doc_id"), entity_dict)[1]
+
+
+def _ann_index_stage(kind: str, out_dir: str) -> Stage:
+    """The optional ANN stage over a deterministic text embedding. The
+    partition column ("_sig" sign buckets / "_cent" inverted lists) gives
+    the stage parquet the partition-pruned layout build_ann_index /
+    ivf_build write: probe-set filters touch only the probed buckets'
+    directories. "kind" in the config makes switching layouts a
+    fingerprint change, so a resume never serves one layout as the other."""
+    from pyspark.sql import functions as F
+
+    from ..ops import similarity as sim_ops
+
+    if kind == "lsh":
+        cfg = {"kind": "lsh", "dim": 16, "n_planes": 8}
+
+        def build(t: dict[str, DataFrame]) -> DataFrame:
+            emb = sim_ops.embed_text(t["source"], text_col="content", id_col="doc_id", dim=cfg["dim"])
+            return emb.withColumn(
+                "_sig", sim_ops.hyperplane_signature(F.col("embedding"), cfg["dim"], cfg["n_planes"])
+            )
+
+        return Stage("ann_index", ("source",), build, cfg, ("_sig",))
+
+    cfg = {"kind": "ivf", "dim": 16, "n_centroids": 8, "n_iter": 4}
+
+    def build(t: dict[str, DataFrame]) -> DataFrame:
+        emb = sim_ops.embed_text(t["source"], text_col="content", id_col="doc_id", dim=cfg["dim"])
+        centroids = sim_ops.ivf_train(
+            emb, n_centroids=cfg["n_centroids"], n_iter=cfg["n_iter"], id_col="doc_id"
+        )
+        # probe-side artifact, persisted beside the stage parquet: a RESUMED
+        # stage skips this build, so the file written by the original run
+        # is the contract
+        with open(os.path.join(out_dir, "ann_index_centroids.json"), "w") as f:
+            json.dump(centroids, f)
+        return sim_ops.ivf_assign(emb, centroids)
+
+    return Stage("ann_index", ("source",), build, cfg, ("_cent",))
+
 
 def run_kg_pipeline(
     spark: SparkSession,
@@ -282,7 +392,11 @@ def run_kg_pipeline(
     with_ann_index: bool | str = False,
     with_quality: bool = False,
 ) -> dict[str, DataFrame]:
-    """Full M0→M4 build. Returns the materialized DataFrames by name.
+    """Full M0→M4 build. Returns the materialized DataFrames by name, plus
+    the pipeline under ``"_pipeline"``.
+
+    ``entity_dict`` is cached for the duration of the build and released
+    when it returns or raises, unless the caller had cached it.
 
     ``with_quality`` adds a ``doc_quality`` stage: the one-scan composed
     corpus-cleaning pass (``ops.textstats.document_quality`` — Gopher
@@ -298,281 +412,124 @@ def run_kg_pipeline(
     ``"ivf"`` trains the deterministic coarse quantizer, writes inverted
     lists PARTITIONED by ``_cent`` (the ivf_build shape) plus the
     centroid JSON (``out_dir/ann_index_centroids.json``) probes need.
-    Both are OPTIONAL tail
-    stages with the same fingerprint-resume contract as every other
-    stage; they read only the completed source stage, so enabling them
-    never changes the core tables' counts (round-4 VERDICT #7)."""
+    The optional stages have the same fingerprint-resume contract as every
+    other stage; they read only the committed source stage, so enabling
+    them never changes the core tables' counts (round-4 VERDICT #7)."""
     pipe = CheckpointedPipeline(spark, out_dir, resume=resume)
     out_dir = pipe.out_dir
     if entity_dict is None:
         entity_dict = fixtures.entity_dict_df(spark, seed)
-    entity_dict = entity_dict.cache()
-
-    src_cfg = {"n_docs": n_docs, "seed": seed, "external": source_df is not None}
-    source = pipe.stage(
-        "source",
-        lambda: fixtures.ingest(
-            source_df if source_df is not None else fixtures.source_table(spark, n_docs or 0, seed)
-        ),
-        config=src_cfg,
-    )
-
-    # driver-side scalar computed ONCE per run, before any stage needs it
-    # (round-3 VERDICT #3: keep tiny dictionary jobs off stage critical
-    # paths — entity_dict is cached, this is one narrow aggregate)
-    from pyspark.sql import functions as F
-
-    dict_max_tokens = int(
-        entity_dict.agg(
-            F.max(F.size(F.split("name", " "))).alias("m")
-        ).collect()[0]["m"]
-    )
-
-    sents_ments: dict[str, DataFrame] = {}
-
-    def build_m1() -> tuple[DataFrame, DataFrame]:
-        if "pair" not in sents_ments:
-            s, m = mentions.build_mentions(source, entity_dict, max_tokens=dict_max_tokens)
-            sents_ments["pair"] = (s, m)
-        return sents_ments["pair"]
-
-    sentences = pipe.stage("sentences", lambda: build_m1()[0], upstream=["source"])
-    # The n-gram window sort is the one stage whose cost is superlinear in
-    # post-shuffle partition size (3.2M docs / 8 cores: 391 s at session
-    # defaults vs 110 s with data-sized small partitions — the sort
-    # thrashes once a partition's token rows outgrow the execution-memory
-    # sweet spot). Scale its shuffle width with the SENTENCE count (known
-    # from the completed sentences stage's lineage) and pin a small AQE
-    # advisory so coalescing keeps sort partitions small; every other
-    # stage keeps the session's aggregation-friendly settings.
-    m_shuffle = max(
-        spark.sparkContext.defaultParallelism * 2,
-        pipe.results["sentences"].row_count // 50_000,
-    )
-    mention_df = pipe.stage(
-        "mentions",
-        lambda: build_m1()[1],
-        upstream=["source"],
-        session_confs={
-            "spark.sql.shuffle.partitions": str(m_shuffle),
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4m",
-        },
-    )
-
-    # GLOF track (server.py:1292-1334 + 1472-1523): GLOF term mentions,
-    # overlap-subtracted against normal mentions, rolled into the
-    # entity-GLOF evidence table that /query_ent_glof serves.
+    entity_types = entity_dict.select("id", "type").distinct()
     glof_dict = fixtures.glof_dict_df(spark)
     glof_max_tokens = max(len(t.split(" ")) for t, _ in fixtures.GLOF_TERMS)
+    rows = pipe.results  # committed lineage row counts, read by later stages
 
-    def build_glof() -> DataFrame:
-        gm = mentions.build_glof_mentions(sentences, glof_dict, glof_max_tokens)
-        merged = mentions.subtract_glof_overlaps(mention_df, gm)
-        return mentions.glof_evidence(merged)
+    def build_glof(t: dict[str, DataFrame]) -> DataFrame:
+        # GLOF track (server.py:1292-1334 + 1472-1523): GLOF term mentions,
+        # overlap-subtracted against normal mentions, rolled into the
+        # entity-GLOF evidence table that /query_ent_glof serves.
+        gm = mentions.build_glof_mentions(t["sentences"], glof_dict, glof_max_tokens)
+        return mentions.glof_evidence(mentions.subtract_glof_overlaps(t["mentions"], gm))
 
-    # Independent stages run CONCURRENTLY from driver threads: Spark
-    # schedules their jobs side by side, overlapping each stage's commit
-    # (write + footer metrics) with the others' compute instead of paying
-    # the serial per-stage floor once per stage. Dependencies are already
-    # materialized when each is submitted, so every submission only reads
-    # completed results.
-    from concurrent.futures import ThreadPoolExecutor
-
-    entity_types = entity_dict.select("id", "type").distinct()
-    with ThreadPoolExecutor(max_workers=TAIL_WORKERS) as ex:
-        # r7: canonical_map (needs only the entity dict) and glof (needs
-        # the committed sentences + mentions) used to run SERIALLY around
-        # the triples stage — ~3 s and the slowest tail stage respectively,
-        # both on the critical path. Submitting them here overlaps both
-        # with the annotations stage, whose shuffle stalls leave executors
-        # idle (guide §2.6: overlap independent jobs to back-fill).
-        # annotations itself sets no session confs, so there is no
-        # conf-race with concurrently built stages.
-        f_canon = ex.submit(
-            pipe.stage,
-            "canonical_map",
-            lambda: canonicalize.canonical_map(entity_dict),
-            config={"seed": seed},
-        )
-        f_glof = ex.submit(
-            pipe.stage, "glof", build_glof,
-            upstream=["sentences", "mentions"],
-            config={"terms": sorted(t for t, _ in fixtures.GLOF_TERMS)},
-        )
-        annotations = pipe.stage(
-            "annotations",
-            # the committed sentences table is one row per (doc_id, sent_idx)
-            # by construction, so its lineage row_count IS the distinct
-            # sentence total — passing it removes a full distinct+count job
-            # over the sentence table from this stage's critical path
-            lambda: extractors.extract_all(
-                mention_df,
-                sentences,
-                n_sentences=pipe.results["sentences"].row_count,
+    table = [
+        Stage(
+            "source", (),
+            lambda t: fixtures.ingest(
+                source_df if source_df is not None
+                else fixtures.source_table(spark, n_docs or 0, seed)
             ),
-            upstream=["sentences", "mentions"],
-        )
-        canon = f_canon.result()
-        triples = pipe.stage(
-            "triples",
-            lambda: materialize.dedup_triples(
-                canonicalize.rewrite_triples(extractors.to_triples(annotations), canon)
+            {"n_docs": n_docs, "seed": seed, "external": source_df is not None},
+        ),
+        Stage("sentences", ("source",), lambda t: mentions.split_sentences(t["source"])),
+        Stage(
+            "mentions", ("source",),
+            lambda t: _mentions(t["source"], rows["source"].row_count, entity_dict),
+        ),
+        Stage(
+            "canonical_map", (), lambda t: canonicalize.canonical_map(entity_dict), {"seed": seed}
+        ),
+        Stage(
+            "annotations", ("sentences", "mentions"),
+            # the committed sentences table is one row per (doc_id,
+            # sent_idx), so its lineage row count IS the distinct sentence
+            # total: no distinct+count job over the sentence table
+            lambda t: extractors.extract_all(
+                t["mentions"], t["sentences"], n_sentences=rows["sentences"].row_count
             ),
-            upstream=["annotations", "canonical_map"],
-            partition_by=["annotator"],
-        )
-
-        f_postings = ex.submit(
-            pipe.stage,
-            "entity_postings",
-            lambda: materialize.build_entity_postings(annotations).repartition(
+        ),
+        Stage(
+            "glof", ("sentences", "mentions"), build_glof,
+            {"terms": sorted(t for t, _ in fixtures.GLOF_TERMS)},
+        ),
+        Stage(
+            "triples", ("annotations", "canonical_map"),
+            lambda t: materialize.dedup_triples(
+                canonicalize.rewrite_triples(
+                    extractors.to_triples(t["annotations"]), t["canonical_map"]
+                )
+            ),
+            partition_by=("annotator",),
+        ),
+        Stage(
+            "entity_postings", ("annotations",),
+            lambda t: materialize.build_entity_postings(t["annotations"]).repartition(
                 spark.sparkContext.defaultParallelism, "type", "key"
             ),
-            upstream=["annotations"],
-        )
-        f_pair = ex.submit(
-            pipe.stage, "pair_stats",
-            lambda: materialize.build_pair_stats(triples), upstream=["triples"],
-        )
-        f_chem = ex.submit(
-            pipe.stage, "chem_disease",
-            lambda: materialize.build_chem_disease(triples, entity_types),
-            upstream=["triples"],
-        )
-        f_cgd = ex.submit(
-            pipe.stage, "cgd_paths",
-            lambda: materialize.build_cgd_paths(triples, entity_types),
-            upstream=["triples"],
-        )
-        f_meta = ex.submit(
-            pipe.stage, "meta",
-            lambda: fixtures.meta_table(spark, source, seed), upstream=["source"],
-        )
-        f_dedup = f_ann = f_quality = None
-        if with_quality:
-            from ..ops import textstats as textstats_ops
+        ),
+        Stage("pair_stats", ("triples",), lambda t: materialize.build_pair_stats(t["triples"])),
+        Stage(
+            "chem_disease", ("triples",),
+            lambda t: materialize.build_chem_disease(t["triples"], entity_types),
+        ),
+        Stage(
+            "cgd_paths", ("triples",),
+            lambda t: materialize.build_cgd_paths(t["triples"], entity_types),
+        ),
+        Stage("meta", ("source",), lambda t: fixtures.meta_table(spark, t["source"], seed)),
+    ]
+    if with_quality:
+        from ..ops import textstats as textstats_ops
 
-            f_quality = ex.submit(
-                pipe.stage,
-                "doc_quality",
-                lambda: textstats_ops.document_quality(source, text_col="content"),
-                upstream=["source"],
-                # published defaults; named in the fingerprint so a future
-                # threshold change re-runs the stage instead of resuming
-                config={"families": "gopher+pii+c4", "thresholds": "published-defaults"},
-            )
-        if with_dedup:
-            from ..ops import dedup as dedup_ops
+        table.append(Stage(
+            "doc_quality", ("source",),
+            lambda t: textstats_ops.document_quality(t["source"], text_col="content"),
+            # published defaults; named in the fingerprint so a future
+            # threshold change re-runs the stage instead of resuming
+            {"families": "gopher+pii+c4", "thresholds": "published-defaults"},
+        ))
+    if with_dedup:
+        from ..ops import dedup as dedup_ops
 
-            dedup_cfg = {
-                "threshold": 0.7, "n_shingle": 3, "num_hashes": 8,
-                "bands": 4, "max_bucket_size": 1024,
-            }
+        dedup_cfg = {
+            "threshold": 0.7, "n_shingle": 3, "num_hashes": 8,
+            "bands": 4, "max_bucket_size": 1024,
+        }
+        table.append(Stage(
+            "near_dup_pairs", ("source",),
+            # shingle/signature relations materialize ONCE under the
+            # pipeline root so the candidate/verify branches re-scan thin
+            # tables instead of recomputing the corpus pass
+            lambda t: dedup_ops.near_duplicates_minhash(
+                t["source"],
+                threshold=dedup_cfg["threshold"],
+                id_col="doc_id",
+                text_col="content",
+                work_dir=os.path.join(out_dir, "near_dup_work"),
+                max_bucket_size=dedup_cfg["max_bucket_size"],
+            ),
+            dedup_cfg,
+        ))
+    if with_ann_index:
+        kind = "ivf" if str(with_ann_index).lower() == "ivf" else "lsh"
+        table.append(_ann_index_stage(kind, out_dir))
 
-            def build_dedup() -> DataFrame:
-                # shingle/signature relations materialize ONCE under the
-                # pipeline root so the candidate/verify branches re-scan
-                # thin tables instead of recomputing the corpus pass
-                return dedup_ops.near_duplicates_minhash(
-                    source,
-                    threshold=dedup_cfg["threshold"],
-                    id_col="doc_id",
-                    text_col="content",
-                    work_dir=os.path.join(out_dir, "near_dup_work"),
-                    max_bucket_size=dedup_cfg["max_bucket_size"],
-                )
-
-            f_dedup = ex.submit(
-                pipe.stage, "near_dup_pairs", build_dedup,
-                upstream=["source"], config=dedup_cfg,
-            )
-        if with_ann_index:
-            from ..ops import similarity as sim_ops
-
-            ann_kind = (
-                "ivf" if str(with_ann_index).lower() == "ivf" else "lsh"
-            )
-            if ann_kind == "lsh":
-                ann_cfg = {"kind": "lsh", "dim": 16, "n_planes": 8}
-
-                def build_ann() -> DataFrame:
-                    emb = sim_ops.embed_text(
-                        source, text_col="content", id_col="doc_id",
-                        dim=ann_cfg["dim"],
-                    )
-                    return emb.withColumn(
-                        "_sig",
-                        sim_ops.hyperplane_signature(
-                            F.col("embedding"), ann_cfg["dim"], ann_cfg["n_planes"]
-                        ),
-                    )
-
-                ann_part = "_sig"
-            else:
-                ann_cfg = {
-                    "kind": "ivf", "dim": 16, "n_centroids": 8, "n_iter": 4,
-                }
-
-                def build_ann() -> DataFrame:
-                    emb = sim_ops.embed_text(
-                        source, text_col="content", id_col="doc_id",
-                        dim=ann_cfg["dim"],
-                    )
-                    centroids = sim_ops.ivf_train(
-                        emb,
-                        n_centroids=ann_cfg["n_centroids"],
-                        n_iter=ann_cfg["n_iter"],
-                        id_col="doc_id",
-                    )
-                    # probe-side artifact, persisted beside the stage
-                    # parquet: a RESUMED stage skips build_ann, so the
-                    # file written by the original run is the contract
-                    with open(
-                        os.path.join(out_dir, "ann_index_centroids.json"), "w"
-                    ) as f:
-                        json.dump(centroids, f)
-                    return sim_ops.ivf_assign(emb, centroids)
-
-                ann_part = "_cent"
-
-            # the partition column ("_sig" sign buckets / "_cent" inverted
-            # lists) gives the stage parquet the exact partition-pruned
-            # layout build_ann_index / ivf_build write: probe-set filters
-            # touch only the probed buckets' directories. "kind" in the
-            # config makes switching layouts a fingerprint change, so a
-            # resume never serves one layout as the other.
-            f_ann = ex.submit(
-                pipe.stage, "ann_index", build_ann,
-                upstream=["source"], config=ann_cfg, partition_by=[ann_part],
-            )
-        glof = f_glof.result()
-        postings = f_postings.result()
-        pair_stats = f_pair.result()
-        chem_disease = f_chem.result()
-        cgd_paths = f_cgd.result()
-        meta = f_meta.result()
-        near_dup = f_dedup.result() if f_dedup is not None else None
-        ann_index = f_ann.result() if f_ann is not None else None
-        doc_quality = f_quality.result() if f_quality is not None else None
-    out = {
-        "source": source,
-        "sentences": sentences,
-        "mentions": mention_df,
-        "annotations": annotations,
-        "canonical_map": canon,
-        "triples": triples,
-        "entity_postings": postings,
-        "pair_stats": pair_stats,
-        "chem_disease": chem_disease,
-        "cgd_paths": cgd_paths,
-        "glof": glof,
-        "meta": meta,
-        "_pipeline": pipe,  # type: ignore[dict-item]
-    }
-    if near_dup is not None:
-        out["near_dup_pairs"] = near_dup
-    if ann_index is not None:
-        out["ann_index"] = ann_index
-    if doc_quality is not None:
-        out["doc_quality"] = doc_quality
+    cache_dict = entity_dict.storageLevel == StorageLevel.NONE
+    if cache_dict:
+        entity_dict.cache()
+    try:
+        out = pipe.run(table)
+    finally:
+        if cache_dict:
+            entity_dict.unpersist()
+    out["_pipeline"] = pipe  # type: ignore[assignment]
     return out

@@ -5,12 +5,15 @@ from __future__ import annotations
 
 import json
 import os
-from concurrent.futures import ThreadPoolExecutor
+import threading
+import time
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
-from pubmedkb_web_spark.pipeline import runner
+from pubmedkb_web_spark import fixtures
+from pubmedkb_web_spark.pipeline import canonicalize, runner
 
 
 def _collect_triples(tables):
@@ -98,54 +101,145 @@ def test_kg_gate_counts_pinned_vs_oracle_vs_engine(spark, tmp_path):
     assert got == pinned
 
 
-def test_stage_session_confs_apply_and_restore(spark, tmp_path):
-    """Per-stage session confs must be visible during the stage's build
-    and restored (or unset) afterwards — the mechanism behind the
-    mentions-stage partition sizing."""
-    pipe = runner.CheckpointedPipeline(spark, str(tmp_path), resume=False)
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    before = spark.conf.get(key, None)
+def test_stage_starts_after_all_upstreams_commit(spark, tmp_path):
+    """A stage's build runs only once every upstream has committed its
+    parquet and marker, and it receives those committed tables."""
+    root = str(tmp_path / "kb")
+    pipe = runner.CheckpointedPipeline(spark, root, resume=False)
     seen = {}
 
-    def build():
-        seen["during"] = spark.conf.get(key)
-        return spark.range(10).toDF("id")
+    def slow(t):
+        time.sleep(1.0)
+        return spark.range(3)
 
-    pipe.stage("probe", build, session_confs={key: "4m"})
-    assert seen["during"] in ("4m", "4194304b", "4194304")
-    assert spark.conf.get(key, None) == before
+    def both(t):
+        seen["results"] = sorted(pipe.results)
+        seen["markers"] = sorted(
+            n for n in ("fast", "slow") if os.path.exists(os.path.join(root, n, runner.MARKER))
+        )
+        seen["inputs"] = {n: (df.count(), df.inputFiles()) for n, df in t.items()}
+        return t["fast"].unionByName(t["slow"])
+
+    out = pipe.run([
+        runner.Stage("fast", (), lambda t: spark.range(2)),
+        runner.Stage("slow", (), slow),
+        runner.Stage("both", ("fast", "slow"), both),
+    ])
+    assert seen["results"] == seen["markers"] == ["fast", "slow"]
+    for name, (rows, files) in seen["inputs"].items():
+        assert rows == pipe.results[name].row_count
+        assert files and all(os.path.join(root, name) in f for f in files)
+    assert out["both"].count() == 5
+    assert pipe.results["both"].recomputed
 
 
-def test_session_confs_only_from_main_thread(spark, tmp_path, monkeypatch):
-    """Session confs are session-wide, so a stage submitted to a thread
-    pool must not set them; the main-thread mentions stage still applies
-    its confs during its build and restores them afterwards."""
-    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    before = spark.conf.get(key, None)
-    pipe = runner.CheckpointedPipeline(spark, str(tmp_path / "probe"), resume=False)
-    with ThreadPoolExecutor(max_workers=1) as ex:
-        fut = ex.submit(pipe.stage, "probe", lambda: spark.range(1), session_confs={key: "4m"})
-        with pytest.raises(ValueError, match="main thread"):
-            fut.result(timeout=120)
-    assert "probe" not in pipe.results
-    assert spark.conf.get(key, None) == before
+def test_failed_stage_stops_the_table_and_reraises(spark, tmp_path):
+    """The first failure reaches the caller as the same exception; no stage
+    is submitted after it, so its dependents (and those of a stage still
+    committing) leave no directory or marker; the running independent stage
+    still commits; and no thread outlives the call."""
+    root = tmp_path / "kb"
+    pipe = runner.CheckpointedPipeline(spark, str(root), resume=False)
+    building, failed = threading.Event(), threading.Event()
+    raised = []
 
-    seen = {}
-    stage = runner.CheckpointedPipeline.stage
+    def independent(t):
+        building.set()
+        assert failed.wait(60)
+        return spark.range(4)
 
-    def spy(self, name, build, *args, **kwargs):
-        if name == "mentions":
-            def observed_build():
-                seen["conf"] = spark.conf.get(key)
-                return build()
+    def failing(t):
+        assert building.wait(60)
+        raised.append(RuntimeError("stage failed"))
+        failed.set()
+        raise raised[0]
 
-            return stage(self, name, observed_build, *args, **kwargs)
-        return stage(self, name, build, *args, **kwargs)
+    threads = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="stage failed") as err:
+        pipe.run([
+            runner.Stage("independent", (), independent),
+            runner.Stage("failing", (), failing),
+            runner.Stage("after_failing", ("failing",), lambda t: t["failing"]),
+            runner.Stage("after_independent", ("independent",), lambda t: t["independent"]),
+        ])
+    assert err.value is raised[0]
+    assert sorted(os.listdir(root)) == ["independent"]
+    assert os.path.exists(root / "independent" / runner.MARKER)
+    assert pipe.results["independent"].row_count == 4
+    assert sorted(pipe.results) == ["independent"]
+    assert set(threading.enumerate()) - threads == set()
 
-    monkeypatch.setattr(runner.CheckpointedPipeline, "stage", spy)
-    runner.run_kg_pipeline(spark, str(tmp_path / "kb"), n_docs=20)
-    assert seen["conf"] in ("4m", "4194304b", "4194304")
-    assert spark.conf.get(key, None) == before
+
+def test_table_rejects_upstream_not_listed_before(spark, tmp_path):
+    pipe = runner.CheckpointedPipeline(spark, str(tmp_path / "kb"), resume=False)
+    with pytest.raises(ValueError, match="'b'.*not listed: \\['c'\\]"):
+        pipe.run([
+            runner.Stage("a", (), lambda t: spark.range(1)),
+            runner.Stage("b", ("a", "c"), lambda t: t["a"]),
+            runner.Stage("c", (), lambda t: spark.range(1)),
+        ])
+    assert not os.path.exists(tmp_path / "kb")
+
+
+@pytest.mark.parametrize("caller", ["fixture", "uncached", "cached"])
+def test_build_caches_the_dictionary_only_while_it_runs(spark, tmp_path, monkeypatch, caller):
+    """The entity dictionary is cached while the build runs and released
+    when it returns, unless the caller had cached it: the fixture default,
+    a caller's uncached frame and a caller's cached frame."""
+    ed = fixtures.entity_dict_df(spark)
+    kwargs = {"entity_dict": ed}
+    if caller == "fixture":
+        monkeypatch.setattr(fixtures, "entity_dict_df", lambda spark, seed: ed)
+        kwargs = {}
+    if caller == "cached":
+        ed.cache()
+    seen = []
+    canonical_map = canonicalize.canonical_map
+
+    def spy(d):
+        seen.append(d.storageLevel)
+        return canonical_map(d)
+
+    monkeypatch.setattr(canonicalize, "canonical_map", spy)
+    try:
+        runner.run_kg_pipeline(spark, str(tmp_path / "kb"), n_docs=20, **kwargs)
+        assert seen and seen[0] != StorageLevel.NONE
+        assert (ed.storageLevel != StorageLevel.NONE) == (caller == "cached")
+    finally:
+        ed.unpersist()
+
+
+def test_failed_build_releases_the_dictionary(spark, tmp_path, monkeypatch):
+    """A stage failure reaches the caller of run_kg_pipeline, the build
+    releases the dictionary it cached, and no stage downstream of the
+    failed one is written."""
+    ed = fixtures.entity_dict_df(spark)
+
+    def boom(d):
+        raise RuntimeError("canonical_map failed")
+
+    monkeypatch.setattr(canonicalize, "canonical_map", boom)
+    root = tmp_path / "kb"
+    with pytest.raises(RuntimeError, match="canonical_map failed"):
+        runner.run_kg_pipeline(spark, str(root), n_docs=20, entity_dict=ed)
+    assert ed.storageLevel == StorageLevel.NONE
+    assert "triples" not in os.listdir(root)
+
+
+def test_build_jobs_carry_the_callers_job_group(spark, tmp_path):
+    """Every stage runs with the caller's local properties, so a build adds
+    no job without the caller's job group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("kg_build_caller", "caller's job group")
+    try:
+        runner.run_kg_pipeline(spark, str(tmp_path / "kb"), n_docs=20)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert len(tracker.getJobIdsForGroup("kg_build_caller")) > 20
 
 
 def test_truncated_marker_recomputes_from_that_stage(spark, tmp_path):

@@ -231,3 +231,33 @@ def test_co_starting_span_construction_order(spark):
     assert [(m["name"], m["type"], m["offset"], m["mention_idx"]) for m in exp] == [
         ("lung cancer", "Chemical", 4, 0)
     ]
+
+
+def test_mentions_stage_shuffles_docs_once(spark):
+    """The pipeline's mentions stage hashes its input docs by ``doc_id``
+    once; the n-gram window and the per-sentence overlap groupBy reuse that
+    partitioning (no exchange keyed by ``(doc_id, sent_idx)``), at a width
+    of at least twice the parallelism that grows with the committed source
+    row count, with the same mentions."""
+    import re
+
+    from pubmedkb_web_spark.pipeline import runner
+
+    def doc_exchange_width(ments):
+        plan = ments._jdf.queryExecution().executedPlan().toString()
+        assert not re.search(r"hashpartitioning\([^)]*sent_idx", plan), plan
+        widths = re.findall(r"hashpartitioning\(doc_id#\d+, (\d+)\), REPARTITION_BY_NUM", plan)
+        assert len(widths) == 1, plan
+        return int(widths[0])
+
+    src = fixtures.ingest(fixtures.source_table(spark, 40))
+    ed = fixtures.entity_dict_df(spark)
+    floor = 2 * spark.sparkContext.defaultParallelism
+    ments = runner._mentions(src, 40, ed)
+    assert doc_exchange_width(ments) == floor
+    # the scale term: a source of n docs gets n // MENTION_DOCS_PER_PARTITION
+    n_docs = (floor + 5) * runner.MENTION_DOCS_PER_PARTITION
+    assert doc_exchange_width(runner._mentions(src, n_docs, ed)) == floor + 5
+    assert sorted(map(tuple, ments.collect())) == sorted(
+        map(tuple, M.build_mentions(src, ed)[1].collect())
+    )
