@@ -23,8 +23,10 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import schemas
+from .query import bound
 
 SEED = 42
 
@@ -242,11 +244,17 @@ def journal_impact_table(spark: SparkSession) -> DataFrame:
         else:
             ratio, sub = "85%", "False"  # accepted via ratio
         rows.append((jn, 100 + n, ratio, sub, jn, f"{(n % 90) / 10.0:.3f}"))
-    return spark.createDataFrame(
-        rows,
-        "journal string, articles long, match_ratio string, "
-        "match_substring string, match_journal string, match_impact string",
+    schema = T.StructType(
+        [
+            T.StructField("journal", T.StringType()),
+            T.StructField("articles", T.LongType()),
+            T.StructField("match_ratio", T.StringType()),
+            T.StructField("match_substring", T.StringType()),
+            T.StructField("match_journal", T.StringType()),
+            T.StructField("match_impact", T.StringType()),
+        ]
     )
+    return bound.local_relation(spark, rows, schema)
 
 
 def meta_table(spark: SparkSession, source_ingested: DataFrame, seed: int = SEED) -> DataFrame:

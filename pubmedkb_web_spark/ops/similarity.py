@@ -18,8 +18,10 @@ import math
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.hashing import MERSENNE31, affine_params, md5_int60
+from ..query import bound
 from ..query.retrieval import cosine, cosine_top_k  # re-export baseline
 
 __all__ = [
@@ -301,6 +303,15 @@ def _cosine_cols(a: Column, b: Column) -> Column:
     return dot / F.sqrt(sq(a) * sq(b))
 
 
+_PROBE_QUERIES = T.StructType(
+    [
+        T.StructField("qid", T.StringType()),
+        T.StructField("qvec", T.ArrayType(T.DoubleType())),
+        T.StructField("probe", T.ArrayType(T.IntegerType())),
+    ]
+)
+
+
 def ivf_recall_at_k(
     embeddings: DataFrame,
     centroids: list[list[float]],
@@ -356,7 +367,8 @@ def ivf_recall_at_k(
             )
 
         def topk_sets(nprobe: int) -> dict[str, set]:
-            qdf = spark.createDataFrame(
+            qdf = bound.local_relation(
+                spark,
                 [
                     (
                         str(r[id_col]),
@@ -365,7 +377,7 @@ def ivf_recall_at_k(
                     )
                     for r in qrows
                 ],
-                "qid string, qvec array<double>, probe array<int>",
+                _PROBE_QUERIES,
             )
             w = Window.partitionBy("qid").orderBy(
                 F.col("s").desc(), F.col("cid").asc()

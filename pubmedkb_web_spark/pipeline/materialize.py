@@ -152,12 +152,12 @@ def build_cgd_paths(triples_dedup: DataFrame, entity_types: DataFrame) -> DataFr
     gd = typed_pairs(triples_dedup, entity_types, "Gene", "Disease")
     cg_agg = cg.groupBy(F.col("subj").alias("c"), F.col("obj").alias("g")).agg(
         F.first("pred").alias("cg_relation"),
-        F.array_sort(F.collect_set("doc_id")).alias("cg_pmids"),
+        F.sort_array(F.collect_set("doc_id")).alias("cg_pmids"),
         F.count(F.lit(1)).alias("cg_n"),
     )
     gd_agg = gd.groupBy(F.col("subj").alias("g"), F.col("obj").alias("d")).agg(
         F.first("pred").alias("gd_relation"),
-        F.array_sort(F.collect_set("doc_id")).alias("gd_pmids"),
+        F.sort_array(F.collect_set("doc_id")).alias("gd_pmids"),
         F.count(F.lit(1)).alias("gd_n"),
     )
     return (

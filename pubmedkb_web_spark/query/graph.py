@@ -15,6 +15,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from . import bound
+
+_VISITED = T.StructType(
+    [T.StructField("node", T.StringType()), T.StructField("depth", T.IntegerType())]
+)
+_MESH = T.StructType([T.StructField("mesh", T.StringType())])
 
 
 def bfs_subgraph(
@@ -39,9 +47,9 @@ def bfs_subgraph(
     spark = edges.sparkSession
     src, dst = ("src", "dst") if direction == "out" else ("dst", "src")
     edges = edges.localCheckpoint(eager=True)
-    visited = spark.createDataFrame(
-        [(r, 0) for r in roots], "node string, depth int"
-    ).localCheckpoint(eager=True)
+    visited = bound.local_relation(spark, [(r, 0) for r in roots], _VISITED).localCheckpoint(
+        eager=True
+    )
     frontier = visited
     for depth in range(1, max_depth + 1):
         nxt = (
@@ -112,7 +120,7 @@ def mesh_subgraph(
     # the level bounds are small constants so the lazy plan stays shallow
     # (guide §1.2: the serial job chain WAS the algorithm problem).
     qdf = (
-        spark.createDataFrame([(m,) for m in clean], "mesh string")
+        bound.local_relation(spark, [(m,) for m in clean], _MESH)
         .join(nodes.select("mesh"), "mesh")  # drop unknown ids (l.2277-2281)
         .localCheckpoint(eager=True)
     )
@@ -235,7 +243,7 @@ def chem_disease_lookup(
         df = df.filter(F.col("d") == d)
     return df.groupBy("c", "d").agg(
         F.countDistinct("doc_id").alias("n_docs"),
-        F.array_sort(F.collect_set("doc_id")).alias("doc_ids"),
+        F.sort_array(F.collect_set("doc_id")).alias("doc_ids"),
     )
 
 
@@ -249,7 +257,7 @@ def cgd_drug_discovery(
     paths = cgd_paths.filter(F.col("d") == d)
     per_chem = paths.groupBy("c").agg(
         F.round(F.sum("cgd_score"), 6).alias("cd_score"),
-        F.array_sort(
+        F.sort_array(
             F.collect_list(F.struct((-F.col("cgd_score")).alias("ns"), "g", "cgd_score"))
         ).alias("_genes"),
     )
@@ -257,8 +265,8 @@ def cgd_drug_discovery(
         per_chem.select(
             "c",
             "cd_score",
-            F.transform("_genes", lambda s: s["g"]).alias("genes"),
-            F.transform("_genes", lambda s: s["cgd_score"]).alias("gene_scores"),
+            F.col("_genes.g").alias("genes"),
+            F.col("_genes.cgd_score").alias("gene_scores"),
         )
         .orderBy(F.col("cd_score").desc(), F.col("c").asc())
         .limit(top_k)

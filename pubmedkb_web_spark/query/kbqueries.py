@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
+from . import bound
 
 # ---------------------------------------------------------------- V2G (J8)
 
@@ -51,9 +52,13 @@ def cross_product_lookup(main: DataFrame, c_keys: list[str], d_keys: list[str]) 
     """c_set × d_set probe (J12, server.py:2892-2896): crossJoin of two
     literal frames, then join the main (c, d)-keyed relation."""
     spark = main.sparkSession
-    cs = spark.createDataFrame([(c,) for c in c_keys], "c string")
-    ds = spark.createDataFrame([(d,) for d in d_keys], "d string")
+    cs = bound.local_relation(spark, [(c,) for c in c_keys], _key_schema("c"))
+    ds = bound.local_relation(spark, [(d,) for d in d_keys], _key_schema("d"))
     return F.broadcast(cs.crossJoin(ds)).join(main, ["c", "d"], "inner")
+
+
+def _key_schema(name: str) -> T.StructType:
+    return T.StructType([T.StructField(name, T.StringType())])
 
 
 # ------------------------------------------------- disease→gene score (A4/A5)
@@ -119,34 +124,39 @@ def gvd_pivot(
     cut at server.py:1786-1815 (``if top_k and i >= top_k: break`` over
     data already ordered by sort_score).
     """
-    out = (
-        pair_stats.groupBy("subj", "obj")
-        .pivot("annotator", annotators)
-        .agg(F.first("support"))
+    # annotator names reach the SQL text as formatter-quoted literals and as
+    # backtick-quoted column names (braces doubled for the formatter)
+    frames = {f"a{i}": a for i, a in enumerate(annotators)}
+    names = [
+        "`" + a.replace("`", "``").replace("{", "{{").replace("}", "}}") + "`" for a in annotators
+    ]
+    pivot = "".join(
+        f", coalesce(max(CASE WHEN annotator = {{{k}}} THEN support END), 0) AS {n}"
+        for k, n in zip(frames, names)
     )
-    filled = out.select(
-        "subj", "obj", *[F.coalesce(F.col(a), F.lit(0)).alias(a) for a in annotators]
+    sort_score = " + ".join(["CAST(0 AS BIGINT)"] + names)
+    # the per-subject rank partitions by subj: distributing the input by
+    # subj lets the pivot's GROUP BY and the rank share one exchange
+    text = (
+        f"SELECT *, {sort_score} AS sort_score FROM (SELECT subj, obj{pivot} FROM (SELECT "
+        "subj, obj, annotator, support FROM {pair_stats} DISTRIBUTE BY subj) GROUP BY subj, obj)"
     )
-    sort_score: Column = F.lit(0).cast("long")
-    for a in annotators:
-        sort_score = sort_score + F.col(a)
-    filled = filled.withColumn("sort_score", sort_score)
-    if gd_scores is not None:
-        gd = gd_scores.select(
-            "subj", "obj",
-            F.format_string("%.2f", F.col("score").cast("double") / 100.0).alias("new_score"),
-        )
-        filled = filled.join(F.broadcast(gd), ["subj", "obj"], "left")
+    if gd_scores is None:
+        text = f"SELECT *, CAST(NULL AS STRING) AS new_score FROM ({text})"
     else:
-        filled = filled.withColumn("new_score", F.lit(None).cast("string"))
-    if top_k is not None:
-        w = W.partitionBy("subj").orderBy(F.col("sort_score").desc(), F.col("obj").asc())
-        filled = (
-            filled.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") <= top_k)
-            .drop("_rk")
+        text = (
+            f"SELECT /*+ BROADCAST(g) */ p.*, g.new_score FROM ({text}) p LEFT JOIN "
+            "(SELECT subj, obj, format_string('%.2f', CAST(score AS double) / 100.0) AS new_score "
+            "FROM {gd_scores}) g ON p.subj = g.subj AND p.obj = g.obj"
         )
-    return filled
+        frames["gd_scores"] = gd_scores
+    if top_k is not None:
+        text = (
+            "SELECT * EXCEPT (_rk) FROM (SELECT *, row_number() OVER "
+            f"(PARTITION BY subj ORDER BY sort_score DESC, obj ASC) AS _rk FROM ({text})) "
+            f"WHERE _rk <= {int(top_k)}"
+        )
+    return bound.sql(text, pair_stats=pair_stats, **frames)
 
 
 # ----------------------------------------------------------------- GLOF

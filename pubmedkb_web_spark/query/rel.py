@@ -52,10 +52,11 @@ _STATISTICS = ThreadPoolExecutor(max_workers=1, thread_name_prefix="rel-statisti
 
 @dataclass
 class RelResult:
+    """One evaluated request. ``papers`` and ``relations`` are local
+    relations of the rows ``run_rel`` collected (``bound.local_relation``)."""
+
     papers: DataFrame      # (doc_id, relevance, sort_score, rank) — the page
-    # hydrated page annotations + sentences: the literal-key statement
-    # run_rel collected, so it re-reads the same rows
-    relations: DataFrame
+    relations: DataFrame   # hydrated page annotations + sentences
     statistics: dict       # overall + per-annotator counts
     summary: list = None   # NLG summary sentences for the page (server.py:924-958)
 
@@ -235,6 +236,11 @@ def run_rel(
     page_start: int = 0,
     page_end: int = 10,
 ) -> RelResult:
+    """Answer one /query_rel request (server.py:770-958): the page, the
+    hydration and the overlapped statistics, each statement run once. The
+    page and hydration rows are collected here; the result's ``papers`` and
+    ``relations`` hold those rows as local relations, so reading them runs
+    no Spark job."""
     if e2_spec is None:
         hits = spec_mod.evaluate_single(postings, e1_spec, pmid)
     else:
@@ -255,9 +261,7 @@ def run_rel(
         wait([stats])
     statistics_ = stats.result()  # raises the statistics' error, if any
     papers_schema = T.StructType([f for f in page.schema if f.name != "ann_ids"])
-    papers_df = spark.createDataFrame(
-        [tuple(r[f.name] for f in papers_schema) for r in page_rows], papers_schema
-    )
+    papers = [tuple(r[f.name] for f in papers_schema) for r in page_rows]
     # the reference returns the NLG summary with every /query_rel page
     # (server.py:924-958); it inspects ≤ one page of hydrated rows
     summary = summary_mod.summarize_page(
@@ -267,5 +271,8 @@ def run_rel(
         pmid=pmid,
     )
     return RelResult(
-        papers=papers_df, relations=relations, statistics=statistics_, summary=summary
+        papers=bound.local_relation(spark, papers, papers_schema),
+        relations=bound.local_relation(spark, rel_rows, relations.schema),
+        statistics=statistics_,
+        summary=summary,
     )

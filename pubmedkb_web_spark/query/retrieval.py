@@ -19,9 +19,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from ..ops.textstats import word_tokens
+from . import bound
+
+_DOC_IDS = T.StructType([T.StructField("doc_id", T.StringType())])
 
 RRF_K = 61  # reciprocal-rank constant (kb_utils.py:997)
 BM25_K1 = 1.5
@@ -233,7 +237,7 @@ def fetch_paper_text(paper_text: DataFrame, doc_ids: DataFrame | list[str]) -> D
     rebuilt driver-light from the id list itself."""
     spark = paper_text.sparkSession
     if isinstance(doc_ids, list):
-        ids = spark.createDataFrame([(d,) for d in doc_ids], "doc_id string")
+        ids = bound.local_relation(spark, [(d,) for d in doc_ids], _DOC_IDS)
     else:
         ids = doc_ids.select("doc_id")
     found = paper_text.select("doc_id", "title", "abstract").join(

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..query import bound
+
 LITVAR_URL = (
     "https://www.ncbi.nlm.nih.gov/research/litvar2-api/variant/autocomplete/"
 )
@@ -143,7 +145,7 @@ def results_df(spark: SparkSession, raw_json: str, query: str) -> DataFrame:
     schema = T.StructType(
         [T.StructField("query", T.StringType())] + list(RESULT_SCHEMA.fields)
     )
-    return spark.createDataFrame(rows, schema)
+    return bound.local_relation(spark, rows, schema)
 
 
 def query_variant(

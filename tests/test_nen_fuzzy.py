@@ -4,6 +4,8 @@ from __future__ import annotations
 
 import difflib
 
+import pytest
+
 from pubmedkb_web_spark import fixtures
 from pubmedkb_web_spark.query import nen
 
@@ -98,3 +100,34 @@ def test_variant_in_kb_matches_python_oracle(spark):
     expect.sort(key=lambda x: -x[3])  # python sort is stable
     assert got == expect
     assert got, "probe must hit the golden variant entries"
+
+
+def test_fuzzy_names_scores_its_bucket_in_one_job(spark):
+    """One scan collects the length bucket; scoring runs on the driver."""
+    ed = fixtures.entity_dict_df(spark).cache()
+    try:
+        ed.count()
+        sc = spark.sparkContext
+        sc.setJobGroup("fuzzy-one-job", "fuzzy")
+        try:
+            rows = nen.fuzzy_names(ed, "brafx").collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rows
+        assert len(sc.statusTracker().getJobIdsForGroup("fuzzy-one-job")) == 1
+    finally:
+        ed.unpersist()
+
+
+def test_fuzzy_names_refuses_an_oversized_bucket(spark, monkeypatch):
+    """A length bucket past MAX_BUCKET_ROWS raises instead of reaching the
+    driver, and the error names the bound and the bucket."""
+    ed = fixtures.entity_dict_df(spark)
+    q = "braf"
+    bucket = sum(abs(len(n.lower()) - len(q)) <= 1 for n in fixtures.build_entity_dict()["name"])
+    assert bucket > 2
+    monkeypatch.setattr(nen, "MAX_BUCKET_ROWS", bucket - 1)
+    with pytest.raises(ValueError, match=f"more than {bucket - 1} dictionary names of length 3-5"):
+        nen.fuzzy_names(ed, q)
+    monkeypatch.setattr(nen, "MAX_BUCKET_ROWS", bucket)
+    assert nen.fuzzy_names(ed, q).collect()

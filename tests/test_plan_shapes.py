@@ -21,6 +21,7 @@ import pytest
 
 import __spark_entry__ as E
 from pubmedkb_web_spark.ops import similarity
+from pubmedkb_web_spark.query import graph
 from tests.test_entry import SF
 
 PY = ["BatchEvalPython", "ArrowEvalPython"]
@@ -40,6 +41,21 @@ def _builder(fn):
 def _embed_text(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     return similarity.embed_text(docs, dim=16)
+
+
+def _cgd_topk(spark):
+    paths = spark.range(8).selectExpr(
+        "concat('c', id % 3) AS c", "'d0' AS d", "concat('g', id) AS g", "id / 8.0 AS cgd_score"
+    )
+    return graph.cgd_drug_discovery(paths, "d0", top_k=2)
+
+
+def _chem_disease(spark):
+    rows = spark.range(8).selectExpr(
+        "concat('c', id % 2) AS c", "concat('d', id % 3) AS d", "'paper' AS level",
+        "concat('p', id) AS doc_id",
+    )
+    return graph.chem_disease_lookup(rows, c="c1")
 
 
 # name: (build(spark) -> DataFrame, must contain, must not contain)
@@ -108,6 +124,12 @@ SHAPES = {
     "glof_rollup": (_query("glof_rollup"), [], ["lambdafunction", "BatchEvalPython"]),
     "gvd_stats": (_query("gvd_stats"), [], ["lambdafunction", "BatchEvalPython"]),
     "kg_extractor_slice": (_query("kg_extractor_slice"), [], ["lambdafunction", "BatchEvalPython"]),
+    # the fuzzy names reach the id lookup as literals: no Python in the plan
+    "fuzzy_nen": (_query("fuzzy_nen"), [], PY),
+    # lookups sort their per-key lists with sort_array and read struct
+    # fields, not array_sort's interpreted comparator or transform lambdas
+    "cgd_topk": (_cgd_topk, ["TakeOrderedAndProject"], ["lambdafunction", "BatchEvalPython"]),
+    "chem_disease": (_chem_disease, [], ["lambdafunction", "BatchEvalPython"]),
 }
 
 

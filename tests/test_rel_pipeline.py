@@ -12,9 +12,10 @@ import pytest
 from pyspark import StorageLevel
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pubmedkb_web_spark import fixtures
-from pubmedkb_web_spark.query import rel, spec, summary
+from pubmedkb_web_spark.query import bound, rel, spec, summary
 
 
 def test_golden_single_entity(small_kb):
@@ -312,3 +313,51 @@ def test_public_calls_keep_the_callers_cache(small_kb):
         assert hits.storageLevel != StorageLevel.NONE
     finally:
         hits.unpersist()
+
+
+_LOCAL = T.StructType(
+    [
+        T.StructField("doc_id", T.StringType(), False),
+        T.StructField("ann_ids", T.ArrayType(T.LongType())),
+        T.StructField("score", T.DoubleType()),
+    ]
+)
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_local_relation_reads_without_a_job(spark, arrow):
+    """Driver rows become a LocalRelation whatever the Arrow conf: arrays,
+    nulls and an empty row list round-trip with the given schema, and
+    reading the frame runs no Spark job."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, arrow)
+    try:
+        rows = [("d1", [3, 1], 0.5), ("d2", None, None), ("d3", [], 1.0)]
+        for given in (rows, []):
+            df = bound.local_relation(spark, given, _LOCAL)
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert plan.startswith("LocalRelation")
+            started, _ = _jobs_between(spark, f"local-relation-{arrow}-{len(given)}", df.collect)
+            assert started == set()
+            assert df.schema == _LOCAL
+            assert [tuple(r) for r in df.collect()] == given
+    finally:
+        spark.conf.set(key, prior)
+
+
+def test_reading_a_rel_result_runs_no_job(small_kb, spark):
+    """run_rel evaluates each statement once: collecting the result's papers
+    and relations afterwards runs no Spark job. (An aggregate over them,
+    such as ``count()``, still plans a JVM job over the local rows.)"""
+    res = rel.run_rel(
+        *_golden_args(small_kb), e1_spec=("type_id", ("VARIANT", fixtures.GOLDEN_SNP_ID))
+    )
+    read = {}
+    started, _ = _jobs_between(
+        spark,
+        "rel-read",
+        lambda: read.update(papers=res.papers.collect(), relations=res.relations.collect()),
+    )
+    assert started == set()
+    assert read["papers"] and read["relations"]
