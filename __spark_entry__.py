@@ -373,7 +373,7 @@ def q_cooccurrence_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair enumeration (n1 < n2) is a double explode of that ≤5-element
     # array per doc, replacing explode-every-token + DISTINCT shuffle +
     # doc_id self-join shuffle with a map-only plan (guide §2.4); only the
-    # final salted pair-count aggregation shuffles, as before.
+    # final pair-count aggregation shuffles.
     base = _doc_token_arrays(spark, sf_dir)
     vs = base.select(
         "doc_id", F.array_intersect(F.col("_toks"), _vocab_arr()).alias("_vs")
@@ -382,10 +382,9 @@ def q_cooccurrence_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         vs.select("doc_id", F.explode("_vs").alias("n1"), F.col("_vs"))
         .select("doc_id", "n1", F.explode("_vs").alias("n2"))
         .filter(F.col("n1") < F.col("n2"))
-        .withColumn("sent_idx", F.lit(0))
         .withColumn("score", F.lit(1.0))
     )
-    out = materialize.salted_pair_counts(pairs, ["n1", "n2"])
+    out = materialize.pair_counts(pairs, ["n1", "n2"])
     return out.select("n1", "n2", "support")
 
 
@@ -1226,7 +1225,7 @@ def q_gvd_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kg_extractor_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL-expressible slice of the M2 pipeline — the REAL
     ``extractors.extract_all`` (fused single-pass plan incl. mention_pairs
-    self-join, salted contingency, candidate-struct explode) over a
+    self-join, pair contingency, candidate-struct explode) over a
     deterministic mention set derived from the documents table; the
     co_occurrence + odds_ratio branches are fully relational, so DuckDB
     re-derives them value-for-value (CRE/ORE payloads hash with xxhash64 /

@@ -77,7 +77,7 @@ def build_entity_dict(seed: int = SEED) -> pd.DataFrame:
     for rank, gname in enumerate(gene_names, start=1):
         gid = GOLDEN_GENE_ID if gname == "braf" else f"CorrespondingGene:{1000 + rank}"
         # hot entity ≈100× the median dict frequency (FIXTURES.md §1) —
-        # enough to exercise salting without starving every other pair type
+        # enough to exercise hot-key aggregation without starving every other pair type
         freq = (6_000 if gname == "braf" else 0) + max(1, 1000 // rank)
         add("Gene", gid, gname, freq)
         add("Gene", gid, gname.upper(), max(1, freq // 3))  # case alias

@@ -13,9 +13,9 @@ fingerprints, text embeddings) value-for-value. 15 hex digits = 60 bits,
 always fits a signed int64.
 
 xxhash64 is faster JVM-side, but DuckDB cannot reproduce it, so it is used
-only where no SQL oracle re-derives the value: ``fast_id`` annotation ids,
-join salts, and the KG build's CRE label/confidence, which only the
-pure-Python oracle mirrors (:func:`xxh64_pmod`).
+only where no SQL oracle re-derives the value: ``fast_id`` annotation ids
+and the KG build's CRE label/confidence, which only the pure-Python oracle
+mirrors (:func:`xxh64_pmod`).
 """
 
 from __future__ import annotations
@@ -68,8 +68,8 @@ def affine_params(i: int) -> tuple[int, int]:
 # side is F.xxhash64. MD5/SHA expressions funnel through the synchronized
 # java.security provider lookup and *negatively* scale past ~8 threads
 # (measured 5.8s→24.8s for the same md5 job from 8→32 cores), so hot-path
-# ids and salts use xxhash64; md5 stays only where DuckDB-oracle
-# portability is required (small-data gate queries).
+# ids use xxhash64; md5 stays only where DuckDB-oracle portability is
+# required (small-data gate queries).
 
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
@@ -144,7 +144,7 @@ def xxh64_pmod(s: str, m: int, seed: int = 42) -> int:
 
 
 def fast_id(*cols: Column) -> Column:
-    """Lock-free deterministic 64-bit id for pipeline hot paths (ann_id,
-    salts): F.xxhash64 over the SEP-joined key. Oracle mirror:
+    """Lock-free deterministic 64-bit id for pipeline hot paths (ann_id):
+    F.xxhash64 over the SEP-joined key. Oracle mirror:
     :func:`xxh64_signed`."""
     return F.xxhash64(key_of(*cols))

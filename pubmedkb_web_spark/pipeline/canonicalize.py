@@ -1,163 +1,76 @@
-"""M3 — entity canonicalization via connected components.
+"""M3 — entity canonicalization: ids that share a surface form are one entity.
 
 The reference never canonicalizes — every query carries raw (type, id/name)
 keys and the umbrella VARIANT expansion (kb_utils.py:58-67) papers over id
 aliasing at query time. At KG scale we resolve aliases once at build time:
-ids that share a surface form are one entity; the component representative
-(lexicographic min id) becomes the canonical id.
+ids that share a lowercased name are one entity, and the lexicographically
+smallest id of each connected component becomes the canonical id.
 
-Algorithm: alternating LARGE-STAR / SMALL-STAR (Kiveris et al. 2014,
-"Connected Components in MapReduce and Beyond" — public), which converges
-in O(log n) rounds on ANY graph shape, vs O(diameter) for the min-label
-propagation it replaces (round-3 VERDICT #6: one long alias chain at build
-scale turned propagation into dozens of full-graph shuffles).
+:func:`canonical_map` collects, in one statement, the id set of every
+lowercased name held by two or more distinct ids. A union-find on the
+driver merges the sets into components, and the ids that are not their
+component's root become a local relation. The stage's plan is the distinct
+dictionary ids left-joined to that relation, broadcast.
 
-  large-star: every node u points each STRICTLY-LARGER neighbor v at the
-      minimum m of u's closed neighborhood → long chains fold toward small
-      labels in both directions at once;
-  small-star: every node u (edges held child→parent, child = max endpoint)
-      points its smaller neighbors and itself at that minimum → flattens
-      partial stars.
+Precondition: the alias groups are a subset of the entity dictionary, which
+the build already broadcasts whole (``mentions.dictionary_candidates``,
+:func:`rewrite_triples`). A collect too large for the driver fails loudly
+through ``spark.driver.maxResultSize``. The collect runs when the stage
+builds its plan, inside the stage's thread and job group.
 
-Each phase is one shuffle (groupBy the pivot node) plus a broadcast-free
-self-join; per-iteration localCheckpoint(eager) cuts lineage so the plan
-does not double every round (the classic iterative-join pitfall).
-Convergence = the edge set reaches a fixpoint, detected by a deterministic
-(count, xxhash64-sum) checksum — one tiny aggregate per round instead of a
-full set comparison. At the fixpoint the edges ARE the star map
-(child → component-min root).
-
-Determinism: min() is order-free and both phases are pure functions of the
-edge SET, so the result is independent of partitioning and thread count —
-the property checkpoint-resume relies on.
-
-Scale: 2 shuffles per round, O(log n) rounds, edge volume never grows
-beyond the symmetrized input (each phase emits ≤ one edge per (node,
-neighbor) pair). No driver materialization beyond the per-round checksum
-row.
+Determinism: the components and their smallest ids are functions of the
+dictionary's (id, name) set, whatever its partitioning or row order — the
+property checkpoint-resume relies on.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-MAX_ITERATIONS = 25
-
-# observability: rounds used by the most recent connected_components call
-# (tests assert the O(log n) bound on a worst-case chain)
-LAST_ROUNDS = 0
+from ..query import bound
 
 
-def _large_star(edges: DataFrame) -> DataFrame:
-    """(u,v) edge set → edges (v, m) for every v ∈ Γ(u), v > u, where
-    m = min(Γ(u) ∪ {u})."""
-    sym = edges.select("src", "dst").unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    m = sym.groupBy("src").agg(
-        F.least(F.min("dst"), F.first("src")).alias("m")
-    )
-    return (
-        sym.join(m, "src")
-        .filter(F.col("dst") > F.col("src"))
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .distinct()
-    )
+def _roots(groups) -> dict[str, str]:
+    """Union-find over id sets: each id that is not its component's root →
+    the component's smallest id."""
+    parent: dict[str, str] = {}
 
+    def find(x: str) -> str:
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
 
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Edges held child→parent (child = max endpoint): every child u points
-    its smaller neighbors and itself at m = min(Γ(u) ∪ {u})."""
-    directed = edges.select(
-        F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
-    ).filter(F.col("src") != F.col("dst"))
-    m = directed.groupBy("src").agg(F.min("dst").alias("m"))
-    nbrs = (
-        directed.join(m, "src")
-        .filter(F.col("dst") != F.col("m"))
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-    )
-    selfs = m.filter(F.col("src") != F.col("m")).select(
-        "src", F.col("m").alias("dst")
-    )
-    return nbrs.unionByName(selfs).distinct()
-
-
-def _checksum(edges: DataFrame) -> tuple[int, int]:
-    """Order-free fingerprint of the edge set: (count, sum of xxhash64)."""
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        # decimal accumulator: a long sum of 64-bit hashes overflows (ANSI)
-        F.sum(
-            F.xxhash64(F.concat_ws("\x1f", "src", "dst")).cast("decimal(38,0)")
-        ).alias("h"),
-    ).collect()[0]
-    return int(row["n"] or 0), int(row["h"] or 0)
-
-
-def connected_components(
-    nodes: DataFrame, edges: DataFrame, max_iter: int = MAX_ITERATIONS
-) -> DataFrame:
-    """nodes(id) + edges(src,dst) → canonical_map(id, canonical_id).
-
-    Alternating large-star/small-star to the edge-set fixpoint; the final
-    edges map every non-root node to its component's min id.
-    """
-    global LAST_ROUNDS
-    e = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    prev = _checksum(e)
-    LAST_ROUNDS = 0
-    if prev[0] > 0:
-        for _ in range(max_iter):
-            e = _small_star(_large_star(e)).localCheckpoint(eager=True)
-            LAST_ROUNDS += 1
-            cur = _checksum(e)
-            if cur == prev:
-                break
-            prev = cur
-        else:
-            # Exhausting max_iter without an edge-set fixpoint means the
-            # map below could carry MULTIPLE conflicting canonical_ids per
-            # node (non-star residual edges) — silent corruption feeding
-            # the dedup/rewrite stages (round-4 ADVICE). Fail loudly; the
-            # alternating algorithm converges in O(log n) rounds, so
-            # hitting this means a pathological input or a too-small
-            # max_iter, both of which the caller must see.
-            raise RuntimeError(
-                f"connected_components did not reach the edge-set fixpoint "
-                f"in max_iter={max_iter} rounds; raise max_iter"
-            )
-    roots = e.select(F.col("src").alias("id"), F.col("dst").alias("canonical_id"))
-    return nodes.select("id").distinct().join(roots, "id", "left").select(
-        "id", F.coalesce("canonical_id", "id").alias("canonical_id")
-    )
-
-
-def alias_edges(entity_dict: DataFrame) -> DataFrame:
-    """Undirected edges between ids sharing a lowercased surface form."""
-    n = entity_dict.select(
-        F.lower(F.col("name")).alias("nm"), F.col("id").alias("id")
-    ).distinct()
-    a = n.select("nm", F.col("id").alias("src"))
-    b = n.select("nm", F.col("id").alias("dst"))
-    e = (
-        a.join(b, "nm")
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
-    return e
+    for ids in groups:
+        roots = {find(i) for i in ids}
+        low = min(roots)
+        for r in roots:
+            parent[r] = low
+    return {i: r for i in parent if (r := find(i)) != i}
 
 
 def canonical_map(entity_dict: DataFrame) -> DataFrame:
-    nodes = entity_dict.select("id").distinct()
-    return connected_components(nodes, alias_edges(entity_dict))
+    """entity_dict(id, name, ...) → (id, canonical_id), one row per distinct
+    id. A NULL name aliases nothing; a NULL id maps to NULL."""
+    groups = bound.sql(
+        "SELECT collect_set(id) AS ids FROM {d} WHERE name IS NOT NULL "
+        "GROUP BY lower(name) HAVING size(collect_set(id)) > 1",
+        d=entity_dict,
+    ).collect()
+    schema = T.StructType(
+        [T.StructField("id", T.StringType()), T.StructField("canonical_id", T.StringType())]
+    )
+    moved = bound.local_relation(
+        entity_dict.sparkSession, list(_roots(g["ids"] for g in groups).items()), schema
+    )
+    return bound.sql(
+        "SELECT /*+ BROADCAST(m) */ d.id, coalesce(m.canonical_id, d.id) AS canonical_id "
+        "FROM (SELECT DISTINCT id FROM {d}) d LEFT JOIN {m} m ON d.id = m.id",
+        d=entity_dict,
+        m=moved,
+    )
 
 
 def rewrite_triples(triples: DataFrame, canon: DataFrame) -> DataFrame:

@@ -7,9 +7,9 @@ within (doc_id, sent_idx) — the only shuffle, keyed by sentence, uniform).
 
 - ``co_occurrence``  payload passthrough (server.py:717-718)
 - ``odds_ratio``     corpus-level 2×2 contingency per entity-name pair →
-                     (OR, CI, p-value) strings (server.py:705-710); the
-                     pair-count aggregation is *salted* two-phase because
-                     hot entities (the V600E/BRAF analog) concentrate pairs
+                     (OR, CI, p-value) strings (server.py:705-710); hot
+                     entities (the V600E/BRAF analog) concentrate pairs,
+                     which the pair count's map-side partial combines
 - ``spacy_ore``/``openie_ore``  subject-predicate-object span triples
                      (server.py:711-716): spacy = strict adjacency pattern,
                      openie = unique predicate token between the spans
@@ -32,7 +32,6 @@ from ..functions.hashing import fast_id, key_of
 from ..schemas import CRE_LABELS, VARIANT_TYPES
 
 PREDICATES = ["inhibits", "activates", "causes", "treats", "binds", "regulates"]
-N_SALT = 16  # salt buckets for hot-pair aggregation
 
 _PAYLOAD_FIELDS = (
     "or_value", "ci", "p_value", "relation", "confidence",
@@ -223,15 +222,14 @@ def _erfc_sqrt_half(chi2: pd.Series) -> pd.Series:
 def pair_contingency(
     mentions: DataFrame,
     sentences: DataFrame,
-    n_salt: int = N_SALT,
     n_sentences: int | None = None,
 ) -> DataFrame:
     """Corpus-level 2×2 contingency per unordered lowercased name pair.
 
     a = sentences with both names, b = with n1 only, c = with n2 only,
-    d = N − a − b − c. The pair-count groupBy is salted two-phase: hot
-    entities (HOT analog appears in a large share of sentences) would
-    otherwise funnel one reducer; partial counts per (pair, salt) first.
+    d = N − a − b − c. Hot entities (the HOT analog appears in a large
+    share of sentences) reach the pair count's reducer pre-combined by its
+    map-side partial count.
 
     ``n_sentences``: total distinct sentence count. When the caller
     already knows it (the pipeline runner records the sentences stage's
@@ -247,9 +245,9 @@ def pair_contingency(
     # per-sentence distinct name set is collected once, and unordered
     # pairs (n1 < n2) fall out of a double explode of that bounded array
     # (a sentence holds a handful of mentions). Pair multiset and name
-    # counts are identical to the self-join formulation; the salted
-    # two-phase pair count below is unchanged (guide §2.4: remove the
-    # join's exchanges outright, §2.3: shuffle name sets, not pair rows).
+    # counts are identical to the self-join formulation (guide §2.4:
+    # remove the join's exchanges outright, §2.3: shuffle name sets, not
+    # pair rows).
     per_sent = (
         mentions.select("doc_id", "sent_idx", F.lower(F.col("name")).alias("nm"))
         .groupBy("doc_id", "sent_idx")
@@ -265,14 +263,7 @@ def pair_contingency(
         .filter(F.col("n1") < F.col("n2"))
     )
 
-    salt = F.pmod(F.xxhash64(key_of(F.col("doc_id"), F.col("sent_idx"))), F.lit(n_salt))
-    a = (
-        sent_pairs.withColumn("_salt", salt)
-        .groupBy("n1", "n2", "_salt")
-        .agg(F.count(F.lit(1)).alias("pc"))
-        .groupBy("n1", "n2")
-        .agg(F.sum("pc").alias("a"))
-    )
+    a = sent_pairs.groupBy("n1", "n2").agg(F.count(F.lit(1)).alias("a"))
     name_counts = per_sent.select(F.explode("_nms").alias("nm")).groupBy("nm").agg(
         F.count(F.lit(1)).alias("nc")
     )

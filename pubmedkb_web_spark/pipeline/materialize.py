@@ -11,9 +11,11 @@ Write-side equivalents of the reference's precomputed stores:
 - ``cgd_paths``        materialized 2-hop chem→gene→disease join
                        (kb_utils.py:2783-2823)
 
-Skew: pair_stats aggregates are salted two-phase (the hot V600E/BRAF analog
-concentrates a large fraction of all pairs on one key — a plain groupBy
-funnels one reducer). Partitioning: triples partitioned by annotator
+Skew: the hot V600E/BRAF analog concentrates a large fraction of all
+pairs on one key; pair_stats is one hash aggregation, whose map-side
+partial count already combines a hot key before the exchange, so each
+reducer receives at most one partial row per key and map task.
+Partitioning: triples partitioned by annotator
 (query layer always filters/groups by it); postings repartitioned by
 (type, key) so a query-side leaf lookup touches few files.
 """
@@ -22,10 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.hashing import key_of
-
-N_SALT = 16
 
 
 def dedup_triples(triples: DataFrame) -> DataFrame:
@@ -80,23 +78,12 @@ def build_entity_postings(annotations_wide: DataFrame) -> DataFrame:
     )
 
 
-def salted_pair_counts(
-    df: DataFrame, keys: list[str], n_salt: int = N_SALT
-) -> DataFrame:
-    """Two-phase count: groupBy(keys + salt) partial → groupBy(keys) final.
-
-    Defuses hot-key skew on the reduce side; the salt is a deterministic
-    hash of doc identity, never RNG (checkpoint-resume determinism).
-    xxhash64: lock-free, unlike the md5/sha MessageDigest path.
-    """
-    salt = F.pmod(F.xxhash64(key_of(F.col("doc_id"), F.col("sent_idx"))), F.lit(n_salt))
-    partial = (
-        df.withColumn("_salt", salt)
-        .groupBy(*keys, "_salt")
-        .agg(F.count(F.lit(1)).alias("_pc"), F.sum("score").alias("_ps"))
-    )
-    return partial.groupBy(*keys).agg(
-        F.sum("_pc").alias("support"), F.round(F.sum("_ps"), 6).alias("score_sum")
+def pair_counts(df: DataFrame, keys: list[str]) -> DataFrame:
+    """Per key: evidence rows (``support``) and rounded score mass
+    (``score_sum``). Spark's hash aggregate counts and sums map-side
+    before its one exchange, so a hot key reaches its reducer pre-combined."""
+    return df.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("support"), F.round(F.sum("score"), 6).alias("score_sum")
     )
 
 
@@ -104,7 +91,7 @@ def build_pair_stats(triples_dedup: DataFrame) -> DataFrame:
     """per (subj, obj, annotator): evidence support + score mass — the
     build-time analog of the GVD score tables (annotator columns appear at
     query time via pivot, SURVEY.md A7)."""
-    return salted_pair_counts(triples_dedup, ["subj", "obj", "annotator"])
+    return pair_counts(triples_dedup, ["subj", "obj", "annotator"])
 
 
 def build_chem_disease(triples_dedup: DataFrame, entity_types: DataFrame) -> DataFrame:

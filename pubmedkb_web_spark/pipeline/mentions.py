@@ -26,9 +26,10 @@ Reference semantics re-expressed Spark-first:
   per-sentence range anti-join, pure codegen.
 
 Scale notes (100 TB): every step before the final groupBy is narrow
-(map-only). The only shuffles are the applyInPandas group (keyed by
-(doc_id, sent_idx) — uniformly distributed, no skew: doc_id is a sha256
-prefix) and the mention aggregation on the same key. The dictionary
+(map-only). The only shuffle is that groupBy, which collects each
+sentence's candidates keyed by (doc_id, sent_idx) — uniformly distributed,
+no skew: doc_id is a sha256 prefix. The overlap fold is a scalar pandas UDF
+over the grouped arrays, with no further shuffle. The dictionary
 (~millions of names at full scale) broadcasts at ≤ a few hundred MB; above
 that, switch the join to a bucketed sort-merge on name_lower.
 """

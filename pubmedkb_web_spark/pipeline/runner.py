@@ -24,7 +24,7 @@ recomputes, and everything downstream follows.
 
 Determinism guarantees that make resume byte-stable: no
 monotonically_increasing_id, no RNG, no wall-clock anywhere in the stages
-(ids are content hashes, salts are hashes of row keys).
+(ids are content hashes).
 """
 
 from __future__ import annotations

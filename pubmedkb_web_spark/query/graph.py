@@ -222,10 +222,8 @@ def mesh_name_lookup(mesh_names: DataFrame, meshes: list[str]) -> DataFrame:
     kb_utils.py:2172-2176): names table (mesh, name, rank) rolled up."""
     hits = mesh_names.filter(F.col("mesh").isin(meshes))
     return hits.groupBy("mesh").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("rank", "name"))), lambda s: s["name"]
-        ).alias("names")
-    )
+        F.sort_array(F.collect_list(F.struct("rank", "name"))).alias("_names")
+    ).select("mesh", F.col("_names.name").alias("names"))
 
 
 def chem_disease_lookup(

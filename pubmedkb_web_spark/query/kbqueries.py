@@ -167,7 +167,7 @@ def glof_rollup(glof: DataFrame) -> DataFrame:
     glof(type, key, direction, doc_id, sent_idx)."""
     per_doc = glof.groupBy("type", "key", "direction", "doc_id").agg(
         F.count(F.lit(1)).alias("n_sents"),
-        F.array_sort(F.collect_set("sent_idx")).alias("sent_idxs"),
+        F.sort_array(F.collect_set("sent_idx")).alias("sent_idxs"),
     )
     w = W.partitionBy("type", "key", "direction").orderBy(
         F.col("n_sents").desc(), F.col("doc_id").asc()

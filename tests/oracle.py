@@ -265,8 +265,8 @@ def corpus_triples(n_docs: int, seed: int = 42) -> set[tuple]:
 def canonical_map_py(entity_pdf) -> dict[str, str]:
     """Python mirror of pipeline/canonicalize.py: ids sharing a lowercased
     surface form are one entity; canonical id = lexicographic min of the
-    connected component (union-find — label propagation converges to the
-    same fixpoint)."""
+    connected component. A NULL name aliases nothing, and a NULL id is
+    left out (the engine maps it to NULL)."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -282,8 +282,11 @@ def canonical_map_py(entity_pdf) -> dict[str, str]:
 
     by_name: dict[str, list[str]] = defaultdict(list)
     for i, n in zip(entity_pdf["id"], entity_pdf["name"]):
+        if i is None:
+            continue
         parent.setdefault(i, i)
-        by_name[n.lower()].append(i)
+        if n is not None:
+            by_name[n.lower()].append(i)
     for ids in by_name.values():
         for other in ids[1:]:
             union(ids[0], other)

@@ -87,11 +87,12 @@ def test_mesh_subgraph_unknown_query(spark):
 
 def test_mesh_name_lookup(spark):
     names = spark.createDataFrame(
-        [("D04", "melanoma", 0), ("D04", "skin cancer", 1), ("D05", "other", 0)],
+        [("D04", "melanoma", 0), ("D04", "skin cancer", 1), ("D04", "acral melanoma", 2),
+         ("D05", "other", 0)],
         "mesh string, name string, rank int",
     )
     out = {r["mesh"]: r["names"] for r in graph.mesh_name_lookup(names, ["D04"]).collect()}
-    assert out == {"D04": ["melanoma", "skin cancer"]}
+    assert out == {"D04": ["melanoma", "skin cancer", "acral melanoma"]}  # rank order
 
 
 def test_chem_disease_three_paths(spark):

@@ -21,7 +21,8 @@ import pytest
 
 import __spark_entry__ as E
 from pubmedkb_web_spark.ops import similarity
-from pubmedkb_web_spark.query import graph
+from pubmedkb_web_spark.pipeline import materialize
+from pubmedkb_web_spark.query import graph, kbqueries
 from tests.test_entry import SF
 
 PY = ["BatchEvalPython", "ArrowEvalPython"]
@@ -56,6 +57,30 @@ def _chem_disease(spark):
         "concat('p', id) AS doc_id",
     )
     return graph.chem_disease_lookup(rows, c="c1")
+
+
+def _mesh_names(spark):
+    names = spark.range(8).selectExpr(
+        "concat('D', id % 2) AS mesh", "concat('n', id) AS name", "CAST(7 - id AS INT) AS rank"
+    )
+    return graph.mesh_name_lookup(names, ["D0"])
+
+
+def _glof_lookup(spark):
+    # the library function itself: the glof_rollup gate projects sent_idxs away
+    glof = spark.range(8).selectExpr(
+        "'Gene' AS type", "concat('g', id % 2) AS key", "'gof' AS direction",
+        "concat('p', id % 3) AS doc_id", "CAST(id AS INT) AS sent_idx",
+    )
+    return kbqueries.glof_rollup(glof)
+
+
+def _pair_stats(spark):
+    triples = spark.range(8).selectExpr(
+        "concat('s', id % 2) AS subj", "concat('o', id % 3) AS obj", "'x' AS annotator",
+        "id / 8.0 AS score", "concat('p', id) AS doc_id", "CAST(id AS INT) AS sent_idx",
+    )
+    return materialize.build_pair_stats(triples)
 
 
 # name: (build(spark) -> DataFrame, must contain, must not contain)
@@ -130,6 +155,11 @@ SHAPES = {
     # fields, not array_sort's interpreted comparator or transform lambdas
     "cgd_topk": (_cgd_topk, ["TakeOrderedAndProject"], ["lambdafunction", "BatchEvalPython"]),
     "chem_disease": (_chem_disease, [], ["lambdafunction", "BatchEvalPython"]),
+    "mesh_name_lookup": (_mesh_names, [], ["lambdafunction", "BatchEvalPython"]),
+    "glof_rollup_lookup": (_glof_lookup, [], ["lambdafunction", "BatchEvalPython"]),
+    # one hash aggregation: the map-side partial count combines a hot pair
+    # before the exchange, with no salt column hashed per row
+    "pair_stats": (_pair_stats, ["partial_count"], ["xxhash64"]),
 }
 
 
