@@ -7,7 +7,7 @@ Write-side equivalents of the reference's precomputed stores:
                        (/root/reference/kb_utils.py:1518-1538) as one table
 - ``pair_stats``       per (subj, obj, annotator) support counts — the
                        GVD/GD score-table analog (kb_utils.py:1871-1903)
-- ``chem_disease``     co-paper/co-sentence evidence (kb_utils.py:2407-2416)
+- ``chem_disease``     co-sentence evidence (kb_utils.py:2407-2416)
 - ``cgd_paths``        materialized 2-hop chem→gene→disease join
                        (kb_utils.py:2783-2823)
 
@@ -94,69 +94,67 @@ def build_pair_stats(triples_dedup: DataFrame) -> DataFrame:
     return pair_counts(triples_dedup, ["subj", "obj", "annotator"])
 
 
-def build_chem_disease(triples_dedup: DataFrame, entity_types: DataFrame) -> DataFrame:
-    """chem_disease(c, d, level, doc_id): sentence-level from triple rows,
-    paper-level distinct per doc (kb_utils.py:2407-2416 semantics)."""
-    typed = typed_pairs(triples_dedup, entity_types, "Chemical", "Disease")
-    sent = typed.select(
-        F.col("subj").alias("c"), F.col("obj").alias("d"),
-        F.lit("sentence").alias("level"), "doc_id",
-    ).distinct()
-    paper = sent.select("c", "d", F.lit("paper").alias("level"), "doc_id").distinct()
-    return sent.unionByName(paper)
-
-
-def typed_pairs(
-    triples_dedup: DataFrame, entity_types: DataFrame, subj_type: str, obj_type: str
-) -> DataFrame:
-    """Triples restricted to (subj_type → obj_type), orientation-normalized.
-
-    entity_types(id, type) is dictionary-sized → broadcast both lookups.
-    """
-    ts = F.broadcast(entity_types.select(F.col("id").alias("subj"), F.col("type").alias("_st")))
-    to = F.broadcast(entity_types.select(F.col("id").alias("obj"), F.col("type").alias("_ot")))
-    both = triples_dedup.join(ts, "subj").join(to, "obj")
-    fwd = both.filter((F.col("_st") == subj_type) & (F.col("_ot") == obj_type)).drop("_st", "_ot")
-    rev = (
-        both.filter((F.col("_st") == obj_type) & (F.col("_ot") == subj_type))
-        .select(
-            F.col("obj").alias("subj"), "pred", F.col("subj").alias("obj"),
-            "annotator", "score", "doc_id", "sent_idx", "content_sha256",
-        )
+def typed_edges(triples_dedup: DataFrame, entity_types: DataFrame) -> DataFrame:
+    """Triples whose endpoint types are two of Chemical, Gene and Disease,
+    oriented Chemical → Gene → Disease: (src, dst, src_type, dst_type, pred,
+    doc_id). One broadcast join of ``entity_types(id, type)`` per endpoint;
+    an id with two types gives a row per type pair, an untyped end none."""
+    types = entity_types.filter(F.col("type").isin("Chemical", "Gene", "Disease"))
+    st = F.broadcast(types.selectExpr("id AS subj", "type AS _st"))
+    ot = F.broadcast(types.selectExpr("id AS obj", "type AS _ot"))
+    # of two distinct types among the three, a row runs forward iff it
+    # starts at a Chemical or ends at a Disease
+    fwd = "_st = 'Chemical' OR _ot = 'Disease'"
+    return triples_dedup.join(st, "subj").join(ot, "obj").filter("_st != _ot").selectExpr(
+        f"IF({fwd}, subj, obj) AS src", f"IF({fwd}, obj, subj) AS dst",
+        f"IF({fwd}, _st, _ot) AS src_type", f"IF({fwd}, _ot, _st) AS dst_type", "pred", "doc_id",
     )
-    return fwd.unionByName(rev)
+
+
+def build_chem_disease(triples_dedup: DataFrame, entity_types: DataFrame) -> DataFrame:
+    """chem_disease(c, d, level, doc_id): one distinct (c, d, doc_id) set of
+    Chemical–Disease triples, emitted at both levels.
+
+    Known gap: both levels come from co-sentence triples, so the
+    ``paper`` rows equal the ``sentence`` rows; the reference's co-paper
+    level (a chemical and a disease anywhere in one paper,
+    kb_utils.py:2407-2416) is not built.
+    """
+    return (
+        typed_edges(triples_dedup, entity_types)
+        .filter("src_type = 'Chemical' AND dst_type = 'Disease'")
+        .select(F.col("src").alias("c"), F.col("dst").alias("d"), "doc_id")
+        .distinct()
+        .selectExpr("c", "d", "explode(array('sentence', 'paper')) AS level", "doc_id")
+    )
 
 
 def build_cgd_paths(triples_dedup: DataFrame, entity_types: DataFrame) -> DataFrame:
     """Materialized 2-hop chem→gene→disease paths with per-edge evidence —
     the CGD drug-discovery KB (kb_utils.py:2783-2823, SURVEY.md J10).
 
-    The join key is the gene — the canonical skewed 2-hop self-join; gene
-    side aggregated first (evidence lists) so the join input is one row per
-    (pair, gene), not one per evidence sentence.
+    The join key is the gene — the canonical skewed 2-hop self-join; each
+    edge side is aggregated first (evidence lists) so the join input is one
+    row per (pair, gene), not one per evidence sentence. An edge's relation
+    is its most frequent ``pred``, ties going to the smallest, so the column
+    does not depend on the physical plan.
     """
-    cg = typed_pairs(triples_dedup, entity_types, "Chemical", "Gene")
-    gd = typed_pairs(triples_dedup, entity_types, "Gene", "Disease")
-    cg_agg = cg.groupBy(F.col("subj").alias("c"), F.col("obj").alias("g")).agg(
-        F.first("pred").alias("cg_relation"),
-        F.sort_array(F.collect_set("doc_id")).alias("cg_pmids"),
-        F.count(F.lit(1)).alias("cg_n"),
-    )
-    gd_agg = gd.groupBy(F.col("subj").alias("g"), F.col("obj").alias("d")).agg(
-        F.first("pred").alias("gd_relation"),
-        F.sort_array(F.collect_set("doc_id")).alias("gd_pmids"),
-        F.count(F.lit(1)).alias("gd_n"),
-    )
-    return (
-        cg_agg.join(gd_agg, "g")
-        .select(
-            "c",
-            "d",
-            "g",
-            (F.col("cg_n") * F.col("gd_n")).cast("double").alias("cgd_score"),
-            "cg_relation",
-            "gd_relation",
-            "cg_pmids",
-            "gd_pmids",
+    edges = typed_edges(triples_dedup, entity_types)
+
+    def side(kind: str, src_type: str, dst_type: str) -> DataFrame:
+        # one row per edge, its two ends named by the kind's letters
+        return (
+            edges.filter(f"src_type = '{src_type}' AND dst_type = '{dst_type}'")
+            .groupBy(F.col("src").alias(kind[0]), F.col("dst").alias(kind[1]))
+            .agg(
+                F.mode("pred", True).alias(f"{kind}_relation"),
+                F.sort_array(F.collect_set("doc_id")).alias(f"{kind}_pmids"),
+                F.count(F.lit(1)).alias(f"{kind}_n"),
+            )
         )
+
+    cg, gd = side("cg", "Chemical", "Gene"), side("gd", "Gene", "Disease")
+    return cg.join(gd, "g").select(
+        "c", "d", "g", (F.col("cg_n") * F.col("gd_n")).cast("double").alias("cgd_score"),
+        "cg_relation", "gd_relation", "cg_pmids", "gd_pmids",
     )

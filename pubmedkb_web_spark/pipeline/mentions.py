@@ -7,10 +7,9 @@ Reference semantics re-expressed Spark-first:
   sentences, split JVM-side.
 - token n-gram span enumeration: spans of ≤N tokens within 3..100 chars
   (/root/reference/kb_utils.py:806-856 — its UMLS annotator enumerates spaCy
-  token n-grams with exactly these bounds). Implemented with higher-order
-  array functions (sequence/transform/slice/aggregate) — stays in the JVM,
-  no Python in the hot path, no shuffle: pure per-row compute that scales
-  linearly with executors.
+  token n-grams with exactly these bounds). Implemented as one sorted
+  window pass of ``lead`` columns over the token positions — codegen in
+  the JVM, no Python and no interpreted array lambda in the hot path.
 - dictionary match: broadcast hash join of spans against the NEN dictionary
   (/root/reference/kb_utils.py:829-852 probes every n-gram against an
   in-memory dict — the classic broadcast-join shape, SURVEY.md J14).
@@ -228,18 +227,13 @@ def dictionary_candidates(spans: DataFrame, entity_dict: DataFrame) -> DataFrame
         entity_dict.groupBy(F.lower(F.col("name")).alias("name_lower"), "type")
         .agg(
             # freq desc then id asc, deterministically, without a window:
-            # sort struct(-freq, id) ascending, then project id.
-            # case aliases share ids → sum freq per id first, then order
-            # by (freq desc, id asc) and dedupe keeping highest-freq slot.
+            # sort struct(-freq, id) ascending, then project id (a struct
+            # field of an array, no lambda). Case aliases share ids → dedupe
+            # keeping each id's highest-freq slot.
             F.array_distinct(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct((-F.col("freq")).alias("nf"), F.col("id").alias("id"))
-                        )
-                    ),
-                    lambda s: s["id"],
-                )
+                F.sort_array(
+                    F.collect_list(F.struct((-F.col("freq")).alias("nf"), F.col("id").alias("id")))
+                ).getField("id")
             ).alias("ids")
         )
     )
@@ -315,7 +309,7 @@ def resolve_overlaps(candidates: DataFrame) -> DataFrame:
     decides the next keep while a *rejected* span's end must not, so no
     cummax/lag window can express it (a rejected long span would wrongly
     block later spans). It runs as an Arrow-batched pandas UDF over the
-    per-sentence candidate arrays: grouping + array_sort stay JVM-side and
+    per-sentence candidate arrays: grouping + sort_array stay JVM-side and
     the fold crosses to Python once per batch of sentences. This replaces
     the interpreted higher-order ``aggregate`` fold whose lambda interpreter
     measured anti-scaling with executor threads (SCALING.json round 1) and
@@ -329,7 +323,7 @@ def resolve_overlaps(candidates: DataFrame) -> DataFrame:
         F.col("ids").alias("ids"),
     )
     grouped = candidates.groupBy("doc_id", "sent_idx", "content_sha256").agg(
-        F.array_sort(F.collect_list(cand)).alias("cands")
+        F.sort_array(F.collect_list(cand)).alias("cands")
     )
     kept = _greedy_nonoverlap(F.col("cands"))
     return (

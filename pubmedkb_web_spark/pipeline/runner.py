@@ -17,10 +17,12 @@ error is re-raised.
 
 Each stage writes its output parquet and a ``_graft_meta.json`` marker
 containing the stage fingerprint (name + config + upstream fingerprints —
-a Merkle-style lineage chain), the row count and per-partition row
-metrics. On resume, a stage whose marker matches its fingerprint is *read
-back* instead of recomputed; the first stage with a stale/missing marker
-recomputes, and everything downstream follows.
+a Merkle-style lineage chain), the row count, per-partition row metrics and
+the schema the stage is read back with. On resume, a stage whose marker
+matches its fingerprint is *read back* instead of recomputed; the first
+stage with a stale/missing marker recomputes, and everything downstream
+follows. Both read-backs pass the schema, so neither runs a parquet schema
+inference job.
 
 Determinism guarantees that make resume byte-stable: no
 monotonically_increasing_id, no RNG, no wall-clock anywhere in the stages
@@ -40,6 +42,7 @@ from urllib.parse import unquote, urlparse
 
 from pyspark import StorageLevel, inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .. import fixtures
 from . import canonicalize, extractors, materialize, mentions
@@ -243,7 +246,7 @@ class CheckpointedPipeline:
 
         meta = self._read_marker(marker) if self.resume else None
         if meta is not None and meta.get("fingerprint") == fp:
-            df = self.spark.read.parquet(path)
+            df = self.spark.read.schema(StructType.fromJson(meta["schema"])).parquet(path)
             self.results[name] = StageResult(
                 name, path, fp, meta["row_count"], recomputed=False,
                 partitions=meta.get("partitions", []),
@@ -253,11 +256,12 @@ class CheckpointedPipeline:
         import time
 
         t0 = time.time()
-        writer = build().write.mode("overwrite")
+        built = build()
+        writer = built.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
-        out = self.spark.read.parquet(path)
+        out = self.spark.read.schema(built.schema).parquet(path)
         parts = _partition_metrics(path)
         row_count = sum(p["rows"] for p in parts)
         self._write_marker(
@@ -269,6 +273,7 @@ class CheckpointedPipeline:
                 "row_count": row_count,
                 "partitions": parts,
                 "config": config,
+                "schema": out.schema.jsonValue(),
             },
         )
         self.results[name] = StageResult(

@@ -341,3 +341,67 @@ def pipeline_annotator_counts(n_docs: int, seed: int = 42) -> dict[str, int]:
     for _s, _p, _o, ann, _d, _si in deduped:
         counts[ann] += 1
     return dict(counts)
+
+
+# ---------------- graph tail (chem_disease, cgd_paths) ----------------------
+
+# the tail's types in edge order: an edge runs Chemical → Gene → Disease
+TAIL_TYPES = ("Chemical", "Gene", "Disease")
+
+
+def typed_edges_py(triples, types) -> list[tuple]:
+    """(src, dst, src_type, dst_type, pred, doc_id) for every pair of types
+    its endpoints hold that are two distinct tail types, oriented by
+    TAIL_TYPES. ``triples`` are (subj, pred, obj, doc_id), ``types`` are
+    (id, type) rows."""
+    of: dict[str, set[str]] = defaultdict(set)
+    for i, t in types:
+        if t in TAIL_TYPES:
+            of[i].add(t)
+    out = []
+    for subj, pred, obj, doc_id in triples:
+        for st in of[subj]:
+            for ot in of[obj]:
+                if st == ot:
+                    continue
+                if TAIL_TYPES.index(st) < TAIL_TYPES.index(ot):
+                    out.append((subj, obj, st, ot, pred, doc_id))
+                else:
+                    out.append((obj, subj, ot, st, pred, doc_id))
+    return out
+
+
+def chem_disease_py(triples, types) -> set[tuple]:
+    """(c, d, level, doc_id) rows: each Chemical–Disease (c, d, doc_id) at
+    both levels."""
+    pairs = {
+        (s, d, doc) for s, d, st, dt, _, doc in typed_edges_py(triples, types)
+        if (st, dt) == ("Chemical", "Disease")
+    }
+    return {(c, d, level, doc) for c, d, doc in pairs for level in ("sentence", "paper")}
+
+
+def cgd_paths_py(triples, types) -> set[tuple]:
+    """(c, d, g, cgd_score, cg_relation, gd_relation, cg_pmids, gd_pmids)
+    rows; an edge's relation is its most frequent pred, ties to the
+    smallest."""
+    edges = typed_edges_py(triples, types)
+
+    def side(src_type, dst_type):
+        preds, docs = defaultdict(list), defaultdict(set)
+        for s, d, st, dt, pred, doc in edges:
+            if (st, dt) == (src_type, dst_type):
+                preds[s, d].append(pred)
+                docs[s, d].add(doc)
+        return {
+            k: (min(set(p), key=lambda x: (-p.count(x), x)), tuple(sorted(docs[k])), len(p))
+            for k, p in preds.items()
+        }
+
+    cg, gd = side("Chemical", "Gene"), side("Gene", "Disease")
+    return {
+        (c, d, g, float(cn * dn), cr, dr, cp, dp)
+        for (c, g), (cr, cp, cn) in cg.items()
+        for (g2, d), (dr, dp, dn) in gd.items()
+        if g == g2
+    }

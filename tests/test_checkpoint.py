@@ -290,6 +290,64 @@ def test_file_uri_root_commits_and_resumes(spark, tmp_path):
     assert again.results["s"].recomputed is False
 
 
+def _jobs(spark, group, fn):
+    """Spark jobs that ``fn()`` runs, counted by a fresh job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("partition_by", [None, ["part"]])
+def test_read_back_runs_no_job(spark, tmp_path, partition_by):
+    """A committed stage is read back with a known schema, not by parquet
+    schema inference: committing runs only the write's jobs, and resuming
+    runs none."""
+    tag = "part" if partition_by else "flat"
+
+    def build():
+        return spark.range(10).selectExpr("id", "id % 2 AS part")
+
+    def write():
+        w = build().write.mode("overwrite")
+        (w.partitionBy(*partition_by) if partition_by else w).parquet(str(tmp_path / "plain"))
+
+    def stage():
+        pipe = runner.CheckpointedPipeline(spark, str(tmp_path / "kb"))
+        return pipe.stage("s", build, partition_by=partition_by)
+
+    committed, resumed = [], []
+    commit_jobs = _jobs(spark, f"readback-commit-{tag}", lambda: committed.append(stage()))
+    assert commit_jobs == _jobs(spark, f"readback-write-{tag}", write) >= 1
+    assert _jobs(spark, f"readback-resume-{tag}", lambda: resumed.append(stage())) == 0
+    # partition columns keep their written type (inference reads 'part' as int)
+    assert committed[0].schema == resumed[0].schema
+    assert dict(committed[0].dtypes)["part"] == "bigint"
+
+
+def test_read_back_schemas_equal_the_inferred_ones(spark, small_kb):
+    """Every core stage reads back, committed or resumed, with the schema
+    parquet inference gives its files (the partitioned triples included),
+    and a resume over the complete root runs no Spark job."""
+    root = small_kb["_pipeline"].out_dir
+    resumed = {}
+    jobs = _jobs(
+        spark, "readback-resume-kb",
+        lambda: resumed.update(runner.run_kg_pipeline(spark, root, n_docs=120)),
+    )
+    assert not any(r.recomputed for r in resumed["_pipeline"].results.values())
+    assert jobs == 0
+    for name, df in small_kb.items():
+        if name == "_pipeline":
+            continue
+        inferred = spark.read.parquet(os.path.join(root, name)).schema
+        assert df.schema == inferred, name
+        assert resumed[name].schema == inferred, name
+
+
 def test_non_file_uri_root_rejected_before_writing(spark, tmp_path, monkeypatch):
     """Markers and partition metrics use local file IO, so a non-``file:``
     root fails with a ValueError naming it before any Spark job runs."""

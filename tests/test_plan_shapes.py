@@ -20,8 +20,9 @@ from __future__ import annotations
 import pytest
 
 import __spark_entry__ as E
+from pubmedkb_web_spark import fixtures
 from pubmedkb_web_spark.ops import similarity
-from pubmedkb_web_spark.pipeline import materialize
+from pubmedkb_web_spark.pipeline import materialize, mentions
 from pubmedkb_web_spark.query import graph, kbqueries
 from tests.test_entry import SF
 
@@ -81,6 +82,24 @@ def _pair_stats(spark):
         "id / 8.0 AS score", "concat('p', id) AS doc_id", "CAST(id AS INT) AS sent_idx",
     )
     return materialize.build_pair_stats(triples)
+
+
+def _typed_triples(spark):
+    triples = spark.range(8).selectExpr(
+        "concat('e', id % 3) AS subj", "'p' AS pred", "concat('e', id % 4) AS obj",
+        "'x' AS annotator", "1.0 AS score", "concat('p', id) AS doc_id",
+        "CAST(id AS INT) AS sent_idx", "'h' AS content_sha256",
+    )
+    types = spark.range(4).selectExpr(
+        "concat('e', id) AS id",
+        "element_at(array('Chemical', 'Gene', 'Disease'), CAST(id % 3 + 1 AS INT)) AS type",
+    )
+    return triples, types
+
+
+def _mentions(spark):
+    source = fixtures.ingest(fixtures.source_table(spark, 4, 42))
+    return mentions.build_mentions(source, fixtures.entity_dict_df(spark), max_tokens=4)[1]
 
 
 # name: (build(spark) -> DataFrame, must contain, must not contain)
@@ -160,6 +179,21 @@ SHAPES = {
     # one hash aggregation: the map-side partial count combines a hot pair
     # before the exchange, with no salt column hashed per row
     "pair_stats": (_pair_stats, ["partial_count"], ["xxhash64"]),
+    # the graph tail orients each typed triple in one projection over two
+    # broadcast type lookups: no forward/reverse union
+    "chem_disease_build": (
+        lambda spark: materialize.build_chem_disease(*_typed_triples(spark)),
+        ["BroadcastHashJoin"],
+        ["Union", "lambdafunction"],
+    ),
+    "cgd_paths_build": (
+        lambda spark: materialize.build_cgd_paths(*_typed_triples(spark)),
+        ["BroadcastHashJoin"],
+        ["Union", "lambdafunction"],
+    ),
+    # candidate ids and per-sentence candidates sort with sort_array and
+    # read struct fields: no interpreted array lambda in the mentions stage
+    "mentions_build": (_mentions, [], ["lambdafunction"]),
 }
 
 
