@@ -109,9 +109,11 @@ def lsh_candidate_pairs(
     emitted (member–member pairs inside a hot bucket become star edges),
     so existing callers must ask for it explicitly (round-4 ADVICE).
     ``None`` also skips the bucket-size pass entirely — no extra
-    aggregation on unskewed corpora. The scale pipeline
-    (:func:`near_duplicates_minhash`) passes a cap by default and
-    documents the recall trade in ITS contract.
+    aggregation on unskewed corpora. With a cap, a member–member pair
+    inside a hot bucket whose mutual Jaccard clears a verification
+    threshold while its rep–member similarity does not can be missing
+    after :func:`jaccard_pairs`; :func:`lsh_hot_buckets` (same bands/cap)
+    shows which buckets the cap fired on.
     """
     assert bands * rows_per_band <= 64
     banded = signatures.select(
@@ -231,60 +233,6 @@ def jaccard_pairs(shingle_df: DataFrame, candidate_pairs: DataFrame) -> DataFram
             ).alias("jaccard"),
         )
     )
-
-
-def near_duplicates_minhash(
-    df: DataFrame,
-    threshold: float = 0.7,
-    n_shingle: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    work_dir: str | None = None,
-    max_bucket_size: int | None = 1024,
-) -> DataFrame:
-    """Full near-dup pipeline: shingle → minhash → LSH candidates → exact
-    Jaccard verification ≥ threshold. Returns (doc_a, doc_b, jaccard).
-
-    PAIR-RECALL CONTRACT: ``max_bucket_size`` (default 1024 — ON, this is
-    the 100 TB scale path) star-collapses LSH buckets above the cap, so
-    inside a hot bucket only representative–member pairs are verified; a
-    member–member pair whose mutual Jaccard clears the threshold while
-    its rep–member similarity does not can be MISSING from the returned
-    pairs (cluster connectivity is still preserved — for dedup clustering
-    the star spans the same component). Pass ``None`` for the exact,
-    quadratic-risk behavior. Use :func:`lsh_hot_buckets` (same bands/cap)
-    to see which buckets the cap fired on.
-
-    ``work_dir`` is the 100 TB path: the downstream plan consumes the
-    shingle relation twice (candidate join + Jaccard verify) and the
-    banded signature relation on several branches (clique sides, star
-    side, bucket sizes), and Catalyst does NOT reuse those subtrees
-    (no common exchange survives column pruning — measured: zero
-    ReusedExchange nodes), so the lazy plan recomputes the full
-    shingle+minhash pass per branch. Passing a directory MATERIALIZES the
-    shingle and signature tables to parquet once (an EAGER write at call
-    time, same contract as similarity.build_ann_index) and every branch
-    becomes a cheap pruned re-scan of a thin table instead of a
-    recomputation over the raw corpus. None keeps the fully lazy
-    single-plan behavior (fine at gate scale)."""
-    sh = shingles(df, n_shingle, id_col, text_col)
-    if work_dir is not None:
-        import os
-
-        sh_path = os.path.join(work_dir, "shingles")
-        sig_path = os.path.join(work_dir, "signatures")
-        sh.write.mode("overwrite").parquet(sh_path)
-        sh = df.sparkSession.read.parquet(sh_path)
-        minhash_signatures(sh, num_hashes).write.mode("overwrite").parquet(sig_path)
-        sigs = df.sparkSession.read.parquet(sig_path)
-    else:
-        sigs = minhash_signatures(sh, num_hashes)
-    cands = lsh_candidate_pairs(
-        sigs, bands, num_hashes // bands, max_bucket_size=max_bucket_size
-    )
-    return jaccard_pairs(sh, cands).filter(F.col("jaccard") >= threshold)
 
 
 def simhash(

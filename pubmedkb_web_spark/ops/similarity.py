@@ -226,8 +226,7 @@ def ivf_assign(
 ) -> DataFrame:
     """Public assignment step of :func:`ivf_build` without the write:
     adds the nearest-centroid list id as ``out_col``. Callers that own
-    their sink (e.g. a checkpointed pipeline stage partitioning its own
-    parquet) use this and partitionBy the column themselves."""
+    their sink use this and partitionBy the column themselves."""
     return embeddings.withColumn(
         out_col, _nearest_centroid(F.col(vec_col), centroids)
     )

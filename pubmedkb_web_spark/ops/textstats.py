@@ -233,37 +233,6 @@ def gopher_filters(
     shuffle, whole-stage codegen; at 100 TB this is the cheap first pass
     that drops documents before any shuffling operator sees them.
     """
-    cols = _gopher_cols(
-        text_col,
-        min_words,
-        max_words,
-        min_mean_word_len,
-        max_mean_word_len,
-        max_symbol_word_ratio,
-        max_bullet_line_frac,
-        max_ellipsis_line_frac,
-        min_alpha_word_frac,
-        min_stopwords,
-    )
-    return df.select(id_col, *(c.alias(n) for n, c in cols.items()))
-
-
-def _gopher_cols(
-    text_col: str,
-    min_words: int,
-    max_words: int,
-    min_mean_word_len: float,
-    max_mean_word_len: float,
-    max_symbol_word_ratio: float,
-    max_bullet_line_frac: float,
-    max_ellipsis_line_frac: float,
-    min_alpha_word_frac: float,
-    min_stopwords: int,
-) -> dict[str, Column]:
-    """Column expressions behind :func:`gopher_filters` — exposed so
-    :func:`document_quality` can compose all filter families in ONE
-    projection over one scan (physical-plan subexpression elimination
-    dedups the repeated measure trees)."""
     toks = word_tokens(text_col)
     n = F.size(toks).cast("long")
     safe_n = F.greatest(n, F.lit(1))
@@ -305,7 +274,7 @@ def _gopher_cols(
     keep = F.lit(True)
     for cond in rules.values():
         keep = keep & cond
-    return {
+    cols = {
         "word_count": n,
         "mean_word_len": mean_len,
         "symbol_word_ratio": symbol_ratio,
@@ -316,6 +285,7 @@ def _gopher_cols(
         **rules,
         "gopher_keep": keep,
     }
+    return df.select(id_col, *(c.alias(n) for n, c in cols.items()))
 
 
 # PII patterns, restricted to the Java-regex ∩ RE2 common subset (no
@@ -341,13 +311,6 @@ def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     Shape at scale: three chained ``regexp_replace`` column expressions
     over one scan — map-only, no shuffle, whole-stage codegen.
     """
-    cols = _pii_cols(text_col)
-    return df.select(id_col, *(c.alias(n) for n, c in cols.items()))
-
-
-def _pii_cols(text_col: str) -> dict[str, Column]:
-    """Column expressions behind :func:`pii_scrub` (see
-    :func:`_gopher_cols` for why these are exposed)."""
     text = F.col(text_col)
     n_emails = F.size(F.regexp_extract_all(text, F.lit(PII_EMAIL), 0)).cast("long")
     t1 = F.regexp_replace(text, PII_EMAIL, "[EMAIL]")
@@ -355,13 +318,14 @@ def _pii_cols(text_col: str) -> dict[str, Column]:
     t2 = F.regexp_replace(t1, PII_IPV4, "[IPV4]")
     n_phones = F.size(F.regexp_extract_all(t2, F.lit(PII_PHONE), 0)).cast("long")
     t3 = F.regexp_replace(t2, PII_PHONE, "[PHONE]")
-    return {
+    cols = {
         "n_emails": n_emails,
         "n_ipv4": n_ipv4,
         "n_phones": n_phones,
         "pii_total": n_emails + n_ipv4 + n_phones,
         "pii_redacted": t3,
     }
+    return df.select(id_col, *(c.alias(n) for n, c in cols.items()))
 
 
 # tiny placeholder blocklist — the C4 "bad words" rule; real deployments
@@ -392,15 +356,6 @@ def c4_line_filters(
     whole-stage codegen; like :func:`gopher_filters` this runs before any
     shuffling operator so dropped pages never reach a shuffle.
     """
-    cols = _c4_cols(text_col, min_line_words, min_sentences)
-    return df.select(id_col, *(c.alias(n) for n, c in cols.items()))
-
-
-def _c4_cols(
-    text_col: str, min_line_words: int, min_sentences: int
-) -> dict[str, Column]:
-    """Column expressions behind :func:`c4_line_filters` (see
-    :func:`_gopher_cols` for why these are exposed)."""
     text = F.col(text_col)
     lines = F.filter(
         F.transform(F.split(text, "\n"), lambda l: F.trim(l)),
@@ -422,7 +377,7 @@ def _c4_cols(
     bad_pat = r"\b(" + "|".join(C4_BADWORDS) + r")\b"
     has_bad = F.lower(text).rlike(bad_pat)
     keep = (n_sent >= min_sentences) & ~has_lorem & ~has_brace & ~has_bad
-    return {
+    cols = {
         "c4_n_lines": F.size(lines).cast("long"),
         "c4_kept_lines": F.size(kept).cast("long"),
         "c4_kept_char_frac": F.round(
@@ -435,29 +390,6 @@ def _c4_cols(
         "c4_keep": keep,
         "c4_clean_text": clean,
     }
-
-
-def document_quality(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """All three filter families — Gopher doc-level rules, PII scrub, C4
-    line-level cleaning (published default thresholds) — in ONE projection
-    over one scan, plus ``quality_keep`` = ``gopher_keep AND c4_keep``.
-
-    This is the corpus-cleaning pass of a training-data pipeline: at
-    100 TB the three families as separate operators would each re-scan
-    the corpus (or worse, join on doc_id = three full shuffles); composed
-    as one map-only projection the corpus is read once, dropped pages
-    never reach a shuffle, and the redacted/cleaned text comes out of the
-    same pass. Wired into ``run_kg_pipeline(with_quality=True)`` as a
-    resumable stage.
-    """
-    cols = {
-        **_gopher_cols(text_col, 50, 100_000, 3.0, 10.0, 0.1, 0.9, 0.3, 0.8, 2),
-        **_pii_cols(text_col),
-        **_c4_cols(text_col, 3, 5),
-    }
-    cols["quality_keep"] = cols["gopher_keep"] & cols["c4_keep"]
     return df.select(id_col, *(c.alias(n) for n, c in cols.items()))
 
 

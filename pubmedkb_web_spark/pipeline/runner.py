@@ -3,9 +3,8 @@ checkpoints with lineage and metrics.
 
 The KG build is a table of :class:`Stage` rows (``run_kg_pipeline``). Each
 row names a stage, its upstream stages, a build function over the
-committed upstream tables, its config and its ``partition_by``. Optional
-stages are rows appended when their flags are set. The table lists every
-upstream before the rows that read it.
+committed upstream tables, its config and its ``partition_by``. The
+table lists every upstream before the rows that read it.
 
 :meth:`CheckpointedPipeline.run` schedules the table: a stage is submitted
 to a pool of ``TAIL_WORKERS`` driver threads as soon as all of its
@@ -346,45 +345,6 @@ def _mentions(source: DataFrame, n_docs: int, entity_dict: DataFrame) -> DataFra
     return mentions.build_mentions(source.repartition(width, "doc_id"), entity_dict)[1]
 
 
-def _ann_index_stage(kind: str, out_dir: str) -> Stage:
-    """The optional ANN stage over a deterministic text embedding. The
-    partition column ("_sig" sign buckets / "_cent" inverted lists) gives
-    the stage parquet the partition-pruned layout build_ann_index /
-    ivf_build write: probe-set filters touch only the probed buckets'
-    directories. "kind" in the config makes switching layouts a
-    fingerprint change, so a resume never serves one layout as the other."""
-    from pyspark.sql import functions as F
-
-    from ..ops import similarity as sim_ops
-
-    if kind == "lsh":
-        cfg = {"kind": "lsh", "dim": 16, "n_planes": 8}
-
-        def build(t: dict[str, DataFrame]) -> DataFrame:
-            emb = sim_ops.embed_text(t["source"], text_col="content", id_col="doc_id", dim=cfg["dim"])
-            return emb.withColumn(
-                "_sig", sim_ops.hyperplane_signature(F.col("embedding"), cfg["dim"], cfg["n_planes"])
-            )
-
-        return Stage("ann_index", ("source",), build, cfg, ("_sig",))
-
-    cfg = {"kind": "ivf", "dim": 16, "n_centroids": 8, "n_iter": 4}
-
-    def build(t: dict[str, DataFrame]) -> DataFrame:
-        emb = sim_ops.embed_text(t["source"], text_col="content", id_col="doc_id", dim=cfg["dim"])
-        centroids = sim_ops.ivf_train(
-            emb, n_centroids=cfg["n_centroids"], n_iter=cfg["n_iter"], id_col="doc_id"
-        )
-        # probe-side artifact, persisted beside the stage parquet: a RESUMED
-        # stage skips this build, so the file written by the original run
-        # is the contract
-        with open(os.path.join(out_dir, "ann_index_centroids.json"), "w") as f:
-            json.dump(centroids, f)
-        return sim_ops.ivf_assign(emb, centroids)
-
-    return Stage("ann_index", ("source",), build, cfg, ("_cent",))
-
-
 def run_kg_pipeline(
     spark: SparkSession,
     out_dir: str,
@@ -393,35 +353,13 @@ def run_kg_pipeline(
     entity_dict: DataFrame | None = None,
     seed: int = fixtures.SEED,
     resume: bool = True,
-    with_dedup: bool = False,
-    with_ann_index: bool | str = False,
-    with_quality: bool = False,
 ) -> dict[str, DataFrame]:
     """Full M0→M4 build. Returns the materialized DataFrames by name, plus
     the pipeline under ``"_pipeline"``.
 
     ``entity_dict`` is cached for the duration of the build and released
-    when it returns or raises, unless the caller had cached it.
-
-    ``with_quality`` adds a ``doc_quality`` stage: the one-scan composed
-    corpus-cleaning pass (``ops.textstats.document_quality`` — Gopher
-    rules + PII scrub + C4 line cleaning, map-only) over the source
-    corpus, materialized like every other stage.
-
-    ``with_dedup`` adds a ``near_dup_pairs`` stage (MinHash+LSH over the
-    source corpus, shingle/signature relations materialized under
-    ``out_dir/near_dup_work``, hot buckets star-collapsed at 1024) and
-    ``with_ann_index`` adds an ``ann_index`` stage over a deterministic
-    text embedding: ``True``/``"lsh"`` writes the hyperplane-signature
-    layout (parquet-PARTITIONED by ``_sig``, the build_ann_index shape);
-    ``"ivf"`` trains the deterministic coarse quantizer, writes inverted
-    lists PARTITIONED by ``_cent`` (the ivf_build shape) plus the
-    centroid JSON (``out_dir/ann_index_centroids.json``) probes need.
-    The optional stages have the same fingerprint-resume contract as every
-    other stage; they read only the committed source stage, so enabling
-    them never changes the core tables' counts (round-4 VERDICT #7)."""
+    when it returns or raises, unless the caller had cached it."""
     pipe = CheckpointedPipeline(spark, out_dir, resume=resume)
-    out_dir = pipe.out_dir
     if entity_dict is None:
         entity_dict = fixtures.entity_dict_df(spark, seed)
     entity_types = entity_dict.select("id", "type").distinct()
@@ -492,41 +430,6 @@ def run_kg_pipeline(
         ),
         Stage("meta", ("source",), lambda t: fixtures.meta_table(spark, t["source"], seed)),
     ]
-    if with_quality:
-        from ..ops import textstats as textstats_ops
-
-        table.append(Stage(
-            "doc_quality", ("source",),
-            lambda t: textstats_ops.document_quality(t["source"], text_col="content"),
-            # published defaults; named in the fingerprint so a future
-            # threshold change re-runs the stage instead of resuming
-            {"families": "gopher+pii+c4", "thresholds": "published-defaults"},
-        ))
-    if with_dedup:
-        from ..ops import dedup as dedup_ops
-
-        dedup_cfg = {
-            "threshold": 0.7, "n_shingle": 3, "num_hashes": 8,
-            "bands": 4, "max_bucket_size": 1024,
-        }
-        table.append(Stage(
-            "near_dup_pairs", ("source",),
-            # shingle/signature relations materialize ONCE under the
-            # pipeline root so the candidate/verify branches re-scan thin
-            # tables instead of recomputing the corpus pass
-            lambda t: dedup_ops.near_duplicates_minhash(
-                t["source"],
-                threshold=dedup_cfg["threshold"],
-                id_col="doc_id",
-                text_col="content",
-                work_dir=os.path.join(out_dir, "near_dup_work"),
-                max_bucket_size=dedup_cfg["max_bucket_size"],
-            ),
-            dedup_cfg,
-        ))
-    if with_ann_index:
-        kind = "ivf" if str(with_ann_index).lower() == "ivf" else "lsh"
-        table.append(_ann_index_stage(kind, out_dir))
 
     cache_dict = entity_dict.storageLevel == StorageLevel.NONE
     if cache_dict:

@@ -233,15 +233,18 @@ def chem_disease_lookup(
     level: str = "paper",
 ) -> DataFrame:
     """Evidence counts for (c, d) / by chemical / by disease — the three
-    access paths are the same relation with different pushdown filters."""
+    access paths are the same relation with different pushdown filters.
+    ``n_docs`` is the size of the distinct ``doc_ids`` set, so the lookup
+    plans one hash aggregation, not the second one ``count(distinct)``
+    adds."""
     df = chem_disease.filter(F.col("level") == level)
     if c is not None:
         df = df.filter(F.col("c") == c)
     if d is not None:
         df = df.filter(F.col("d") == d)
-    return df.groupBy("c", "d").agg(
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.sort_array(F.collect_set("doc_id")).alias("doc_ids"),
+    docs = F.sort_array(F.collect_set("doc_id")).alias("doc_ids")
+    return df.groupBy("c", "d").agg(docs).select(
+        "c", "d", F.size("doc_ids").cast("bigint").alias("n_docs"), "doc_ids"
     )
 
 

@@ -22,16 +22,14 @@ JVM expressions over a DataFrame of raw results. For bulk enrichment
 ``mapInPandas`` and feeds the same JVM parse, so a million-query
 enrichment never serializes through the driver.
 
-The live HTTP path is guarded: it only activates when the caller
-passes ``fetcher=live_fetcher`` or sets ``PUBMEDKB_LITVAR_LIVE=1``
-(this sandbox has no network; tests use deterministic offline
-fetchers).
+Every fetch goes through a ``fetcher`` the caller passes: the live
+HTTP path is ``fetcher=live_fetcher``, and tests pass deterministic
+offline fetchers.
 """
 
 from __future__ import annotations
 
 import json
-import os
 from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -79,14 +77,18 @@ def parse_litvar(df: DataFrame) -> DataFrame:
     (nullable = the JSON key was absent); any other columns (e.g. the
     originating ``query``) pass through. Output adds ``id_list``,
     ``name_list``, ``gene_list``."""
-    rs_item = F.when(
+    # each present key contributes a one-item array, an absent one an
+    # empty array; concat keeps the order. (array_compact would plan an
+    # interpreted lambda: Spark rewrites it to filter(isnotnull).)
+    no_ids = F.array().cast("array<string>")
+    rs_ids = F.when(
         F.col("rsid").isNotNull(),
-        F.concat(F.lit("RS#:"), F.expr("substring(rsid, 3)")),
-    )
-    hgvs_item = F.when(
-        F.col("hgvs").isNotNull(), F.concat(F.lit("HGVS:"), F.col("hgvs"))
-    )
-    id_list = F.filter(F.array(rs_item, hgvs_item), lambda x: x.isNotNull())
+        F.array(F.concat(F.lit("RS#:"), F.expr("substring(rsid, 3)"))),
+    ).otherwise(no_ids)
+    hgvs_ids = F.when(
+        F.col("hgvs").isNotNull(), F.array(F.concat(F.lit("HGVS:"), F.col("hgvs")))
+    ).otherwise(no_ids)
+    id_list = F.concat(rs_ids, hgvs_ids)
 
     inner = match_inner("match")
     name_list = (
@@ -104,26 +106,13 @@ def parse_litvar(df: DataFrame) -> DataFrame:
 
 def live_fetcher(query: str) -> str:
     """GET the LitVar2 autocomplete endpoint; returns the raw JSON
-    body. Only used when explicitly requested — never by default."""
+    body. Only used when a caller passes it as ``fetcher``."""
     import urllib.parse
     import urllib.request
 
     url = LITVAR_URL + "?" + urllib.parse.urlencode({"query": query})
     with urllib.request.urlopen(url, timeout=30) as resp:  # noqa: S310
         return resp.read().decode("utf-8")
-
-
-def _resolve_fetcher(
-    fetcher: Callable[[str], str] | None
-) -> Callable[[str], str]:
-    if fetcher is not None:
-        return fetcher
-    if os.environ.get("PUBMEDKB_LITVAR_LIVE") == "1":
-        return live_fetcher
-    raise RuntimeError(
-        "no LitVar fetcher: pass fetcher=... or set PUBMEDKB_LITVAR_LIVE=1 "
-        "(this environment has no network; tests inject offline fetchers)"
-    )
 
 
 def results_df(spark: SparkSession, raw_json: str, query: str) -> DataFrame:
@@ -151,12 +140,12 @@ def results_df(spark: SparkSession, raw_json: str, query: str) -> DataFrame:
 def query_variant(
     spark: SparkSession,
     query: str,
-    fetcher: Callable[[str], str] | None = None,
+    fetcher: Callable[[str], str],
 ) -> DataFrame:
     """The reference's interactive path (one autocomplete call per user
     query): fetch driver-side, parse JVM-side. Returns a DataFrame of
     ``(query, id_list, name_list, gene_list)``."""
-    raw = _resolve_fetcher(fetcher)(query)
+    raw = fetcher(query)
     return parse_litvar(results_df(spark, raw, query)).select(
         "query", "id_list", "name_list", "gene_list"
     )
@@ -165,14 +154,14 @@ def query_variant(
 def litvar_enrich(
     queries: DataFrame,
     query_col: str = "query",
-    fetcher: Callable[[str], str] | None = None,
+    *,
+    fetcher: Callable[[str], str],
 ) -> DataFrame:
     """Bulk enrichment: fan the fetch out per-partition (each executor
     issues its own HTTP calls / offline lookups via ``mapInPandas``),
     then run the same JVM parse. The UDF only fetches and flattens —
     all transformation logic stays in :func:`parse_litvar` so the
     interactive and bulk paths cannot diverge."""
-    fetch = _resolve_fetcher(fetcher)
     out_schema = T.StructType(
         [T.StructField("query", T.StringType())] + list(RESULT_SCHEMA.fields)
     )
@@ -183,7 +172,7 @@ def litvar_enrich(
         for pdf in batches:
             rows = []
             for q in pdf[query_col]:
-                for result in json.loads(fetch(q)):
+                for result in json.loads(fetcher(q)):
                     rows.append(
                         {
                             "query": q,

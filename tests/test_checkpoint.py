@@ -10,7 +10,6 @@ import time
 
 import pytest
 from pyspark import StorageLevel
-from pyspark.sql import functions as F
 
 from pubmedkb_web_spark import fixtures
 from pubmedkb_web_spark.pipeline import canonicalize, runner
@@ -32,6 +31,17 @@ def test_resume_identical_and_skips_recompute(spark, tmp_path):
     pipe2 = t2["_pipeline"]
     assert all(not r.recomputed for r in pipe2.results.values())
     assert _collect_triples(t2) == first
+
+
+def test_root_holds_only_stage_directories(spark, tmp_path):
+    """Everything a build leaves under its root goes through the marker
+    protocol: each entry is a stage directory of the build, with its
+    marker, and no loose file or work directory sits beside them."""
+    out = tmp_path / "kb"
+    pipe = runner.run_kg_pipeline(spark, str(out), n_docs=60)["_pipeline"]
+    assert sorted(os.listdir(out)) == sorted(pipe.results)
+    for name in pipe.results:
+        assert (out / name).is_dir() and (out / name / runner.MARKER).is_file(), name
 
 
 def test_kill_after_stage_k_resume(spark, tmp_path):
@@ -363,130 +373,3 @@ def test_non_file_uri_root_rejected_before_writing(spark, tmp_path, monkeypatch)
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup("uri_root_probe")) == []
     assert os.listdir(tmp_path) == []
-
-
-def test_optional_dedup_and_ann_stages_resume(spark, tmp_path):
-    """Round-4 VERDICT #7: near-dup MinHash and the ANN index wired into
-    the checkpointed pipeline as optional tail stages — fingerprint
-    resume, work-dir materialization, core-table counts unchanged."""
-    out = str(tmp_path / "kb")
-    base = runner.run_kg_pipeline(spark, str(tmp_path / "base"), n_docs=60)
-    t1 = runner.run_kg_pipeline(
-        spark, out, n_docs=60, with_dedup=True, with_ann_index=True
-    )
-    # optional stages never perturb the core tables
-    assert sorted(map(tuple, t1["triples"].collect())) == sorted(
-        map(tuple, base["triples"].collect())
-    )
-    assert "near_dup_pairs" in t1 and "ann_index" in t1
-    ndp = t1["near_dup_pairs"]
-    assert set(ndp.columns) == {"doc_a", "doc_b", "jaccard"}
-    assert t1["ann_index"].count() == t1["source"].count()
-    # the shingle/signature relations materialized under the pipeline root
-    assert os.path.isdir(os.path.join(out, "near_dup_work", "shingles"))
-    assert os.path.isdir(os.path.join(out, "near_dup_work", "signatures"))
-    # ann_index is parquet-partitioned by _sig (partition pruning layout)
-    assert any(
-        d.startswith("_sig=") for d in os.listdir(os.path.join(out, "ann_index"))
-    )
-    first_pairs = sorted(map(tuple, ndp.collect()))
-
-    # resume: both optional stages read back, outputs identical
-    t2 = runner.run_kg_pipeline(
-        spark, out, n_docs=60, with_dedup=True, with_ann_index=True
-    )
-    pipe2 = t2["_pipeline"]
-    assert not pipe2.results["near_dup_pairs"].recomputed
-    assert not pipe2.results["ann_index"].recomputed
-    assert sorted(map(tuple, t2["near_dup_pairs"].collect())) == first_pairs
-
-    # config change invalidates ONLY the changed optional stage
-    removed = os.path.join(out, "near_dup_pairs", runner.MARKER)
-    meta = json.load(open(removed))
-    meta["fingerprint"] = "stale"
-    json.dump(meta, open(removed, "w"))
-    t3 = runner.run_kg_pipeline(
-        spark, out, n_docs=60, with_dedup=True, with_ann_index=True
-    )
-    assert t3["_pipeline"].results["near_dup_pairs"].recomputed
-    assert not t3["_pipeline"].results["ann_index"].recomputed
-    assert sorted(map(tuple, t3["near_dup_pairs"].collect())) == first_pairs
-
-
-def test_optional_quality_stage_resume(spark, tmp_path):
-    """with_quality wires the one-scan corpus-cleaning pass (Gopher + PII
-    + C4) as a resumable stage: core tables unchanged, one row per source
-    doc, fingerprint resume skips recompute."""
-    out = str(tmp_path / "kb")
-    base = runner.run_kg_pipeline(spark, str(tmp_path / "base"), n_docs=60)
-    t1 = runner.run_kg_pipeline(spark, out, n_docs=60, with_quality=True)
-    assert sorted(map(tuple, t1["triples"].collect())) == sorted(
-        map(tuple, base["triples"].collect())
-    )
-    dq = t1["doc_quality"]
-    assert dq.count() == t1["source"].count()
-    for col in ("gopher_keep", "pii_redacted", "c4_keep", "quality_keep"):
-        assert col in dq.columns
-    # quality_keep is the AND of the two page-level keeps
-    bad = dq.filter(
-        F.col("quality_keep") != (F.col("gopher_keep") & F.col("c4_keep"))
-    ).count()
-    assert bad == 0
-    first = sorted(map(tuple, dq.select("doc_id", "quality_keep").collect()))
-
-    t2 = runner.run_kg_pipeline(spark, out, n_docs=60, with_quality=True)
-    assert not t2["_pipeline"].results["doc_quality"].recomputed
-    assert (
-        sorted(map(tuple, t2["doc_quality"].select("doc_id", "quality_keep").collect()))
-        == first
-    )
-
-
-def test_ann_ivf_stage_resume_and_probe(spark, tmp_path):
-    """Round-5 VERDICT #4: the IVF layout as the pipeline's ANN stage —
-    same resumable-stage contract, inverted-list partitioning, persisted
-    centroids usable for an ivf_top_k probe, and kind-switch invalidation
-    (an 'lsh' checkpoint is never served as 'ivf')."""
-    from pyspark.sql import functions as F
-
-    from pubmedkb_web_spark.ops import similarity as sim_ops
-
-    out = str(tmp_path / "kb_ivf")
-    t1 = runner.run_kg_pipeline(spark, out, n_docs=60, with_ann_index="ivf")
-    idx = t1["ann_index"]
-    assert idx.count() == t1["source"].count()
-    assert any(
-        d.startswith("_cent=") for d in os.listdir(os.path.join(out, "ann_index"))
-    )
-    cent_path = os.path.join(out, "ann_index_centroids.json")
-    centroids = json.load(open(cent_path))
-    assert centroids and all(len(c) == 16 for c in centroids)
-
-    # probe through the persisted artifacts: full-probe == brute force
-    qvec = [float(v) for v in idx.orderBy("doc_id").first()["embedding"]]
-    got = sim_ops.ivf_top_k(
-        idx, qvec, centroids, top_k=5, nprobe=len(centroids), id_col="doc_id"
-    ).collect()
-    brute = (
-        idx.select(
-            "doc_id",
-            F.round(sim_ops.cosine(F.col("embedding"), qvec), 6).alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), F.col("doc_id").asc())
-        .limit(5)
-        .collect()
-    )
-    assert [tuple(r) for r in got] == [tuple(r) for r in brute]
-
-    # resume: the IVF stage reads back, centroid file untouched
-    mtime = os.path.getmtime(cent_path)
-    t2 = runner.run_kg_pipeline(spark, out, n_docs=60, with_ann_index="ivf")
-    assert not t2["_pipeline"].results["ann_index"].recomputed
-    assert os.path.getmtime(cent_path) == mtime
-
-    # switching kind changes the stage fingerprint -> recompute as LSH
-    t3 = runner.run_kg_pipeline(spark, out, n_docs=60, with_ann_index="lsh")
-    assert t3["_pipeline"].results["ann_index"].recomputed
-    assert any(
-        d.startswith("_sig=") for d in os.listdir(os.path.join(out, "ann_index"))
-    )

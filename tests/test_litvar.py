@@ -113,7 +113,9 @@ def test_litvar_enrich_bulk(spark):
     assert out["abc"]["gene_list"] == expected[0][2]
 
 
-def test_no_fetcher_refuses_without_opt_in(spark, monkeypatch):
-    monkeypatch.delenv("PUBMEDKB_LITVAR_LIVE", raising=False)
-    with pytest.raises(RuntimeError, match="no LitVar fetcher"):
+def test_no_fetcher_refuses_without_opt_in(spark):
+    # the fetcher is required: a live call must name live_fetcher
+    with pytest.raises(TypeError, match="fetcher"):
         litvar.query_variant(spark, "V600E")
+    with pytest.raises(TypeError, match="fetcher"):
+        litvar.litvar_enrich(spark.range(1).selectExpr("'V600E' AS query"))

@@ -48,13 +48,6 @@ def test_minhash_python_parity(spark):
     assert sigs[1] != sigs[4]
 
 
-def test_lsh_finds_near_dups(spark):
-    out = dedup.near_duplicates_minhash(_docs(spark), threshold=0.5)
-    pairs = {(r["doc_a"], r["doc_b"]): r["jaccard"] for r in out.collect()}
-    assert pairs[(1, 2)] == 1.0
-    assert all(j >= 0.5 for j in pairs.values())
-
-
 def test_simhash_similar_docs_close(spark):
     out = {r["doc_id"]: r["simhash"] for r in dedup.simhash(_docs(spark)).collect()}
     assert out[1] == out[2]
@@ -372,34 +365,6 @@ def test_c4_line_filters(spark):
     assert r6["c4_keep"] is False
 
 
-def test_document_quality_composition(spark):
-    """document_quality (one-scan composed projection) must equal the
-    three standalone ops joined on doc_id, plus the combined keep —
-    and its plan must stay join-free (no Exchange)."""
-    rows = [
-        (1, "the cats sats on mats and rats in hats " * 6),
-        (2, "contact a@b.co now.\n" + "\n".join(["Aa bb the cc."] * 5)),
-        (3, "- bullet\nlorem ipsum here { and 192.168.0.1"),
-        (4, ""),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    combined = textstats.document_quality(df)
-    joined = (
-        textstats.gopher_filters(df)
-        .join(textstats.pii_scrub(df), "doc_id")
-        .join(textstats.c4_line_filters(df), "doc_id")
-    )
-    assert set(combined.columns) == set(joined.columns) | {"quality_keep"}
-    shared = sorted(set(joined.columns))
-    assert sorted(
-        map(tuple, combined.select(*shared).collect())
-    ) == sorted(map(tuple, joined.select(*shared).collect()))
-    for r in combined.collect():
-        assert r["quality_keep"] == (r["gopher_keep"] and r["c4_keep"])
-    plan = combined._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan and "BatchEvalPython" not in plan
-
-
 def test_fingerprint_order_sensitive(spark):
     df = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "gamma beta alpha"), (3, "alpha beta gamma")],
@@ -503,27 +468,6 @@ def test_ann_probe_cap_deterministic(spark):
     r2 = similarity.ann_bucketed_top_k(emb, q, top_k=5, max_bucket_rows=200).collect()
     assert [tuple(r) for r in r1] == [tuple(r) for r in r2]
     assert len(r1) == 5 and all(abs(r["cos_sim"] - 1.0) < 1e-6 for r in r1)
-
-
-def test_near_dup_workdir_materialization(spark, tmp_path):
-    """work_dir materializes shingles+signatures once; results must be
-    byte-identical to the lazy plan and the parquet tables must exist."""
-    import os
-
-    rows = [
-        ("a1", "the quick brown fox jumps over the lazy dog again and again"),
-        ("a2", "the quick brown fox jumps over the lazy dog again and again!"),
-        ("b1", "completely unrelated content about spark shuffle partitioning"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id string, text string")
-    lazy = sorted(map(tuple, dedup.near_duplicates_minhash(docs, threshold=0.5).collect()))
-    wd = str(tmp_path / "nd")
-    mat = sorted(
-        map(tuple, dedup.near_duplicates_minhash(docs, threshold=0.5, work_dir=wd).collect())
-    )
-    assert lazy == mat and mat
-    assert os.path.isdir(os.path.join(wd, "shingles"))
-    assert os.path.isdir(os.path.join(wd, "signatures"))
 
 
 def test_decode_image_real_when_pil_present():

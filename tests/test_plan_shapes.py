@@ -141,7 +141,7 @@ SHAPES = {
     # presentation and the LitVar parse are pure codegen
     "html_escape_docs": (_query("html_escape_docs"), [], PY),
     "paper_meta_html_docs": (_query("paper_meta_html_docs"), [], PY),
-    "litvar_parse_docs": (_query("litvar_parse_docs"), [], PY),
+    "litvar_parse_docs": (_query("litvar_parse_docs"), [], PY + ["lambdafunction"]),
     "user_sessions": (_query("user_sessions"), ["HashAggregate"], PY),
     # the IVF probe prunes the partitioned index to the probed lists
     "ivf_cosine_topk": (_query("ivf_cosine_topk"), ["TakeOrderedAndProject", "PartitionFilters"], PY),
@@ -173,7 +173,8 @@ SHAPES = {
     # lookups sort their per-key lists with sort_array and read struct
     # fields, not array_sort's interpreted comparator or transform lambdas
     "cgd_topk": (_cgd_topk, ["TakeOrderedAndProject"], ["lambdafunction", "BatchEvalPython"]),
-    "chem_disease": (_chem_disease, [], ["lambdafunction", "BatchEvalPython"]),
+    # n_docs is size(collect_set): one hash aggregation, no distinct count
+    "chem_disease": (_chem_disease, [], ["lambdafunction", "BatchEvalPython", "count(distinct"]),
     "mesh_name_lookup": (_mesh_names, [], ["lambdafunction", "BatchEvalPython"]),
     "glof_rollup_lookup": (_glof_lookup, [], ["lambdafunction", "BatchEvalPython"]),
     # one hash aggregation: the map-side partial count combines a hot pair
