@@ -430,17 +430,24 @@ def q_lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.jaccard_pairs(sh, cands)
 
 
+def _replicate_hot(df: DataFrame, id_col: str, payload: str) -> DataFrame:
+    """(id, payload) rows with id < 20 replicated into hot buckets: every
+    5th row ×12 copies (> cap 8 → star fallback), the rest ×3 (≤ cap →
+    clique); copy r of row id gets the new long id id*100 + r. Same
+    derivation in the DuckDB oracle."""
+    base = df.filter(F.col(id_col) < 20)
+    reps = F.when(F.col(id_col) % 5 == 0, F.lit(12)).otherwise(F.lit(3))
+    return base.select(
+        id_col, payload, F.explode(F.sequence(F.lit(0), reps - 1)).alias("r")
+    ).select((F.col(id_col) * 100 + F.col("r")).cast("long").alias(id_col), payload)
+
+
 def _hot_lsh_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derived corpus with guaranteed hot LSH buckets: the sf0.01 documents
-    table has no duplicate texts, so replicate doc_id<20 — every 5th doc
-    ×12 copies (> cap 8 → star fallback), the rest ×3 (≤ cap → clique).
+    table has no duplicate texts, so replicate doc_id<20 (_replicate_hot).
     Identical texts share every band bucket, so the ×12 groups exceed the
-    cap in ALL bands. Same derivation in the DuckDB oracle."""
-    base = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
-    reps = F.when(F.col("doc_id") % 5 == 0, F.lit(12)).otherwise(F.lit(3))
-    return base.select(
-        "doc_id", "text", F.explode(F.sequence(F.lit(0), reps - 1)).alias("r")
-    ).select((F.col("doc_id") * 100 + F.col("r")).cast("long").alias("doc_id"), "text")
+    cap in ALL bands."""
+    return _replicate_hot(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 def q_lsh_star_fallback_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -484,23 +491,13 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _dup_embedding_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derived embedding corpus with guaranteed hot signature buckets
-    (embedding twin of _hot_lsh_corpus): replicate vec_id<20 — every 5th
-    vector ×12 copies (> cap 8 → star fallback), the rest ×3 (≤ cap →
-    clique). Identical vectors share every hyperplane bucket and score
-    cos_sim=1. Same derivation in the DuckDB oracle."""
-    base = (
-        _t(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") < 20)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
+    (embedding twin of _hot_lsh_corpus): replicate vec_id<20
+    (_replicate_hot). Identical vectors share every hyperplane bucket and
+    score cos_sim=1."""
+    emb = _t(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    reps = F.when(F.col("vec_id") % 5 == 0, F.lit(12)).otherwise(F.lit(3))
-    return base.select(
-        "vec_id",
-        "embedding",
-        F.explode(F.sequence(F.lit(0), reps - 1)).alias("r"),
-    ).select(
-        (F.col("vec_id") * 100 + F.col("r")).cast("long").alias("vec_id"), "embedding"
-    )
+    return _replicate_hot(emb, "vec_id", "embedding")
 
 
 def q_embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

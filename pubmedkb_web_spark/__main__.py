@@ -5,7 +5,10 @@ clusters):
 
     zip -r pubmedkb_web_spark.zip pubmedkb_web_spark
     spark-submit --py-files pubmedkb_web_spark.zip \
-        pubmedkb_web_spark/__main__.py build --out s3://…/kb --docs 1000000
+        pubmedkb_web_spark/__main__.py build --out file:///data/kb --docs 1000000
+
+Checkpoint roots are local paths or ``file:`` URIs (on a cluster, a path
+every executor mounts); any other scheme is rejected before a job runs.
 
 Local:
 
@@ -52,7 +55,7 @@ def cmd_build(args) -> None:
 
 
 def cmd_query(args) -> None:
-    from .query import rel, spec
+    from .query import rel
     from .sources.tables import read_table
 
     spark = _session(args)

@@ -6,7 +6,9 @@ All four standard families, Spark-first:
 - MinHash+LSH:  shingle → K minhashes → band buckets → within-bucket pair
                 join — the classic near-dup pipeline (Broder 1997); pair
                 candidates only ever meet inside a band bucket, so the
-                quadratic blowup is confined to genuinely similar docs
+                quadratic blowup is confined to genuinely similar docs.
+                The clique/star bucket split, ``bucket_pairs``, also
+                pairs similarity.embedding_near_duplicates' buckets
 - SimHash:      sign-aggregated token hashes → B-bit fingerprint
                 (Charikar 2002); Hamming-near fingerprints = near-dups
 - n-gram Jaccard: exact set similarity for candidate verification
@@ -24,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import MERSENNE31, affine_params, md5_int60
-from .textstats import word_tokens
+from .textstats import _ngrams, word_tokens
 
 
 def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -43,18 +45,13 @@ def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
 def shingles(
     df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Distinct token n-gram shingles per doc: (doc_id, shingle).
-
-    JVM-side: sequence/transform over the token array, then explode.
-    """
-    toks = word_tokens(text_col)
-    sh = F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
-        lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-    )
+    """Distinct token n-gram shingles per doc: (doc_id, shingle), the
+    explode of textstats' n-gram array (none for a doc under n tokens)."""
     return (
-        df.select(F.col(id_col).alias("doc_id"), F.explode(sh).alias("shingle"))
-        .filter(F.size(F.split(F.col("shingle"), " ")) == n)
+        df.select(
+            F.col(id_col).alias("doc_id"),
+            F.explode(_ngrams(word_tokens(text_col), n)).alias("shingle"),
+        )
         .distinct()
     )
 
@@ -75,6 +72,63 @@ def minhash_signatures(shingle_df: DataFrame, num_hashes: int = 8) -> DataFrame:
     return wide.select(
         "doc_id", F.array(*[F.col(f"mh{i}") for i in range(num_hashes)]).alias("sig")
     )
+
+
+def _bands(signatures: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
+    """(doc_id, band_idx, band_key): one row per band of each signature,
+    the key joining the band's ``rows_per_band`` hashes with '_'."""
+    return signatures.select(
+        "doc_id",
+        F.explode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(bands - 1)),
+                lambda bnd: F.struct(
+                    bnd.alias("band_idx"),
+                    F.array_join(
+                        F.transform(
+                            F.slice(F.col("sig"), bnd * rows_per_band + 1, rows_per_band),
+                            lambda v: v.cast("string"),
+                        ),
+                        "_",
+                    ).alias("band_key"),
+                ),
+            )
+        ).alias("band"),
+    ).select("doc_id", "band.band_idx", "band.band_key")
+
+
+def bucket_pairs(
+    rows: DataFrame, keys: list[str], max_bucket_size: int | None = None
+) -> DataFrame:
+    """(doc_a, doc_b), doc_a < doc_b, for the ``doc_id``s of ``rows`` that
+    share a bucket (equal ``keys``): every pair within a bucket, or, for a
+    bucket larger than ``max_bucket_size``, each member paired with the
+    bucket's min doc_id only (the star of :func:`lsh_candidate_pairs`).
+    ``None`` skips the bucket-size pass. A pair met in several buckets
+    repeats: callers dedup."""
+
+    def clique(df: DataFrame) -> DataFrame:
+        a = df.select(*keys, F.col("doc_id").alias("doc_a"))
+        b = df.select(*keys, F.col("doc_id").alias("doc_b"))
+        return (
+            a.join(b, keys)
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .select("doc_a", "doc_b")
+        )
+
+    if max_bucket_size is None:
+        return clique(rows)
+    sizes = rows.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias("_bsz"), F.min("doc_id").alias("_rep")
+    )
+    sized = rows.join(sizes, keys)
+    # rep is the bucket min, so rep < member holds and orientation is free
+    star = (
+        sized.filter(F.col("_bsz") > max_bucket_size)
+        .filter(F.col("doc_id") != F.col("_rep"))
+        .select(F.col("_rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
+    )
+    return clique(sized.filter(F.col("_bsz") <= max_bucket_size)).unionByName(star)
 
 
 def lsh_candidate_pairs(
@@ -116,52 +170,8 @@ def lsh_candidate_pairs(
     shows which buckets the cap fired on.
     """
     assert bands * rows_per_band <= 64
-    banded = signatures.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bnd: F.struct(
-                    bnd.cast("int").alias("band_idx"),
-                    F.array_join(
-                        F.transform(
-                            F.slice(F.col("sig"), bnd * rows_per_band + 1, rows_per_band),
-                            lambda v: v.cast("string"),
-                        ),
-                        "_",
-                    ).alias("band_key"),
-                ),
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_idx", "band.band_key")
-    if max_bucket_size is None:
-        a = banded.select("band_idx", "band_key", F.col("doc_id").alias("doc_a"))
-        b = banded.select("band_idx", "band_key", F.col("doc_id").alias("doc_b"))
-        return (
-            a.join(b, ["band_idx", "band_key"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
-    sizes = banded.groupBy("band_idx", "band_key").agg(
-        F.count(F.lit(1)).alias("_bsz"), F.min("doc_id").alias("_rep")
-    )
-    sized = banded.join(sizes, ["band_idx", "band_key"])
-    small = sized.filter(F.col("_bsz") <= max_bucket_size)
-    a = small.select("band_idx", "band_key", F.col("doc_id").alias("doc_a"))
-    b = small.select("band_idx", "band_key", F.col("doc_id").alias("doc_b"))
-    clique_pairs = (
-        a.join(b, ["band_idx", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
-    # rep is the bucket min, so rep < member holds and orientation is free
-    star_pairs = (
-        sized.filter(F.col("_bsz") > max_bucket_size)
-        .filter(F.col("doc_id") != F.col("_rep"))
-        .select(F.col("_rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-    )
-    return clique_pairs.unionByName(star_pairs).distinct()
+    banded = _bands(signatures, bands, rows_per_band)
+    return bucket_pairs(banded, ["band_idx", "band_key"], max_bucket_size).distinct()
 
 
 def lsh_hot_buckets(
@@ -179,27 +189,9 @@ def lsh_hot_buckets(
     cap went opt-in (default ``None``), a default here would let the two
     silently disagree — the 'same bands/cap' pairing only means anything
     when the caller states the cap at BOTH call sites (round-5 ADVICE)."""
-    banded = signatures.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band_idx"),
-        "sig",
-    ).select(
-        "doc_id",
-        "band_idx",
-        F.array_join(
-            F.transform(
-                F.slice(
-                    F.col("sig"),
-                    F.col("band_idx") * rows_per_band + 1,
-                    F.lit(rows_per_band),
-                ),
-                lambda v: v.cast("string"),
-            ),
-            "_",
-        ).alias("band_key"),
-    )
     return (
-        banded.groupBy("band_idx", "band_key")
+        _bands(signatures, bands, rows_per_band)
+        .groupBy("band_idx", "band_key")
         .agg(F.count(F.lit(1)).alias("bucket_size"))
         .filter(F.col("bucket_size") > max_bucket_size)
     )

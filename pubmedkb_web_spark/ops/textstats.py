@@ -6,10 +6,12 @@
 - document fingerprinting: positional rolling hash
 
 Everything is built-in column expressions (regexp/split/aggregate) —
-map-only, no shuffle, whole-stage-codegen'd, and each has an exact DuckDB
-oracle. These are deliberately simple deterministic heuristics: the point
-at 100 TB is the *plumbing* (one scan, pruned columns, no Python), not
-model quality.
+map-only, no shuffle, no Python, and each has an exact DuckDB oracle.
+Whole-stage codegen covers the plain expressions; the array lambdas
+(``filter``/``transform``/``aggregate``) are evaluated interpreted, per
+element. These are deliberately simple deterministic heuristics: the
+point at 100 TB is the *plumbing* (one scan, pruned columns, no Python),
+not model quality.
 """
 
 from __future__ import annotations
@@ -230,7 +232,8 @@ def gopher_filters(
       over :data:`STOPWORDS`)
 
     Shape at scale: pure column expressions over one scan — map-only, no
-    shuffle, whole-stage codegen; at 100 TB this is the cheap first pass
+    shuffle, no Python; the token and line rules are array lambdas, which
+    Spark evaluates interpreted. At 100 TB this is the cheap first pass
     that drops documents before any shuffling operator sees them.
     """
     toks = word_tokens(text_col)
@@ -352,9 +355,10 @@ def c4_line_filters(
       "lorem ipsum", no ``{``, and no blocklist word
       (:data:`C4_BADWORDS`, word-boundary match).
 
-    Shape at scale: array lambdas over one scan — map-only, no shuffle,
-    whole-stage codegen; like :func:`gopher_filters` this runs before any
-    shuffling operator so dropped pages never reach a shuffle.
+    Shape at scale: array lambdas over one scan — map-only, no shuffle, no
+    Python; Spark evaluates the lambdas interpreted, per line. Like
+    :func:`gopher_filters` this runs before any shuffling operator so
+    dropped pages never reach a shuffle.
     """
     text = F.col(text_col)
     lines = F.filter(

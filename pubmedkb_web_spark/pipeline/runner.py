@@ -84,23 +84,15 @@ def _compute_code_fingerprint() -> str:
     back as current — without it, editing an extractor silently resumed
     stale parquet (round-1 ADVICE)."""
     import hashlib
-    import inspect
 
     from .. import fixtures as _fx, schemas as _sc
     from . import canonicalize as _cn, extractors as _ex, materialize as _mt, mentions as _mn
 
     h = hashlib.sha256()
     for mod in (_mn, _ex, _cn, _mt, _fx, _sc):
-        try:
-            h.update(inspect.getsource(mod).encode())
-        except (OSError, TypeError):
-            h.update(
-                _module_source_bytes(
-                    mod.__name__, getattr(mod, "__loader__", None), getattr(mod, "__file__", None)
-                )
-            )
-    # this module last (can't inspect itself during import on some loaders);
-    # __loader__ is set in the module globals while the body executes
+        h.update(_module_source_bytes(mod.__name__, mod.__loader__, mod.__file__))
+    # this module last: __loader__ is set in the module globals while the
+    # body executes
     h.update(_module_source_bytes(__name__, globals().get("__loader__"), __file__))
     return h.hexdigest()[:16]
 

@@ -9,10 +9,11 @@ re-rank via Qdrant (kb_utils.py:1112-1185). Spark-first replacements:
   joined against the query's term set — no serving index, scoring is a
   broadcast join + groupBy;
 - RRF: full outer join of two windowed rank columns (SURVEY.md J13);
-- embeddings: brute-force exact cosine top-k with the dot product computed
-  JVM-side via zip_with + aggregate — Catalyst plans TakeOrderedAndProject,
-  no Python in the loop. (The LSH-bucketed ANN variant for the 100 TB path
-  lives in ops/similarity.py.)
+- embeddings: brute-force exact cosine top-k. One ``_dot`` (zip_with +
+  aggregate, JVM-side; Spark evaluates the lambdas interpreted) serves
+  every cosine and hyperplane signature in the engine, and Catalyst plans
+  the top-k as TakeOrderedAndProject, no Python in the loop. (The LSH and
+  IVF ANN probes for the 100 TB path live in ops/similarity.py.)
 """
 
 from __future__ import annotations
@@ -195,8 +196,9 @@ def qa_target_filter(
     variant id has NO underscore, find() is -1 and the slice drops the
     *last* character; replicated here so parity holds on malformed ids.
 
-    All predicates are arrays_overlap / exists on array columns — pure
-    codegen, no Python, embarrassingly parallel at any scale.
+    All predicates are arrays_overlap / exists on array columns (the
+    ``exists`` lambda runs interpreted) — no Python, no shuffle,
+    embarrassingly parallel at any scale.
     """
     df = candidates.filter(F.size("triplet_list") > 0)
     if d_set:
@@ -251,18 +253,26 @@ def fetch_paper_text(paper_text: DataFrame, doc_ids: DataFrame | list[str]) -> D
     )
 
 
-def cosine(vec_col: F.Column, query: list[float]) -> F.Column:
-    """Exact cosine similarity against a literal query vector, JVM-side:
-    zip_with for the elementwise product, aggregate for the sums."""
-    qcol = F.array(*[F.lit(float(x)) for x in query])
-    dot = F.aggregate(
-        F.zip_with(vec_col, qcol, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
+def _dot(a: Column, b: Column) -> Column:
+    """Σ a[i]·b[i] over two array columns in double, folded left from 0.0
+    (zip_with + aggregate, JVM-side)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
     )
-    norm_v = F.sqrt(
-        F.aggregate(vec_col, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v)
-    )
-    norm_q = float(sum(x * x for x in query)) ** 0.5
-    return dot / (norm_v * F.lit(norm_q))
+
+
+def cosine(a: Column, b: Column) -> Column:
+    """Exact cosine similarity of two array columns; pass a literal query
+    vector as ``F.array(*[F.lit(x) for x in query])``.
+
+    A zero vector has no direction, so a zero norm on either side gives
+    NULL (``try_divide``), never a DIVIDE_BY_ZERO that fails the whole
+    query under ANSI: a DESC top-k ranks the NULL last and a ``>=``
+    threshold drops it. ``embed_text`` emits that zero vector for a
+    document with no tokens."""
+    return F.try_divide(_dot(a, b), F.sqrt(_dot(a, a)) * F.sqrt(_dot(b, b)))
 
 
 def cosine_top_k(
@@ -273,12 +283,15 @@ def cosine_top_k(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Brute-force exact top-k (the reference's Qdrant call is exact at its
-    collection sizes too, kb_utils.py:1112-1154). Plans as one scan +
-    TakeOrderedAndProject — embarrassingly parallel at any scale."""
+    collection sizes too, kb_utils.py:1112-1154): (id, cos_sim) by cos_sim
+    desc, id asc. Plans as one scan + TakeOrderedAndProject — embarrassingly
+    parallel at any scale. The ANN probes in ops/similarity.py filter their
+    buckets and end here."""
+    qcol = F.array(*[F.lit(float(x)) for x in query])
     return (
         embeddings.select(
             F.col(id_col),
-            F.round(cosine(F.col(vec_col), query), 6).alias("cos_sim"),
+            F.round(cosine(F.col(vec_col), qcol), 6).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
         .limit(top_k)

@@ -1,15 +1,17 @@
 """Variant-report generation (VarSum) — record cleaning + template NLG.
 
-Reference capability (/root/reference/VarSum_germline.py:15-277 record
-cleaning; 740-752 randomized templates; /root/reference/VarSum_utils.py:3-76
-CDS-position parsing and ClinVar/VEP translation maps). Re-expressed as:
+Reference capability (VarSum_germline.py:55-277 record cleaning, 333-585
+report templates; VarSum_utils.py:3-76 CDS-position parsing and
+ClinVar/VEP translation maps). One pipeline:
 
-- pure-column cleaning over a DataFrame of variant records ("." sentinel →
-  null, first-of-list, genotype a/b classification — SURVEY.md P8/F17);
-- CDS-position classification by the *, -, + markers (F9) via regexp
-  cascade;
-- HGVSp parsing via the functions.hgvsp struct UDF;
-- sentence assembly with a seeded RNG (deterministic; SURVEY.md §7 #5).
+- :func:`clean_varsum_table` — the reference's table_cleaning as one
+  column projection ("." sentinel, genotype a/b classification, CDS
+  position and exon/intron/UTR class by the *, -, + markers, ClinVar and
+  VEP translations, MANE-transcript score pick; SURVEY.md P8/F9/F17),
+  plus the HGVSp struct from functions.hgvsp;
+- :func:`render_report_en` / :func:`render_report_zh` — the English and
+  Traditional-Chinese reports of one cleaned row, with a content-seeded
+  template choice (deterministic; SURVEY.md §7 #5).
 """
 
 from __future__ import annotations
@@ -19,86 +21,7 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hgvsp import ordinal, parse_hgvsp, parse_hgvsp_col
-
-# public VEP consequence → readable phrase (VarSum_utils.py:37-76 capability)
-VEP_TRANSLATION = {
-    "missense_variant": "a missense variant",
-    "synonymous_variant": "a synonymous variant",
-    "stop_gained": "a stop-gain variant",
-    "frameshift_variant": "a frameshift variant",
-    "splice_donor_variant": "a splice-donor variant",
-    "splice_acceptor_variant": "a splice-acceptor variant",
-    "inframe_deletion": "an in-frame deletion",
-    "inframe_insertion": "an in-frame insertion",
-}
-CLINVAR_TRANSLATION = {
-    "Pathogenic": "pathogenic",
-    "Likely_pathogenic": "likely pathogenic",
-    "Uncertain_significance": "of uncertain significance",
-    "Likely_benign": "likely benign",
-    "Benign": "benign",
-}
-
-
-def _clean(col: str) -> Column:
-    """'.' sentinel → null; first element of comma/'&'-joined lists
-    (VarSum_germline.py:43-50)."""
-    c = F.trim(F.col(col))
-    first = F.split(c, r"[,&]")[0]
-    return F.when((c == ".") | (c == ""), F.lit(None)).otherwise(F.trim(first))
-
-
-def classify_genotype(gt: Column) -> Column:
-    """'a/b' equal alleles → homozygous, else heterozygous
-    (VarSum_germline.py:79-88)."""
-    parts = F.split(gt, r"[/|]")
-    return (
-        F.when(gt.isNull() | (F.size(parts) < 2), F.lit(None))
-        .when(parts[0] == parts[1], F.lit("homozygous"))
-        .otherwise(F.lit("heterozygous"))
-    )
-
-
-def classify_cds_position(cds: Column) -> Column:
-    """Exon/intron/UTR classification by the HGVS c. markers
-    (VarSum_utils.py:3-18): '*' → 3'UTR, leading '-' → 5'UTR,
-    internal +/- offset → intron, plain number → exon."""
-    s = F.regexp_replace(cds, r"^c\.", "")
-    return (
-        F.when(cds.isNull(), F.lit(None))
-        .when(s.startswith("*"), F.lit("3_prime_utr"))
-        .when(s.startswith("-"), F.lit("5_prime_utr"))
-        .when(s.rlike(r"^\d+[+-]\d+"), F.lit("intron"))
-        .when(s.rlike(r"^\d+"), F.lit("exon"))
-        .otherwise(F.lit("unknown"))
-    )
-
-
-def clean_varsum_records(df: DataFrame) -> DataFrame:
-    """Raw string record table → typed, translated, parsed columns.
-
-    Expects (any subset of): gene, hgvsp, hgvsc, genotype, consequence,
-    clinvar, gnomad_af. Unknown translation keys pass through lowercased.
-    """
-    vep_map = F.create_map(*[F.lit(x) for kv in VEP_TRANSLATION.items() for x in kv])
-    clinvar_map = F.create_map(*[F.lit(x) for kv in CLINVAR_TRANSLATION.items() for x in kv])
-    return df.select(
-        _clean("gene").alias("gene"),
-        _clean("hgvsp").alias("hgvsp"),
-        _clean("hgvsc").alias("hgvsc"),
-        classify_genotype(_clean("genotype")).alias("zygosity"),
-        F.coalesce(
-            vep_map[_clean("consequence")], F.lower(_clean("consequence"))
-        ).alias("consequence_text"),
-        F.coalesce(
-            clinvar_map[_clean("clinvar")], F.lower(F.regexp_replace(_clean("clinvar"), "_", " "))
-        ).alias("clinvar_text"),
-        (_clean("gnomad_af")).try_cast("double").alias("gnomad_af"),
-        classify_cds_position(_clean("hgvsc")).alias("cds_region"),
-        parse_hgvsp_col(_clean("hgvsp")).alias("hgvsp_parsed"),
-    )
-
+from ..functions.hgvsp import parse_hgvsp_col
 
 # ===========================================================================
 # Full-fidelity germline VarSum (VarSum_germline.py:55-277 table_cleaning,
@@ -123,9 +46,9 @@ def clean_varsum_records(df: DataFrame) -> DataFrame:
 #   dann_score           ← DANN_DANN-score
 #   spliceai_ds_ag/al/dg/dl ← SpliceAI-SNV_DS-{AG,AL,DG,DL}
 #   phylop100way_rank    ← Conservation Scores_phyloP100way-vertebrate-rankscore
-# All cleaning is column-level (JVM/codegen) — per-row Python appears only
-# in the driver-side report renderers, matching the reference's per-report
-# string assembly.
+# All cleaning is column-level except the HGVSp struct, a pandas UDF; the
+# report renderers are driver-side Python, matching the reference's
+# per-report string assembly.
 # ===========================================================================
 
 # VEP consequence → Traditional-Chinese phrase (VarSum_utils.py:57-76)
@@ -176,7 +99,6 @@ CLINVAR_ZH = {
     "protective": "保護因子", "affects": "非疾病性影響",
 }
 
-PATHOGENICITY_SW = ["SIFT", "PolyPhen2", "CADD-phred", "VEST4", "PROVEAN", "DANN", "spliceAI"]
 # Zh interpretation hints per software (VarSum_germline.py:407-414)
 PATHOGENICITY_HINT_ZH = {
     "SIFT": "SIFT值越接近0", "PolyPhen2": "PolyPhen2值越接近1",
@@ -222,9 +144,10 @@ def _consequence_en_item(cons: Column) -> Column:
 def clean_varsum_table(df: DataFrame) -> DataFrame:
     """Full table_cleaning (VarSum_germline.py:55-277) as one projection.
 
-    Every intermediate below is a named column expression; Catalyst
-    collapses the whole thing into a single codegen'd Project — there is no
-    Python in this path at all."""
+    Every intermediate below is a named column expression, and Catalyst
+    collapses them into a single Project. Its array lambdas (transform,
+    zip_with) run interpreted, and ``hgvsp_parsed`` is the one Python
+    column (the functions.hgvsp pandas UDF)."""
     vep_zh = F.create_map(*[F.lit(x) for kv in VEP_ZH.items() for x in kv])
     clinvar_zh = F.create_map(*[F.lit(x) for kv in CLINVAR_ZH.items() for x in kv])
 
@@ -649,32 +572,3 @@ def render_report_zh(row: dict, seed: int = 42) -> str:
         )
     return "".join(parts)
 
-
-EN_TEMPLATES = [
-    "The {gene} variant {hgvsp} ({consequence_text}) was detected in the {zygosity} state; it is {clinvar_text}.",
-    "A {zygosity} {consequence_text} in {gene} ({hgvsp}) was found and is classified as {clinvar_text}.",
-]
-
-
-def render_report(row: dict, seed: int = 42) -> str:
-    """One-variant English report. Deterministic template choice seeded by
-    the record content (reference randomizes, VarSum_germline.py:740-752)."""
-    rng = random.Random(f"{seed}:{row.get('gene')}:{row.get('hgvsp')}")
-    tpl = rng.choice(EN_TEMPLATES)
-    parsed = row.get("hgvsp_parsed") or {}
-    filled = tpl.format(
-        gene=row.get("gene") or "an unknown gene",
-        hgvsp=row.get("hgvsp") or "variant",
-        consequence_text=row.get("consequence_text") or "a variant",
-        zygosity=row.get("zygosity") or "unknown-zygosity",
-        clinvar_text=row.get("clinvar_text") or "unclassified",
-    )
-    extra = []
-    if isinstance(parsed, dict) and parsed.get("text"):
-        extra.append(f"At the protein level this is {parsed['text']}.")
-    af = row.get("gnomad_af")
-    if af is not None:
-        extra.append(f"Its gnomAD allele frequency is {af:g}.")
-    if row.get("cds_region") in ("intron", "3_prime_utr", "5_prime_utr"):
-        extra.append(f"The change lies in the {row['cds_region'].replace('_', ' ')} region.")
-    return " ".join([filled] + extra)

@@ -98,6 +98,26 @@ def test_embed_text_matches_python_oracle(spark):
         assert abs(norm2 - (0.0 if doc_id == 3 else 1.0)) < 1e-9
 
 
+def test_zero_vector_scores_null(spark):
+    """embed_text gives a token-less document the zero vector. Its cosine is
+    NULL: it ranks last in the exact and ANN top-k and never clears a
+    near-dup threshold, where a plain division fails the whole query with
+    DIVIDE_BY_ZERO under ANSI."""
+    rows = [(1, "spark joins merge fast"), (2, "Spark joins merge fast"), (3, "   "), (4, "\n\t")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    emb = similarity.embed_text(docs, dim=8).withColumnRenamed("doc_id", "vec_id")
+    q = similarity.embed_text_py(rows[0][1], dim=8)
+    expect = [(1, 1.0), (2, 1.0), (3, None), (4, None)]
+    exact = similarity.cosine_top_k(emb, q, top_k=4).collect()
+    assert [(r["vec_id"], r["cos_sim"]) for r in exact] == expect
+    # one hyperplane: the probe set {sig, sig ^ 1} covers every bucket
+    ann = similarity.ann_bucketed_top_k(emb, q, top_k=4, n_planes=1).collect()
+    assert [(r["vec_id"], r["cos_sim"]) for r in ann] == expect
+    # both zero vectors share signature 0, so their pair is scored
+    dups = similarity.embedding_near_duplicates(emb, threshold=0.5, n_planes=4).collect()
+    assert [(r["doc_a"], r["doc_b"], r["cos_sim"]) for r in dups] == [(1, 2, 1.0)]
+
+
 def test_ann_persisted_index_prunes_partitions(spark, tmp_path):
     import io
     import random

@@ -5,35 +5,6 @@ from __future__ import annotations
 from pubmedkb_web_spark.query import varsum as V
 
 
-def _records(spark):
-    rows = [
-        ("BRCA1", "p.V600E", "c.1799T>A", "0/1", "missense_variant", "Pathogenic", "0.0001"),
-        ("TP53", ".", "c.376-2A>G", "1/1", "splice_acceptor_variant", "Likely_pathogenic", "."),
-        (".", "p.Arg97fs", "c.*52del", "0|0", "frameshift_variant", "Uncertain_significance", "0.01,0.02"),
-    ]
-    return spark.createDataFrame(
-        rows,
-        "gene string, hgvsp string, hgvsc string, genotype string, "
-        "consequence string, clinvar string, gnomad_af string",
-    )
-
-
-def test_cleaning(spark):
-    rows = V.clean_varsum_records(_records(spark)).collect()
-    r0, r1, r2 = rows
-    assert r0["zygosity"] == "heterozygous"
-    assert r1["zygosity"] == "homozygous"
-    assert r2["zygosity"] == "homozygous"
-    assert r1["hgvsp"] is None  # '.' sentinel
-    assert r2["gene"] is None
-    assert r2["gnomad_af"] == 0.01  # first-of-list
-    assert r0["consequence_text"] == "a missense variant"
-    assert r0["clinvar_text"] == "pathogenic"
-    assert r1["cds_region"] == "intron"
-    assert r2["cds_region"] == "3_prime_utr"
-    assert r0["hgvsp_parsed"]["kind"] == "substitution"
-
-
 FULL_COLS = (
     "vep_gene_name string, format_gt string, vep_hgvsc string, "
     "vep_consequence string, vep_hgvsp string, vep_exon_intron_rank string, "
@@ -63,12 +34,16 @@ def _full_rows(spark):
          ".", "11/11", "Likely_benign", ".", "ENST00000269305.9",
          ".", "0.004", "A,B,C", "ENSTX;ENSTY", "0.5;0.6", ".", ".", ".",
          ".", "bad", ".", ".", ".", ".", "."),
+        # intronic c.N-M HGVSc, no protein change
+        ("TP53", "0/1", "NM_000546.6:c.376-2A>G", "splice_acceptor_variant",
+         ".", "4/10", "Likely_pathogenic", ".", ".", ".", ".", ".", ".", ".",
+         ".", ".", ".", ".", ".", ".", ".", ".", ".", "."),
     ]
     return spark.createDataFrame(rows, FULL_COLS)
 
 
 def test_full_table_cleaning(spark):
-    r0, r1, r2 = V.clean_varsum_table(_full_rows(spark)).collect()
+    r0, r1, r2, r3 = V.clean_varsum_table(_full_rows(spark)).collect()
 
     # record 0: full trace
     assert r0["gene_name"] == "BRCA1"
@@ -81,6 +56,9 @@ def test_full_table_cleaning(spark):
     assert r0["exon_or_intron_rank"] == "exon 2"
     assert r0["exon_or_intron_rank_zhtw"] == "第2外顯子"
     assert r0["hgvsp"] == "p.Glu23ValfsTer17"
+    parsed = r0["hgvsp_parsed"]
+    assert (parsed["kind"], parsed["ref_aa"], parsed["pos_start"], parsed["alt_aa"]) == ("fs", "E", 23, "V")
+    assert parsed["text"] == "frameshift at the 23rd residue, terminating after 17 residues"
     assert r0["consequence"] == "frameshift"
     assert r0["consequence_zhtw"] == "框移（frameshift）"
     assert r0["clinvar_record"] == "Pathogenic"
@@ -110,8 +88,13 @@ def test_full_table_cleaning(spark):
     assert r1["consequence"] == "" and r1["clinvar_record"] == "."
     assert r1["pathogenicity"] == "." and r1["conservation"] == "."
     assert r1["hotspot"] == "." and r1["transcriptid_index"] == -1
+    assert r1["hgvsp"] == "."
+    assert r1["hgvsp_parsed"]["kind"] == "unknown" and r1["hgvsp_parsed"]["text"] is None
 
-    # record 2: 3'-UTR, multi-consequence, 3-db hotspot, MANE not in list
+    # record 2: homozygous, 3'-UTR, multi-consequence, 3-db hotspot, MANE
+    # not in list
+    assert r2["genotype"] == "homozygous"
+    assert r2["genotype_zhtw"] == "同型合子（homozygous）"
     assert r2["cds_position"] == "*52"
     assert r2["exon_intron"] == "3'-UTR"
     assert r2["exon_or_intron_rank"] == "3'-UTR"  # UTR → no rank
@@ -127,6 +110,15 @@ def test_full_table_cleaning(spark):
     assert r2["hotspot"] == "A, B, and C"
     assert r2["hotspot_zhtw"] == "A、B和C"
 
+    # record 3: intronic position keeps its offset, rank names the intron
+    assert r3["genotype"] == "heterozygous"
+    assert r3["hgvsc"] == "c.376-2A>G" and r3["cds_position"] == "376-2"
+    assert r3["exon_intron"] == "intron" and r3["exon_intron_zhtw"] == "內含子"
+    assert r3["exon_or_intron_rank"] == "intron 4"
+    assert r3["exon_or_intron_rank_zhtw"] == "第4內含子"
+    assert r3["consequence"] == "splice acceptor"
+    assert r3["clinvar_record"] == "Likely pathogenic"
+
 
 def test_full_reports(spark):
     rows = [r.asDict(recursive=True) for r in V.clean_varsum_table(_full_rows(spark)).collect()]
@@ -135,23 +127,21 @@ def test_full_reports(spark):
     assert "from the 68th to the 69th" in en  # del → from/to phrasing
     assert "'Pathogenic" in en and "DeafnessVD and ClinVar" in en
     assert "0.003012" in en and "PolyPhen2 = 0.997" in en
+    assert (
+        "At the protein level this is frameshift at the 23rd residue, "
+        "terminating after 17 residues." in en
+    )
     assert en == V.render_report_en(rows[0])  # deterministic
     zh = V.render_report_zh(rows[0])
     assert "BRCA1" in zh and "異型合子" in zh and "框移" in zh
     assert "『致病』" in zh and "0.003012" in zh
     assert "SIFT值越接近0" not in zh  # SIFT unrecorded for this transcript
     assert "PolyPhen2值越接近1" in zh
+    en3 = V.render_report_en(rows[3])
+    assert "at the 376-2nd nucleotide" in en3 and "intron 4" in en3
+    assert "At the protein level" not in en3  # no HGVSp, no protein sentence
     # UTR positions keep their markers in ordinal phrases
     assert V.ordinal_pos("*52") == "*52nd"
     assert V.ordinal_pos("376-2") == "376-2nd"
     assert V.ordinal_pos("111") == "111th"
 
-
-def test_report_rendering(spark):
-    rows = [r.asDict(recursive=True) for r in V.clean_varsum_records(_records(spark)).collect()]
-    rep = V.render_report(rows[0])
-    assert "BRCA1" in rep and "heterozygous" in rep and "pathogenic" in rep
-    assert "substitution of V" in rep
-    assert V.render_report(rows[0]) == rep  # deterministic
-    rep2 = V.render_report(rows[2])
-    assert "frameshift" in rep2 and "3 prime utr" in rep2
