@@ -1,2785 +1,23 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Gate surface of the pubmedkb_web_spark engine, re-exported.
 
-``queries()`` maps one entry per implemented operator family from
-SURVEY.md §2 (+ the training-data ops) to a callable ``(spark, sf_dir) →
-DataFrame``; ``oracle_sql()`` gives the DuckDB-equivalent SQL over the same
-parquet tables. Hash-derived columns use the portable md5-int60 /
-Mersenne-31 family (pubmedkb_web_spark/functions/hashing.py) so signatures
-compare value-for-value. Queries call the engine's own operators — the gate
-tests package code, not ad-hoc SQL.
-
-Entries without an oracle (difflib fuzzy match, HGVSp parsing, the full KG
-pipeline, LSH-ANN) are genuinely non-SQL-expressible; the driver records
-the weaker rows-only check and pytest covers them against Python oracles.
+``queries()`` maps 50 gate names to ``(spark, sf_dir) -> DataFrame``
+builders (``pubmedkb_web_spark/gates/builders.py``); ``oracle_sql()`` gives
+each gate, and each constituent ``q_*`` builder of a merged gate, a DuckDB
+twin over the same parquet tables (``pubmedkb_web_spark/gates/oracle.py``).
+Every public ``q_*`` builder is re-exported: bench.py resolves constituent
+gates by ``getattr(E, f"q_{name}")``. The gates are package modules, so a
+``--py-files`` zip of the package is their only import source.
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import Window as W
 
-from pubmedkb_web_spark import fixtures
-from pubmedkb_web_spark.functions import htmlrender
-from pubmedkb_web_spark.functions.hashing import MERSENNE31, affine_params, md5_int60, md5_int60_sql
-from pubmedkb_web_spark.sources import litvar
-from pubmedkb_web_spark.ops import dedup, multimodal, similarity, textstats
-from pubmedkb_web_spark.pipeline import extractors, materialize, runner
-from pubmedkb_web_spark.query import graph, nen, rel, retrieval, spec, varsum
-from pubmedkb_web_spark.query import kbqueries as kbq
-from pubmedkb_web_spark.streaming import events as streaming_events
-
-M31 = MERSENNE31
-VOCAB = ["spark", "join", "merge", "sort", "hash"]
-TOKS_SQL = "string_split_regex(lower(text), '\\s+')"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def _idx_cache_key(sf_dir: str, table: str, n: int = 12) -> str:
-    """Cache key for gate-built derived indexes = path + a stat fingerprint
-    of the source parquet (name, size, mtime of every part file), so
-    regenerated test data at the same path gets a fresh index instead of a
-    silently-stale one, and two processes over different data never share a
-    directory (round-5 ADVICE, applied to every gate index cache)."""
-    import hashlib
-
-    src = os.path.join(sf_dir, f"{table}.parquet")
-    h = hashlib.md5(os.path.abspath(sf_dir).encode())
-    parts = [src]
-    if os.path.isdir(src):
-        parts = [
-            os.path.join(dp, fn)
-            for dp, _dirs, fns in sorted(os.walk(src))
-            for fn in sorted(fns)
-        ]
-    for pth in parts:
-        st = os.stat(pth)
-        h.update(f"{os.path.basename(pth)}:{st.st_size}:{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:n]
-
-
-def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, tok, ord, dl) — positional tokens of documents."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = textstats.word_tokens("text")
-    return docs.select(
-        "doc_id",
-        F.size(toks).alias("dl"),
-        F.posexplode(toks).alias("pos0", "tok"),
-    ).select("doc_id", "dl", (F.col("pos0") + 1).alias("ord"), "tok")
-
-
-# map-only tokenization base shared by the r7-rewritten token queries: the
-# token array stays a per-row ARRAY column (array_remove == the length>0
-# filter, pure codegen) so vocabulary predicates run as array expressions
-# BEFORE any explode — no occurrence-level row blowup, no shuffle
-# (optimization guide §2.3/§2.4: project/filter before the exchange, and
-# prefer removing the exchange outright). The array lands in its own
-# projection so CollapseProject never duplicates the regex split.
-def _vocab_arr():  # built lazily: F.lit needs an active SparkContext
-    return F.array(*[F.lit(w) for w in VOCAB])
-
-
-def _doc_token_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", textstats.word_tokens("text").alias("_toks"))
-
-
-def _doc_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """entity_postings-shaped doc-level token index: role=head, ann_id=0,
-    score=1. AND/OR over it = boolean doc algebra (SURVEY.md J1/J2).
-
-    r7: distinct (doc, vocab-token) membership == array_intersect of the
-    token array with the vocabulary — deduped by construction, so the old
-    explode-every-token + dropDuplicates SHUFFLE is gone (guide §2.4)."""
-    base = _doc_token_arrays(spark, sf_dir)
-    return base.select(
-        "doc_id", F.explode(F.array_intersect(F.col("_toks"), _vocab_arr())).alias("tok")
-    ).select(
-        F.lit("type_name").alias("idx_kind"),
-        F.lit("Token").alias("type"),
-        F.col("tok").alias("key"),
-        F.lit("head").alias("role"),
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.lit(0).cast("long").alias("ann_id"),
-        F.lit(1.0).alias("score"),
-    )
-
-
-def _tf_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """token-frequency postings: ann_id = hash(token), score = tf — OR over
-    it sums per-doc tf mass, the relevance-ranking shape (SURVEY.md A1).
-
-    r7: tf(w) = size(toks) − size(array_remove(toks, w)) per vocab word —
-    pure codegen array math, replacing the explode-every-token +
-    groupBy(doc_id, tok) SHUFFLE with a map-only projection (guide §2.4);
-    md5 ann_ids are now computed on ≤|VOCAB| rows/doc, not per occurrence."""
-    base = _doc_token_arrays(spark, sf_dir)
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(w).alias("tok"),
-                (
-                    F.size(F.col("_toks")) - F.size(F.array_remove(F.col("_toks"), w))
-                ).alias("tf"),
-            )
-            for w in VOCAB
-        ]
-    )
-    tf = (
-        base.select("doc_id", F.explode(entries).alias("_e"))
-        .select("doc_id", F.col("_e.tok").alias("tok"), F.col("_e.tf").alias("tf"))
-        .filter(F.col("tf") > 0)
-    )
-    return tf.select(
-        F.lit("type_name").alias("idx_kind"),
-        F.lit("Token").alias("type"),
-        F.col("tok").alias("key"),
-        F.lit("head").alias("role"),
-        F.col("doc_id").cast("string").alias("doc_id"),
-        (md5_int60(F.col("tok")) % 1_000_000).alias("ann_id"),
-        F.col("tf").cast("double").alias("score"),
-    )
-
-
-def _ht_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """head/tail postings: token occurrence in the first half of the doc →
-    head role, second half → tail (exercises the pair query, SURVEY.md J3).
-
-    r7: ord*2 <= dl ⇔ the occurrence sits in slice(toks, 1, dl/2) — the
-    halves are materialized once per row and membership is array_contains,
-    replacing explode-every-token + dropDuplicates SHUFFLE (guide §2.4)."""
-    base = _doc_token_arrays(spark, sf_dir)
-    half = F.floor(F.size("_toks") / 2).cast("int")
-    halves = base.select(
-        "doc_id",
-        F.slice(F.col("_toks"), F.lit(1), half).alias("_head"),
-        F.slice(F.col("_toks"), half + 1, F.size("_toks") - half).alias("_tail"),
-    )
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(w).alias("tok"),
-                F.lit(role).alias("role"),
-                F.array_contains(F.col(c), w).alias("has"),
-            )
-            for w in VOCAB
-            for role, c in (("head", "_head"), ("tail", "_tail"))
-        ]
-    )
-    return (
-        halves.select("doc_id", F.explode(entries).alias("_e"))
-        .filter(F.col("_e.has"))
-        .select(
-            F.lit("type_name").alias("idx_kind"),
-            F.lit("Token").alias("type"),
-            F.col("_e.tok").alias("key"),
-            F.col("_e.role").alias("role"),
-            F.col("doc_id").cast("string").alias("doc_id"),
-            F.lit(0).cast("long").alias("ann_id"),
-            F.lit(1.0).alias("score"),
-        )
-    )
-
-
-_HT_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, unnest({TOKS_SQL}) AS tok,
-         generate_subscripts({TOKS_SQL}, 1) AS ord,
-         len({TOKS_SQL}) AS dl
-  FROM documents
-)"""
-
-
-# --------------------------------------------------------------------------
-# queries
-# --------------------------------------------------------------------------
-
-def q_spec_and_or(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """spec compiler: spark AND (join OR merge) → doc ids."""
-    postings = _doc_postings(spark, sf_dir)
-    tree = (
-        "AND",
-        (
-            ("type_name", ("Token", "spark")),
-            ("OR", (("type_name", ("Token", "join")), ("type_name", ("Token", "merge")))),
-        ),
-    )
-    out = spec.evaluate_single(postings, tree)
-    return out.select(F.col("doc_id").cast("long").alias("doc_id"))
-
-
-def q_spec_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pair query: (spark.head ∩ join.tail) ∪ (join.head ∩ spark.tail)."""
-    postings = _ht_postings(spark, sf_dir)
-    out = spec.evaluate_pair(
-        postings, ("type_name", ("Token", "spark")), ("type_name", ("Token", "join"))
-    )
-    return out.select(F.col("doc_id").cast("long").alias("doc_id"))
-
-
-def q_rel_relevance_page(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rel pipeline sort+paginate: relevance = Σ tf, page [0,20)."""
-    postings = _tf_postings(spark, sf_dir)
-    tree = ("OR", tuple(("type_name", ("Token", t)) for t in VOCAB[:3]))
-    hits = spec.evaluate_single(postings, tree)
-    page = rel.sorted_page(rel.paper_scores(hits), None, "relevance", 0, 20)
-    return page.select(
-        F.col("doc_id").cast("long").alias("doc_id"), "relevance", "rank"
-    )
-
-
-def q_tpch_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-        F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-        F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-        F.count(F.lit(1)).alias("count_order"),
-    )
-
-
-def q_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li, orders = _t(spark, sf_dir, "lineitem"), _t(spark, sf_dir, "orders")
-    rev = li.groupBy("l_orderkey").agg(
-        F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue")
-    )
-    # r7: take the top-20 on the thin aggregate FIRST (TakeOrderedAndProject
-    # — per-partition heaps, no extra exchange), THEN join the 20 survivors
-    # against orders as a broadcast probe. The old order joined the full
-    # revenue aggregate against the full orders table (SMJ: two wide
-    # exchanges + sorts) only to keep 20 rows (guide §3: make every join
-    # move the fewest rows; lineitem's orderkeys are a TPC-H foreign key
-    # into orders, so the inner join can't eliminate a top-20 candidate —
-    # the result set is identical, oracle-checked at three scale factors).
-    top = (
-        rev.orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
-        .limit(20)
-        .withColumnRenamed("l_orderkey", "orderkey")
-    )
-    return (
-        F.broadcast(top)
-        .join(orders, top.orderkey == orders.o_orderkey)
-        .select("orderkey", "revenue", "o_orderpriority")
-        .orderBy(F.col("revenue").desc(), F.col("orderkey").asc())
-    )
-
-
-def q_supplier_rank_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sup = _t(spark, sf_dir, "supplier")
-    w = W.partitionBy("s_nationkey").orderBy(F.col("s_acctbal").desc(), F.col("s_suppkey").asc())
-    return (
-        sup.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 2)
-        .select("s_nationkey", "s_suppkey", F.round("s_acctbal", 2).alias("acctbal"), "rn")
-    )
-
-
-def q_rrf_fusion_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders")
-    by_price = retrieval.rank_by(orders, "o_totalprice", key="o_orderkey", ascending=False)
-    by_date = retrieval.rank_by(orders, "o_orderdate", key="o_orderkey", ascending=True)
-    fused = retrieval.rrf_fuse(by_price, by_date, key="o_orderkey", top_k=100)
-    return fused.select("o_orderkey", "rank_a", "rank_b", "rrf")
-
-
-def q_two_hop_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, sup, nat = (_t(spark, sf_dir, x) for x in ("customer", "supplier", "nation"))
-    return (
-        cust.join(sup, cust.c_nationkey == sup.s_nationkey)
-        .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
-        .groupBy("n_name")
-        .agg(F.count(F.lit(1)).alias("n_pairs"))
-    )
-
-
-def q_freq_cutoff_brands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
-    cnt = part.groupBy("p_brand").agg(F.count(F.lit(1)).alias("cnt"))
-    w = W.partitionBy()
-    return cnt.withColumn("max_cnt", F.max("cnt").over(w)).filter(
-        F.col("cnt") >= 0.5 * F.col("max_cnt")
-    ).select("p_brand", "cnt", "max_cnt")
-
-
-def q_json_extract_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("long")
-    return ev.select((k % 10).alias("k_mod")).groupBy("k_mod").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-
-
-def q_event_type_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum("value"), 2).alias("value_sum"),
-        F.countDistinct("user_id").alias("n_users"),
-    )
-
-
-def q_pivot_event_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    types = ["click", "error", "purchase", "signup", "view"]
-    return (
-        ev.groupBy("user_id")
-        .pivot("event_type", types)
-        .agg(F.count(F.lit(1)))
-        .select("user_id", *[F.coalesce(F.col(t), F.lit(0)).alias(t) for t in types])
-    )
-
-
-def q_hourly_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    out = streaming_events.windowed_counts(ev, "1 hour")
-    return out.select(
-        F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("hour"),
-        "event_type",
-        "n",
-        "value_sum",
-    )
-
-
-def q_sessionize_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    epoch = F.col("ts").cast("timestamp").cast("long")
-    gap = epoch - F.lag(epoch).over(w)
-    return (
-        ev.withColumn("new_sess", F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
-        .groupBy("user_id")
-        .agg(F.sum("new_sess").alias("n_sessions"), F.count(F.lit(1)).alias("n_events"))
-    )
-
-
-def q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-session rows (gap > 30 min splits) — the batch twin of the
-    applyInPandasWithState streaming sessionizer (streaming/events.py);
-    stream-vs-batch parity is pytest's job (test_graph_streaming)."""
-    return streaming_events.sessionize_batch(_t(spark, sf_dir, "events"), gap_s=1800)
-
-
-def q_cooccurrence_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r7: the per-doc distinct vocab set is array_intersect(toks, VOCAB) —
-    # pair enumeration (n1 < n2) is a double explode of that ≤5-element
-    # array per doc, replacing explode-every-token + DISTINCT shuffle +
-    # doc_id self-join shuffle with a map-only plan (guide §2.4); only the
-    # final pair-count aggregation shuffles.
-    base = _doc_token_arrays(spark, sf_dir)
-    vs = base.select(
-        "doc_id", F.array_intersect(F.col("_toks"), _vocab_arr()).alias("_vs")
-    )
-    pairs = (
-        vs.select("doc_id", F.explode("_vs").alias("n1"), F.col("_vs"))
-        .select("doc_id", "n1", F.explode("_vs").alias("n2"))
-        .filter(F.col("n1") < F.col("n2"))
-        .withColumn("score", F.lit(1.0))
-    )
-    out = materialize.pair_counts(pairs, ["n1", "n2"])
-    return out.select("n1", "n2", "support")
-
-
-def q_odds_ratio_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r7: pair_contingency deduplicates mentions per (doc, sent, name)
-    # first thing, so feeding it the map-only per-doc distinct vocab set
-    # (array_intersect, ≤5 rows/doc) is equivalent to the old
-    # explode-every-occurrence feed — but its internal DISTINCT now
-    # shuffles ≤5 rows/doc instead of every token occurrence (guide §2.3).
-    base = _doc_token_arrays(spark, sf_dir)
-    mentions = base.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.lit(0).alias("sent_idx"),
-        F.explode(F.array_intersect(F.col("_toks"), _vocab_arr())).alias("name"),
-    )
-    sentences = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"), F.lit(0).alias("sent_idx")
-    )
-    # doc_id is unique in documents, so the plain footer-metadata count IS
-    # the distinct (doc_id, sent_idx) total — passing it removes the
-    # distinct+count job pair_contingency would otherwise run (guide §2.4).
-    cont = extractors.pair_contingency(
-        mentions, sentences, n_sentences=_t(spark, sf_dir, "documents").count()
-    )
-    return cont.select("n1", "n2", "a", "b", "c", "d", "odds_ratio", "ci_low", "ci_high")
-
-
-def q_exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.exact_duplicates(_t(spark, sf_dir, "documents"))
-
-
-def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    sh = dedup.shingles(docs, 3)
-    sigs = dedup.minhash_signatures(sh, 8)
-    return sigs.select("doc_id", F.posexplode("sig").alias("hash_idx", "minhash"))
-
-
-def q_lsh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    sh = dedup.shingles(docs, 3)
-    cands = dedup.lsh_candidate_pairs(dedup.minhash_signatures(sh, 8), 4, 2)
-    return dedup.jaccard_pairs(sh, cands)
-
-
-def _replicate_hot(df: DataFrame, id_col: str, payload: str) -> DataFrame:
-    """(id, payload) rows with id < 20 replicated into hot buckets: every
-    5th row ×12 copies (> cap 8 → star fallback), the rest ×3 (≤ cap →
-    clique); copy r of row id gets the new long id id*100 + r. Same
-    derivation in the DuckDB oracle."""
-    base = df.filter(F.col(id_col) < 20)
-    reps = F.when(F.col(id_col) % 5 == 0, F.lit(12)).otherwise(F.lit(3))
-    return base.select(
-        id_col, payload, F.explode(F.sequence(F.lit(0), reps - 1)).alias("r")
-    ).select((F.col(id_col) * 100 + F.col("r")).cast("long").alias(id_col), payload)
-
-
-def _hot_lsh_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Derived corpus with guaranteed hot LSH buckets: the sf0.01 documents
-    table has no duplicate texts, so replicate doc_id<20 (_replicate_hot).
-    Identical texts share every band bucket, so the ×12 groups exceed the
-    cap in ALL bands."""
-    return _replicate_hot(_t(spark, sf_dir, "documents"), "doc_id", "text")
-
-
-def q_lsh_star_fallback_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gate for the hot-bucket star fallback (round-4 VERDICT #8: the
-    lsh_near_dup_pairs gate corpus never exceeds the cap, so the star
-    branch was pytest-only). Cap 8 forces the ×12 buckets onto the star
-    path while the ×3 buckets stay on the clique path — one gate, both
-    branches, hash-matched against the oracle's explicit star/clique SQL."""
-    corpus = _hot_lsh_corpus(spark, sf_dir)
-    sigs = dedup.minhash_signatures(dedup.shingles(corpus, 3), 8)
-    return dedup.lsh_candidate_pairs(sigs, 4, 2, max_bucket_size=8)
-
-
-def q_lsh_hot_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Observability half of the cap (drop-with-log): which band buckets
-    exceeded max_bucket_size, with sizes."""
-    corpus = _hot_lsh_corpus(spark, sf_dir)
-    sigs = dedup.minhash_signatures(dedup.shingles(corpus, 3), 8)
-    return dedup.lsh_hot_buckets(sigs, 4, 2, max_bucket_size=8)
-
-
-def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone gate for dedup.jaccard_pairs — the exact n-gram verify
-    stage — decoupled from LSH candidate generation (the brief lists
-    n-gram Jaccard as its own dedup op; in lsh_near_dup_pairs it is only
-    exercised on LSH survivors). Candidates here are every doc pair
-    sharing >= 1 shingle (a shingle equi-self-join, not a cross product),
-    so the op scores the complete non-zero-Jaccard pair set exactly."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
-    sh = dedup.shingles(docs, 3)
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    cands = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return dedup.jaccard_pairs(sh, cands)
-
-
-def _dup_embedding_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Derived embedding corpus with guaranteed hot signature buckets
-    (embedding twin of _hot_lsh_corpus): replicate vec_id<20
-    (_replicate_hot). Identical vectors share every hyperplane bucket and
-    score cos_sim=1."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    return _replicate_hot(emb, "vec_id", "embedding")
-
-
-def q_embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gate for similarity.embedding_near_duplicates covering BOTH bucket
-    branches (the ×12 groups exceed cap 8 → star path; the ×3 groups stay
-    on the clique path), hash-matched against an oracle that replicates
-    the affine hyperplane signature, the bucket-size split, and the
-    round-then-threshold filter in explicit SQL."""
-    corpus = _dup_embedding_corpus(spark, sf_dir)
-    return similarity.embedding_near_duplicates(
-        corpus, threshold=0.95, n_planes=8, max_bucket_size=8
-    )
-
-
-def q_simhash_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return dedup.simhash(docs, 16)
-
-
-def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    return retrieval.cosine_top_k(emb, qvec, top_k=10)
-
-
-def q_bm25_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 scoring against the PERSISTED index — build is a separate
-    stage (the reference loads a prebuilt bm25s index, kb_utils.py:895-918),
-    so the gate measures query cost, not corpus indexing."""
-    key = _idx_cache_key(sf_dir, "documents")
-    idx_path = os.path.join(tempfile.gettempdir(), f"spark_graft_bm25_idx_{key}")
-    if os.path.exists(os.path.join(idx_path, "_bm25_stats.json")):
-        tp, n_docs, avgdl = retrieval.load_bm25_index(spark, idx_path)
-    else:
-        docs = _t(spark, sf_dir, "documents")
-        tp, n_docs, avgdl = retrieval.build_bm25_index(docs, idx_path)
-    # top_k=None: the oracle scores every matching doc, and a LIMIT at a
-    # score tie is nondeterministic across engines (first seen at sf1,
-    # where 48k docs match vs the 10k default cap)
-    return retrieval.bm25_score(
-        tp, ["spark", "join", "window"], n_docs, avgdl, top_k=None
-    )
-
-
-def q_lang_id_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textstats.language_id(_t(spark, sf_dir, "documents")).select(
-        "doc_id", "pred_lang", "lang_hits"
-    )
-
-
-def q_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textstats.quality_score(_t(spark, sf_dir, "documents")).select(
-        "doc_id", "n_tokens", "avg_token_len", "punct_ratio", "stopword_ratio", "quality"
-    )
-
-
-def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textstats.token_counts(_t(spark, sf_dir, "documents")).select(
-        "doc_id", "ws_tokens", "bpe_tokens"
-    )
-
-
-def q_fingerprint_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return textstats.fingerprint(_t(spark, sf_dir, "documents")).select(
-        "doc_id", "fingerprint"
-    )
-
-
-def q_repetition_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition quality signals (ops/textstats.py
-    repetition_metrics): dup-line fractions + top-2/3-gram character
-    coverage — the LLM-training-data quality-filter family."""
-    return textstats.repetition_metrics(_t(spark, sf_dir, "documents"))
-
-
-# ----- merged driver gates (round 6) -----------------------------------------
-# The driver's correctness harness samples at most 50 queries() entries per
-# round (r3/r4: 49 entries, 49 checked; r5: 60 entries, exactly the first 50
-# checked), so round 5's last 10 entries never got a driver-green row. These
-# _merged_ gates union same-family outputs into one driver row each, cutting
-# the surface to exactly 50 WITHOUT dropping any checked capability: every
-# constituent keeps its own q_ function (bench.py times them and
-# tests/test_plan_shapes.py audits their plans individually) and its own
-# oracle_sql entry (kept for documentation; the driver only reads keys
-# present in queries()).
-
-
-def q_doc_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """minhash_signatures + simhash_docs as one gate: (kind, doc_id, idx, val)."""
-    mh = q_minhash_signatures(spark, sf_dir).select(
-        F.lit("minhash").alias("kind"),
-        "doc_id",
-        F.col("hash_idx").cast("int").alias("idx"),
-        F.col("minhash").cast("long").alias("val"),
-    )
-    sh = q_simhash_docs(spark, sf_dir).select(
-        F.lit("simhash").alias("kind"),
-        "doc_id",
-        F.lit(0).alias("idx"),
-        F.col("simhash").cast("long").alias("val"),
-    )
-    return mh.unionByName(sh)
-
-
-def q_gopher_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher rule-based boolean quality filters (ops/textstats.py
-    gopher_filters): published thresholds, per-rule booleans on rounded
-    measures + gopher_keep."""
-    return textstats.gopher_filters(_t(spark, sf_dir, "documents"))
-
-
-def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Regex PII detect + redact (ops/textstats.py pii_scrub): email →
-    IPv4 → phone, order-defined sequential replacement."""
-    return textstats.pii_scrub(_t(spark, sf_dir, "documents"))
-
-
-def q_c4_line_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style line-level cleaning (ops/textstats.py c4_line_filters):
-    kept-line stats, cleaned text, page-level keep decision."""
-    return textstats.c4_line_filters(_t(spark, sf_dir, "documents"))
-
-
-def q_decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (ops/textstats.py decontaminate, the
-    GPT-3 appendix-C 13-gram procedure at gate width n=3 so the synthetic
-    corpus has non-trivial overlap): benchmark = every 17th doc, training
-    side = all docs (benchmark members flag themselves — that is the
-    contract). min_hits=2 exercises the threshold boundary."""
-    docs = _t(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 17 == 0)
-    return textstats.decontaminate(docs, bench, n=3, min_hits=2).select(
-        "doc_id", "n_contaminated_ngrams", "contaminated"
-    )
-
-
-def q_textstats_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lang_id + quality + token_counts + fingerprint + repetition +
-    gopher-rule filters + PII scrub + C4 line filters + benchmark
-    decontamination joined on doc_id (inner: each emits one row per doc
-    with >=1 token — any token lives on some non-empty line, so the
-    repetition leg's >=1-line domain is a superset; the
-    gopher/pii/c4/decontaminate legs are all-docs, supersets; token-less
-    docs drop on both sides)."""
-    out = (
-        q_lang_id_docs(spark, sf_dir)
-        .join(q_quality_scores(spark, sf_dir), "doc_id")
-        .join(q_token_counts(spark, sf_dir), "doc_id")
-        .join(q_fingerprint_docs(spark, sf_dir), "doc_id")
-        .join(q_repetition_docs(spark, sf_dir), "doc_id")
-        .join(q_gopher_filters(spark, sf_dir), "doc_id")
-        .join(q_pii_scrub(spark, sf_dir), "doc_id")
-        .join(q_c4_line_filters(spark, sf_dir), "doc_id")
-        .join(q_decontaminate_docs(spark, sf_dir), "doc_id")
-    )
-    return out
-
-
-def q_anti_semi_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    a = q_anti_join_customers(spark, sf_dir).select(
-        F.lit("anti").alias("kind"), "c_custkey"
-    )
-    s = q_semi_join_customers(spark, sf_dir).select(
-        F.lit("semi").alias("kind"), "c_custkey"
-    )
-    return a.unionByName(s)
-
-
-def q_lsh_star_hot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Star-fallback pairs + hot-bucket observability as one gate over the
-    shared hot corpus: (kind, k1, k2, v)."""
-    pairs = q_lsh_star_fallback_pairs(spark, sf_dir).select(
-        F.lit("pair").alias("kind"),
-        F.col("doc_a").cast("string").alias("k1"),
-        F.col("doc_b").cast("string").alias("k2"),
-        F.lit(0).cast("long").alias("v"),
-    )
-    hot = q_lsh_hot_buckets(spark, sf_dir).select(
-        F.lit("hot").alias("kind"),
-        F.col("band_idx").cast("string").alias("k1"),
-        F.col("band_key").alias("k2"),
-        F.col("bucket_size").cast("long").alias("v"),
-    )
-    return pairs.unionByName(hot)
-
-
-def q_cosine_topk_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force top-k (query vec 0) + IVF full-probe top-k (query vec 2)
-    as one gate; the IVF leg's oracle stays brute force (exact by
-    construction at nprobe=ALL), so this is the strongest check of both."""
-    brute = q_cosine_topk(spark, sf_dir).select(
-        F.lit("brute").alias("method"), "vec_id", "cos_sim"
-    )
-    ivf = q_ivf_cosine_topk(spark, sf_dir).select(
-        F.lit("ivf").alias("method"), "vec_id", "cos_sim"
-    )
-    return brute.unionByName(ivf)
-
-
-def q_html_render_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All four F7/S10 presentation gates as one driver row set:
-    (kind, k, html) — escape + paper-meta lines keyed by doc_id, the
-    reference-list and <table> single-string renders keyed 0."""
-    esc = q_html_escape_docs(spark, sf_dir).select(
-        F.lit("escape").alias("kind"),
-        F.col("doc_id").alias("k"),
-        F.col("escaped").alias("html"),
-    )
-    meta = q_paper_meta_html_docs(spark, sf_dir).select(
-        F.lit("meta").alias("kind"),
-        F.col("doc_id").alias("k"),
-        F.col("meta_html").alias("html"),
-    )
-    ref = q_reference_list_html_docs(spark, sf_dir).select(
-        F.lit("reflist").alias("kind"), F.lit(0).cast("long").alias("k"), "html"
-    )
-    tbl = q_table_html_orders(spark, sf_dir).select(
-        F.lit("table").alias("kind"), F.lit(0).cast("long").alias("k"), "html"
-    )
-    return esc.unionByName(meta).unionByName(ref).unionByName(tbl)
-
-
-def q_mesh_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part").filter(F.col("p_partkey") >= 2)
-    edges = part.select(
-        F.col("p_partkey").cast("string").alias("src"),
-        F.floor(F.col("p_partkey") / 2).cast("long").cast("string").alias("dst"),
-    )
-    out = graph.bfs_subgraph(edges, ["1"], max_depth=3, direction="in")
-    return out.select(F.col("node").cast("long").alias("node"), "depth")
-
-
-def q_orders_page(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pagination slice 100..120 via the head-page path: TakeOrderedAndProject
-    on the full relation, window only over the ≤120 survivors."""
-    orders = _t(spark, sf_dir, "orders")
-    page = rel.ranked_slice(orders, "o_orderdate DESC, o_orderkey DESC", 100, 120)
-    return page.select("o_orderkey", F.col("rank").alias("rn"))
-
-
-def q_anti_join_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders = _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "orders")
-    return cust.join(
-        orders, cust.c_custkey == orders.o_custkey, "left_anti"
-    ).select("c_custkey")
-
-
-def q_semi_join_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, orders = _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "orders")
-    big = orders.filter(F.col("o_totalprice") > 100_000)
-    return cust.join(big, cust.c_custkey == big.o_custkey, "left_semi").select("c_custkey")
-
-
-def q_distinct_union_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, sup = _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "supplier")
-    return (
-        cust.select(F.col("c_nationkey").alias("nationkey"))
-        .union(sup.select(F.col("s_nationkey")))
-        .distinct()
-    )
-
-
-def q_market_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust, nat, reg = (_t(spark, sf_dir, x) for x in ("customer", "nation", "region"))
-    return (
-        cust.join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
-        .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
-        .groupBy("r_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.round(F.sum("c_acctbal"), 2).alias("sum_acctbal"),
-        )
-    )
-
-
-def q_top_parts_per_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = _t(spark, sf_dir, "part")
-    w = W.partitionBy("p_brand").orderBy(F.col("p_retailprice").desc(), F.col("p_partkey").asc())
-    return (
-        part.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("p_brand", "p_partkey", F.round("p_retailprice", 2).alias("price"), "rn")
-    )
-
-
-# hand-derived per-annotator deduplicated triple counts of the FIXED
-# 120-doc gate corpus, computed by the pure-Python reference-semantics
-# oracle (tests.oracle.pipeline_annotator_counts(120) — mentions →
-# extractors → canonical rewrite → dedup in plain Python), NOT by running
-# the Spark engine; tests/test_checkpoint.py asserts oracle == pinned ==
-# engine so drift on any side is visible
-_KG_GATE_PINNED = [
-    ("co_occurrence", 289),
-    ("odds_ratio", 242),
-    ("openie_ore", 289),
-    ("rbert_cre", 22),
-    ("spacy_ore", 289),
-]
-
-
-def q_kg_pipeline_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # content-addressed by the pipeline code fingerprint: a code change gets
-    # a fresh dir (no stale-checkpoint reads), an unchanged rerun resumes
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_kg_gate_{runner.CODE_FINGERPRINT[:12]}"
-    )
-    tables = runner.run_kg_pipeline(spark, out_dir, n_docs=120, resume=True)
-    return (
-        tables["triples"]
-        .groupBy("annotator")
-        .agg(F.count(F.lit(1)).alias("n_triples"))
-        .orderBy("annotator")
-    )
-
-
-def q_hgvsp_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HGVSp parser gate over the reference's dispatch classes
-    (HGVSp_parser.py:18-109). kind/ref/pos/alt are hand-derived from the
-    reference dispatch (parens stripped, Ter→*, ext C-terminal carries the
-    stop codon); the `text` column pins this engine's rendered prose
-    (round-3 ADVICE: keep renderer drift visible at the gate, not only in
-    tests/test_hgvsp.py — the reference renders different, fuller
-    sentences, so text is OUR frozen output contract, not reference
-    parity)."""
-    from pubmedkb_web_spark.functions.hgvsp import parse_hgvsp_col
-
-    df = spark.createDataFrame([(c,) for c, *_ in _HGVSP_PINNED], "hgvsp string")
-    parsed = df.select("hgvsp", parse_hgvsp_col(F.col("hgvsp")).alias("p"))
-    return parsed.select(
-        "hgvsp", "p.kind", "p.ref_aa", "p.pos_start", "p.alt_aa", "p.text"
-    )
-
-
-# kind/ref/pos/alt hand-derived from the reference dispatch
-# (HGVSp_parser.py:18-109) and the pytest expectation table
-# (tests/test_hgvsp.py) — NOT generated by running the engine. The last
-# element freezes the engine's rendered prose (verified piecewise by
-# test_hgvsp): (raw, kind, ref_aa, pos_start, alt_aa, text)
-_HGVSP_PINNED = [
-    ("p.V600E", "substitution", "V", 600, "E",
-     "substitution of V at the 600th residue by E"),
-    ("p.Val600Glu", "substitution", "V", 600, "E",
-     "substitution of V at the 600th residue by E"),
-    ("p.(Arg97fs)", "fs", "R", 97, None,
-     "frameshift at the 97th residue"),
-    ("p.Met1ext-5", "ext", "M", 1, None,
-     "N-terminal extension at the 1st residue with a new start at position -5"),
-    ("p.Ter110GlnextTer17", "ext", "*", 110, "Q",
-     "C-terminal extension at the 110th residue with a new stop 17 residues downstream"),
-    ("p.Cys28delinsTrpVal", "delins", "C", 28, "WV",
-     "deletion of the 28th residue with insertion of WV"),
-    ("p.Lys23_Val25del", "del", "K", 23, None,
-     "deletion of residues 23-25"),
-    ("p.Gly4dup", "dup", "G", 4, None,
-     "duplication of the 4th residue"),
-    ("p.Lys2_Gly3insGlnSerLys", "ins", "K", 2, "QSK",
-     "insertion of QSK between residues 2-3"),
-    ("p.Trp26Ter", "substitution", "W", 26, "*",
-     "substitution of W at the 26th residue by *"),
-    ("p.=", "unknown", None, None, None, "p.="),
-    ("garbage", "unknown", None, None, None, "garbage"),
-]
-
-
-def q_fuzzy_nen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ed = fixtures.entity_dict_df(spark)
-    names = nen.fuzzy_names(ed, "p.v600e", min_similarity=0.7)
-    return nen.ids_by_name(ed, names)
-
-
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = multimodal.synthetic_media(spark, 60)
-    return multimodal.extract_features(media, fake=True).select(
-        "media_id", "media_type", "n_bytes", "checksum"
-    )
-
-
-def q_ann_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN probe against the PERSISTED index (build_ann_index) so the
-    measured plan is the partition-pruned one — `_sig IN (probe set)`
-    reaches the scan as PartitionFilters, only probed buckets are read."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 1).first()["embedding"]]
-    key = _idx_cache_key(sf_dir, "embeddings")
-    idx_path = os.path.join(tempfile.gettempdir(), f"spark_graft_ann_idx_{key}")
-    marker = os.path.join(idx_path, "_SUCCESS")
-    if not os.path.exists(marker):
-        idx = similarity.build_ann_index(emb, idx_path)
-    else:
-        idx = spark.read.parquet(idx_path)
-    return similarity.ann_bucketed_top_k(idx, qvec, top_k=10)
-
-
-def q_ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-partitioned ANN (round-5; the second ANN scale path beside
-    the LSH buckets): deterministic k-means coarse quantizer
-    (ivf_train), inverted lists persisted partitionBy(_cent)
-    (ivf_build), probe scans only the nprobe nearest lists via
-    partition pruning (ivf_top_k). The gate probes ALL lists so the
-    contract is exactness vs brute force; recall@nprobe<ALL and the
-    pruning plan are pytest's job (tests/test_ops.py)."""
-    import json
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 2).first()["embedding"]]
-    # stat-fingerprinted cache key (round-5 ADVICE; see _idx_cache_key).
-    # Same-data races are settled by the atomic rename below.
-    idx_root = os.path.join(
-        tempfile.gettempdir(),
-        f"spark_graft_ivf_idx_{_idx_cache_key(sf_dir, 'embeddings')}",
-    )
-    cent_path = os.path.join(idx_root, "_centroids.json")
-    if not os.path.exists(cent_path):
-        build_root = tempfile.mkdtemp(prefix="spark_graft_ivf_build_")
-        centroids = similarity.ivf_train(emb, n_centroids=8, n_iter=4)
-        similarity.ivf_build(emb, os.path.join(build_root, "ivf"), centroids)
-        with open(os.path.join(build_root, "_centroids.json"), "w") as f:
-            json.dump(centroids, f)
-        try:
-            os.rename(build_root, idx_root)  # atomic publish; loser keeps dir
-        except OSError:
-            pass  # a concurrent builder already published identical content
-    with open(cent_path) as f:
-        centroids = json.load(f)
-    idx = spark.read.parquet(os.path.join(idx_root, "ivf"))
-    return similarity.ivf_top_k(
-        idx, qvec, centroids, top_k=10, nprobe=len(centroids)
-    )
-
-
-# ----- round-2 operator gates ------------------------------------------------
-
-def q_disease_gene_blend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A4/A5 blend (kb_utils.py:1983-1990 semantics: binarized db +
-    uncapped normalized pk) over surrogate score tables from orders."""
-    orders = _t(spark, sf_dir, "orders")
-    # integer-valued doubles: sums are exact in binary, so the blend hashes
-    # identically across engines regardless of aggregation order
-    db = orders.filter(F.col("o_orderkey") % 3 == 0).select(
-        F.col("o_orderpriority").alias("disease"),
-        (F.col("o_custkey") % 20).cast("string").alias("gene"),
-        (F.col("o_custkey") % 7).cast("double").alias("score"),
-    )
-    pk = orders.filter(F.col("o_orderkey") % 3 == 1).select(
-        F.col("o_orderpriority").alias("disease"),
-        (F.col("o_custkey") % 20).cast("string").alias("gene"),
-        ((F.col("o_custkey") % 11) * 250).cast("double").alias("score"),
-    )
-    out = kbq.disease_to_gene_scores(db, pk)
-    return out.select("disease", "gene", "pair_score", "gene_score")
-
-
-def q_journal_impact_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Acceptance filter + normalized broadcast join (kb_utils.py:1805-1830)."""
-    sup = _t(spark, sf_dir, "supplier")
-    nat = _t(spark, sf_dir, "nation")
-    meta = sup.select(
-        F.col("s_suppkey").alias("doc_id"),
-        F.concat(F.lit("Journal & Rev. "), (F.col("s_suppkey") % 25).cast("string")).alias("journal"),
-    )
-    impact_raw = nat.select(
-        F.concat(F.lit("journal and rev "), F.col("n_nationkey").cast("string")).alias("journal"),
-        (F.lit(100)).cast("long").alias("articles"),
-        F.concat((40 + F.col("n_nationkey") * 3).cast("string"), F.lit("%")).alias("match_ratio"),
-        F.when(F.col("n_nationkey") % 4 == 0, F.lit("True")).otherwise(F.lit("False")).alias("match_substring"),
-        F.lit("x").alias("match_journal"),
-        F.round(F.col("n_nationkey") / 10.0, 3).cast("string").alias("match_impact"),
-    )
-    out = kbq.enrich_meta_with_impact(meta, kbq.journal_impact_map(impact_raw))
-    return out.select("doc_id", "journal", "journal_impact")
-
-
-def q_glof_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GLOF evidence rollup (server.py:1455-1523): per (key, direction,
-    doc) sentence counts, docs ranked by evidence desc."""
-    # the vocab filter runs map-side before the dropDuplicates shuffle, so
-    # only vocabulary occurrences are shuffled. A fully map-side variant
-    # (array_distinct over derived structs, removing the dropDuplicates
-    # exchange too) was MEASURED slower (2.3-2.6 s vs 2.0-2.1 s at sf1.0):
-    # the interpreted struct-building lambda costs more than the small
-    # post-filter shuffle it saves.
-    dt = _doc_tokens(spark, sf_dir).filter(F.col("tok").isin(VOCAB))
-    glof = dt.select(
-        F.lit("Token").alias("type"),
-        F.col("tok").alias("key"),
-        F.when(F.col("ord") % 2 == 0, F.lit("gof")).otherwise(F.lit("lof")).alias("direction"),
-        F.col("doc_id").cast("string").alias("doc_id"),
-        (F.col("ord") % 7).cast("int").alias("sent_idx"),
-    ).dropDuplicates()
-    out = kbq.glof_rollup(glof)
-    return out.select(
-        "key", "direction",
-        F.col("doc_id").cast("long").alias("doc_id"),
-        "n_sents", "rank",
-    )
-
-
-def _mesh_nodes_from_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-heap MeSH forest over part keys: parent(k)=k//2; every 7th
-    node carries a supplemental record s<k> (which back-links via
-    descriptor_list)."""
-    part = _t(spark, sf_dir, "part").select(F.col("p_partkey").cast("long").alias("k"))
-    n_max = part.agg(F.max("k")).first()[0]
-    k = F.col("k")
-    descriptors = part.select(
-        k.cast("string").alias("mesh"),
-        F.concat(F.lit("node "), k.cast("string")).alias("display_name"),
-        F.when(k >= 2, F.array(F.floor(k / 2).cast("string"))).otherwise(
-            F.array().cast("array<string>")
-        ).alias("parent_list"),
-        F.filter(
-            F.array((k * 2).cast("string"), (k * 2 + 1).cast("string")),
-            lambda c: c.cast("long") <= F.lit(n_max),
-        ).alias("child_list"),
-        F.when(k % 7 == 0, F.array(F.concat(F.lit("s"), k.cast("string")))).otherwise(
-            F.array().cast("array<string>")
-        ).alias("supplemental_list"),
-        F.array().cast("array<string>").alias("descriptor_list"),
-        F.lit(False).alias("is_supplemental"),
-    )
-    supplementals = part.filter(k % 7 == 0).select(
-        F.concat(F.lit("s"), k.cast("string")).alias("mesh"),
-        F.concat(F.lit("supp "), k.cast("string")).alias("display_name"),
-        F.array().cast("array<string>").alias("parent_list"),
-        F.array().cast("array<string>").alias("child_list"),
-        F.array().cast("array<string>").alias("supplemental_list"),
-        F.array(k.cast("string")).alias("descriptor_list"),
-        F.lit(True).alias("is_supplemental"),
-    )
-    return descriptors.unionByName(supplementals)
-
-
-def q_mesh_subgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Labeled multi-phase MeSH traversal (kb_utils.py:2264-2352) from
-    node 63: ancestors 31,15; child 126,127; sibling 62; supplemental s63."""
-    nodes = _mesh_nodes_from_parts(spark, sf_dir)
-    labeled, _edges = graph.mesh_subgraph(
-        nodes, ["63"], super_level=2, sub_level=1, sibling_level=1, supplemental_level=1
-    )
-    return labeled.select("mesh", "display_name", "label", "is_supplemental")
-
-
-def q_varsum_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-fidelity VarSum table_cleaning (VarSum_germline.py:55-277) over
-    a customer-derived raw record table; checks the CDS parse, exon/intron
-    classification, rank, ClinVar + consequence translations, MANE
-    transcript indexing and numeric formatting value-for-value."""
-    cust = _t(spark, sf_dir, "customer").select(F.col("c_custkey").cast("long").alias("k"))
-    k = F.col("k")
-    pos = (k % 500 + 1).cast("string")
-    hgvsc_tail = (
-        F.when(k % 7 == 0, F.concat(F.lit("c.*"), pos, F.lit("del")))
-        .when(k % 7 == 1, F.concat(F.lit("c.-"), pos, F.lit("A>G")))
-        .when(k % 7 == 2, F.concat(F.lit("c."), pos, F.lit("+2T>C")))
-        .when(k % 7 == 3, F.concat(F.lit("c."), pos, F.lit("_"), (k % 500 + 3).cast("string"), F.lit("dup")))
-        .otherwise(F.concat(F.lit("c."), pos, F.lit("A>G")))
-    )
-    raw = cust.select(
-        k.alias("k"),
-        F.when(k % 11 == 0, F.lit(".")).otherwise(F.concat(F.lit("GENE"), (k % 40).cast("string"))).alias("vep_gene_name"),
-        F.when(k % 3 == 0, F.lit("1/1")).when(k % 3 == 1, F.lit("0/1")).otherwise(F.lit(".")).alias("format_gt"),
-        F.when(k % 13 == 0, F.lit(".")).otherwise(F.concat(F.lit("NM_"), (k % 97).cast("string"), F.lit(".2:"), hgvsc_tail)).alias("vep_hgvsc"),
-        F.when(k % 5 == 0, F.lit("missense_variant,intron_variant"))
-        .when(k % 5 == 1, F.lit("stop_gained"))
-        .when(k % 5 == 2, F.lit("."))
-        .otherwise(F.lit("synonymous_variant")).alias("vep_consequence"),
-        F.lit(".").alias("vep_hgvsp"),
-        F.when(k % 4 == 0, F.lit(".")).otherwise(F.concat((k % 9 + 1).cast("string"), F.lit("/12"))).alias("vep_exon_intron_rank"),
-        F.when(k % 6 == 0, F.lit("Pathogenic")).when(k % 6 == 1, F.lit("Likely_benign"))
-        .when(k % 6 == 2, F.lit("Uncertain_significance")).otherwise(F.lit(".")).alias("clinvar_clnsig"),
-        F.concat(F.lit("ENST"), (k % 50).cast("string"), F.lit(".3")).alias("vep_transcript_id"),
-        F.lit(".").alias("annovar_transcript_id"),
-        F.when(k % 8 == 0, F.lit(".")).otherwise(
-            F.format_string("%.6f", (k % 1000).cast("double") / 100000.0)
-        ).alias("gnomad_af_popmax"),
-        F.lit(".").alias("taiwanbiobank_af"),
-        F.when(k % 9 == 0, F.lit("ClinVar,DeafnessVD,HotspotDB"))
-        .when(k % 9 == 1, F.lit("ClinVar,ClinVar"))
-        .otherwise(F.lit(".")).alias("hotspot_dbs"),
-        F.concat(F.lit("ENST"), (k % 25).cast("string"), F.lit(";ENST"), (k % 50).cast("string")).alias("ps_transcript_ids"),
-        F.concat((k % 10).cast("string"), F.lit(";0.5")).alias("ps_sift"),
-        F.lit(".").alias("ps_polyphen2"),
-        F.lit(".").alias("ps_vest4"),
-        F.lit(".").alias("ps_provean"),
-        F.when(k % 2 == 0, F.format_string("%.1f", (k % 40).cast("double") / 2.0))
-        .otherwise(F.lit(".")).alias("cadd_phred"),
-        F.lit(".").alias("dann_score"),
-        F.lit(".").alias("spliceai_ds_ag"),
-        F.lit(".").alias("spliceai_ds_al"),
-        F.lit(".").alias("spliceai_ds_dg"),
-        F.lit(".").alias("spliceai_ds_dl"),
-        F.format_string("%.2f", (k % 100).cast("double") / 100.0).alias("phylop100way_rank"),
-    )
-    cleaned = varsum.clean_varsum_table(raw.drop("k"))
-    return cleaned.select(
-        "gene_name", "genotype", "genotype_zhtw", "reference", "hgvsc",
-        "cds_position", "exon_intron", "exon_or_intron_rank", "clinvar_record",
-        "consequence", "transcriptid_mane", "transcriptid_index", "sift",
-        "cadd_phred", "pathogenicity", "phylop100way", "conservation",
-        "gnomad_freq", "hotspot",
-    )
-
-
-def q_qa_target_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """QA target filter incl. the gene-prefix fallback + no-underscore
-    quirk (kb_utils.py:2456-2483) over per-doc token-match arrays."""
-    # r7: every match-list is a set over the doc's tokens, so each is an
-    # array_intersect / conditional-array expression over the map-only
-    # token array — the explode-every-token + groupBy(doc_id) SHUFFLE is
-    # gone entirely (guide §2.4); qa_target_filter only probes the arrays
-    # with arrays_overlap/exists, so element order inside them is
-    # irrelevant (sort kept for the sorted-list contract anyway).
-    base = _doc_token_arrays(spark, sf_dir)
-    has = lambda w: F.array_contains(F.col("_toks"), w)  # noqa: E731
-    opt = lambda cond, val: F.when(cond, F.array(F.lit(val))).otherwise(  # noqa: E731
-        F.array().cast("array<string>")
-    )
-    per_doc = base.filter(F.size("_toks") > 0).select(
-        "doc_id",
-        F.sort_array(
-            F.array_intersect(F.col("_toks"), F.array(F.lit("spark"), F.lit("sort")))
-        ).alias("d_name_matches"),
-        F.array_intersect(F.col("_toks"), F.array(F.lit("join"))).alias(
-            "g_name_matches"
-        ),
-        F.concat(opt(has("hash"), "hash_v1"), opt(has("merge"), "mergeX")).alias(
-            "v_name_matches"
-        ),
-        F.sort_array(F.array_intersect(F.col("_toks"), _vocab_arr())).alias(
-            "triplet_list"
-        ),
-    )
-    out = retrieval.qa_target_filter(
-        per_doc, d_set=["spark"], g_set=["hash", "merge"], v_set=["rsX"]
-    )
-    return out.select(F.col("doc_id").cast("long").alias("doc_id"))
-
-
-def q_embed_text_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic text→unit-vector embedding (F14 contract): signed
-    feature hashing, L2-normalized; long format for the value gate."""
-    docs = _t(spark, sf_dir, "documents")
-    emb = similarity.embed_text(docs, dim=16)
-    return emb.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.posexplode("embedding").alias("bucket", "val"),
-    ).select("doc_id", "bucket", F.round("val", 6).alias("val"))
-
-
-def q_paper_text_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """gdbm point-lookup → broadcast probe (kb_utils.py:1188-1211); ids
-    1..20 plus two absent ids come back as empty strings."""
-    docs = _t(spark, sf_dir, "documents")
-    store = docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.concat(F.lit("T"), F.col("doc_id").cast("string")).alias("title"),
-        F.substring(F.col("text"), 1, 40).alias("abstract"),
-    )
-    ids = [str(i) for i in range(1, 21)] + ["999991", "999992"]
-    out = retrieval.fetch_paper_text(store, ids)
-    return out.select("doc_id", "title", "abstract")
-
-
-VKB_IDS = ["RS#:113488022", "HGVS:p.V600E", "HGVS:c.1799T>A", "MISSING:1"]
-VKB_NAMES = ["rs113488022", "p.v600e", "c.1799t>a", "nope"]
-
-
-def q_variant_in_kb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Variant in-KB membership probe (get_variant_in_kb,
-    kb_utils.py:385-396) over the NEN dictionary: every (umbrella type,
-    id, name) combination that exists in the store, with its frequency.
-    Rank column encodes the reference's stable frequency-desc order."""
-    from pubmedkb_web_spark.query import nen as nen_mod
-
-    ed = fixtures.entity_dict_df(spark)
-    out = nen_mod.variant_in_kb(ed, VKB_IDS, VKB_NAMES)
-    w = W.orderBy(F.col("frequency").desc(), "type", "id", "name")
-    return out.withColumn("rank", F.row_number().over(w)).select(
-        "type", "id", "name", F.col("frequency").cast("long").alias("frequency"), "rank"
-    )
-
-
-def q_gvd_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GVD score table with the reference's blended display columns
-    (server.py:1696-1702): annotator pivot + sort_score (build blend,
-    ordering/truncation key) + new_score (GDScore via get_string_score,
-    f"{score/100:.2f}"), top-3 objects per subject."""
-    annotators = ["paper", "sentence", "odds_ratio"]
-    dt = _doc_tokens(spark, sf_dir).filter(F.col("tok").isin(VOCAB))
-    keyed = dt.select(
-        F.col("tok").alias("subj"),
-        F.concat(F.lit("D"), (F.col("doc_id") % 7).cast("string")).alias("obj"),
-        F.element_at(
-            F.array(*[F.lit(a) for a in annotators]),
-            (F.col("ord") % 3 + 1).cast("int"),
-        ).alias("annotator"),
-    )
-    pair_stats = keyed.groupBy("subj", "obj", "annotator").agg(
-        F.count(F.lit(1)).alias("support")
-    )
-    gd_scores = (
-        pair_stats.select("subj", "obj")
-        .distinct()
-        .filter(F.substring("obj", 2, 1).cast("int") % 2 == 0)
-        .withColumn(
-            "score",
-            (F.substring("obj", 2, 1).cast("int") * 13 + F.length("subj")).cast("int"),
-        )
-    )
-    out = kbq.gvd_pivot(pair_stats, annotators, gd_scores=gd_scores, top_k=3)
-    return out.select(
-        "subj", "obj", *annotators, "sort_score", "new_score"
-    )
-
-
-def q_kg_extractor_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SQL-expressible slice of the M2 pipeline — the REAL
-    ``extractors.extract_all`` (fused single-pass plan incl. mention_pairs
-    self-join, pair contingency, candidate-struct explode) over a
-    deterministic mention set derived from the documents table; the
-    co_occurrence + odds_ratio branches are fully relational, so DuckDB
-    re-derives them value-for-value (CRE/ORE payloads hash with xxhash64 /
-    need the fixture corpus, and stay covered by pytest + the rows-only
-    kg gate)."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    dt = _doc_tokens(spark, sf_dir).filter(
-        F.col("tok").isin(VOCAB) & (F.col("doc_id") < 200)
-    )
-    mentions = dt.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.lit(0).alias("sent_idx"),
-        F.col("ord").cast("int").alias("mention_idx"),
-        F.col("tok").alias("name"),
-        F.lit("Gene").alias("type"),
-        F.array(F.col("tok")).alias("ids"),
-        F.col("ord").cast("int").alias("offset"),
-        F.sha2(F.col("tok"), 256).alias("content_sha256"),
-    )
-    sentences = docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.lit(0).alias("sent_idx"),
-        F.col("text").alias("sentence"),
-    )
-    anns = extractors.extract_all(mentions, sentences)
-    return (
-        anns.filter(F.col("annotator").isin("co_occurrence", "odds_ratio"))
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            "annotator",
-            "h_name",
-            "t_name",
-            F.col("or_value").try_cast("double").alias("or_value_d"),
-            F.round("score", 2).alias("score"),
-        )
-    )
-
-
-def q_html_escape_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F7 (html.escape parity, kb_utils.py:1834-1868 et al.): wrap a
-    documents slice in markup-hostile text and escape it JVM-side."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 17 == 0)
-    nasty = F.concat(
-        F.lit('<b href="'), F.col("source"), F.lit('">'),
-        F.substring("text", 1, 40), F.lit(" & 'tail'"),
-    )
-    return d.select("doc_id", htmlrender.html_escape(nasty).alias("escaped"))
-
-
-def q_paper_meta_html_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S10 (paper-meta render, kb_utils.get_paper_meta_html
-    kb_utils.py:1834-1868): synthesize the meta fields deterministically
-    from documents — covering the dot-termination rule, empty year/doi,
-    per-element publication-type escaping — and render the full line."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 13 == 0)
-    did = F.col("doc_id")
-    pmid = did.cast("string")
-    title = F.substring("text", 1, 30)
-    year = F.when(did % 3 == 0, F.lit("")).otherwise(
-        (F.lit(1990) + did % 30).cast("string")
-    )
-    journal = F.when(did % 4 == 0, F.lit('J. "X" & <Y>')).otherwise(F.col("source"))
-    doi = F.when(did % 2 == 0, F.concat(F.lit("10.1000/"), F.col("source"))).otherwise(
-        F.lit("")
-    )
-    pts = (
-        F.when(did % 3 == 0, F.array(F.lit("Review"), F.lit("Meta <1>")))
-        .when(did % 3 == 1, F.array(F.lit("Trial")))
-        .otherwise(F.array().cast("array<string>"))
-    )
-    citation = (did % 100).cast("string")
-    return d.select(
-        "doc_id",
-        htmlrender.paper_meta_html(
-            pmid, title, year, journal, doi, pts, citation
-        ).alias("meta_html"),
-    )
-
-
-def q_reference_list_html_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S10 (QA reference list, kb_utils.py:1362-1376 is_html=True): one
-    page of documents rendered to the single References string."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 23 == 0)
-    page = d.select(
-        F.col("doc_id").alias("o"),
-        F.col("doc_id").cast("string").alias("pmid"),
-        F.concat(F.lit('"'), F.substring("text", 1, 25), F.lit('" & <more>')).alias(
-            "title"
-        ),
-    )
-    return htmlrender.reference_list_html(page, order_by="o")
-
-
-def q_table_html_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S10 (<table> sink, server.py:962-1105 shell): top-5 orders page
-    rendered with the reference's width-styled header row."""
-    o = _t(spark, sf_dir, "orders").orderBy(
-        F.col("o_totalprice").desc(), "o_orderkey"
-    ).limit(5)
-    page = o.select(
-        F.col("o_orderkey").alias("orderkey"),
-        F.col("o_orderpriority").alias("priority"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("total_cents"),
-    )
-    return htmlrender.table_html(
-        page,
-        ["orderkey", "priority", "total_cents"],
-        widths=["20%", "50%", "30%"],
-        order_by="orderkey",
-    )
-
-
-def q_litvar_parse_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S6 (LitVar autocomplete parse, kb_utils.py:219-250): synthesize
-    raw autocomplete results deterministically from documents — optional
-    rsid/hgvs/gene, five match shapes incl. the reference's degenerate
-    find()==-1 slices — then run the engine's columnar parse."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 11 == 0)
-    did = F.col("doc_id")
-    name = F.split(F.lower(F.col("text")), r"\s+").getItem(0)
-    raw = d.select(
-        "doc_id",
-        F.when(did % 3 == 0, F.concat(F.lit("rs"), did.cast("string"))).alias("rsid"),
-        F.when(
-            did % 4 == 1, F.concat(F.lit("c."), (did % 97).cast("string"), F.lit("G>A"))
-        ).alias("hgvs"),
-        name.alias("name"),
-        (
-            F.when(did % 5 == 0, F.concat(F.lit("<m>"), name, F.lit("</m> rest")))
-            .when(did % 5 == 1, F.concat(F.lit("pre <m>"), name, F.lit("x</m>")))
-            .when(did % 5 == 2, F.concat(F.lit("no markers "), name))
-            .when(did % 5 == 3, F.concat(F.lit("ab<m>"), name))
-            .otherwise(F.lit(None).cast("string"))
-        ).alias("match"),
-        F.when(did % 2 == 0, F.array(F.upper(name))).alias("gene"),
-    )
-    parsed = litvar.parse_litvar(raw)
-    return parsed.select(
-        "doc_id",
-        F.array_join("id_list", "|").alias("ids"),
-        F.array_join("name_list", "|").alias("names"),
-        F.array_join("gene_list", "|").alias("genes"),
-    )
+from pubmedkb_web_spark.gates.builders import *  # noqa: F401,F403
+from pubmedkb_web_spark.gates.builders import q_rel_relevance_page
+from pubmedkb_web_spark.gates.oracle import oracle_sql  # noqa: F401
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: Rel relevance page over sf0.001 documents token postings."""
     return q_rel_relevance_page(spark, "/root/testdata/sf0.001")
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """EXACTLY 50 entries — the driver's per-round correctness harness checks
-    at most the first 50 (observed: r3/r4 49-of-49, r5 first-50-of-60), so
-    the surface is consolidated to 50 via the q_*_merged gates above and
-    ordered with the capabilities that lacked a driver-green row in
-    CORRECTNESS_r05 first (round-5 VERDICT "Next round" #1)."""
-    return {
-        # -- capabilities with no driver-green row in CORRECTNESS_r05 first --
-        "ann_cosine_lsh": q_ann_cosine_lsh,
-        "cosine_topk_methods": q_cosine_topk_methods,  # brute + IVF full-probe
-        "fuzzy_nen": q_fuzzy_nen,
-        "html_render_all": q_html_render_all,  # F7 escape + S10 meta/reflist/table
-        "litvar_parse_docs": q_litvar_parse_docs,
-        # pinned-VALUES oracles (expected rows derived from Python oracles /
-        # the reference dispatch, NOT from running the engine): the full
-        # pipeline's per-annotator counts (_KG_GATE_PINNED ←
-        # tests.oracle.pipeline_annotator_counts) and the HGVSp structured
-        # fields (_HGVSP_PINNED ← HGVSp_parser.py:18-109); HGVSp prose
-        # rendering stays covered by tests/test_hgvsp.py
-        "kg_pipeline_triples": q_kg_pipeline_triples,
-        "hgvsp_parse": q_hgvsp_parse,
-        # -- driver-green in r5, unchanged semantics ------------------------
-        "spec_and_or": q_spec_and_or,
-        "spec_pair": q_spec_pair,
-        "rel_relevance_page": q_rel_relevance_page,
-        "tpch_pricing_summary": q_tpch_pricing_summary,
-        "top_revenue_orders": q_top_revenue_orders,
-        "supplier_rank_per_nation": q_supplier_rank_per_nation,
-        "rrf_fusion_orders": q_rrf_fusion_orders,
-        "two_hop_pairs": q_two_hop_pairs,
-        "freq_cutoff_brands": q_freq_cutoff_brands,
-        "json_extract_events": q_json_extract_events,
-        "event_type_stats": q_event_type_stats,
-        "pivot_event_matrix": q_pivot_event_matrix,
-        "hourly_event_windows": q_hourly_event_windows,
-        "sessionize_users": q_sessionize_users,
-        "user_sessions": q_user_sessions,
-        "cooccurrence_tokens": q_cooccurrence_tokens,
-        "odds_ratio_pairs": q_odds_ratio_pairs,
-        "exact_dedup_docs": q_exact_dedup_docs,
-        "doc_signatures": q_doc_signatures,  # minhash + simhash
-        "lsh_near_dup_pairs": q_lsh_near_dup_pairs,
-        "lsh_star_hot": q_lsh_star_hot,  # star fallback + hot buckets
-        "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-        "embedding_near_dup_pairs": q_embedding_near_dup_pairs,
-        "bm25_docs": q_bm25_docs,
-        "textstats_docs": q_textstats_docs,  # lang/quality/tokens/fingerprint
-        "mesh_bfs": q_mesh_bfs,
-        "orders_page": q_orders_page,
-        "anti_semi_customers": q_anti_semi_customers,
-        "distinct_union_nations": q_distinct_union_nations,
-        "market_join": q_market_join,
-        "top_parts_per_brand": q_top_parts_per_brand,
-        "disease_gene_blend": q_disease_gene_blend,
-        "journal_impact_meta": q_journal_impact_meta,
-        "glof_rollup": q_glof_rollup,
-        "mesh_subgraph": q_mesh_subgraph,
-        "varsum_clean": q_varsum_clean,
-        "qa_target_filter": q_qa_target_filter,
-        "paper_text_fetch": q_paper_text_fetch,
-        "embed_text_docs": q_embed_text_docs,
-        "kg_extractor_slice": q_kg_extractor_slice,
-        "gvd_stats": q_gvd_stats,
-        "variant_in_kb": q_variant_in_kb,
-        "multimodal_features": q_multimodal_features,
-    }
-
-
-# --------------------------------------------------------------------------
-# oracles
-# --------------------------------------------------------------------------
-
-def _minhash_corpus_sql(corpus_sql: str, terms: str) -> str:
-    """Shared shingle→minhash CTE chain over an arbitrary (doc_id, text)
-    corpus subquery — used by the documents-slice gates and the derived
-    hot-bucket corpus gate."""
-    mins = ",\n    ".join(
-        f"min((h * {affine_params(i)[0]} + {affine_params(i)[1]}) % {M31}) AS mh{i}"
-        for i in range(8)
-    )
-    return f"""
-WITH corpus AS ({corpus_sql}),
-toks AS (
-  SELECT doc_id, unnest({TOKS_SQL}) AS tok, generate_subscripts({TOKS_SQL}, 1) AS ord
-  FROM corpus
-),
-sh AS (
-  SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-  FROM toks a
-  JOIN toks b ON a.doc_id = b.doc_id AND b.ord = a.ord + 1
-  JOIN toks c ON a.doc_id = c.doc_id AND c.ord = a.ord + 2
-),
-h AS (SELECT doc_id, {md5_int60_sql('shingle')} % {M31} AS h FROM sh),
-m AS (SELECT doc_id, {mins} FROM h GROUP BY doc_id)
-{terms}"""
-
-
-def _minhash_sql(limit: int, terms: str) -> str:
-    return _minhash_corpus_sql(
-        f"SELECT doc_id, text FROM documents WHERE doc_id < {limit}", terms
-    )
-
-
-# derived corpus with guaranteed hot buckets (see _hot_lsh_corpus): every
-# 5th doc of doc_id<20 replicated x12 (> cap 8), the rest x3
-_HOT_CORPUS_SQL = """
-SELECT d.doc_id * 100 + r.range AS doc_id, d.text
-FROM documents d, range(12) r
-WHERE d.doc_id < 20
-  AND r.range < (CASE WHEN d.doc_id % 5 = 0 THEN 12 ELSE 3 END)
-"""
-
-
-def oracle_sql() -> dict[str, str]:
-    vocab_in = ", ".join(f"'{v}'" for v in VOCAB)
-    has_tok = (
-        "SELECT DISTINCT doc_id FROM toks WHERE tok = '{t}'"
-    )
-    lang_cases = []
-    for lang, words in sorted(textstats.LANG_PROFILES.items()):
-        inlist = ", ".join(f"'{w}'" for w in words)
-        lang_cases.append((lang, inlist))
-
-    sql: dict[str, str] = {}
-
-    sql["spec_and_or"] = f"""
-{_HT_SQL}
-SELECT doc_id FROM ({has_tok.format(t='spark')})
-INTERSECT
-(SELECT doc_id FROM ({has_tok.format(t='join')}) UNION SELECT doc_id FROM ({has_tok.format(t='merge')}))
-"""
-
-    sql["spec_pair"] = f"""
-{_HT_SQL},
-roles AS (
-  SELECT DISTINCT doc_id, tok,
-         CASE WHEN ord * 2 <= dl THEN 'head' ELSE 'tail' END AS role
-  FROM toks WHERE tok IN ({vocab_in})
-)
-SELECT doc_id FROM roles WHERE tok='spark' AND role='head'
-  AND doc_id IN (SELECT doc_id FROM roles WHERE tok='join' AND role='tail')
-UNION
-SELECT doc_id FROM roles WHERE tok='join' AND role='head'
-  AND doc_id IN (SELECT doc_id FROM roles WHERE tok='spark' AND role='tail')
-"""
-
-    sql["rel_relevance_page"] = f"""
-{_HT_SQL},
-tf AS (
-  SELECT doc_id, tok, count(*)::DOUBLE AS tf FROM toks
-  WHERE tok IN ('spark', 'join', 'merge') GROUP BY doc_id, tok
-),
-rel AS (SELECT doc_id, round(sum(tf), 6) AS relevance FROM tf GROUP BY doc_id),
-ranked AS (
-  -- reference tie-break: int(pmid) DESC (server.py:875); non-numeric ids
-  -- fall back to string order
-  SELECT doc_id, relevance,
-         row_number() OVER (
-           ORDER BY relevance DESC,
-                    TRY_CAST(doc_id AS BIGINT) DESC NULLS LAST,
-                    CAST(doc_id AS VARCHAR) DESC
-         ) AS rank
-  FROM rel
-)
-SELECT doc_id, relevance, rank::INT AS rank FROM ranked WHERE rank <= 20
-"""
-
-    sql["tpch_pricing_summary"] = """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       round(sum(l_extendedprice), 2) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       round(avg(l_discount)::DOUBLE, 6) AS avg_disc,
-       count(*) AS count_order
-FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-"""
-
-    sql["top_revenue_orders"] = """
-WITH rev AS (
-  SELECT l_orderkey, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-  FROM lineitem GROUP BY l_orderkey
-)
-SELECT o_orderkey AS orderkey, revenue, o_orderpriority
-FROM rev JOIN orders ON l_orderkey = o_orderkey
-ORDER BY revenue DESC, orderkey ASC LIMIT 20
-"""
-
-    sql["supplier_rank_per_nation"] = """
-SELECT s_nationkey, s_suppkey, round(s_acctbal, 2) AS acctbal, rn FROM (
-  SELECT s_nationkey, s_suppkey, s_acctbal,
-         row_number() OVER (PARTITION BY s_nationkey ORDER BY s_acctbal DESC, s_suppkey ASC)::INT AS rn
-  FROM supplier
-) WHERE rn <= 2
-"""
-
-    sql["rrf_fusion_orders"] = """
--- each side is depth-capped at 10000 before fusion (the engine ranks
--- bounded lists only, like the reference's BM25 top-10000, kb_utils.py:997)
-WITH a AS (
-  SELECT o_orderkey, rank_a FROM (
-    SELECT o_orderkey, row_number() OVER (ORDER BY o_totalprice DESC, o_orderkey ASC)::INT AS rank_a
-    FROM orders
-  ) WHERE rank_a <= 10000
-),
-b AS (
-  SELECT o_orderkey, rank_b FROM (
-    SELECT o_orderkey, row_number() OVER (ORDER BY o_orderdate ASC, o_orderkey ASC)::INT AS rank_b
-    FROM orders
-  ) WHERE rank_b <= 10000
-),
-f AS (
-  SELECT coalesce(a.o_orderkey, b.o_orderkey) AS o_orderkey, rank_a, rank_b,
-         round(coalesce(1.0 / (rank_a + 61), 0) + coalesce(1.0 / (rank_b + 61), 0), 8) AS rrf
-  FROM a FULL OUTER JOIN b ON a.o_orderkey = b.o_orderkey
-)
-SELECT * FROM f ORDER BY rrf DESC, o_orderkey ASC LIMIT 100
-"""
-
-    sql["two_hop_pairs"] = """
-SELECT n_name, count(*) AS n_pairs
-FROM customer JOIN supplier ON c_nationkey = s_nationkey
-JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name
-"""
-
-    sql["freq_cutoff_brands"] = """
-WITH c AS (SELECT p_brand, count(*) AS cnt FROM part GROUP BY p_brand)
-SELECT p_brand, cnt, max(cnt) OVER () AS max_cnt FROM c
-QUALIFY cnt >= 0.5 * max(cnt) OVER ()
-"""
-
-    sql["json_extract_events"] = """
-SELECT (json_extract_string(props, '$.k')::BIGINT) % 10 AS k_mod, count(*) AS n
-FROM events GROUP BY 1
-"""
-
-    sql["event_type_stats"] = """
-SELECT event_type, count(*) AS n, round(sum(value), 2) AS value_sum,
-       count(DISTINCT user_id) AS n_users
-FROM events GROUP BY event_type
-"""
-
-    sql["pivot_event_matrix"] = """
-SELECT user_id,
-       sum(CASE WHEN event_type='click' THEN 1 ELSE 0 END)::BIGINT AS click,
-       sum(CASE WHEN event_type='error' THEN 1 ELSE 0 END)::BIGINT AS error,
-       sum(CASE WHEN event_type='purchase' THEN 1 ELSE 0 END)::BIGINT AS purchase,
-       sum(CASE WHEN event_type='signup' THEN 1 ELSE 0 END)::BIGINT AS signup,
-       sum(CASE WHEN event_type='view' THEN 1 ELSE 0 END)::BIGINT AS view
-FROM events GROUP BY user_id
-"""
-
-    sql["hourly_event_windows"] = """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-       event_type, count(*) AS n, round(sum(value), 4) AS value_sum
-FROM events GROUP BY 1, 2
-"""
-
-    sql["sessionize_users"] = """
-WITH g AS (
-  SELECT user_id,
-         epoch(ts) - lag(epoch(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap
-  FROM events
-)
-SELECT user_id,
-       sum(CASE WHEN gap IS NULL OR gap > 1800 THEN 1 ELSE 0 END)::BIGINT AS n_sessions,
-       count(*) AS n_events
-FROM g GROUP BY user_id
-"""
-
-    # floor-consistent epoch seconds on both sides: Spark cast(ts as long)
-    # floors; DuckDB epoch_ms // 1000 floors; epoch() would keep fractions
-    sql["user_sessions"] = """
-WITH e AS (
-  SELECT user_id, event_id, ts, epoch_ms(ts) // 1000 AS ep FROM events
-),
-g AS (
-  SELECT *,
-         CASE WHEN lag(ep) OVER w IS NULL OR ep - lag(ep) OVER w > 1800
-              THEN 1 ELSE 0 END AS nw
-  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-s AS (
-  SELECT *, sum(nw) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) AS sess
-  FROM g
-)
-SELECT user_id, min(ep) AS session_start, max(ep) AS session_end,
-       count(*) AS n_events
-FROM s GROUP BY user_id, sess
-"""
-
-    sql["cooccurrence_tokens"] = f"""
-{_HT_SQL},
-dt AS (SELECT DISTINCT doc_id, tok FROM toks WHERE tok IN ({vocab_in}))
-SELECT a.tok AS n1, b.tok AS n2, count(*) AS support
-FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.tok < b.tok
-GROUP BY 1, 2
-"""
-
-    sql["odds_ratio_pairs"] = f"""
-{_HT_SQL},
-dt AS (SELECT DISTINCT doc_id, tok FROM toks WHERE tok IN ({vocab_in})),
-nc AS (SELECT tok, count(*) AS nc FROM dt GROUP BY tok),
-tot AS (SELECT count(*) AS n FROM documents),
-pa AS (
-  SELECT a.tok AS n1, b.tok AS n2, count(*) AS a
-  FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.tok < b.tok GROUP BY 1, 2
-),
-cont AS (
-  SELECT n1, n2, a, c1.nc - a AS b, c2.nc - a AS c,
-         (SELECT n FROM tot) - a - (c1.nc - a) - (c2.nc - a) AS d
-  FROM pa JOIN nc c1 ON pa.n1 = c1.tok JOIN nc c2 ON pa.n2 = c2.tok
-)
-SELECT n1, n2, a, b, c, d,
-  round(exp(ln(((a+0.5)*(d+0.5))/((b+0.5)*(c+0.5)))), 4) AS odds_ratio,
-  round(exp(ln(((a+0.5)*(d+0.5))/((b+0.5)*(c+0.5)))
-        - 1.96*sqrt(1/(a+0.5)+1/(b+0.5)+1/(c+0.5)+1/(d+0.5))), 4) AS ci_low,
-  round(exp(ln(((a+0.5)*(d+0.5))/((b+0.5)*(c+0.5)))
-        + 1.96*sqrt(1/(a+0.5)+1/(b+0.5)+1/(c+0.5)+1/(d+0.5))), 4) AS ci_high
-FROM cont
-"""
-
-    sql["exact_dedup_docs"] = """
-SELECT sha256(text) AS content_hash, min(doc_id) AS canonical_id, count(*) AS n_docs
-FROM documents GROUP BY 1
-"""
-
-    unpivot = " UNION ALL ".join(
-        f"SELECT doc_id, {i} AS hash_idx, mh{i} AS minhash FROM m" for i in range(8)
-    )
-    sql["minhash_signatures"] = _minhash_sql(100, unpivot)
-
-    band_joins = " UNION ".join(
-        f"SELECT a.doc_id AS doc_a, b.doc_id AS doc_b FROM m a JOIN m b "
-        f"ON a.mh{2*i} = b.mh{2*i} AND a.mh{2*i+1} = b.mh{2*i+1} AND a.doc_id < b.doc_id"
-        for i in range(4)
-    )
-    sql["lsh_near_dup_pairs"] = _minhash_sql(
-        300,
-        f""",
-cand AS ({band_joins}),
-sz AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT c.doc_a, c.doc_b, count(*) AS n_inter
-  FROM cand c JOIN sh x ON x.doc_id = c.doc_a JOIN sh y ON y.doc_id = c.doc_b AND y.shingle = x.shingle
-  GROUP BY c.doc_a, c.doc_b
-)
-SELECT i.doc_a, i.doc_b,
-       round(n_inter::DOUBLE / (za.n_sh + zb.n_sh - n_inter), 6) AS jaccard
-FROM inter i JOIN sz za ON za.doc_id = i.doc_a JOIN sz zb ON zb.doc_id = i.doc_b
-""",
-    )
-
-    # star-fallback gate: per band, buckets of size <= 8 contribute the
-    # full clique, buckets > 8 contribute (min-id rep, member) star edges
-    # only — the exact semantics of lsh_candidate_pairs(max_bucket_size=8)
-    star_terms = []
-    for i in range(4):
-        k1, k2 = f"mh{2 * i}", f"mh{2 * i + 1}"
-        star_terms.append(f"""
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-FROM m a
-JOIN m b ON a.{k1} = b.{k1} AND a.{k2} = b.{k2} AND a.doc_id < b.doc_id
-JOIN (SELECT {k1} AS k1, {k2} AS k2, count(*) AS n FROM m GROUP BY 1, 2) z
-  ON z.k1 = a.{k1} AND z.k2 = a.{k2}
-WHERE z.n <= 8
-UNION
-SELECT z.rep AS doc_a, mm.doc_id AS doc_b
-FROM m mm
-JOIN (SELECT {k1} AS k1, {k2} AS k2, count(*) AS n, min(doc_id) AS rep
-      FROM m GROUP BY 1, 2) z
-  ON z.k1 = mm.{k1} AND z.k2 = mm.{k2}
-WHERE z.n > 8 AND mm.doc_id <> z.rep""")
-    sql["lsh_star_fallback_pairs"] = _minhash_corpus_sql(
-        _HOT_CORPUS_SQL, "\nUNION\n".join(star_terms)
-    )
-
-    hot_terms = " UNION ALL ".join(
-        f"SELECT {i} AS band_idx, "
-        f"mh{2 * i}::VARCHAR || '_' || mh{2 * i + 1}::VARCHAR AS band_key, "
-        f"count(*) AS bucket_size "
-        f"FROM m GROUP BY mh{2 * i}, mh{2 * i + 1} HAVING count(*) > 8"
-        for i in range(4)
-    )
-    sql["lsh_hot_buckets"] = _minhash_corpus_sql(_HOT_CORPUS_SQL, hot_terms)
-
-    # ---- ngram_jaccard_pairs: exact |A∩B|/|A∪B| over every pair sharing
-    # >= 1 shingle — candidate generation and verify both in plain SQL
-    sql["ngram_jaccard_pairs"] = f"""
-WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id < 40),
-toks AS (
-  SELECT doc_id, unnest({TOKS_SQL}) AS tok, generate_subscripts({TOKS_SQL}, 1) AS ord
-  FROM corpus
-),
-sh AS (
-  SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS shingle
-  FROM toks a
-  JOIN toks b ON a.doc_id = b.doc_id AND b.ord = a.ord + 1
-  JOIN toks c ON a.doc_id = c.doc_id AND c.ord = a.ord + 2
-),
-sz AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT i.doc_a, i.doc_b,
-       round(i.n_inter::DOUBLE / (za.n_sh + zb.n_sh - i.n_inter), 6) AS jaccard
-FROM inter i
-JOIN sz za ON za.doc_id = i.doc_a
-JOIN sz zb ON zb.doc_id = i.doc_b
-"""
-
-    sql["simhash_docs"] = f"""
-WITH toks AS (
-  SELECT doc_id, unnest({TOKS_SQL}) AS tok FROM documents WHERE doc_id < 200
-),
-h AS (SELECT doc_id, {md5_int60_sql('tok')} AS h FROM toks),
-bits AS (
-  SELECT doc_id, b, sum(((h >> b) % 2) * 2 - 1) AS s
-  FROM h, (SELECT unnest(range(16)) AS b) GROUP BY doc_id, b
-)
-SELECT doc_id, sum(CASE WHEN s > 0 THEN (1::BIGINT << b) ELSE 0 END)::BIGINT AS simhash
-FROM bits GROUP BY doc_id
-"""
-
-    sql["cosine_topk"] = """
-WITH q AS (SELECT embedding::DOUBLE[] AS e FROM embeddings WHERE vec_id = 0)
-SELECT vec_id,
-       round(list_cosine_similarity(embedding::DOUBLE[], (SELECT e FROM q)), 6) AS cos_sim
-FROM embeddings
-ORDER BY cos_sim DESC, vec_id ASC LIMIT 10
-"""
-
-    # IVF with nprobe = ALL lists is exhaustive by construction, so the
-    # oracle is plain brute force — centroid floating-point parity is
-    # deliberately NOT part of the gate contract (pruning/recall are
-    # pytest-covered)
-    sql["ivf_cosine_topk"] = """
-WITH q AS (SELECT embedding::DOUBLE[] AS e FROM embeddings WHERE vec_id = 2)
-SELECT vec_id,
-       round(list_cosine_similarity(embedding::DOUBLE[], (SELECT e FROM q)), 6) AS cos_sim
-FROM embeddings
-ORDER BY cos_sim DESC, vec_id ASC LIMIT 10
-"""
-
-    sql["bm25_docs"] = f"""
-WITH toks AS (
-  SELECT doc_id, unnest({TOKS_SQL}) AS tok, len({TOKS_SQL}) AS dl FROM documents
-),
-tp AS (SELECT tok, doc_id, dl, count(*) AS tf FROM toks GROUP BY 1, 2, 3),
-stats AS (
-  SELECT (SELECT count(*) FROM documents)::DOUBLE AS n,
-         (SELECT avg(dl) FROM (SELECT DISTINCT doc_id, dl FROM tp))::DOUBLE AS avgdl
-),
-hits AS (SELECT * FROM tp WHERE tok IN ('spark', 'join', 'window')),
-dfc AS (SELECT tok, count(DISTINCT doc_id) AS df FROM hits GROUP BY tok)
-SELECT h.doc_id,
-       round(sum(
-         ln(1.0 + (s.n - d.df + 0.5) / (d.df + 0.5))
-         * (h.tf * 2.5) / (h.tf + 1.5 * (1 - 0.75 + 0.75 * h.dl / s.avgdl))
-       ), 6) AS bm25
-FROM hits h JOIN dfc d ON h.tok = d.tok CROSS JOIN stats s
-GROUP BY h.doc_id
-"""
-
-    hit_sums = ",\n       ".join(
-        f"sum(CASE WHEN tok IN ({inlist}) THEN 1 ELSE 0 END) AS h_{lang}"
-        for lang, inlist in lang_cases
-    )
-    argmax = (
-        "CASE WHEN greatest(h_de, h_en, h_es, h_fr) = 0 THEN 'und' "
-        "WHEN h_de >= h_en AND h_de >= h_es AND h_de >= h_fr THEN 'de' "
-        "WHEN h_en >= h_es AND h_en >= h_fr THEN 'en' "
-        "WHEN h_es >= h_fr THEN 'es' ELSE 'fr' END"
-    )
-    sql["lang_id_docs"] = f"""
-{_HT_SQL},
-hits AS (SELECT doc_id, {hit_sums} FROM toks GROUP BY doc_id)
-SELECT doc_id, {argmax} AS pred_lang, greatest(h_de, h_en, h_es, h_fr)::BIGINT AS lang_hits
-FROM hits
-"""
-
-    stop_in = ", ".join(f"'{w}'" for w in textstats.STOPWORDS)
-    sql["quality_scores"] = f"""
-{_HT_SQL},
-agg AS (
-  SELECT doc_id, count(*)::BIGINT AS n_tokens,
-         sum(CASE WHEN tok IN ({stop_in}) THEN 1 ELSE 0 END)::BIGINT AS n_stop
-  FROM toks GROUP BY doc_id
-),
-base AS (
-  SELECT d.doc_id, a.n_tokens,
-         length(d.text)::BIGINT AS n_chars,
-         (length(d.text) - length(regexp_replace(d.text, '[^\\w\\s]', '', 'g')))::BIGINT AS n_punct,
-         a.n_stop
-  FROM documents d JOIN agg a ON d.doc_id = a.doc_id
-),
-feat AS (
-  SELECT doc_id, n_tokens,
-         round(n_chars::DOUBLE / greatest(n_tokens, 1), 6) AS avg_token_len,
-         round(n_punct::DOUBLE / greatest(n_chars, 1), 6) AS punct_ratio,
-         round(n_stop::DOUBLE / greatest(n_tokens, 1), 6) AS stopword_ratio
-  FROM base
-)
-SELECT doc_id, n_tokens, avg_token_len, punct_ratio, stopword_ratio,
-       round(least(n_tokens / 100.0, 1.0) * 0.4
-             + (1 - least(punct_ratio * 5, 1.0)) * 0.3
-             + least(stopword_ratio * 4, 1.0) * 0.3, 6) AS quality
-FROM feat
-"""
-
-    sql["token_counts"] = f"""
-SELECT doc_id, len({TOKS_SQL})::BIGINT AS ws_tokens,
-       len(regexp_extract_all(text, '{textstats.BPE_ISH_PATTERN}'))::BIGINT AS bpe_tokens
-FROM documents
-"""
-
-    sql["fingerprint_docs"] = f"""
-WITH toks AS (
-  SELECT doc_id, unnest({TOKS_SQL}) AS tok, generate_subscripts({TOKS_SQL}, 1) AS ord
-  FROM documents
-)
-SELECT doc_id, (sum(({md5_int60_sql('tok')} % {M31}) * ord) % {M31})::BIGINT AS fingerprint
-FROM toks WHERE ord <= 64 GROUP BY doc_id
-"""
-
-    # Gopher-style repetition signals; FILTERED tokens (len>0) like the
-    # Spark side's _tokens, lines split on literal \n
-    ftoks = f"list_filter({TOKS_SQL}, t -> len(t) > 0)"
-
-    def _gram_cte(n: int) -> str:
-        return f"""
-g{n} AS (
-  SELECT doc_id, unnest(
-    CASE WHEN len(tks) >= {n}
-         THEN list_transform(generate_series(1, len(tks) - {n - 1}),
-                             i -> array_to_string(tks[i:i+{n - 1}], ' '))
-         ELSE []::VARCHAR[] END) AS gram
-  FROM tk),
-c{n} AS (SELECT doc_id, gram, count(*) AS cnt FROM g{n} GROUP BY doc_id, gram),
-t{n} AS (
-  SELECT doc_id, gram, cnt,
-         row_number() OVER (PARTITION BY doc_id ORDER BY cnt DESC, gram ASC) AS rn
-  FROM c{n})"""
-
-    sql["repetition_docs"] = f"""
-WITH tk AS (
-  SELECT doc_id, length(text)::BIGINT AS n_chars,
-         list_filter(string_split(text, chr(10)), l -> len(l) > 0) AS lns,
-         {ftoks} AS tks
-  FROM documents
-),
-lo AS (SELECT doc_id, unnest(lns) AS line FROM tk),
-lc AS (SELECT doc_id, line, count(*) AS cnt FROM lo GROUP BY doc_id, line),
-lstat AS (
-  SELECT doc_id, sum(cnt)::BIGINT AS n_lines,
-         round(1.0 - count(*)::DOUBLE / sum(cnt), 6) AS dup_line_frac,
-         round((sum(cnt * length(line)) - sum(length(line)))::DOUBLE
-               / greatest(sum(cnt * length(line)), 1), 6) AS dup_line_char_frac
-  FROM lc GROUP BY doc_id
-),{_gram_cte(2)},{_gram_cte(3)}
-SELECT l.doc_id, l.n_lines, l.dup_line_frac, l.dup_line_char_frac,
-       coalesce(t2.gram, '') AS top_2gram,
-       round(coalesce(t2.cnt * length(t2.gram)::DOUBLE
-                      / greatest(k.n_chars, 1), 0.0), 6) AS top_2gram_frac,
-       coalesce(t3.gram, '') AS top_3gram,
-       round(coalesce(t3.cnt * length(t3.gram)::DOUBLE
-                      / greatest(k.n_chars, 1), 0.0), 6) AS top_3gram_frac
-FROM lstat l
-JOIN tk k ON l.doc_id = k.doc_id
-LEFT JOIN t2 ON l.doc_id = t2.doc_id AND t2.rn = 1
-LEFT JOIN t3 ON l.doc_id = t3.doc_id AND t3.rn = 1
-"""
-
-    # Gopher rule-based filters (ops/textstats.py gopher_filters): published
-    # thresholds; booleans computed on the ROUNDED measures exactly like the
-    # Spark side so boundary values are engine-portable
-    sql["gopher_filters"] = f"""
-WITH tk AS (
-  SELECT doc_id, text,
-         {ftoks} AS tks,
-         list_filter(string_split(text, chr(10)), l -> len(trim(l)) > 0) AS lns
-  FROM documents
-),
-meas AS (
-  SELECT doc_id,
-         len(tks)::BIGINT AS word_count,
-         round(coalesce(list_sum(list_transform(tks, t -> len(t))), 0)::DOUBLE
-               / greatest(len(tks), 1), 6) AS mean_word_len,
-         round(((length(text) - length(replace(text, '#', '')))
-                + (length(text) - length(replace(text, '...', ''))) / 3.0)
-               / greatest(len(tks), 1), 6) AS symbol_word_ratio,
-         round(len(list_filter(lns, l -> regexp_matches(l, '^\\s*[-*•]')))::DOUBLE
-               / greatest(len(lns), 1), 6) AS bullet_line_frac,
-         round(len(list_filter(lns, l -> regexp_matches(l, '(\\.\\.\\.|…)\\s*$')))::DOUBLE
-               / greatest(len(lns), 1), 6) AS ellipsis_line_frac,
-         round(len(list_filter(tks, t -> regexp_matches(t, '[a-z]')))::DOUBLE
-               / greatest(len(tks), 1), 6) AS alpha_word_frac,
-         len(list_filter(tks, t -> t IN ({stop_in})))::BIGINT AS n_stopwords
-  FROM tk
-)
-SELECT *,
-       (word_count >= 50 AND word_count <= 100000) AS pass_word_count,
-       (mean_word_len >= 3.0 AND mean_word_len <= 10.0) AS pass_mean_word_len,
-       (symbol_word_ratio <= 0.1) AS pass_symbol_ratio,
-       (bullet_line_frac <= 0.9) AS pass_bullet_lines,
-       (ellipsis_line_frac <= 0.3) AS pass_ellipsis_lines,
-       (alpha_word_frac >= 0.8) AS pass_alpha_words,
-       (n_stopwords >= 2) AS pass_stopwords,
-       ((word_count >= 50 AND word_count <= 100000)
-        AND (mean_word_len >= 3.0 AND mean_word_len <= 10.0)
-        AND (symbol_word_ratio <= 0.1)
-        AND (bullet_line_frac <= 0.9)
-        AND (ellipsis_line_frac <= 0.3)
-        AND (alpha_word_frac >= 0.8)
-        AND (n_stopwords >= 2)) AS gopher_keep
-FROM meas
-"""
-
-    # PII scrub (ops/textstats.py pii_scrub): sequential order-defined
-    # replacement — email, then IPv4 on the email-redacted text, then
-    # phone on the IP-redacted text (regexes are in the Java∩RE2 subset)
-    sql["pii_scrub"] = """
-WITH s1 AS (
-  SELECT doc_id,
-         len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))::BIGINT AS n_emails,
-         regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '[EMAIL]', 'g') AS t1
-  FROM documents
-),
-s2 AS (
-  SELECT doc_id, n_emails,
-         len(regexp_extract_all(t1, '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b'))::BIGINT AS n_ipv4,
-         regexp_replace(t1, '\\b\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\b', '[IPV4]', 'g') AS t2
-  FROM s1
-)
-SELECT doc_id, n_emails, n_ipv4,
-       len(regexp_extract_all(t2, '\\+?\\d[\\d()\\-.]{5,}\\d'))::BIGINT AS n_phones,
-       (n_emails + n_ipv4
-        + len(regexp_extract_all(t2, '\\+?\\d[\\d()\\-.]{5,}\\d')))::BIGINT AS pii_total,
-       regexp_replace(t2, '\\+?\\d[\\d()\\-.]{5,}\\d', '[PHONE]', 'g') AS pii_redacted
-FROM s2
-"""
-
-    # C4 line filters (ops/textstats.py c4_line_filters): line kept iff
-    # trimmed line ends in terminal punct, has >=3 whitespace words, and
-    # lacks 'javascript'; page keep needs >=5 sentence marks in the kept
-    # text and no lorem-ipsum / '{' / blocklist word in the raw text
-    badpat = r"\b(" + "|".join(textstats.C4_BADWORDS) + r")\b"
-    sql["c4_line_filters"] = f"""
-WITH lns AS (
-  SELECT doc_id, text,
-         list_filter(list_transform(string_split(text, chr(10)), l -> trim(l)),
-                     l -> len(l) > 0) AS lines
-  FROM documents
-),
-kept AS (
-  SELECT doc_id, text, lines,
-         -- array_to_string is NULL (not '') on an empty list; Spark's
-         -- concat_ws yields '' — coalesce for parity
-         coalesce(array_to_string(
-           list_filter(lines, l ->
-             regexp_matches(l, '[.!?"]$')
-             AND len(list_filter(string_split_regex(l, '\\s+'), t -> len(t) > 0)) >= 3
-             AND NOT contains(lower(l), 'javascript')),
-           chr(10)), '') AS clean_text
-  FROM lns
-)
-SELECT doc_id,
-       len(lines)::BIGINT AS c4_n_lines,
-       CASE WHEN clean_text = '' THEN 0
-            ELSE len(string_split(clean_text, chr(10))) END::BIGINT AS c4_kept_lines,
-       round(length(clean_text)::DOUBLE / greatest(length(text), 1), 6) AS c4_kept_char_frac,
-       len(regexp_extract_all(clean_text, '[.!?]'))::BIGINT AS c4_n_sentences,
-       contains(lower(text), 'lorem ipsum') AS c4_has_lorem,
-       contains(text, '{{') AS c4_has_brace,
-       regexp_matches(lower(text), '{badpat}') AS c4_has_badword,
-       (len(regexp_extract_all(clean_text, '[.!?]')) >= 5
-        AND NOT contains(lower(text), 'lorem ipsum')
-        AND NOT contains(text, '{{')
-        AND NOT regexp_matches(lower(text), '{badpat}')) AS c4_keep,
-       clean_text AS c4_clean_text
-FROM kept
-"""
-
-    sql["mesh_bfs"] = """
-SELECT 1::BIGINT AS node, 0 AS depth
-UNION ALL SELECT p_partkey, 1 FROM part WHERE p_partkey BETWEEN 2 AND 3
-UNION ALL SELECT p_partkey, 2 FROM part WHERE p_partkey BETWEEN 4 AND 7
-UNION ALL SELECT p_partkey, 3 FROM part WHERE p_partkey BETWEEN 8 AND 15
-"""
-
-    sql["orders_page"] = """
-SELECT o_orderkey, rn FROM (
-  SELECT o_orderkey,
-         row_number() OVER (ORDER BY o_orderdate DESC, o_orderkey DESC)::INT AS rn
-  FROM orders
-) WHERE rn > 100 AND rn <= 120
-"""
-
-    sql["anti_join_customers"] = """
-SELECT c_custkey FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-"""
-
-    sql["semi_join_customers"] = """
-SELECT c_custkey FROM customer c
-WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)
-"""
-
-    sql["distinct_union_nations"] = """
-SELECT DISTINCT nationkey FROM (
-  SELECT c_nationkey AS nationkey FROM customer
-  UNION ALL SELECT s_nationkey FROM supplier
-)
-"""
-
-    sql["market_join"] = """
-SELECT r_name, count(*) AS n_customers, round(sum(c_acctbal), 2) AS sum_acctbal
-FROM customer JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name
-"""
-
-    sql["top_parts_per_brand"] = """
-SELECT p_brand, p_partkey, round(p_retailprice, 2) AS price, rn FROM (
-  SELECT p_brand, p_partkey, p_retailprice,
-         row_number() OVER (PARTITION BY p_brand ORDER BY p_retailprice DESC, p_partkey ASC)::INT AS rn
-  FROM part
-) WHERE rn <= 3
-"""
-
-    sql["disease_gene_blend"] = """
-WITH db AS (
-  SELECT o_orderpriority AS disease, CAST(o_custkey % 20 AS VARCHAR) AS gene,
-         sum((o_custkey % 7)::DOUBLE) AS db
-  FROM orders WHERE o_orderkey % 3 = 0 GROUP BY 1, 2
-),
-pk AS (
-  SELECT o_orderpriority AS disease, CAST(o_custkey % 20 AS VARCHAR) AS gene,
-         sum(((o_custkey % 11) * 250)::DOUBLE) AS pk
-  FROM orders WHERE o_orderkey % 3 = 1 GROUP BY 1, 2
-),
-bo AS (
-  SELECT coalesce(db.disease, pk.disease) AS disease,
-         coalesce(db.gene, pk.gene) AS gene,
-         coalesce(db.db, 0) AS db, coalesce(pk.pk, 0) AS pk
-  FROM db FULL OUTER JOIN pk ON db.disease = pk.disease AND db.gene = pk.gene
-),
-blended AS (
-  SELECT disease, gene,
-         -- reference blend (kb_utils.py:1983-1990): binarized db, UNCAPPED pk
-         round(CASE WHEN db > 0 THEN 100.0 ELSE 0.0 END + 100.0 * pk / 10000.0, 6) AS pair_score
-  FROM bo
-)
-SELECT disease, gene, pair_score,
-       round(max(pair_score) OVER (PARTITION BY gene), 6) AS gene_score
-FROM blended
-"""
-
-    sql["journal_impact_meta"] = """
-WITH meta AS (
-  SELECT s_suppkey AS doc_id,
-         'Journal & Rev. ' || CAST(s_suppkey % 25 AS VARCHAR) AS journal
-  FROM supplier
-),
-imp AS (
-  SELECT 'journal and rev ' || CAST(n_nationkey AS VARCHAR) AS journal,
-         CAST(round(n_nationkey / 10.0, 3) AS VARCHAR) AS journal_impact
-  FROM nation
-  WHERE (40 + n_nationkey * 3) >= 70 OR n_nationkey % 4 = 0
-)
-SELECT doc_id, meta.journal, imp.journal_impact
-FROM meta LEFT JOIN imp
-  ON trim(regexp_replace(
-       regexp_replace(replace(lower(meta.journal), '&', ' and '), '[^0-9a-z]+', ' ', 'g'),
-       ' +', ' ', 'g')) = imp.journal
-"""
-
-    sql["glof_rollup"] = f"""
-WITH toks AS (
-  SELECT doc_id, unnest({TOKS_SQL}) AS tok,
-         generate_subscripts({TOKS_SQL}, 1) AS ord
-  FROM documents
-),
-g AS (
-  SELECT DISTINCT tok AS key,
-         CASE WHEN ord % 2 = 0 THEN 'gof' ELSE 'lof' END AS direction,
-         CAST(doc_id AS VARCHAR) AS doc_id,
-         CAST(ord % 7 AS INT) AS sent_idx
-  FROM toks WHERE tok IN ('spark', 'join', 'merge', 'sort', 'hash')
-),
-per_doc AS (
-  SELECT key, direction, doc_id, count(*) AS n_sents
-  FROM g GROUP BY 1, 2, 3
-)
-SELECT key, direction, CAST(doc_id AS BIGINT) AS doc_id, n_sents,
-       row_number() OVER (
-         PARTITION BY key, direction ORDER BY n_sents DESC, doc_id ASC
-       )::INT AS rank
-FROM per_doc
-"""
-
-    sql["mesh_subgraph"] = """
-WITH pk AS (SELECT p_partkey AS k FROM part),
--- label batches in the reference's chronological order (first label wins,
--- kb_utils.py:2255-2262); phases hardcoded for query=63, super=2, sub=1,
--- sibling=1, supplemental=1 over the parent(k)=k//2 heap forest
-lab(mesh, label, prio) AS (
-  VALUES ('63','query',0),
-         ('31','super-category',1), ('15','super-category',1),
-         ('126','sub-category',2), ('127','sub-category',2),
-         ('31','super-category',3),
-         ('62','sibling',4), ('63','sibling',4),
-         ('s63','supplemental',5)
-),
-resolved AS (SELECT mesh, arg_min(label, prio) AS label FROM lab GROUP BY mesh)
-SELECT r.mesh,
-       CASE WHEN r.mesh LIKE 's%' THEN 'supp ' || substr(r.mesh, 2)
-            ELSE 'node ' || r.mesh END AS display_name,
-       r.label,
-       (r.mesh LIKE 's%') AS is_supplemental
-FROM resolved r
-WHERE EXISTS (SELECT 1 FROM pk WHERE k = 63)
-  AND ((r.mesh LIKE 's%' AND EXISTS (SELECT 1 FROM pk WHERE k = TRY_CAST(substr(r.mesh, 2) AS BIGINT)))
-    OR (r.mesh NOT LIKE 's%' AND EXISTS (SELECT 1 FROM pk WHERE k = TRY_CAST(r.mesh AS BIGINT))))
-"""
-
-    sql["varsum_clean"] = """
-WITH raw AS (SELECT c_custkey AS k, (c_custkey % 500 + 1) AS pos FROM customer),
-c AS (
-  SELECT k, pos,
-    CASE WHEN k % 11 = 0 THEN '.' ELSE 'GENE' || CAST(k % 40 AS VARCHAR) END AS gene_name,
-    CASE WHEN k % 3 = 0 THEN 'homozygous' WHEN k % 3 = 1 THEN 'heterozygous' ELSE '' END AS genotype,
-    CASE WHEN k % 3 = 0 THEN '同型合子（homozygous）' WHEN k % 3 = 1 THEN '異型合子（heterozygous）' ELSE '' END AS genotype_zhtw,
-    CASE WHEN k % 13 = 0 THEN '.' ELSE 'NM_' || CAST(k % 97 AS VARCHAR) || '.2' END AS reference,
-    CASE WHEN k % 13 = 0 THEN '.'
-         WHEN k % 7 = 0 THEN 'c.*' || pos || 'del'
-         WHEN k % 7 = 1 THEN 'c.-' || pos || 'A>G'
-         WHEN k % 7 = 2 THEN 'c.' || pos || '+2T>C'
-         WHEN k % 7 = 3 THEN 'c.' || pos || '_' || (pos + 2) || 'dup'
-         ELSE 'c.' || pos || 'A>G' END AS hgvsc,
-    CASE WHEN k % 13 = 0 THEN '.'
-         WHEN k % 7 = 0 THEN '*' || pos
-         WHEN k % 7 = 1 THEN '-' || pos
-         WHEN k % 7 = 2 THEN pos || '+2'
-         WHEN k % 7 = 3 THEN pos || ', ' || (pos + 2)
-         ELSE CAST(pos AS VARCHAR) END AS cds_position,
-    CASE WHEN k % 13 = 0 THEN 'intron'
-         WHEN k % 7 = 0 THEN '3''-UTR'
-         WHEN k % 7 = 1 THEN '5''-UTR'
-         WHEN k % 7 = 2 THEN 'intron'
-         ELSE 'exon' END AS exon_intron,
-    CASE WHEN k % 6 = 0 THEN 'Pathogenic' WHEN k % 6 = 1 THEN 'Likely benign'
-         WHEN k % 6 = 2 THEN 'Uncertain significance' ELSE '.' END AS clinvar_record,
-    CASE WHEN k % 5 = 0 THEN 'missense, intron' WHEN k % 5 = 1 THEN 'stop gained'
-         WHEN k % 5 = 2 THEN '' ELSE 'synonymous' END AS consequence,
-    'ENST' || CAST(k % 50 AS VARCHAR) AS transcriptid_mane,
-    CASE WHEN k % 50 < 25 THEN 0 ELSE 1 END AS transcriptid_index,
-    CASE WHEN k % 50 < 25 THEN CAST(k % 10 AS VARCHAR) ELSE '0.5' END AS sift,
-    CASE WHEN k % 2 = 0 THEN printf('%.1f', (k % 40) / 2.0) ELSE '.' END AS cadd_phred,
-    'recorded' AS pathogenicity,
-    printf('%.3f', (k % 100) / 100.0) AS phylop100way,
-    'recorded' AS conservation,
-    CASE WHEN k % 8 = 0 THEN '.' ELSE printf('%.6f', (k % 1000) / 100000.0) END AS gnomad_freq,
-    CASE WHEN k % 9 = 0 THEN 'ClinVar, DeafnessVD, and HotspotDB'
-         WHEN k % 9 = 1 THEN 'ClinVar' ELSE '.' END AS hotspot
-  FROM raw
-)
-SELECT gene_name, genotype, genotype_zhtw, reference, hgvsc, cds_position,
-       exon_intron,
-       CASE WHEN k % 4 = 0 THEN exon_intron
-            WHEN exon_intron IN ('exon', 'intron')
-              THEN exon_intron || ' ' || CAST(k % 9 + 1 AS VARCHAR)
-            ELSE exon_intron END AS exon_or_intron_rank,
-       clinvar_record, consequence, transcriptid_mane, transcriptid_index,
-       sift, cadd_phred, pathogenicity, phylop100way, conservation,
-       gnomad_freq, hotspot
-FROM c
-"""
-
-    sql["qa_target_filter"] = f"""
-WITH toks AS (
-  SELECT doc_id, unnest({TOKS_SQL}) AS tok FROM documents
-),
-flags AS (
-  SELECT doc_id,
-         bool_or(tok IN ('spark', 'join', 'merge', 'sort', 'hash')) AS has_t,
-         bool_or(tok = 'spark') AS has_spark,
-         bool_or(tok = 'hash') AS has_hash,
-         bool_or(tok = 'merge') AS has_merge
-  FROM toks GROUP BY doc_id
-)
--- independent formulation of the target filter: docs with any triplet AND
--- the disease target AND a gene hit via prefix-fallback ('hash_v1'→'hash')
--- or the no-underscore quirk ('mergeX'[:-1]→'merge')
-SELECT CAST(doc_id AS BIGINT) AS doc_id FROM flags
-WHERE has_t AND has_spark AND (has_hash OR has_merge)
-"""
-
-    sql["embed_text_docs"] = f"""
-WITH toks AS (
-  SELECT doc_id, unnest(regexp_split_to_array(lower(text), '\\W+')) AS tok
-  FROM documents
-),
-t2 AS (SELECT doc_id, tok FROM toks WHERE len(tok) > 0),
-h AS (
-  SELECT doc_id,
-         ({md5_int60_sql('tok')} % 16)::INT AS bucket,
-         CASE WHEN {md5_int60_sql('tok')} % 32 >= 16 THEN -1 ELSE 1 END AS sign
-  FROM t2
-),
-pb AS (SELECT doc_id, bucket, sum(sign)::DOUBLE AS v FROM h GROUP BY 1, 2),
-grid AS (
-  -- every document gets a row: zero-token docs emit zero vectors
-  SELECT d.doc_id, b.bucket
-  FROM (SELECT doc_id FROM documents) d
-  CROSS JOIN (SELECT unnest(range(16))::INT AS bucket) b
-),
-dense AS (
-  SELECT grid.doc_id, grid.bucket, coalesce(pb.v, 0) AS v
-  FROM grid LEFT JOIN pb ON grid.doc_id = pb.doc_id AND grid.bucket = pb.bucket
-),
-nrm AS (SELECT doc_id, sqrt(sum(v * v)) AS n FROM dense GROUP BY 1)
-SELECT dense.doc_id, dense.bucket,
-       round(v / CASE WHEN n > 0 THEN n ELSE 1 END, 6) AS val
-FROM dense JOIN nrm ON dense.doc_id = nrm.doc_id
-"""
-
-    # ---- ann_cosine_lsh: the hyperplane signature is pure affine
-    # arithmetic (similarity._pseudo_hyperplane formula, re-derived here
-    # from the same published affine-hash family) — plane literals inlined,
-    # dot products via list_dot_product, Hamming-1 multi-probe via xor
-    def _plane_lits(i: int, dim: int) -> str:
-        a, b = affine_params(i)
-        vals = [
-            (((a * (j + 1) + b) % M31) / M31) * 2.0 - 1.0 for j in range(dim)
-        ]
-        return "[" + ", ".join(repr(v) for v in vals) + "]"
-
-    n_planes, ann_dim = 8, 64
-    sig_terms = " + ".join(
-        f"(CASE WHEN list_dot_product(e, {_plane_lits(i, ann_dim)}) > 0 "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i in range(n_planes)
-    )
-    probe_union = " UNION ALL ".join(
-        f"SELECT xor(s0, {1 << i}) FROM qsig" for i in range(n_planes)
-    )
-    sql["ann_cosine_lsh"] = f"""
-WITH emb AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-sig AS (SELECT vec_id, e, ({sig_terms})::BIGINT AS s FROM emb),
-q AS (SELECT e FROM emb WHERE vec_id = 1),
-qsig AS (SELECT s AS s0 FROM sig WHERE vec_id = 1),
-probes AS (SELECT s0 FROM qsig UNION ALL {probe_union})
-SELECT vec_id,
-       round(list_cosine_similarity(e, (SELECT e FROM q)), 6) AS cos_sim
-FROM sig WHERE s IN (SELECT s0 FROM probes)
-ORDER BY cos_sim DESC, vec_id ASC LIMIT 10
-"""
-
-    # ---- embedding_near_dup_pairs: same affine signature, then the
-    # engine's exact bucket split — bsz <= 8 buckets emit the full clique,
-    # bsz > 8 buckets emit only (min-id rep, member) star edges — and the
-    # same round(·,6)-then-threshold filter the engine applies
-    nd_sig_terms = " + ".join(
-        f"(CASE WHEN list_dot_product(e, {_plane_lits(i, ann_dim)}) > 0 "
-        f"THEN {1 << i} ELSE 0 END)"
-        for i in range(n_planes)
-    )
-    sql["embedding_near_dup_pairs"] = f"""
-WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings WHERE vec_id < 20),
-corpus AS (
-  SELECT b.vec_id * 100 + r.range AS id, b.e
-  FROM base b, range(12) r
-  WHERE r.range < (CASE WHEN b.vec_id % 5 = 0 THEN 12 ELSE 3 END)
-),
-sig AS (SELECT id, e, ({nd_sig_terms})::BIGINT AS s FROM corpus),
-z AS (SELECT s, count(*) AS bsz, min(id) AS rep FROM sig GROUP BY s),
-pairs AS (
-  SELECT a.id AS doc_a, b.id AS doc_b, a.e AS ea, b.e AS eb
-  FROM sig a
-  JOIN sig b ON a.s = b.s AND a.id < b.id
-  JOIN z ON z.s = a.s
-  WHERE z.bsz <= 8
-  UNION
-  SELECT z.rep AS doc_a, m.id AS doc_b, r.e AS ea, m.e AS eb
-  FROM sig m
-  JOIN z ON z.s = m.s
-  JOIN sig r ON r.id = z.rep
-  WHERE z.bsz > 8 AND m.id <> z.rep
-)
-SELECT DISTINCT doc_a, doc_b, round(list_cosine_similarity(ea, eb), 6) AS cos_sim
-FROM pairs
-WHERE round(list_cosine_similarity(ea, eb), 6) >= 0.95
-"""
-
-    # ---- multimodal_features: the synthetic payload contract is
-    # sha256(f"{seed}:{i}").digest() * (1 + i % 7) — recomputed here with
-    # stdlib hashlib (independent of the engine's mapInPandas path) and
-    # pinned as VALUES
-    import hashlib as _hl
-
-    mm_rows = []
-    for i in range(60):
-        payload = _hl.sha256(f"42:{i}".encode()).digest() * (1 + i % 7)
-        mm_rows.append(
-            f"('m{i:08d}', '{['image', 'audio', 'video'][i % 3]}', "
-            f"{len(payload)}, '{_hl.sha256(payload).hexdigest()}')"
-        )
-    sql["multimodal_features"] = f"""
-SELECT media_id, media_type, n_bytes::BIGINT AS n_bytes, checksum
-FROM (VALUES {', '.join(mm_rows)}) v(media_id, media_type, n_bytes, checksum)
-"""
-
-    # ---- fuzzy_nen: the reference's scorer IS stdlib difflib
-    # (kb_utils.py:296-380) — the oracle recomputes candidate blocking,
-    # SequenceMatcher.ratio, thresholding and frequency ranking in plain
-    # Python over the same dictionary and emits the expected relation
-    import difflib as _dl
-
-    _q = "p.v600e"
-    _pdf = fixtures.build_entity_dict()
-    _seen: dict[str, float] = {}
-    for _nm in _pdf["name"]:
-        _c = _nm.lower()
-        if abs(len(_c) - len(_q)) <= 1 and _c not in _seen:
-            _seen[_c] = round(_dl.SequenceMatcher(a=_c, b=_q).ratio(), 6)
-    _matched = sorted(
-        (n for n, s in _seen.items() if s >= 0.7),
-        key=lambda n: (-_seen[n], n),
-    )[:20]
-    _freqs: dict[tuple[str, str, str], int] = {}
-    for _t, _i, _nm, _f in zip(_pdf["type"], _pdf["id"], _pdf["name"], _pdf["freq"]):
-        if _nm.lower() in _matched:
-            k = (_nm.lower(), _t, _i)
-            _freqs[k] = _freqs.get(k, 0) + int(_f)
-    _by_name: dict[str, list] = {}
-    for (nm, t, i), f in _freqs.items():
-        _by_name.setdefault(nm, []).append((t, i, f))
-    fz_rows = []
-    for nm, lst in _by_name.items():
-        for rank, (t, i, f) in enumerate(
-            sorted(lst, key=lambda x: (-x[2], x[1])), start=1
-        ):
-            fz_rows.append(f"('{nm}', '{t}', '{i}', {f}, {rank})")
-    sql["fuzzy_nen"] = f"""
-SELECT name, type, id, freq::BIGINT AS freq, rank::INT AS rank
-FROM (VALUES {', '.join(fz_rows)}) v(name, type, id, freq, rank)
-"""
-
-    sql["gvd_stats"] = f"""
-{_HT_SQL},
-keyed AS (
-  SELECT tok AS subj,
-         'D' || CAST(doc_id % 7 AS VARCHAR) AS obj,
-         CASE WHEN ord % 3 = 0 THEN 'paper'
-              WHEN ord % 3 = 1 THEN 'sentence'
-              ELSE 'odds_ratio' END AS annotator
-  FROM toks WHERE tok IN ({vocab_in})
-),
-ps AS (SELECT subj, obj, annotator, count(*) AS support FROM keyed GROUP BY 1,2,3),
-piv AS (
-  SELECT subj, obj,
-         sum(CASE WHEN annotator='paper' THEN support ELSE 0 END)::BIGINT AS paper,
-         sum(CASE WHEN annotator='sentence' THEN support ELSE 0 END)::BIGINT AS sentence,
-         sum(CASE WHEN annotator='odds_ratio' THEN support ELSE 0 END)::BIGINT AS odds_ratio
-  FROM ps GROUP BY subj, obj
-),
-blended AS (
-  SELECT subj, obj, paper, sentence, odds_ratio,
-         (paper + sentence + odds_ratio)::BIGINT AS sort_score,
-         CASE WHEN substr(obj, 2, 1)::INT % 2 = 0
-              THEN printf('%.2f', (substr(obj, 2, 1)::INT * 13 + length(subj)) / 100.0)
-              ELSE NULL END AS new_score
-  FROM piv
-)
-SELECT subj, obj, paper, sentence, odds_ratio, sort_score, new_score FROM (
-  SELECT *, row_number() OVER (PARTITION BY subj ORDER BY sort_score DESC, obj ASC) AS rk
-  FROM blended
-) WHERE rk <= 3
-"""
-
-    # ---- variant_in_kb: Python replica of get_variant_in_kb
-    # (kb_utils.py:385-396) over the deterministic dictionary, pinned as
-    # VALUES — probe enumeration, frequency aggregation and the stable
-    # frequency-desc order recomputed independently of the Spark operator
-    from pubmedkb_web_spark.query.nen import VARIANT_UMBRELLA as _VU
-
-    _store: dict[tuple[str, str, str], int] = {}
-    _vpdf = fixtures.build_entity_dict()
-    for _t, _i, _n, _f in zip(_vpdf["type"], _vpdf["id"], _vpdf["name"], _vpdf["freq"]):
-        _store[(_t, _i, _n)] = _store.get((_t, _i, _n), 0) + int(_f)
-    _vhits = [
-        (t, i, n, _store[(t, i, n)])
-        for t in _VU
-        for i in VKB_IDS
-        for n in VKB_NAMES
-        if (t, i, n) in _store
-    ]
-    _vhits.sort(key=lambda x: (-x[3], x[0], x[1], x[2]))
-    vkb_rows = ", ".join(
-        f"('{t}', '{i}', '{n}', {f}, {r})"
-        for r, (t, i, n, f) in enumerate(_vhits, start=1)
-    )
-    sql["variant_in_kb"] = f"""
-SELECT type, id, name, frequency::BIGINT AS frequency, rank::INT AS rank
-FROM (VALUES {vkb_rows}) v(type, id, name, frequency, rank)
-"""
-
-    sql["kg_extractor_slice"] = f"""
-WITH toks AS (
-  SELECT doc_id, unnest({TOKS_SQL}) AS tok,
-         generate_subscripts({TOKS_SQL}, 1) AS ord
-  FROM documents WHERE doc_id < 200
-),
-vt AS (SELECT doc_id, tok, ord FROM toks WHERE tok IN ({vocab_in})),
-pairs AS (
-  SELECT a.doc_id, a.tok AS h_name, b.tok AS t_name
-  FROM vt a JOIN vt b ON a.doc_id = b.doc_id AND a.ord < b.ord
-),
-dt AS (SELECT DISTINCT doc_id, tok FROM vt),
-nc AS (SELECT tok, count(*) AS nc FROM dt GROUP BY tok),
-tot AS (SELECT count(*) AS n FROM documents WHERE doc_id < 200),
-pa AS (
-  SELECT a.tok AS n1, b.tok AS n2, count(*) AS a
-  FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.tok < b.tok GROUP BY 1, 2
-),
-cont AS (
-  SELECT n1, n2, a,
-         round(exp(ln(((a+0.5)*((SELECT n FROM tot)-a-(c1.nc-a)-(c2.nc-a)+0.5))
-                    / ((c1.nc-a+0.5)*(c2.nc-a+0.5)))), 4) AS orv
-  FROM pa JOIN nc c1 ON pa.n1 = c1.tok JOIN nc c2 ON pa.n2 = c2.tok
-)
-SELECT doc_id, 'co_occurrence' AS annotator, h_name, t_name,
-       NULL::DOUBLE AS or_value_d, 1.0::DOUBLE AS score
-FROM pairs
-UNION ALL
-SELECT p.doc_id, 'odds_ratio', p.h_name, p.t_name, cont.orv, 2.0::DOUBLE
-FROM pairs p
-JOIN cont ON least(p.h_name, p.t_name) = cont.n1
-         AND greatest(p.h_name, p.t_name) = cont.n2
-WHERE cont.a >= 1
-"""
-
-    id_values = ", ".join(f"('{i}')" for i in list(range(1, 21)) + [999991, 999992])
-    sql["paper_text_fetch"] = f"""
-WITH ids(doc_id) AS (VALUES {id_values}),
-store AS (
-  SELECT CAST(doc_id AS VARCHAR) AS doc_id,
-         'T' || CAST(doc_id AS VARCHAR) AS title,
-         substr(text, 1, 40) AS abstract
-  FROM documents
-)
-SELECT ids.doc_id, coalesce(title, '') AS title, coalesce(abstract, '') AS abstract
-FROM ids LEFT JOIN store USING (doc_id)
-"""
-
-    # pinned oracle: the expected rows are hand-derived from the reference's
-    # dispatch (HGVSp_parser.py:18-109), not generated by the engine
-    def _lit(v):
-        if v is None:
-            return "NULL"
-        if isinstance(v, int):
-            return str(v)
-        return "'" + v.replace("'", "''") + "'"
-
-    hgvsp_rows = ",\n  ".join(
-        "(" + ", ".join(_lit(v) for v in row) + ")" for row in _HGVSP_PINNED
-    )
-    sql["hgvsp_parse"] = f"""
-SELECT hgvsp, kind, ref_aa, pos_start::INT AS pos_start, alt_aa, text
-FROM (VALUES
-  {hgvsp_rows}) v(hgvsp, kind, ref_aa, pos_start, alt_aa, text)
-"""
-
-    # full-pipeline gate: per-annotator counts over the fixed 120-doc
-    # corpus, pinned from the pure-Python oracle (see _KG_GATE_PINNED) —
-    # the hgvsp_parse technique applied to the end-to-end build
-    kg_rows = ",\n  ".join(f"('{a}', {n})" for a, n in _KG_GATE_PINNED)
-    sql["kg_pipeline_triples"] = f"""
-SELECT annotator, n_triples::BIGINT AS n_triples
-FROM (VALUES
-  {kg_rows}) v(annotator, n_triples)
-ORDER BY annotator
-"""
-
-    # ---- presentation layer (F7/S10) + LitVar parse (S6) ----
-    esc = htmlrender.html_escape_sql
-
-    sql["html_escape_docs"] = f"""
-SELECT doc_id, {esc("s")} AS escaped FROM (
-  SELECT doc_id,
-         '<b href="' || source || '">' || substr(text, 1, 40) || ' & ''tail''' AS s
-  FROM documents WHERE doc_id % 17 = 0)
-"""
-
-    dot = (
-        "CASE WHEN {c} <> '' AND substr({c}, length({c}), 1) NOT IN ('.','?','!') "
-        "THEN {c} || '.' ELSE {c} END"
-    )
-    sql["paper_meta_html_docs"] = f"""
-WITH src AS (
-  SELECT doc_id,
-         CAST(doc_id AS VARCHAR) AS pmid,
-         substr(text, 1, 30) AS title0,
-         CASE WHEN doc_id % 3 = 0 THEN '' ELSE CAST(1990 + doc_id % 30 AS VARCHAR) END AS year0,
-         CASE WHEN doc_id % 4 = 0 THEN 'J. "X" & <Y>' ELSE source END AS journal0,
-         CASE WHEN doc_id % 2 = 0 THEN '10.1000/' || source ELSE '' END AS doi,
-         CASE WHEN doc_id % 3 = 0 THEN 'Review, Meta &lt;1&gt;'
-              WHEN doc_id % 3 = 1 THEN 'Trial' ELSE '' END AS pt_joined,
-         CAST(doc_id % 100 AS VARCHAR) AS citation
-  FROM documents WHERE doc_id % 13 = 0),
-fields AS (
-  SELECT doc_id, pmid, doi, pt_joined, citation,
-         {dot.format(c="title0")} AS title1,
-         CASE WHEN year0 <> '' THEN year0 || '.' ELSE year0 END AS year1,
-         {dot.format(c="journal0")} AS journal1
-  FROM src)
-SELECT doc_id,
-  '<a href="https://pubmed.ncbi.nlm.nih.gov/' || pmid || '">[' || {esc("pmid")} || ']</a> '
-  || {esc("title1")}
-  || ' ' || {esc("year1")}
-  || ' <em>' || {esc("journal1")} || '</em>'
-  || ' ' || CASE WHEN doi <> ''
-            THEN '<a href="https://doi.org/' || doi || '">' || {esc("'doi.org/' || doi")} || '</a>'
-            ELSE '' END
-  || ' ' || CASE WHEN pt_joined <> '' THEN pt_joined || '.' ELSE '' END
-  || ' ' || {esc("'Cited by ' || citation || '.'")}
-  AS meta_html
-FROM fields
-"""
-
-    sql["reference_list_html_docs"] = f"""
-SELECT 'References<br />' || string_agg(
-  '<a href="https://pubmed.ncbi.nlm.nih.gov/' || pmid || '">[PMID-' || pmid || ']</a> '
-  || {esc("title")},
-  '<br />' ORDER BY doc_id) AS html
-FROM (
-  SELECT doc_id, CAST(doc_id AS VARCHAR) AS pmid,
-         '"' || substr(text, 1, 25) || '" & <more>' AS title
-  FROM documents WHERE doc_id % 23 = 0)
-"""
-
-    sql["table_html_orders"] = f"""
-WITH page AS (
-  SELECT o_orderkey AS orderkey, o_orderpriority AS priority,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS total_cents
-  FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 5)
-SELECT '<table><tr><th style="width:20%">orderkey</th>'
-  || '<th style="width:50%">priority</th>'
-  || '<th style="width:30%">total_cents</th></tr>'
-  || string_agg(
-       '<tr><td>' || {esc("CAST(orderkey AS VARCHAR)")} || '</td><td>'
-       || {esc("priority")} || '</td><td>'
-       || {esc("CAST(total_cents AS VARCHAR)")} || '</td></tr>',
-       '' ORDER BY orderkey)
-  || '</table>' AS html
-FROM page
-"""
-
-    # LitVar parse: the oracle replicates kb_utils.py:226-249's slice
-    # arithmetic (Python str.find == SQL strpos - 1, including the
-    # absent-marker -1 cases) over the same synthesized raw results.
-    name_sql = "string_split_regex(lower(text), '\\s+')[1]"
-    sql["litvar_parse_docs"] = f"""
-WITH src AS (
-  SELECT doc_id,
-    CASE WHEN doc_id % 3 = 0 THEN 'rs' || CAST(doc_id AS VARCHAR) END AS rsid,
-    CASE WHEN doc_id % 4 = 1 THEN 'c.' || CAST(doc_id % 97 AS VARCHAR) || 'G>A' END AS hgvs,
-    {name_sql} AS name
-  FROM documents WHERE doc_id % 11 = 0),
-withm AS (
-  SELECT *, CASE doc_id % 5
-      WHEN 0 THEN '<m>' || name || '</m> rest'
-      WHEN 1 THEN 'pre <m>' || name || 'x</m>'
-      WHEN 2 THEN 'no markers ' || name
-      WHEN 3 THEN 'ab<m>' || name
-      ELSE NULL END AS mtch FROM src),
-sliced AS (
-  SELECT *,
-    strpos(mtch, '<m>') - 1 + 3 AS i0,
-    CASE WHEN strpos(substr(mtch, strpos(mtch, '<m>') + 3), '</m>') = 0 THEN -1
-         ELSE (strpos(mtch, '<m>') - 1 + 3)
-              + strpos(substr(mtch, strpos(mtch, '<m>') + 3), '</m>') - 1 END AS j0
-  FROM withm),
-innr_m AS (
-  SELECT doc_id, rsid, hgvs, name, mtch,
-    substr(mtch, i0 + 1,
-           greatest(CASE WHEN j0 >= 0 THEN j0 ELSE length(mtch) - 1 END - i0, 0)
-    ) AS innr
-  FROM sliced)
-SELECT doc_id,
-  concat_ws('|',
-    CASE WHEN rsid IS NOT NULL THEN 'RS#:' || substr(rsid, 3) END,
-    CASE WHEN hgvs IS NOT NULL THEN 'HGVS:' || hgvs END) AS ids,
-  name || CASE WHEN mtch IS NOT NULL AND innr <> name THEN '|' || innr ELSE '' END AS names,
-  CASE WHEN doc_id % 2 = 0 THEN upper(name) ELSE '' END AS genes
-FROM innr_m
-"""
-
-    # decontaminate gate twin: 3-gram shingles via lead() over the
-    # empty-filtered token sequence (positions re-numbered AFTER the
-    # filter, matching Spark's F.filter-then-slice enumeration); lead past
-    # the end makes the || chain NULL, which the shn filter drops — the
-    # exact complete-shingle rule of ops/textstats._ngrams
-    sql["decontaminate_docs"] = f"""
-WITH toks0 AS (
-  SELECT doc_id, unnest({TOKS_SQL}) AS tok, generate_subscripts({TOKS_SQL}, 1) AS ord
-  FROM documents
-),
-toks AS (
-  SELECT doc_id, tok, row_number() OVER (PARTITION BY doc_id ORDER BY ord) AS pos
-  FROM toks0 WHERE len(tok) > 0
-),
-sh AS (
-  SELECT doc_id,
-         tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w AS shingle
-  FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
-),
-shn AS (SELECT doc_id, shingle FROM sh WHERE shingle IS NOT NULL),
-bench AS (SELECT DISTINCT shingle FROM shn WHERE doc_id % 17 = 0),
-hits AS (
-  SELECT DISTINCT s.doc_id, s.shingle FROM shn s JOIN bench b USING (shingle)
-),
-per AS (SELECT doc_id, count(*)::BIGINT AS n FROM hits GROUP BY 1)
-SELECT d.doc_id, coalesce(p.n, 0)::BIGINT AS n_contaminated_ngrams,
-       coalesce(p.n, 0) >= 2 AS contaminated
-FROM documents d LEFT JOIN per p ON d.doc_id = p.doc_id
-"""
-
-    # ---- merged driver gates (round 6; see queries() docstring) ----------
-    # Each merged oracle nests the constituent oracles verbatim (DuckDB
-    # supports CTEs inside FROM-subqueries), so the per-capability SQL above
-    # stays the single source of truth.
-    mh_terms = " UNION ALL ".join(
-        f"SELECT 'minhash' AS kind, doc_id, {i} AS idx, mh{i} AS val FROM m"
-        for i in range(8)
-    )
-    sql["doc_signatures"] = (
-        _minhash_sql(100, mh_terms)
-        + f"""
-UNION ALL
-SELECT 'simhash' AS kind, doc_id, 0 AS idx, simhash AS val
-FROM ({sql["simhash_docs"]})
-"""
-    )
-
-    sql["textstats_docs"] = f"""
-SELECT l.doc_id, l.pred_lang, l.lang_hits,
-       q.n_tokens, q.avg_token_len, q.punct_ratio, q.stopword_ratio, q.quality,
-       t.ws_tokens, t.bpe_tokens, fp.fingerprint,
-       r.n_lines, r.dup_line_frac, r.dup_line_char_frac,
-       r.top_2gram, r.top_2gram_frac, r.top_3gram, r.top_3gram_frac,
-       g.word_count, g.mean_word_len, g.symbol_word_ratio, g.bullet_line_frac,
-       g.ellipsis_line_frac, g.alpha_word_frac, g.n_stopwords,
-       g.pass_word_count, g.pass_mean_word_len, g.pass_symbol_ratio,
-       g.pass_bullet_lines, g.pass_ellipsis_lines, g.pass_alpha_words,
-       g.pass_stopwords, g.gopher_keep,
-       p.n_emails, p.n_ipv4, p.n_phones, p.pii_total, p.pii_redacted,
-       c.c4_n_lines, c.c4_kept_lines, c.c4_kept_char_frac, c.c4_n_sentences,
-       c.c4_has_lorem, c.c4_has_brace, c.c4_has_badword, c.c4_keep,
-       c.c4_clean_text,
-       dc.n_contaminated_ngrams, dc.contaminated
-FROM ({sql["lang_id_docs"]}) l
-JOIN ({sql["quality_scores"]}) q ON l.doc_id = q.doc_id
-JOIN ({sql["token_counts"]}) t ON l.doc_id = t.doc_id
-JOIN ({sql["fingerprint_docs"]}) fp ON l.doc_id = fp.doc_id
-JOIN ({sql["repetition_docs"]}) r ON l.doc_id = r.doc_id
-JOIN ({sql["gopher_filters"]}) g ON l.doc_id = g.doc_id
-JOIN ({sql["pii_scrub"]}) p ON l.doc_id = p.doc_id
-JOIN ({sql["c4_line_filters"]}) c ON l.doc_id = c.doc_id
-JOIN ({sql["decontaminate_docs"]}) dc ON l.doc_id = dc.doc_id
-"""
-
-    sql["anti_semi_customers"] = f"""
-SELECT 'anti' AS kind, c_custkey FROM ({sql["anti_join_customers"]})
-UNION ALL
-SELECT 'semi' AS kind, c_custkey FROM ({sql["semi_join_customers"]})
-"""
-
-    sql["lsh_star_hot"] = f"""
-SELECT 'pair' AS kind, CAST(doc_a AS VARCHAR) AS k1, CAST(doc_b AS VARCHAR) AS k2,
-       0::BIGINT AS v
-FROM ({sql["lsh_star_fallback_pairs"]})
-UNION ALL
-SELECT 'hot' AS kind, CAST(band_idx AS VARCHAR) AS k1, band_key AS k2,
-       bucket_size::BIGINT AS v
-FROM ({sql["lsh_hot_buckets"]})
-"""
-
-    sql["cosine_topk_methods"] = f"""
-SELECT 'brute' AS method, vec_id, cos_sim FROM ({sql["cosine_topk"]})
-UNION ALL
-SELECT 'ivf' AS method, vec_id, cos_sim FROM ({sql["ivf_cosine_topk"]})
-"""
-
-    sql["html_render_all"] = f"""
-SELECT 'escape' AS kind, doc_id AS k, escaped AS html FROM ({sql["html_escape_docs"]})
-UNION ALL
-SELECT 'meta' AS kind, doc_id AS k, meta_html AS html FROM ({sql["paper_meta_html_docs"]})
-UNION ALL
-SELECT 'reflist' AS kind, 0::BIGINT AS k, html FROM ({sql["reference_list_html_docs"]})
-UNION ALL
-SELECT 'table' AS kind, 0::BIGINT AS k, html FROM ({sql["table_html_orders"]})
-"""
-
-    return sql

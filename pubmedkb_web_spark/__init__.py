@@ -22,6 +22,11 @@ Layout
                   search, text analysis, multimodal plumbing)
 - ``sources/``    source/sink adapters (parquet always; Iceberg behind an
                   import-try)
+- ``streaming/``  event windows and sessionization, batch and stream twins
+- ``gates/``      the gate surface ``__spark_entry__.py`` re-exports: the
+                  ``q_*`` gate builders and ``queries()`` (``builders``) and
+                  their DuckDB twins, ``oracle_sql()`` (``oracle``); the
+                  engine imports neither
 """
 
 __version__ = "0.1.0"

@@ -159,7 +159,7 @@ def extract_ore(pairs: DataFrame) -> DataFrame:
     )
     # array_intersect, NOT a filter() higher-order function: HOF lambdas
     # evaluate interpreted and anti-scale with executor threads (round-1
-    # SCALING.json measurement); array_intersect is a codegen expression
+    # history/SCALING.json measurement); array_intersect is a codegen expression
     # with identical semantics here (preds are distinct, order preserved)
     found = F.array_intersect(preds, F.col("_btoks"))
     openie = (
@@ -354,7 +354,7 @@ def extract_all(
     sentence join) pair relation — 4× the shuffle volume, with every pair
     row carrying its full sentence text through every branch. That write/
     shuffle volume was the annotations stage's measured anti-scaler at 32
-    threads (SCALING.json round 2). The fused plan:
+    threads (history/SCALING.json round 2). The fused plan:
 
     1. build the pair relation once, compute the between-text immediately
        and DROP the sentence string (the widest column) before anything

@@ -312,7 +312,7 @@ def resolve_overlaps(candidates: DataFrame) -> DataFrame:
     per-sentence candidate arrays: grouping + sort_array stay JVM-side and
     the fold crosses to Python once per batch of sentences. This replaces
     the interpreted higher-order ``aggregate`` fold whose lambda interpreter
-    measured anti-scaling with executor threads (SCALING.json round 1) and
+    measured anti-scaling with executor threads (history/SCALING.json round 1) and
     whose array-append state was O(c²) per sentence.
     """
     cand = F.struct(

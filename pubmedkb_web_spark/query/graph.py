@@ -67,12 +67,6 @@ def bfs_subgraph(
     return visited
 
 
-# MeSH node-label precedence = the reference's chronological add order
-# (add_and_get_node keeps the FIRST label, kb_utils.py:2255-2262)
-_MESH_LABEL_PRIO = [
-    ("query", 0), ("super-category", 1), ("sub-category", 2),
-    ("sibling", 4), ("supplemental", 5), ("descriptor", 6),
-]
 # label_to_level gate for supplemental expansion (kb_utils.py:2338)
 _MESH_LABEL_LEVEL = {"query": 1, "sub-category": 2, "super-category": 3, "sibling": 4}
 
@@ -125,6 +119,9 @@ def mesh_subgraph(
         .localCheckpoint(eager=True)
     )
 
+    # each batch's prio literal is the reference's chronological add order:
+    # add_and_get_node keeps a node's FIRST label (kb_utils.py:2255-2262),
+    # so resolve() takes the label of the lowest prio
     label_batches = [qdf.select("mesh", F.lit("query").alias("label"), F.lit(0).alias("prio"))]
     edge_batches = []
 

@@ -241,21 +241,11 @@ def enrich_meta_with_impact(meta: DataFrame, impact_map: DataFrame) -> DataFrame
     The map side is deduplicated per journal before the join: the
     reference's dict build collapses duplicate journal rows (last wins,
     kb_utils.py:1812-1815); a relational input carries no file order, so
-    when a ``line_no`` column is present the true last row wins, otherwise
-    the max impact string is kept (deterministic) — either way one row per
-    journal, so meta rows can never fan out."""
-    one_per_journal = impact_map
-    if "line_no" in impact_map.columns:
-        w = W.partitionBy("journal").orderBy(F.col("line_no").desc())
-        one_per_journal = (
-            impact_map.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "line_no")
-        )
-    else:
-        one_per_journal = impact_map.groupBy("journal").agg(
-            F.max("journal_impact").alias("journal_impact")
-        )
+    the max impact string is kept (deterministic) — one row per journal, so
+    meta rows can never fan out."""
+    one_per_journal = impact_map.groupBy("journal").agg(
+        F.max("journal_impact").alias("journal_impact")
+    )
     jnorm = normalize_journal(F.col("journal"))
     right = F.broadcast(one_per_journal.withColumnRenamed("journal", "_jnorm"))
     return (

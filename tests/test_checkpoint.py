@@ -89,18 +89,17 @@ def test_invariant_sha256_on_all_derived_tables(spark, tmp_path):
 
 
 def test_kg_gate_counts_pinned_vs_oracle_vs_engine(spark, tmp_path):
-    """Closes the last no_oracle gate (round-3 VERDICT #1): the
-    kg_pipeline_triples projection (per-annotator deduplicated triple
-    counts over the fixed 120-doc corpus) is pinned as literal VALUES in
-    __spark_entry__._KG_GATE_PINNED. Three-way agreement: the pure-Python
-    oracle derives the counts without the engine, the pinned constants
-    must equal them, and the Spark pipeline must reproduce them — drift on
-    any side fails here before the driver's DuckDB gate ever runs."""
-    import __spark_entry__ as E
+    """The kg_pipeline_triples projection (per-annotator deduplicated
+    triple counts over the fixed 120-doc corpus) is pinned as literal
+    VALUES in gates.builders._KG_GATE_PINNED. Three-way agreement: the
+    pure-Python oracle derives the counts without the engine, the pinned
+    constants must equal them, and the Spark pipeline must reproduce them —
+    drift on any side fails here before the DuckDB gate ever runs."""
     import tests.oracle as oracle
+    from pubmedkb_web_spark.gates.builders import _KG_GATE_PINNED
     from pyspark.sql import functions as F
 
-    pinned = dict(E._KG_GATE_PINNED)
+    pinned = dict(_KG_GATE_PINNED)
     assert oracle.pipeline_annotator_counts(120) == pinned
 
     t = runner.run_kg_pipeline(spark, str(tmp_path / "kb120"), n_docs=120)

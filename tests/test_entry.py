@@ -1,8 +1,11 @@
-"""The driver-contract gate, in-suite: every queries() entry runs; every
-oracle_sql() entry matches DuckDB on row count, column names, and
-order-insensitive values (the CORRECTNESS_r{N}.json shape)."""
+"""The gate contract, in-suite: every queries() entry has an
+oracle_sql() twin and matches it in DuckDB on row count, column names, and
+order-insensitive values (the history/CORRECTNESS_r{N}.json shape)."""
 
 from __future__ import annotations
+
+import ast
+import os
 
 import duckdb
 import pandas as pd
@@ -42,10 +45,8 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 @pytest.mark.parametrize("name", FAST)
 def test_gate(name, spark, con):
+    assert name in ORACLES, f"{name}: no oracle_sql() entry"
     sdf = E.queries()[name](spark, SF).toPandas()
-    if name not in ORACLES:
-        assert len(sdf) >= 0  # rows-only contract: runs, stable schema
-        return
     odf = con.execute(ORACLES[name]).fetchdf()
     s, o = normalize(sdf), normalize(odf)
     assert list(s.columns) == list(o.columns), f"{name}: column names differ"
@@ -57,3 +58,19 @@ def test_entry_contract(spark):
     df = E.entry(spark)
     assert df.count() >= 0
     assert df.schema == E.entry(spark).schema
+
+
+def test_bench_headline_names_resolve():
+    """bench.py times each headline name as queries().get(n) or
+    getattr(E, f"q_{n}"), so every name must resolve on the entry module.
+    The list is parsed, not run: bench.py asks for a 48g driver heap."""
+    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "bench.py")) as f:
+        tree = ast.parse(f.read())
+    (names,) = [
+        ast.literal_eval(node.value)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Assign) and ast.unparse(node.targets[0]) == "headline"
+    ]
+    qs = E.queries()
+    missing = [n for n in names if not (qs.get(n) or getattr(E, f"q_{n}", None))]
+    assert names and not missing, f"unresolved bench.py headline names: {missing}"

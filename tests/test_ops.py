@@ -619,7 +619,7 @@ def test_ivf_persisted_index_prunes_partitions(spark, tmp_path):
 def test_ivf_recall_floor_and_monotone(spark):
     """Round-5 VERDICT #3: the recall/nprobe trade is asserted, not just
     recorded (tools/ivf_recall.py writes the full curve for sf0.1 + a
-    skewed corpus into IVF_RECALL.json). Probe sets are nested prefixes
+    skewed corpus into history/IVF_RECALL.json). Probe sets are nested prefixes
     of one stable centroid ranking, so recall must be non-decreasing in
     nprobe, hit the contract floor at nprobe=4, and reach 1.0 at ALL."""
     _, emb = _ivf_fixture(spark, n=500, dim=16, seed=11)

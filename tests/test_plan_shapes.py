@@ -21,6 +21,7 @@ import pytest
 
 import __spark_entry__ as E
 from pubmedkb_web_spark import fixtures
+from pubmedkb_web_spark.gates import builders
 from pubmedkb_web_spark.ops import similarity
 from pubmedkb_web_spark.pipeline import materialize, mentions
 from pubmedkb_web_spark.query import graph, kbqueries
@@ -158,9 +159,9 @@ SHAPES = {
     "qa_target_filter": (_query("qa_target_filter"), [], ["Exchange", "BatchEvalPython"]),
     # vocabulary membership / tf / halves postings dedup inside the
     # per-row array: no aggregation exchange
-    "doc_postings": (_builder(E._doc_postings), [], ["Exchange"]),
-    "tf_postings": (_builder(E._tf_postings), [], ["Exchange"]),
-    "ht_postings": (_builder(E._ht_postings), [], ["Exchange"]),
+    "doc_postings": (_builder(builders._doc_postings), [], ["Exchange"]),
+    "tf_postings": (_builder(builders._tf_postings), [], ["Exchange"]),
+    "ht_postings": (_builder(builders._ht_postings), [], ["Exchange"]),
     # codegen assembly (no ObjectHashAggregate collect_list->map path) and
     # the distinct-token md5 map joined by broadcast
     "embed_text": (_embed_text, ["BroadcastHashJoin"], ["ObjectHashAggregate", "SortMergeJoin"]),

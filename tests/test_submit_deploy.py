@@ -3,7 +3,7 @@
 The full smoke (zip the package, run the checkpointed pipeline + a query
 on local-cluster[2,2,2048] with the zip as the only package source) costs
 ~90 s of JVM/cluster startup, so it lives in tools/submit_smoke.py and
-runs out-of-band (latest result: SUBMIT_SMOKE.json). This suite keeps the
+runs out-of-band (latest result: history/SUBMIT_SMOKE.json). This suite keeps the
 cheap, fast-failing slice: the code-fingerprint source reader must work
 for zipimported modules — the exact failure mode that crashed every
 --py-files executor before round 4 (open() on a path INSIDE the zip)."""

@@ -15,7 +15,7 @@ adding cross-window coverage). The baseline tree is a plain
 
 Usage: python tools/bench_ab.py [cycles] [base_worktree] [base_commit] \
            [base_label] [out.json]
-Defaults reproduce the round-5 run (r3 @ 5df9ee4 -> BENCH_AB_R3_R5.json).
+Defaults reproduce the round-5 run (r3 @ 5df9ee4 -> history/BENCH_AB_R3_R5.json).
 """
 
 import json
@@ -52,7 +52,7 @@ def main() -> None:
     base_commit = sys.argv[3] if len(sys.argv) > 3 else "5df9ee4"
     base_label = sys.argv[4] if len(sys.argv) > 4 else "r3"
     out_path = (
-        sys.argv[5] if len(sys.argv) > 5 else os.path.join(REPO, "BENCH_AB_R3_R5.json")
+        sys.argv[5] if len(sys.argv) > 5 else os.path.join(REPO, "history", "BENCH_AB_R3_R5.json")
     )
     env = {
         **os.environ,

@@ -5,7 +5,7 @@ brute force for nprobe in {1, 2, 4, 8, ALL}, on
   * a skewed-cluster corpus — 75% of vectors in 3 tight clusters, the
     shape where inverted lists collapse if the quantizer can't split mass
 
-writing IVF_RECALL.json at the repo root. tests/test_ops.py asserts the
+writing history/IVF_RECALL.json. tests/test_ops.py asserts the
 recall floor (recall@nprobe=4 >= 0.9) so the number is gated, not just
 recorded.
 
@@ -84,7 +84,7 @@ def main() -> None:
             " the curve is the evidence for that sizing rule."
         ),
     }
-    with open(os.path.join(REPO, "IVF_RECALL.json"), "w") as f:
+    with open(os.path.join(REPO, "history", "IVF_RECALL.json"), "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out))
     spark.stop()
