@@ -88,7 +88,9 @@ def _parse_spec(node):
 
 def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser(prog="pubmedkb_web_spark")
-    p.add_argument("--cores", type=int, default=8)
+    p.add_argument(
+        "--cores", type=int, help="local task slots (default: $SPARK_GRAFT_CPUS, else all)"
+    )
     sub = p.add_subparsers(dest="cmd", required=True)
 
     b = sub.add_parser("build", help="run the M0-M4 KG construction pipeline")

@@ -93,8 +93,9 @@ def _merge(acc: int, val: int) -> int:
     return (acc * _P1 + _P4) & _M64
 
 
-def xxh64(data: bytes, seed: int = 42) -> int:
-    """Standard XXH64 → unsigned 64-bit int."""
+def xxh64(data: bytes) -> int:
+    """Standard XXH64 with Spark's xxhash64 seed (42) → unsigned 64-bit int."""
+    seed = 42
     n = len(data)
     i = 0
     if n >= 32:
@@ -132,15 +133,15 @@ def xxh64(data: bytes, seed: int = 42) -> int:
     return h
 
 
-def xxh64_signed(s: str, seed: int = 42) -> int:
+def xxh64_signed(s: str) -> int:
     """Python mirror of Spark's F.xxhash64 on one string column."""
-    u = xxh64(s.encode("utf-8"), seed)
+    u = xxh64(s.encode("utf-8"))
     return u - (1 << 64) if u >= (1 << 63) else u
 
 
-def xxh64_pmod(s: str, m: int, seed: int = 42) -> int:
+def xxh64_pmod(s: str, m: int) -> int:
     """Python mirror of F.pmod(F.xxhash64(col), m)."""
-    return xxh64_signed(s, seed) % m if m > 0 else 0
+    return xxh64_signed(s) % m if m > 0 else 0
 
 
 def fast_id(*cols: Column) -> Column:

@@ -202,30 +202,26 @@ def paper_meta_html(
     )
 
 
-def reference_list_html(
-    df: DataFrame,
-    pmid: str = "pmid",
-    title: str = "title",
-    order_by: str | None = None,
-) -> DataFrame:
+def reference_list_html(df: DataFrame, order_by: str | None = None) -> DataFrame:
     """QA reference list (kb_utils.py:1362-1376, ``is_html=True``): the
     literal header ``References`` then one
-    ``<a href=...>[PMID-{pmid}]</a> {title}`` line per paper, joined
+    ``<a href=...>[PMID-{pmid}]</a> {title}`` line per paper (columns
+    ``pmid`` and ``title``, ordered by ``order_by``, else ``pmid``), joined
     with ``<br />``. Returns a one-row DataFrame ``(html string)``.
 
     ``df`` is a page (the reference's paper_list is the handful of
     retrieved papers per QA request), so the ordered fold below
     aggregates a bounded page, not a corpus.
     """
-    ordc = F.col(order_by if order_by is not None else pmid)
+    ordc = F.col(order_by if order_by is not None else "pmid")
     # quote_href: PaperQA.get_reference percent-encodes the href pmid
     # (urllib.parse.quote, kb_utils.py:1366) unlike the other anchors
     line = pmid_anchor(
-        F.col(pmid),
-        label=html_escape(F.concat(F.lit("[PMID-"), F.col(pmid).cast("string"), F.lit("]"))),
+        F.col("pmid"),
+        label=html_escape(F.concat(F.lit("[PMID-"), F.col("pmid").cast("string"), F.lit("]"))),
         quote_href=True,
     )
-    line = F.concat(line, F.lit(" "), html_escape(F.col(title)))
+    line = F.concat(line, F.lit(" "), html_escape(F.col("title")))
     rows = df.select(F.struct(ordc.alias("o"), line.alias("line")).alias("s"))
     return rows.agg(
         F.concat(

@@ -394,15 +394,9 @@ def q_odds_ratio_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).alias("sent_idx"),
         F.explode(F.array_intersect(F.col("_toks"), _vocab_arr())).alias("name"),
     )
-    sentences = _t(spark, sf_dir, "documents").select(
-        F.col("doc_id").cast("string").alias("doc_id"), F.lit(0).alias("sent_idx")
-    )
-    # doc_id is unique in documents, so the plain footer-metadata count IS
-    # the distinct (doc_id, sent_idx) total — passing it removes the
-    # distinct+count job pair_contingency would otherwise run.
-    cont = extractors.pair_contingency(
-        mentions, sentences, n_sentences=_t(spark, sf_dir, "documents").count()
-    )
+    # one sentence per document and doc_id is unique in documents, so the
+    # plain footer-metadata count IS the distinct (doc_id, sent_idx) total
+    cont = extractors.pair_contingency(mentions, _t(spark, sf_dir, "documents").count())
     return cont.select("n1", "n2", "a", "b", "c", "d", "odds_ratio", "ci_low", "ci_high")
 
 
@@ -1190,7 +1184,8 @@ def q_kg_extractor_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).alias("sent_idx"),
         F.col("text").alias("sentence"),
     )
-    anns = extractors.extract_all(mentions, sentences)
+    # doc_id is unique in documents: one sentence per document
+    anns = extractors.extract_all(mentions, sentences, n_sentences=docs.count())
     return (
         anns.filter(F.col("annotator").isin("co_occurrence", "odds_ratio"))
         .select(

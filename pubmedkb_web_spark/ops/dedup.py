@@ -29,28 +29,25 @@ from ..functions.hashing import MERSENNE31, affine_params, md5_int60
 from .textstats import _ngrams, word_tokens
 
 
-def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_duplicates(df: DataFrame) -> DataFrame:
     """Groups of byte-identical docs: (content_hash, canonical_id, n_dups).
 
     canonical = min id; only groups with >1 member are duplicates but all
     groups are returned (callers anti-join to drop dups).
     """
     return (
-        df.select(F.col(id_col).alias("doc_id"), F.sha2(F.col(text_col), 256).alias("content_hash"))
+        df.select("doc_id", F.sha2(F.col("text"), 256).alias("content_hash"))
         .groupBy("content_hash")
         .agg(F.min("doc_id").alias("canonical_id"), F.count(F.lit(1)).alias("n_docs"))
     )
 
 
-def shingles(
-    df: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def shingles(df: DataFrame, n: int = 3) -> DataFrame:
     """Distinct token n-gram shingles per doc: (doc_id, shingle), the
     explode of textstats' n-gram array (none for a doc under n tokens)."""
     return (
         df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(_ngrams(word_tokens(text_col), n)).alias("shingle"),
+            "doc_id", F.explode(_ngrams(word_tokens("text"), n)).alias("shingle")
         )
         .distinct()
     )
@@ -227,16 +224,14 @@ def jaccard_pairs(shingle_df: DataFrame, candidate_pairs: DataFrame) -> DataFram
     )
 
 
-def simhash(
-    df: DataFrame, bits: int = 16, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash(df: DataFrame, bits: int = 16) -> DataFrame:
     """(doc_id, simhash): B-bit sign-aggregated fingerprint.
 
     bit b of fingerprint = 1 iff Σ_tokens tf·(2·bit_b(h(token))−1) > 0.
     Entirely integer column math → bit-identical in the DuckDB oracle.
     """
     tok = df.select(
-        F.col(id_col).alias("doc_id"), F.explode(word_tokens(text_col)).alias("token")
+        "doc_id", F.explode(word_tokens("text")).alias("token")
     ).filter(F.length("token") > 0)
     h = md5_int60(F.col("token"))
     # integer bit extraction (shiftright; literal shift counts — the bit

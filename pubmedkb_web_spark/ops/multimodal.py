@@ -45,14 +45,14 @@ FEATURES_SCHEMA = (
 )
 
 
-def synthetic_media(spark, n: int, seed: int = 42) -> DataFrame:
+def synthetic_media(spark, n: int) -> DataFrame:
     """Deterministic fake media table (payload = seeded bytes)."""
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
             for i in pdf["id"]:
                 i = int(i)
-                payload = hashlib.sha256(f"{seed}:{i}".encode()).digest() * (1 + i % 7)
+                payload = hashlib.sha256(f"42:{i}".encode()).digest() * (1 + i % 7)
                 rows.append(
                     (
                         f"m{i:08d}",
@@ -116,10 +116,10 @@ def decode_image(payload: bytes, fake: bool = False) -> dict:
     )
 
 
-def extract_features(media: DataFrame, fake: bool = True, feat_dim: int = 8) -> DataFrame:
+def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
     """mapInPandas feature extraction over Arrow binary batches.
 
-    The 'feature' is a deterministic byte-statistic vector when fake=True;
+    The 'feature' is a deterministic 8-dim byte-statistic vector when fake=True;
     swap the body for a real model without touching the Spark plumbing.
     """
 
@@ -129,9 +129,7 @@ def extract_features(media: DataFrame, fake: bool = True, feat_dim: int = 8) -> 
             for mid, mtype, payload in zip(pdf["media_id"], pdf["media_type"], pdf["payload"]):
                 d = decode_image(bytes(payload), fake=fake)
                 b = bytes(payload)
-                feat = [
-                    round(sum(b[j::feat_dim]) % 997 / 997.0, 6) for j in range(feat_dim)
-                ]
+                feat = [round(sum(b[j::8]) % 997 / 997.0, 6) for j in range(8)]
                 out.append((mid, mtype, d["n_bytes"], d["checksum"], feat))
             yield pd.DataFrame(
                 out, columns=["media_id", "media_type", "n_bytes", "checksum", "feat"]

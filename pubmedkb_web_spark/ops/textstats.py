@@ -47,10 +47,10 @@ def word_tokens(col: Column | str) -> Column:
     return F.array_remove(F.split(F.lower(col), r"\s+"), "")
 
 
-def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def language_id(df: DataFrame) -> DataFrame:
     """Per doc: predicted language = argmax over profile-token hit counts
     (ties broken by language code asc; all-zero → 'und')."""
-    toks = word_tokens(text_col)
+    toks = word_tokens("text")
     scores = []
     for lang, words in sorted(LANG_PROFILES.items()):
         hits = F.size(F.filter(toks, lambda t: t.isin(words)))
@@ -62,14 +62,14 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     ).withColumn("lang_hits", best["hits"].cast("long"))
 
 
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """length/punct/stopword quality features + a blended [0,1] score."""
-    toks = word_tokens(text_col)
+    toks = word_tokens("text")
     n_tokens = F.size(toks).cast("long")
-    n_chars = F.length(F.col(text_col)).cast("long")
+    n_chars = F.length(F.col("text")).cast("long")
     avg_tok_len = F.round(n_chars / F.greatest(n_tokens, F.lit(1)), 6)
     n_punct = (
-        n_chars - F.length(F.regexp_replace(F.col(text_col), r"[^\w\s]", ""))
+        n_chars - F.length(F.regexp_replace(F.col("text"), r"[^\w\s]", ""))
     ).cast("long")
     punct_ratio = F.round(n_punct / F.greatest(n_chars, F.lit(1)), 6)
     n_stop = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS))).cast("long")
@@ -90,12 +90,12 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts(df: DataFrame) -> DataFrame:
     """whitespace token count + BPE-ish regex piece count."""
     return df.select(
         "*",
-        F.size(word_tokens(text_col)).cast("long").alias("ws_tokens"),
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_ISH_PATTERN), 0))
+        F.size(word_tokens("text")).cast("long").alias("ws_tokens"),
+        F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_ISH_PATTERN), 0))
         .cast("long")
         .alias("bpe_tokens"),
     )
@@ -113,12 +113,7 @@ def _ngrams(toks: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def repetition_metrics(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ngram_ns: tuple[int, ...] = (2, 3),
-) -> DataFrame:
+def repetition_metrics(df: DataFrame) -> DataFrame:
     """Gopher-style repetition signals (Rae et al. 2021, table A1) — the
     quality-filter family the reference has no counterpart for, added for
     the LLM-training-data story:
@@ -126,7 +121,7 @@ def repetition_metrics(
     - ``n_lines`` / ``dup_line_frac`` / ``dup_line_char_frac``: non-empty
       ``\\n``-lines; fraction of line OCCURRENCES beyond the first of their
       content, and the character-mass fraction of those repeats.
-    - ``top_{n}gram`` / ``top_{n}gram_frac`` per n in ``ngram_ns``: the most
+    - ``top_{n}gram`` / ``top_{n}gram_frac`` for n = 2 and 3: the most
       frequent word n-gram (ties → lexicographically smallest) and the
       fraction of the document's characters its occurrences cover
       (count * len(gram) / len(text)); 0.0 / '' when the doc has < n tokens.
@@ -137,21 +132,21 @@ def repetition_metrics(
     when the corpus side is small; same-key shuffles otherwise). Output is
     one row per document with >= 1 non-empty line.
     """
-    total_chars = F.length(F.col(text_col)).cast("long")
-    base = df.select(F.col(id_col), F.col(text_col), total_chars.alias("_n_chars"))
+    total_chars = F.length(F.col("text")).cast("long")
+    base = df.select("doc_id", "text", total_chars.alias("_n_chars"))
 
     lines = base.select(
-        id_col,
+        "doc_id",
         "_n_chars",
         F.explode(
-            F.array_remove(F.split(F.col(text_col), "\n"), "")  # codegen == the length>0 lambda filter (split only emits "")
+            F.array_remove(F.split(F.col("text"), "\n"), "")  # codegen == the length>0 lambda filter (split only emits "")
         ).alias("_line"),
     )
-    per_line = lines.groupBy(id_col, "_n_chars", "_line").agg(
+    per_line = lines.groupBy("doc_id", "_n_chars", "_line").agg(
         F.count(F.lit(1)).alias("_cnt")
     )
     occ_chars = F.sum(F.col("_cnt") * F.length("_line"))
-    out = per_line.groupBy(id_col).agg(
+    out = per_line.groupBy("doc_id").agg(
         F.first("_n_chars").alias("_n_chars"),
         F.sum("_cnt").cast("long").alias("n_lines"),
         F.round(F.lit(1.0) - F.count(F.lit(1)) / F.sum("_cnt"), 6).alias(
@@ -164,20 +159,20 @@ def repetition_metrics(
         ).alias("dup_line_char_frac"),
     )
 
-    for n in ngram_ns:
+    for n in (2, 3):
         grams = base.select(
-            id_col,
-            F.explode(_ngrams(word_tokens(text_col), n)).alias("_gram"),
+            "doc_id",
+            F.explode(_ngrams(word_tokens("text"), n)).alias("_gram"),
         )
-        counts = grams.groupBy(id_col, "_gram").agg(F.count(F.lit(1)).alias("_cnt"))
+        counts = grams.groupBy("doc_id", "_gram").agg(F.count(F.lit(1)).alias("_cnt"))
         # min over (neg count, gram) = highest count, lexicographic tiebreak
-        top = counts.groupBy(id_col).agg(
+        top = counts.groupBy("doc_id").agg(
             F.min(F.struct((-F.col("_cnt")).alias("n"), F.col("_gram").alias("g"))).alias(
                 "_top"
             )
         )
         out = (
-            out.join(top, id_col, "left")
+            out.join(top, "doc_id", "left")
             .withColumn(f"top_{n}gram", F.coalesce(F.col("_top.g"), F.lit("")))
             .withColumn(
                 f"top_{n}gram_frac",
@@ -195,51 +190,36 @@ def repetition_metrics(
     return out.drop("_n_chars")
 
 
-def gopher_filters(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_word_ratio: float = 0.1,
-    max_bullet_line_frac: float = 0.9,
-    max_ellipsis_line_frac: float = 0.3,
-    min_alpha_word_frac: float = 0.8,
-    min_stopwords: int = 2,
-) -> DataFrame:
+def gopher_filters(df: DataFrame) -> DataFrame:
     """Gopher rule-based quality filters (Rae et al. 2021, table A1) —
     the boolean keep/drop companion to :func:`quality_score` (blended
-    score) and :func:`repetition_metrics` (repetition signals). Defaults
-    are the published thresholds.
+    score) and :func:`repetition_metrics` (repetition signals), at the
+    published thresholds.
 
     Per document: the raw measures, one boolean per rule computed on the
     ROUNDED measure (so the comparisons are engine-portable at boundary
     values), and ``gopher_keep`` = AND of all rules:
 
-    - ``word_count`` in [``min_words``, ``max_words``]
-    - ``mean_word_len`` (token-length mean, not chars/tokens) in
-      [``min_mean_word_len``, ``max_mean_word_len``]
+    - ``word_count`` in [50, 100,000]
+    - ``mean_word_len`` (token-length mean, not chars/tokens) in [3, 10]
     - ``symbol_word_ratio`` ('#' chars + '...' occurrences per word)
-      <= ``max_symbol_word_ratio``
-    - ``bullet_line_frac`` / ``ellipsis_line_frac`` over non-empty lines
-      <= their maxima (lines starting with -, *, or • / ending with
+      <= 0.1
+    - ``bullet_line_frac`` <= 0.9 / ``ellipsis_line_frac`` <= 0.3 over
+      non-empty lines (lines starting with -, *, or • / ending with
       '...' or '…')
-    - ``alpha_word_frac`` (words containing a letter) >=
-      ``min_alpha_word_frac``
-    - ``n_stopwords`` >= ``min_stopwords`` (the "required words" rule,
-      over :data:`STOPWORDS`)
+    - ``alpha_word_frac`` (words containing a letter) >= 0.8
+    - ``n_stopwords`` >= 2 (the "required words" rule, over
+      :data:`STOPWORDS`)
 
     Shape at scale: pure column expressions over one scan — map-only, no
     shuffle, no Python; the token and line rules are array lambdas, which
     Spark evaluates interpreted. At 100 TB this is the cheap first pass
     that drops documents before any shuffling operator sees them.
     """
-    toks = word_tokens(text_col)
+    toks = word_tokens("text")
     n = F.size(toks).cast("long")
     safe_n = F.greatest(n, F.lit(1))
-    text = F.col(text_col)
+    text = F.col("text")
     mean_len = F.round(
         F.aggregate(toks, F.lit(0).cast("long"), lambda a, t: a + F.length(t)) / safe_n,
         6,
@@ -265,14 +245,13 @@ def gopher_filters(
     # booleans on the ROUNDED measure expressions (engine-portable
     # boundaries) — identical values to comparing the selected columns
     rules = {
-        "pass_word_count": (n >= min_words) & (n <= max_words),
-        "pass_mean_word_len": (mean_len >= min_mean_word_len)
-        & (mean_len <= max_mean_word_len),
-        "pass_symbol_ratio": symbol_ratio <= max_symbol_word_ratio,
-        "pass_bullet_lines": bullet_frac <= max_bullet_line_frac,
-        "pass_ellipsis_lines": ellipsis_frac <= max_ellipsis_line_frac,
-        "pass_alpha_words": alpha_frac >= min_alpha_word_frac,
-        "pass_stopwords": n_stop >= min_stopwords,
+        "pass_word_count": (n >= 50) & (n <= 100_000),
+        "pass_mean_word_len": (mean_len >= 3.0) & (mean_len <= 10.0),
+        "pass_symbol_ratio": symbol_ratio <= 0.1,
+        "pass_bullet_lines": bullet_frac <= 0.9,
+        "pass_ellipsis_lines": ellipsis_frac <= 0.3,
+        "pass_alpha_words": alpha_frac >= 0.8,
+        "pass_stopwords": n_stop >= 2,
     }
     keep = F.lit(True)
     for cond in rules.values():
@@ -288,7 +267,7 @@ def gopher_filters(
         **rules,
         "gopher_keep": keep,
     }
-    return df.select(id_col, *(c.alias(n) for n, c in cols.items()))
+    return df.select("doc_id", *(c.alias(n) for n, c in cols.items()))
 
 
 # PII patterns, restricted to the Java-regex ∩ RE2 common subset (no
@@ -300,7 +279,7 @@ PII_IPV4 = r"\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b"
 PII_PHONE = r"\+?\d[\d()\-.]{5,}\d"
 
 
-def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def pii_scrub(df: DataFrame) -> DataFrame:
     """Regex PII detection + redaction (the BigCode/CCNet-style scrub pass
     every LLM training-data pipeline runs before tokenization).
 
@@ -314,7 +293,7 @@ def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     Shape at scale: three chained ``regexp_replace`` column expressions
     over one scan — map-only, no shuffle, whole-stage codegen.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     n_emails = F.size(F.regexp_extract_all(text, F.lit(PII_EMAIL), 0)).cast("long")
     t1 = F.regexp_replace(text, PII_EMAIL, "[EMAIL]")
     n_ipv4 = F.size(F.regexp_extract_all(t1, F.lit(PII_IPV4), 0)).cast("long")
@@ -328,7 +307,7 @@ def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
         "pii_total": n_emails + n_ipv4 + n_phones,
         "pii_redacted": t3,
     }
-    return df.select(id_col, *(c.alias(n) for n, c in cols.items()))
+    return df.select("doc_id", *(c.alias(n) for n, c in cols.items()))
 
 
 # tiny placeholder blocklist — the C4 "bad words" rule; real deployments
@@ -336,22 +315,16 @@ def pii_scrub(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
 C4_BADWORDS = ["viagra", "casino", "lottery"]
 
 
-def c4_line_filters(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_line_words: int = 3,
-    min_sentences: int = 5,
-) -> DataFrame:
+def c4_line_filters(df: DataFrame) -> DataFrame:
     """C4-style line-level cleaning (Raffel et al. 2020 §2.2) — the
     line-granular companion to the doc-level :func:`gopher_filters`:
 
     - a LINE is kept iff it (trimmed) ends in terminal punctuation
-      (``. ! ? "``), has >= ``min_line_words`` whitespace words, and does
+      (``. ! ? "``), has >= 3 whitespace words, and does
       not contain "javascript" (case-insensitive);
     - ``c4_clean_text`` = kept lines re-joined with newlines;
-    - the PAGE is kept (``c4_keep``) iff the cleaned text has >=
-      ``min_sentences`` sentence-terminal marks and the raw text has no
+    - the PAGE is kept (``c4_keep``) iff the cleaned text has >= 5
+      sentence-terminal marks and the raw text has no
       "lorem ipsum", no ``{``, and no blocklist word
       (:data:`C4_BADWORDS`, word-boundary match).
 
@@ -360,7 +333,7 @@ def c4_line_filters(
     :func:`gopher_filters` this runs before any shuffling operator so
     dropped pages never reach a shuffle.
     """
-    text = F.col(text_col)
+    text = F.col("text")
     lines = F.filter(
         F.transform(F.split(text, "\n"), lambda l: F.trim(l)),
         lambda l: F.length(l) > 0,
@@ -370,7 +343,7 @@ def c4_line_filters(
         lambda l: l.rlike(r'[.!?"]$')
         & (
             F.size(F.filter(F.split(l, r"\s+"), lambda t: F.length(t) > 0))
-            >= min_line_words
+            >= 3
         )
         & ~F.lower(l).contains("javascript"),
     )
@@ -380,7 +353,7 @@ def c4_line_filters(
     has_brace = text.contains("{")
     bad_pat = r"\b(" + "|".join(C4_BADWORDS) + r")\b"
     has_bad = F.lower(text).rlike(bad_pat)
-    keep = (n_sent >= min_sentences) & ~has_lorem & ~has_brace & ~has_bad
+    keep = (n_sent >= 5) & ~has_lorem & ~has_brace & ~has_bad
     cols = {
         "c4_n_lines": F.size(lines).cast("long"),
         "c4_kept_lines": F.size(kept).cast("long"),
@@ -394,7 +367,7 @@ def c4_line_filters(
         "c4_keep": keep,
         "c4_clean_text": clean,
     }
-    return df.select(id_col, *(c.alias(n) for n, c in cols.items()))
+    return df.select("doc_id", *(c.alias(n) for n, c in cols.items()))
 
 
 def decontaminate(
@@ -402,9 +375,6 @@ def decontaminate(
     benchmark: DataFrame,
     n: int = 13,
     min_hits: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str = "text",
 ) -> DataFrame:
     """Benchmark decontamination for training corpora (the GPT-3 appendix-C
     procedure, also PaLM/Llama eval hygiene): flag every training document
@@ -429,14 +399,14 @@ def decontaminate(
     contamination).
     """
     doc_sh = docs.select(
-        F.col(id_col), F.explode(_ngrams(word_tokens(text_col), n)).alias("_sh")
+        "doc_id", F.explode(_ngrams(word_tokens("text"), n)).alias("_sh")
     )
     bench_sh = benchmark.select(
-        F.explode(_ngrams(word_tokens(bench_text_col), n)).alias("_sh")
+        F.explode(_ngrams(word_tokens("text"), n)).alias("_sh")
     ).distinct()
     per_doc = (
         doc_sh.join(F.broadcast(bench_sh), "_sh")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count_distinct("_sh").alias("n_contaminated_ngrams"))
     )
     # r7 (round-6 ADVICE): force the broadcast — per_doc is an aggregate
@@ -446,7 +416,7 @@ def decontaminate(
     # SortMergeJoin at larger scale. The explicit hint makes the audited
     # "clean docs cost zero shuffle bytes" shape hold by construction.
     return (
-        docs.join(F.broadcast(per_doc), id_col, "left")
+        docs.join(F.broadcast(per_doc), "doc_id", "left")
         .withColumn(
             "n_contaminated_ngrams",
             F.coalesce("n_contaminated_ngrams", F.lit(0).cast("long")),
@@ -455,13 +425,11 @@ def decontaminate(
     )
 
 
-def fingerprint(
-    df: DataFrame, text_col: str = "text", max_tokens: int = 64
-) -> DataFrame:
-    """Positional rolling fingerprint over the first ``max_tokens`` tokens:
+def fingerprint(df: DataFrame) -> DataFrame:
+    """Positional rolling fingerprint over the first 64 tokens:
     Σ (pos+1)·(h(token) mod M31) mod M31 — pure integer math, exact in the
     DuckDB oracle, order-sensitive (unlike a bag-of-words hash)."""
-    toks = F.slice(word_tokens(text_col), 1, max_tokens)
+    toks = F.slice(word_tokens("text"), 1, 64)
     acc = F.aggregate(
         F.zip_with(
             toks,

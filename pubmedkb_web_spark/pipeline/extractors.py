@@ -219,11 +219,7 @@ def _erfc_sqrt_half(chi2: pd.Series) -> pd.Series:
     return chi2.map(lambda x: math.erfc(math.sqrt(x / 2.0)) if pd.notna(x) else None)
 
 
-def pair_contingency(
-    mentions: DataFrame,
-    sentences: DataFrame,
-    n_sentences: int | None = None,
-) -> DataFrame:
+def pair_contingency(mentions: DataFrame, n_sentences: int) -> DataFrame:
     """Corpus-level 2×2 contingency per unordered lowercased name pair.
 
     a = sentences with both names, b = with n1 only, c = with n2 only,
@@ -231,14 +227,11 @@ def pair_contingency(
     share of sentences) reach the pair count's reducer pre-combined by its
     map-side partial count.
 
-    ``n_sentences``: total distinct sentence count. When the caller
-    already knows it (the pipeline runner records the sentences stage's
-    committed row count in its lineage marker, and that table is one row
-    per (doc_id, sent_idx) by construction), passing it removes a FULL
-    distinct+count job over the sentence table from this stage's critical
-    path — one of the measured driver-phase serial costs behind the
-    annotations stage's weak 2→8 scaling (round-3 VERDICT #3). None →
-    computed here as before.
+    ``n_sentences``: total distinct sentence count, N. The caller passes
+    it: the pipeline runner reads the sentences stage's committed row
+    count from its lineage marker (that table is one row per (doc_id,
+    sent_idx) by construction), so no distinct+count job over the
+    sentence table sits on this stage's critical path.
     """
     # r7: one collect_set aggregation replaces the old distinct + per-key
     # self-join (distinct exchange + two join exchanges + SMJ): the
@@ -267,12 +260,6 @@ def pair_contingency(
     name_counts = per_sent.select(F.explode("_nms").alias("nm")).groupBy("nm").agg(
         F.count(F.lit(1)).alias("nc")
     )
-    total = (
-        n_sentences
-        if n_sentences is not None
-        else sentences.select("doc_id", "sent_idx").distinct().count()
-    )
-
     c1 = name_counts.select(F.col("nm").alias("n1"), F.col("nc").alias("n1c"))
     c2 = name_counts.select(F.col("nm").alias("n2"), F.col("nc").alias("n2c"))
     cont = (
@@ -280,7 +267,7 @@ def pair_contingency(
         .join(F.broadcast(c2), "n2")
         .withColumn("b", F.col("n1c") - F.col("a"))
         .withColumn("c", F.col("n2c") - F.col("a"))
-        .withColumn("d", F.lit(total) - F.col("a") - F.col("b") - F.col("c"))
+        .withColumn("d", F.lit(n_sentences) - F.col("a") - F.col("b") - F.col("c"))
     )
     # Haldane-Anscombe 0.5 correction keeps OR/CI finite on zero cells.
     aa, bb, cc, dd = [F.col(x) + F.lit(0.5) for x in ("a", "b", "c", "d")]
@@ -329,13 +316,13 @@ def extract_odds_ratio(pairs: DataFrame, contingency: DataFrame) -> DataFrame:
 
 
 def extract_all_unioned(
-    mentions: DataFrame, sentences: DataFrame, n_sentences: int | None = None
+    mentions: DataFrame, sentences: DataFrame, n_sentences: int
 ) -> DataFrame:
     """Reference formulation: four branch extractors unioned. Kept as the
     semantic spec for :func:`extract_all` (the fused single-pass plan) —
     the parity test asserts both produce identical row multisets."""
     pairs = mention_pairs(mentions, sentences)
-    cont = pair_contingency(mentions, sentences, n_sentences=n_sentences)
+    cont = pair_contingency(mentions, n_sentences)
     anns = (
         extract_co_occurrence(pairs)
         .unionByName(extract_ore(pairs))
@@ -345,9 +332,7 @@ def extract_all_unioned(
     return anns
 
 
-def extract_all(
-    mentions: DataFrame, sentences: DataFrame, n_sentences: int | None = None
-) -> DataFrame:
+def extract_all(mentions: DataFrame, sentences: DataFrame, n_sentences: int) -> DataFrame:
     """Run all four extractors in ONE pass over the pair relation.
 
     Round 2 unioned four branches, each recomputing the (self-join +
@@ -375,7 +360,7 @@ def extract_all(
         .drop("sentence")
         .withColumn("_btoks", F.split(F.col("_between"), " "))
     )
-    cont = pair_contingency(mentions, sentences, n_sentences=n_sentences)
+    cont = pair_contingency(mentions, n_sentences)
     keyed = thin.withColumn(
         "n1", F.least(F.lower("h_name"), F.lower("t_name"))
     ).withColumn("n2", F.greatest(F.lower("h_name"), F.lower("t_name")))

@@ -115,6 +115,17 @@ def _fingerprint(name: str, config: dict, upstream: list[str]) -> str:
     return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
 
+def _parquet_files(path: str) -> list[str]:
+    """The ``.parquet`` files under a stage directory, relative to it and
+    sorted: the stage's partitions as the marker records them."""
+    return sorted(
+        os.path.relpath(os.path.join(root, fn), path)
+        for root, _dirs, fnames in os.walk(path)
+        for fn in fnames
+        if fn.endswith(".parquet")
+    )
+
+
 def _partition_metrics(path: str) -> list[dict]:
     """Per-output-partition row counts read from the committed parquet
     FOOTERS (pyarrow metadata only — no Spark job, no data scan, ~ms).
@@ -126,19 +137,13 @@ def _partition_metrics(path: str) -> list[dict]:
     honest per-partition lineage record."""
     import pyarrow.parquet as pq
 
-    files = []
-    for root, _dirs, fnames in os.walk(path):
-        for fn in fnames:
-            if fn.endswith(".parquet"):
-                files.append(os.path.join(root, fn))
-    files.sort()
     return [
         {
             "partition": i,
-            "rows": int(pq.ParquetFile(f).metadata.num_rows),
-            "file": os.path.relpath(f, path),
+            "rows": int(pq.ParquetFile(os.path.join(path, f)).metadata.num_rows),
+            "file": f,
         }
-        for i, f in enumerate(files)
+        for i, f in enumerate(_parquet_files(path))
     ]
 
 
@@ -227,8 +232,10 @@ class CheckpointedPipeline:
         partition_by: list[str] | None = None,
     ) -> DataFrame:
         """Commit one stage, or read it back when its marker matches its
-        fingerprint. Safe to call from several threads at once for
-        different stages; each upstream must already be in ``results``."""
+        fingerprint and the stage directory holds exactly the part files
+        the marker lists (a file listing, no Spark job). Safe to call from
+        several threads at once for different stages; each upstream must
+        already be in ``results``."""
         config = config or {}
         upstream_fps = [self.results[u].fingerprint for u in (upstream or [])]
         fp = _fingerprint(name, config, upstream_fps)
@@ -236,7 +243,11 @@ class CheckpointedPipeline:
         marker = self._marker_path(name)
 
         meta = self._read_marker(marker) if self.resume else None
-        if meta is not None and meta.get("fingerprint") == fp:
+        if (
+            meta is not None
+            and meta.get("fingerprint") == fp
+            and [p["file"] for p in meta.get("partitions", [])] == _parquet_files(path)
+        ):
             df = self.spark.read.schema(StructType.fromJson(meta["schema"])).parquet(path)
             self.results[name] = StageResult(
                 name, path, fp, meta["row_count"], recomputed=False,

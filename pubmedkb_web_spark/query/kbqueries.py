@@ -15,6 +15,7 @@ from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from . import bound
+from .retrieval import RANK_DEPTH
 
 # ---------------------------------------------------------------- V2G (J8)
 
@@ -178,13 +179,7 @@ def glof_rollup(glof: DataFrame) -> DataFrame:
 # ---------------------------------------------- QA early-stop quotas (A9)
 
 def early_stop_quota(
-    ranked: DataFrame,
-    doc_col: str = "doc_id",
-    triplet_count_col: str = "n_triplets",
-    rank_col: str = "rank",
-    min_docs: int = 10,
-    min_triplets: int = 30,
-    max_rank: int = 10_000,
+    ranked: DataFrame, min_docs: int = 10, min_triplets: int = 30
 ) -> DataFrame:
     """Take-while over a ranked stream: keep rows until cumulative
     #docs ≥ min_docs AND cumulative #triplets ≥ min_triplets
@@ -193,13 +188,13 @@ def early_stop_quota(
 
     The unpartitioned running-sum window is safe only because the input is a
     bounded ranked stream (the reference feeds it its top-10000 retrieval
-    list, kb_utils.py:2424); ``max_rank`` enforces that bound so an unbounded
-    relation can never reach the single-task window.
+    list, kb_utils.py:2424); ``retrieval.RANK_DEPTH`` enforces that bound
+    so an unbounded relation can never reach the single-task window.
     """
-    ranked = ranked.filter(F.col(rank_col) <= max_rank)
-    w = W.orderBy(F.col(rank_col).asc()).rowsBetween(W.unboundedPreceding, -1)
-    before_docs = F.coalesce(F.count(F.col(doc_col)).over(w), F.lit(0))
-    before_trip = F.coalesce(F.sum(F.col(triplet_count_col)).over(w), F.lit(0))
+    ranked = ranked.filter(F.col("rank") <= RANK_DEPTH)
+    w = W.orderBy(F.col("rank").asc()).rowsBetween(W.unboundedPreceding, -1)
+    before_docs = F.coalesce(F.count(F.col("doc_id")).over(w), F.lit(0))
+    before_trip = F.coalesce(F.sum(F.col("n_triplets")).over(w), F.lit(0))
     return (
         ranked.withColumn("_docs_before", before_docs)
         .withColumn("_trip_before", before_trip)

@@ -33,41 +33,35 @@ BM25_K1 = 1.5
 BM25_B = 0.75
 
 
-def build_term_postings(corpus: DataFrame, doc_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def build_term_postings(corpus: DataFrame) -> DataFrame:
     """corpus → (term, doc_id, tf, dl). One explode + one groupBy."""
-    toks = word_tokens(text_col)
+    toks = word_tokens("text")
     exploded = corpus.select(
-        F.col(doc_col).alias("doc_id"),
+        "doc_id",
         F.size(toks).alias("dl"),
         F.explode(toks).alias("term"),
     )
     return exploded.groupBy("term", "doc_id", "dl").agg(F.count(F.lit(1)).alias("tf"))
 
 
-def build_bm25_index(
-    corpus: DataFrame,
-    out_path: str,
-    doc_col: str = "doc_id",
-    text_col: str = "text",
-    n_index_partitions: int | None = None,
-) -> tuple[DataFrame, int, float]:
+def build_bm25_index(corpus: DataFrame, out_path: str) -> tuple[DataFrame, int, float]:
     """Materialize the BM25 index ONCE — the reference serves queries from
     a prebuilt mmap index (kb_utils.py:895-918); scoring must never pay the
     corpus pass again.
 
-    Postings are range-partitioned and sorted by term so a query's
-    ``term IN (...)`` predicate prunes row groups at the scan (parquet
-    min/max statistics on the sort column); corpus stats (n_docs, avgdl)
+    Postings are range-partitioned (one range per default-parallelism
+    slot) and sorted by term so a query's ``term IN (...)`` predicate
+    prunes row groups at the scan (parquet min/max statistics on the sort
+    column); corpus stats (n_docs, avgdl)
     land in a sidecar JSON next to the parquet. Returns
     (postings, n_docs, avgdl) reloaded from the written artifact."""
     import json
     import os
 
     spark = corpus.sparkSession
-    tp = build_term_postings(corpus, doc_col, text_col)
-    n = n_index_partitions or spark.sparkContext.defaultParallelism
+    tp = build_term_postings(corpus)
     (
-        tp.repartitionByRange(n, "term")
+        tp.repartitionByRange(spark.sparkContext.defaultParallelism, "term")
         .sortWithinPartitions("term")
         .write.mode("overwrite")
         .parquet(out_path)
@@ -97,8 +91,6 @@ def bm25_score(
     query_terms: list[str],
     n_docs: int,
     avgdl: float,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
     top_k: int | None = 10_000,
 ) -> DataFrame:
     """Score all docs containing any query term; top_k by (score desc, doc asc).
@@ -116,8 +108,9 @@ def bm25_score(
         "idf",
         F.log(1.0 + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
     )
-    tf_part = (F.col("tf") * (k1 + 1)) / (
-        F.col("tf") + k1 * (1 - b + b * F.col("dl") / F.lit(float(avgdl)))
+    tf_part = (F.col("tf") * (BM25_K1 + 1)) / (
+        F.col("tf")
+        + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.lit(float(avgdl)))
     )
     out = (
         scored.withColumn("term_score", F.col("idf") * tf_part)
@@ -133,19 +126,18 @@ def rrf_fuse(
     ranked_a: DataFrame,
     ranked_b: DataFrame,
     key: str = "doc_id",
-    k: int = RRF_K,
     top_k: int = 1_000,
 ) -> DataFrame:
     """Reciprocal-rank fusion of two (key, rank) relations
-    (kb_utils.py:997,1016-1022): full outer join, 1/(rank+k) summed,
+    (kb_utils.py:997,1016-1022): full outer join, 1/(rank+RRF_K) summed,
     absent side contributes 0."""
     a = ranked_a.select(key, F.col("rank").alias("rank_a"))
     b = ranked_b.select(key, F.col("rank").alias("rank_b"))
     fused = a.join(b, key, "full_outer").withColumn(
         "rrf",
         F.round(
-            F.coalesce(1.0 / (F.col("rank_a") + k), F.lit(0.0))
-            + F.coalesce(1.0 / (F.col("rank_b") + k), F.lit(0.0)),
+            F.coalesce(1.0 / (F.col("rank_a") + RRF_K), F.lit(0.0))
+            + F.coalesce(1.0 / (F.col("rank_b") + RRF_K), F.lit(0.0)),
             8,
         ),
     )
@@ -160,18 +152,17 @@ def rank_by(
     order_col: str,
     key: str = "doc_id",
     ascending: bool = False,
-    depth: int = RANK_DEPTH,
 ) -> DataFrame:
     """(key, rank) with deterministic tiebreak on the key, capped at
-    ``depth``: ``orderBy().limit(depth)`` plans TakeOrderedAndProject
+    ``RANK_DEPTH``: ``orderBy().limit(RANK_DEPTH)`` plans TakeOrderedAndProject
     (per-partition heaps, no full-relation sort), so the row_number window
-    numbers ≤depth survivors instead of shuffling every row into one task.
+    numbers ≤RANK_DEPTH survivors instead of shuffling every row into one task.
     The reference never ranks an unbounded relation — BM25 is top-10000 and
     impact lists are top-k (kb_utils.py:997-1033) — so fusion semantics are
-    identical: a key outside the top ``depth`` contributes 0 to RRF."""
+    identical: a key outside the top ``RANK_DEPTH`` contributes 0 to RRF."""
     oc = F.col(order_col).asc() if ascending else F.col(order_col).desc()
     order = [oc, F.col(key).asc()]
-    limited = df.select(key, order_col).orderBy(*order).limit(depth)
+    limited = df.select(key, order_col).orderBy(*order).limit(RANK_DEPTH)
     return limited.withColumn("rank", F.row_number().over(W.orderBy(*order)))
 
 
@@ -280,7 +271,6 @@ def cosine_top_k(
     query: list[float],
     top_k: int = 20,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Brute-force exact top-k (the reference's Qdrant call is exact at its
     collection sizes too, kb_utils.py:1112-1154): (id, cos_sim) by cos_sim
@@ -291,7 +281,7 @@ def cosine_top_k(
     return (
         embeddings.select(
             F.col(id_col),
-            F.round(cosine(F.col(vec_col), qcol), 6).alias("cos_sim"),
+            F.round(cosine(F.col("embedding"), qcol), 6).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), F.col(id_col).asc())
         .limit(top_k)

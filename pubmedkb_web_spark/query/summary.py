@@ -528,7 +528,6 @@ def summarize_page(
     e1_spec=None,
     e2_spec=None,
     pmid=None,
-    seed: int = 42,
 ) -> dict:
     """Driver-side replica of the reference's Summary pipeline
     (summary_utils.py:586-948) over a collected, hydrated page.
@@ -710,7 +709,7 @@ def summarize_page(
         # seeded template choice: the reference's random.choice
         # (summary_utils.py:919) made deterministic per passage content
         rel_key = ":".join(f"{r['doc_id']}:{r['ann_id']}" for r in rel_rows)
-        rng = random.Random(f"{seed}:{ptype}:{tt}:{rel_key}")
+        rng = random.Random(f"42:{ptype}:{tt}:{rel_key}")
         text, spans = fill_template(rng.choice(pool), terms)
         passages.append(
             {

@@ -23,6 +23,9 @@ from pyspark.sql import functions as F
 
 from ..functions.hgvsp import parse_hgvsp_col
 
+# seeds both reports' template choice, so a report depends on its record only
+REPORT_SEED = 42
+
 # ===========================================================================
 # Full-fidelity germline VarSum (VarSum_germline.py:55-277 table_cleaning,
 # 333-585 templates; VarSum_utils.py:37-76 translation maps). Input columns
@@ -439,12 +442,12 @@ def _cds_phrase_zh(row: dict) -> str:
     return f"第{positions[0]}個核苷酸"
 
 
-def render_report_en(row: dict, seed: int = 42) -> str:
+def render_report_en(row: dict) -> str:
     """Full English germline report (template_enus,
     VarSum_germline.py:444-585). Template variants are chosen with a
     content-seeded RNG — the reference randomizes (l.740-752); here output
     is deterministic per record."""
-    rng = random.Random(f"{seed}:en:{row.get('gene_name')}:{row.get('hgvsc')}:{row.get('hgvsp')}")
+    rng = random.Random(f"{REPORT_SEED}:en:{row.get('gene_name')}:{row.get('hgvsc')}:{row.get('hgvsp')}")
     parts: list[str] = []
     if row.get("gene_name", ".") != ".":
         if row.get("hgvsc", ".") == ".":
@@ -503,10 +506,10 @@ def render_report_en(row: dict, seed: int = 42) -> str:
     return " ".join(parts)
 
 
-def render_report_zh(row: dict, seed: int = 42) -> str:
+def render_report_zh(row: dict) -> str:
     """Full Traditional-Chinese germline report (template_zhtw,
     VarSum_germline.py:333-441), deterministic template choice."""
-    rng = random.Random(f"{seed}:zh:{row.get('gene_name')}:{row.get('hgvsc')}:{row.get('hgvsp')}")
+    rng = random.Random(f"{REPORT_SEED}:zh:{row.get('gene_name')}:{row.get('hgvsc')}:{row.get('hgvsp')}")
     parts: list[str] = []
     if row.get("gene_name", ".") != ".":
         if row.get("hgvsc", ".") == ".":

@@ -24,31 +24,22 @@ def build_session(
     shuffle_partitions: int | None = None,
     driver_memory: str = "24g",
     extra_conf: dict[str, str] | None = None,
-    master: str | None = None,
 ) -> SparkSession:
-    """Build a session.
+    """Build a ``local[cores]`` session.
 
-    ``cores`` defaults to $SPARK_GRAFT_CPUS or '*'. On a real cluster the
-    master/memory settings come from spark-submit and these builder calls
-    are inert — only the sql confs matter.
-
-    ``master`` (or $SPARK_GRAFT_MASTER) overrides the ``local[cores]``
-    default — e.g. ``local-cluster[4,8,20480]`` runs 4 separate executor
-    PROCESSES of 8 cores each, the honest single-box analog of a
-    multi-executor cluster (separate JVMs, separate Python worker pools,
-    separate kernel address spaces — a 32-thread single JVM shares one
-    mmap lock across all task threads and anti-scales on shuffle-file
-    churn; real clusters never run one 32-thread executor per box).
+    ``cores`` defaults to $SPARK_GRAFT_CPUS or '*'; ``shuffle_partitions``
+    to $SPARK_GRAFT_CPUS or 32. On a real cluster the master/memory
+    settings come from spark-submit and these builder calls are inert —
+    only the sql confs matter.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
         shuffle_partitions = int(env) if env and env.isdigit() else DEFAULT_SHUFFLE_PARTITIONS
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{cores}]"
 
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")

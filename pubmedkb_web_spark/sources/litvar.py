@@ -151,12 +151,7 @@ def query_variant(
     )
 
 
-def litvar_enrich(
-    queries: DataFrame,
-    query_col: str = "query",
-    *,
-    fetcher: Callable[[str], str],
-) -> DataFrame:
+def litvar_enrich(queries: DataFrame, *, fetcher: Callable[[str], str]) -> DataFrame:
     """Bulk enrichment: fan the fetch out per-partition (each executor
     issues its own HTTP calls / offline lookups via ``mapInPandas``),
     then run the same JVM parse. The UDF only fetches and flattens —
@@ -171,7 +166,7 @@ def litvar_enrich(
 
         for pdf in batches:
             rows = []
-            for q in pdf[query_col]:
+            for q in pdf["query"]:
                 for result in json.loads(fetcher(q)):
                     rows.append(
                         {
@@ -187,7 +182,7 @@ def litvar_enrich(
                 rows, columns=[f.name for f in out_schema.fields]
             )
 
-    raw = queries.select(query_col).distinct().mapInPandas(
+    raw = queries.select("query").distinct().mapInPandas(
         _fetch_batches, schema=out_schema
     )
     return parse_litvar(raw).select("query", "id_list", "name_list", "gene_list")

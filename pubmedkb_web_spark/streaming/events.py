@@ -22,10 +22,10 @@ def read_events_stream(spark: SparkSession, path_glob: str) -> DataFrame:
     return spark.readStream.schema(EVENTS_DDL).parquet(path_glob)
 
 
-def windowed_counts(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
+def windowed_counts(events: DataFrame, window: str = "1 hour") -> DataFrame:
     """Tumbling-window counts + value sums per event_type, late data beyond
-    the watermark dropped."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
+    a 2-hour watermark dropped."""
+    src = events.withWatermark("ts", "2 hours") if events.isStreaming else events
     return (
         src.groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("value_sum"))
@@ -38,15 +38,15 @@ def windowed_counts(events: DataFrame, window: str = "1 hour", watermark: str = 
     )
 
 
-def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "complete") -> None:
+def run_to_memory(stream_df: DataFrame, name: str) -> None:
     """Drive a streaming query to completion synchronously (test harness).
 
-    Default output mode is ``complete``: with availableNow + a finite input
+    The output mode is ``complete``: with availableNow + a finite input
     the watermark never passes the last window, so ``append`` would emit
     nothing for windowed aggregations — the standard finite-input pitfall.
     """
     q = (
-        stream_df.writeStream.outputMode(output_mode)
+        stream_df.writeStream.outputMode("complete")
         .format("memory")
         .queryName(name)
         .trigger(availableNow=True)

@@ -251,22 +251,43 @@ def test_build_jobs_carry_the_callers_job_group(spark, tmp_path):
     assert len(tracker.getJobIdsForGroup("kg_build_caller")) > 20
 
 
-def test_truncated_marker_recomputes_from_that_stage(spark, tmp_path):
-    """A torn ``_graft_meta.json`` is a stale marker, not a crash: resume
-    recomputes from that stage, outputs are identical, and publishing
-    markers leaves no temp file behind."""
-    out = str(tmp_path / "kb")
-    first = _collect_triples(runner.run_kg_pipeline(spark, out, n_docs=40))
-    marker = os.path.join(out, "annotations", runner.MARKER)
+def _truncate_marker(stage_dir):
+    marker = os.path.join(stage_dir, runner.MARKER)
     with open(marker, "rb") as f:
         head = f.read()[:20]
     with open(marker, "wb") as f:
         f.write(head)
 
+
+def _delete_part(stage_dir):
+    os.remove(os.path.join(stage_dir, runner._parquet_files(stage_dir)[0]))
+
+
+def _add_part(stage_dir):
+    part = os.path.join(stage_dir, runner._parquet_files(stage_dir)[0])
+    with open(part, "rb") as src, open(os.path.join(stage_dir, "part-extra.parquet"), "wb") as dst:
+        dst.write(src.read())
+
+
+@pytest.mark.parametrize(
+    "damage", [_truncate_marker, _delete_part, _add_part],
+    ids=["truncated-marker", "deleted-part", "extra-part"],
+)
+def test_truncated_marker_recomputes_from_that_stage(spark, tmp_path, damage):
+    """A stage whose marker is torn, or whose directory lost or gained a
+    part file since its marker was written, is stale, not a crash and not
+    a silent short read: resume recomputes from that stage, outputs are
+    identical, and publishing markers leaves no temp file behind."""
+    out = str(tmp_path / "kb")
+    first = _collect_triples(runner.run_kg_pipeline(spark, out, n_docs=40))
+    damage(os.path.join(out, "annotations"))
+    marker = os.path.join(out, "annotations", runner.MARKER)
+
     t2 = runner.run_kg_pipeline(spark, out, n_docs=40)
     res = t2["_pipeline"].results
     assert not any(res[s].recomputed for s in ("source", "sentences", "mentions"))
     assert res["annotations"].recomputed
+    assert t2["annotations"].count() == res["annotations"].row_count
     assert _collect_triples(t2) == first
     with open(marker) as f:
         assert json.load(f)["fingerprint"] == res["annotations"].fingerprint

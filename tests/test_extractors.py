@@ -30,10 +30,8 @@ def test_contingency_math(spark):
         ("d5", 0, "z"),
     ]
     mentions = spark.createDataFrame(rows, "doc_id string, sent_idx int, name string")
-    sentences = spark.createDataFrame(
-        [(f"d{i}", 0) for i in range(1, 7)], "doc_id string, sent_idx int"
-    )
-    got = {(r["n1"], r["n2"]): r for r in X.pair_contingency(mentions, sentences).collect()}
+    # six sentences: d1..d5 above plus a mention-less d6
+    got = {(r["n1"], r["n2"]): r for r in X.pair_contingency(mentions, 6).collect()}
     r = got[("x", "y")]
     assert (r["a"], r["b"], r["c"], r["d"]) == (2, 1, 1, 2)
     aa, bb, cc, dd = 2.5, 1.5, 1.5, 2.5
@@ -74,7 +72,7 @@ def test_ore_adjacency(spark):
 
 def test_ann_ids_unique_within_doc(spark):
     sents, ments = _build(spark, 60)
-    anns = X.extract_all(ments, sents)
+    anns = X.extract_all(ments, sents, sents.count())
     dup = (
         anns.groupBy("doc_id", "ann_id")
         .count()
@@ -89,8 +87,9 @@ def test_extract_all_fused_matches_union(spark):
     union — column for column, ann_id for ann_id (the round-3 annotations
     rewrite is a physical-plan change only)."""
     sents, ments = _build(spark, 60)
-    fused = X.extract_all(ments, sents)
-    union = X.extract_all_unioned(ments, sents)
+    n = sents.count()
+    fused = X.extract_all(ments, sents, n)
+    union = X.extract_all_unioned(ments, sents, n)
     cols = sorted(fused.columns)
     assert sorted(union.columns) == cols
     a = sorted(map(tuple, fused.select(*cols).collect()))
@@ -100,8 +99,9 @@ def test_extract_all_fused_matches_union(spark):
 
 def test_extractors_deterministic(spark):
     sents, ments = _build(spark, 30)
-    a = sorted(map(tuple, X.to_triples(X.extract_all(ments, sents)).collect()))
-    b = sorted(map(tuple, X.to_triples(X.extract_all(ments, sents)).collect()))
+    n = sents.count()
+    a = sorted(map(tuple, X.to_triples(X.extract_all(ments, sents, n)).collect()))
+    b = sorted(map(tuple, X.to_triples(X.extract_all(ments, sents, n)).collect()))
     assert a == b
 
 
@@ -138,10 +138,10 @@ def test_pair_contingency_matches_self_join_formulation(spark):
         ("d2", 0, "ALPHA"), ("d3", 0, "beta"),
     ]
     mentions = spark.createDataFrame(rows, "doc_id string, sent_idx int, name string")
-    sentences = mentions.select("doc_id", "sent_idx").distinct()
+    n_sentences = mentions.select("doc_id", "sent_idx").distinct().count()
     got = {
         (r["n1"], r["n2"]): (r["a"], r["b"], r["c"], r["d"])
-        for r in extractors.pair_contingency(mentions, sentences).collect()
+        for r in extractors.pair_contingency(mentions, n_sentences).collect()
     }
     # 4 distinct sentences; per-sentence distinct lowercased names:
     # (d1,0)={alpha,beta} (d1,1)={alpha} (d2,0)={alpha,beta,gamma} (d3,0)={beta}

@@ -10,22 +10,58 @@ from pubmedkb_web_spark import fixtures
 from pubmedkb_web_spark.query import nen
 
 
-def test_ratio_parity_with_difflib(spark):
-    ed = fixtures.entity_dict_df(spark)
-    q = "p.v600x"  # 1 char off the hot variant
-    got = {r["name"]: r["similarity"] for r in nen.fuzzy_names(ed, q, min_similarity=0.5).collect()}
-    assert got, "candidates expected within ±1 length"
-    for name, sim in got.items():
-        expect = difflib.SequenceMatcher(a=name, b=q).ratio()
-        assert abs(sim - round(expect, 6)) < 1e-9
+def _dict_names(case_sensitive):
+    names = fixtures.build_entity_dict()["name"]
+    return {n if case_sensitive else n.lower() for n in names}
 
 
-def test_length_blocking(spark):
+@pytest.mark.parametrize(
+    "q, case_sensitive, max_length_diff",
+    [
+        ("p.v600x", False, 1),  # 1 char off the hot variant
+        ("BRAFX", True, 1),  # 'BRAF' scores, 'braf' does not match case
+        ("p.v600", False, 2),
+    ],
+    ids=["default", "case-sensitive", "length-diff-2"],
+)
+def test_ratio_parity_with_difflib(spark, q, case_sensitive, max_length_diff):
     ed = fixtures.entity_dict_df(spark)
-    q = "braf"
-    names = [r["name"] for r in nen.fuzzy_names(ed, q, min_similarity=0.0, max_names=1000).collect()]
-    assert names
-    assert all(abs(len(n) - len(q)) <= 1 for n in names)
+    got = [
+        (r["name"], r["similarity"])
+        for r in nen.fuzzy_names(
+            ed, q, case_sensitive=case_sensitive, min_similarity=0.5,
+            max_length_diff=max_length_diff,
+        ).collect()
+    ]
+    assert got, "candidates expected within the length bound"
+    key = q if case_sensitive else q.lower()
+    scored = sorted(
+        (-round(difflib.SequenceMatcher(a=n, b=key).ratio(), 6), n)
+        for n in _dict_names(case_sensitive)
+        if abs(len(n) - len(key)) <= max_length_diff
+    )
+    expect = [(n, -neg) for neg, n in scored if -neg >= 0.5][: nen.DEFAULT_MAX_NAMES]
+    assert got == expect
+
+
+@pytest.mark.parametrize(
+    "case_sensitive, max_length_diff",
+    [(False, 1), (True, 1), (False, 3)],
+    ids=["default", "case-sensitive", "length-diff-3"],
+)
+def test_length_blocking(spark, case_sensitive, max_length_diff):
+    ed = fixtures.entity_dict_df(spark)
+    q = "BRAF"
+    names = {
+        r["name"]
+        for r in nen.fuzzy_names(
+            ed, q, case_sensitive=case_sensitive, min_similarity=0.0,
+            max_length_diff=max_length_diff, max_names=1000,
+        ).collect()
+    }
+    assert names == {
+        n for n in _dict_names(case_sensitive) if abs(len(n) - len(q)) <= max_length_diff
+    }
 
 
 def test_exact_match_ranks_first(spark):

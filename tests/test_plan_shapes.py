@@ -133,6 +133,8 @@ SHAPES = {
     "spec_pair": (_query("spec_pair"), [], SINGLE_SCAN),
     "minhash_signatures": (_query("minhash_signatures"), ["HashAggregate"], PY),
     "simhash_docs": (_query("simhash_docs"), ["HashAggregate"], PY),
+    # the bucket cap is opt-in: uncapped LSH pairs pay no bucket-size pass
+    "lsh_near_dup_pairs": (_query("lsh_near_dup_pairs"), [], ["_bsz"]),
     "bm25_docs": (_query("bm25_docs"), ["BroadcastHashJoin"], ["BatchEvalPython"]),
     "lang_id_docs": (_query("lang_id_docs"), [], PY),
     "fingerprint_docs": (_query("fingerprint_docs"), [], PY),

@@ -21,7 +21,8 @@ def test_triple_precision_recall(spark):
     src = fixtures.ingest(fixtures.source_table(spark, n))
     ed = fixtures.entity_dict_df(spark)
     sents, ments = M.build_mentions(src, ed)
-    anns = X.extract_all(ments.cache(), sents.cache())
+    sents = sents.cache()
+    anns = X.extract_all(ments.cache(), sents, sents.count())
     got = {
         (r["subj"], r["pred"], r["obj"], r["annotator"], r["doc_id"], r["sent_idx"])
         for r in X.to_triples(anns)
